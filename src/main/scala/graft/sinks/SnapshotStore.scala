@@ -130,12 +130,23 @@ object SnapshotStore {
     * manifest alone holds the whole window and old manifests never
     * need scanning. */
   def hasTag(spark: SparkSession, base: String, tag: String): Boolean =
-    currentManifest(spark, base)
-      .exists(m => manifestLines(spark, base, m).contains(s"#tag=$tag"))
+    live(spark, base).exists(_.hasTag(tag))
 
   /** Relative data-file paths of the live snapshot (empty if none). */
   def listFiles(spark: SparkSession, base: String): Seq[String] =
-    currentManifest(spark, base).map(manifestFiles(spark, base, _)).getOrElse(Nil)
+    live(spark, base).map(_.files).getOrElse(Nil)
+
+  /** The live manifest, resolved once: its version and its lines. A
+    * commit reads it once under the commit lock and derives the tag
+    * probe, the carried files and the carried tag and stats lines from
+    * it. */
+  private final case class Live(version: Long, lines: Seq[String]) {
+    def files: Seq[String] = lines.filterNot(_.startsWith("#"))
+    def hasTag(tag: String): Boolean = lines.contains(s"#tag=$tag")
+  }
+
+  private def live(spark: SparkSession, base: String): Option[Live] =
+    currentManifest(spark, base).map(m => Live(manifestVersion(m), manifestLines(spark, base, m)))
 
   /** All committed manifest versions, ascending. */
   def versions(spark: SparkSession, base: String): Seq[Long] = {
@@ -248,15 +259,16 @@ object SnapshotStore {
     rels.result()
   }
 
-  /** Publish `files` as the next snapshot: write the manifest to a temp
-    * name, then rename it into place. The rename is atomic and fails on
-    * an existing destination — a lost race to the version number aborts
-    * loudly rather than dropping a commit. */
-  private def commitManifest(spark: SparkSession, base: String, files: Seq[String],
-      tag: Option[String] = None, newStats: Seq[String] = Nil): Unit = {
+  /** Publish `files` as the version after `parent` (the live manifest
+    * the caller resolved under the commit lock): write the manifest to a
+    * temp name, then rename it into place. The rename is atomic and
+    * fails on an existing destination — a lost race to the version
+    * number aborts loudly rather than dropping a commit. Returns the
+    * published version. */
+  private def commitManifest(spark: SparkSession, base: String, parent: Option[Live],
+      files: Seq[String], tag: Option[String] = None, newStats: Seq[String] = Nil): Long = {
     val f = fs(spark, base)
-    val current = currentManifest(spark, base)
-    val next = current.map(manifestVersion(_) + 1).getOrElse(0L)
+    val next = parent.map(_.version + 1).getOrElse(0L)
     val name = f"m$next%010d"
     f.mkdirs(manifestDir(base))
     val tmp = new Path(manifestDir(base), s".tmp-${UUID.randomUUID()}")
@@ -265,7 +277,7 @@ object SnapshotStore {
     // EVERY commit (append, replace, compaction) carries the newest
     // MaxTags tags forward, so the idempotence window survives
     // compaction and vacuum instead of dying with its own manifest
-    val currentLines = current.map(manifestLines(spark, base, _)).getOrElse(Nil)
+    val currentLines = parent.map(_.lines).getOrElse(Nil)
     val carried = currentLines.filter(_.startsWith("#tag="))
     val tags = (carried ++ tag.map(t => s"#tag=$t")).takeRight(MaxTags)
     // stats lines travel with their file: carried while the file stays
@@ -286,16 +298,18 @@ object SnapshotStore {
     if (f.exists(dst) || !f.rename(tmp, dst))
       throw new java.io.IOException(
         s"snapshot commit conflict: version $name already exists under $base")
+    next
   }
 
   /** Replace the whole table with `df` (dim-snapshot swap, full
     * compaction). `statsCols` opts the commit into per-file min/max
-    * recording for those (numeric) columns. */
+    * recording for those (numeric) columns. Returns the committed
+    * manifest version. */
   def commitReplace(spark: SparkSession, base: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Unit =
+      partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
     commitLock(base).synchronized {
       val staged = stageWrite(spark, base, df, partitionBy)
-      commitManifest(spark, base, staged,
+      commitManifest(spark, base, live(spark, base), staged,
         newStats = computeStats(spark, base, staged, statsCols))
     }
 
@@ -312,10 +326,10 @@ object SnapshotStore {
     // writer invalidate the read current version (lost update) or let
     // a replayed tag double-commit past the idempotence probe
     commitLock(base).synchronized {
-      if (!tag.exists(hasTag(spark, base, _))) {
-        val existing = listFiles(spark, base)
+      val parent = live(spark, base)
+      if (!tag.exists(t => parent.exists(_.hasTag(t)))) {
         val staged = stageWrite(spark, base, df, partitionBy)
-        commitManifest(spark, base, existing ++ staged, tag,
+        commitManifest(spark, base, parent, parent.map(_.files).getOrElse(Nil) ++ staged, tag,
           newStats = computeStats(spark, base, staged, statsCols))
       }
     }
@@ -349,16 +363,16 @@ object SnapshotStore {
       partitionBy: Seq[String] = Nil, tag: Option[String] = None,
       statsCols: Seq[String] = Nil): Long =
     commitLock(base).synchronized {
-      if (tag.exists(hasTag(spark, base, _))) 0L
+      val parent = live(spark, base)
+      if (tag.exists(t => parent.exists(_.hasTag(t)))) 0L
       else {
-        val existing = listFiles(spark, base)
         val staged = stageWrite(spark, base, df, partitionBy)
         val n = stagedRowCount(spark, base, staged)
         if (n == 0L) {
           val f = fs(spark, base)
           staged.foreach(rel => f.delete(new Path(s"${dataDir(base)}/$rel"), false))
         } else {
-          commitManifest(spark, base, existing ++ staged, tag,
+          commitManifest(spark, base, parent, parent.map(_.files).getOrElse(Nil) ++ staged, tag,
             newStats = computeStats(spark, base, staged, statsCols))
         }
         n
@@ -372,7 +386,7 @@ object SnapshotStore {
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
     commitLock(base).synchronized {
       val staged = stageWrite(spark, base, df, partitionBy)
-      commitManifest(spark, base, staged,
+      commitManifest(spark, base, live(spark, base), staged,
         newStats = computeStats(spark, base, staged, statsCols))
       stagedRowCount(spark, base, staged)
     }
@@ -385,10 +399,11 @@ object SnapshotStore {
       partitionCol: String, partitionValue: String,
       statsCols: Seq[String] = Nil): Unit =
     commitLock(base).synchronized {
-      val kept = listFiles(spark, base)
+      val parent = live(spark, base)
+      val kept = parent.map(_.files).getOrElse(Nil)
         .filterNot(_.startsWith(s"$partitionCol=$partitionValue/"))
       val staged = stageWrite(spark, base, df, Seq(partitionCol))
-      commitManifest(spark, base, kept ++ staged,
+      commitManifest(spark, base, parent, kept ++ staged,
         newStats = computeStats(spark, base, staged, statsCols))
     }
 
@@ -516,7 +531,7 @@ object SnapshotStore {
           .parquet(affected.map(f => s"$dd/$f"): _*)
           .filter(not(coalesce(deletePred, lit(false))))
         val staged = stageWrite(spark, base, survivors, Nil)
-        commitManifest(spark, base, keep ++ staged,
+        commitManifest(spark, base, live(spark, base), keep ++ staged,
           newStats = computeStats(spark, base, staged, statsCols))
         affected.size
       }
@@ -569,7 +584,7 @@ object SnapshotStore {
         require(got == want,
           s"TTL rollup must preserve the table schema; expected $want, got $got")
         val staged = stageWrite(spark, base, survivors.unionByName(rolled), Nil)
-        commitManifest(spark, base, keep ++ staged,
+        commitManifest(spark, base, live(spark, base), keep ++ staged,
           newStats = computeStats(spark, base, staged, statsCols))
         affected.size
       }
@@ -617,7 +632,7 @@ object SnapshotStore {
             }).as(c)
           }: _*)
         val staged = stageWrite(spark, base, rewritten, Nil)
-        commitManifest(spark, base, keep ++ staged,
+        commitManifest(spark, base, live(spark, base), keep ++ staged,
           newStats = computeStats(spark, base, staged, statsCols))
         affected.size
       }
@@ -684,7 +699,7 @@ object SnapshotStore {
             .join(changes.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
             .unionByName(upserts)
         val staged = stageWrite(spark, base, survivors, Nil)
-        commitManifest(spark, base, keep ++ staged,
+        commitManifest(spark, base, live(spark, base), keep ++ staged,
           newStats = computeStats(spark, base, staged, statsCols))
         affected.size
       }
@@ -708,7 +723,7 @@ object SnapshotStore {
       val revived = manifestLines(spark, base, name)
         .filter(_.startsWith(StatsPrefix))
         .filter(l => statsLineFile(l).exists(f => fileSet(f) && !cur(f)))
-      commitManifest(spark, base, files, newStats = revived)
+      commitManifest(spark, base, live(spark, base), files, newStats = revived)
     }
 
   // ---- retention ----------------------------------------------------------

@@ -31,19 +31,18 @@ object Pipeline {
   /** Engagement hot path: raw Kafka-shaped stream (string `value`) →
     * unwrap → enrich against the dim snapshot at `dimPath`.
     *
-    * PINNED-SNAPSHOT semantics: a stream-static join resolves the
-    * static side's file listing once at plan time, so this path joins
-    * the dim version that was live when the stream started — later
-    * upserts/deletes from dimMaintenanceQuery are NOT picked up. That
-    * is safe (SnapshotStore data files are immutable, so the pinned
-    * version can't hit FileNotFound mid-stream) but stale; for a
-    * MUTABLE dim use [[enrichedSink]], which re-resolves the snapshot
-    * pointer inside every micro-batch. */
+    * PINNED-SNAPSHOT semantics: the static side of this stream-static
+    * join is the rows of the dim version that was live when the stream
+    * started (held in memory, so each batch's broadcast re-runs over
+    * them without touching the snapshot files) — later upserts/deletes
+    * from dimMaintenanceQuery are NOT picked up. That is safe but
+    * stale; for a MUTABLE dim use [[enrichedSink]], which re-resolves
+    * the snapshot pointer inside every micro-batch. */
   def enrichedStream(spark: SparkSession, raw: DataFrame, dimPath: String): DataFrame = {
     // fail fast rather than silently pinning an EMPTY dim for the
     // stream's whole lifetime: with no snapshot committed yet, every
     // future batch would emit null enrichment forever with no error
-    val dim = graft.sinks.SnapshotStore.read(spark, dimPath).getOrElse(
+    val dim = ContentDim.read(spark, dimPath).getOrElse(
       throw new IllegalStateException(
         s"no dim snapshot committed at $dimPath — seed the dimension before " +
         "starting a pinned-snapshot stream, or use enrichedSink for a mutable dim"))
@@ -51,7 +50,8 @@ object Pipeline {
   }
 
   /** Content dim maintenance: raw content CDC stream → foreachBatch
-    * merge into the parquet snapshot (upsert + delete). */
+    * merge into the parquet snapshot (upsert + delete; an empty batch
+    * commits nothing). */
   def dimMaintenanceQuery(spark: SparkSession, raw: DataFrame, dimPath: String,
       checkpoint: String) = {
     val changes = Envelope.unwrapContent(raw)
@@ -59,7 +59,7 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) ContentDim.applyBatch(spark, dimPath, batch)
+        ContentDim.applyBatch(spark, dimPath, batch)
       }
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
+
 import graft.cdc.Envelope
 import graft.dim.ContentDim
 import graft.enrich.Enrich
@@ -62,15 +64,122 @@ class EnvelopeSpec extends SparkSpec {
     assert(dim(0).getAs[Int]("length_seconds") === 360)
   }
 
-  test("dim merge: upserts replace, deletes remove, untouched rows carry over") {
-    val snap = ContentDim.latestState(Envelope.unwrapContent(Seq(
-      contentUpsert("c0", "podcast", 10, 1),
-      contentUpsert("c1", "video", 20, 1)).toDF("value")))
+  test("dim latest-state: a full tie on change_seq and is_delete resolves the same way at any partitioning") {
+    // two upserts of c1 at one ts_ms: the other columns break the tie
+    // (ascending, so "newsletter" beats "video"), whichever arrives first
     val changes = Envelope.unwrapContent(Seq(
-      contentDelete("c1", 2),
-      contentUpsert("c2", "newsletter", 30, 2)).toDF("value"))
-    val merged = ContentDim.merge(snap, changes).orderBy("id").collect()
-    assert(merged.map(_.getAs[String]("id")).toSeq === Seq("c0", "c2"))
+      contentUpsert("c1", "video", 300, 7),
+      contentUpsert("c1", "newsletter", 300, 7),
+      contentUpsert("c2", "podcast", 10, 1)).toDF("value"))
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def winners(n: Int) = try {
+      spark.conf.set(key, n.toString)
+      ContentDim.latestState(changes).orderBy("id")
+        .select("id", "content_type").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    } finally spark.conf.set(key, before)
+    val want = Seq(("c1", "newsletter"), ("c2", "podcast"))
+    assert(winners(1) === want)
+    assert(winners(7) === want)
+    // the streaming fold applies the same order
+    val path = dimPath()
+    ContentDim.applyBatch(spark, path, changes)
+    assert(dimRows(path) === Map("c1" -> "newsletter", "c2" -> "podcast"))
+  }
+
+  // ---- ContentDim.applyBatch: the driver-side fold ------------------------
+
+  private def dimPath(): String =
+    java.nio.file.Files.createTempDirectory("dim").toString + "/snapshot"
+  private def fold(path: String, msgs: String*): Unit =
+    ContentDim.applyBatch(spark, path, Envelope.unwrapContent(msgs.toDF("value")))
+  private def dimRows(path: String): Map[String, String] =
+    ContentDim.snapshot(spark, path).select("id", "content_type").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("dim merge: upserts replace, deletes remove, untouched rows carry over") {
+    val path = dimPath()
+    fold(path, contentUpsert("c0", "podcast", 10, 1), contentUpsert("c1", "video", 20, 1))
+    fold(path, contentDelete("c1", 2), contentUpsert("c2", "newsletter", 30, 2))
+    assert(dimRows(path) === Map("c0" -> "podcast", "c2" -> "newsletter"))
+    val c0 = ContentDim.snapshot(spark, path).filter($"id" === "c0").head()
+    assert(c0.getAs[Int]("length_seconds") === 10)
+    assert(c0.getAs[String]("title") === "T c0")
+  }
+
+  test("dim apply: first batch on an empty path; several versions of one id in one batch") {
+    val path = dimPath()
+    assert(ContentDim.read(spark, path).isEmpty)
+    assert(ContentDim.snapshot(spark, path).count() === 0)
+    fold(path,
+      contentUpsert("c1", "podcast", 300, 1),
+      contentUpsert("c1", "video", 360, 5), // newest of three wins
+      contentUpsert("c1", "newsletter", 420, 3))
+    assert(dimRows(path) === Map("c1" -> "video"))
+    assert(ContentDim.snapshot(spark, path).head().getAs[Int]("length_seconds") === 360)
+  }
+
+  test("dim apply: a delete wins a tie; a delete of an unknown id is a no-op") {
+    val path = dimPath()
+    fold(path, contentUpsert("c1", "podcast", 300, 1), contentUpsert("c2", "video", 60, 1))
+    fold(path,
+      contentUpsert("c1", "video", 300, 4),
+      contentDelete("c1", 4),   // same ts_ms as the upsert: the delete wins
+      contentDelete("c9", 4))   // never existed
+    assert(dimRows(path) === Map("c2" -> "video"))
+  }
+
+  test("dim apply: a delete then a re-insert across batches brings the key back") {
+    val path = dimPath()
+    fold(path, contentUpsert("c1", "podcast", 300, 1))
+    fold(path, contentDelete("c1", 2))
+    assert(dimRows(path) === Map.empty)
+    fold(path, contentUpsert("c1", "newsletter", 50, 3))
+    assert(dimRows(path) === Map("c1" -> "newsletter"))
+    // an empty batch commits nothing
+    val versions = graft.sinks.SnapshotStore.versions(spark, path)
+    fold(path)
+    assert(graft.sinks.SnapshotStore.versions(spark, path) === versions)
+  }
+
+  test("dim apply runs at most two jobs: one collect, one write") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val path = dimPath()
+    fold(path, contentUpsert("c1", "podcast", 300, 1), contentUpsert("c2", "video", 60, 1))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("dim-apply", "dim apply")
+      try fold(path, contentUpsert("c3", "newsletter", 30, 2), contentDelete("c1", 2))
+      finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job applyBatch ran has been counted
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(jobs.contains("marker"))
+    } finally sc.removeSparkListener(listener)
+    val applyJobs = jobs.toArray.count(_ == "dim-apply")
+    assert(applyJobs >= 1 && applyJobs <= 2, s"applyBatch ran $applyJobs jobs")
+    assert(dimRows(path) === Map("c2" -> "video", "c3" -> "newsletter"))
+  }
+
+  test("dim snapshot sees a commit made by another writer") {
+    val path = dimPath()
+    fold(path, contentUpsert("c1", "podcast", 300, 1))
+    assert(dimRows(path) === Map("c1" -> "podcast")) // cached version
+    // a writer that bypasses ContentDim publishes the next version
+    graft.sinks.SnapshotStore.commitReplace(spark, path,
+      ContentDim.snapshot(spark, path).withColumn("content_type", lit("video")))
+    assert(dimRows(path) === Map("c1" -> "video"))
+    fold(path, contentUpsert("c2", "newsletter", 30, 2)) // folds onto the other writer's rows
+    assert(dimRows(path) === Map("c1" -> "video", "c2" -> "newsletter"))
   }
 
   test("enriched output projects onto the declared 13-field schema, session_id extracted") {

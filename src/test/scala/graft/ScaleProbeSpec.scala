@@ -16,12 +16,12 @@ package graft
   * what transfers to a 1000-executor cluster.
   *
   * Profiles: tests that evaluate the 10× rung set (`big`) carry the
-  * [[Slow]] tag — `sbt quick` skips them (and therefore never computes
-  * `big`, the suite's dominant wall-time cost) while keeping every 1×
-  * assertion live; the full `sbt test` shipping gate runs everything.
+  * [[Slow]] tag — the default `sbt test` skips them (and therefore
+  * never computes `big`, the suite's dominant wall-time cost) while
+  * keeping every 1× assertion live; `sbt full` runs everything.
   * Growth-RATIO invariants inherently need both scales, so they are
   * Slow by construction; point-in-time invariants are split 1×/10× so
-  * the quick profile keeps their 1× half.
+  * the default profile keeps their 1× half.
   */
 class ScaleProbeSpec extends SparkSpec {
 

@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.Tag
 
-/** Tests excluded by the `sbt quick` inner-loop profile (build.sbt
-  * alias: `testOnly * -- -l graft.Slow`) and INCLUDED — as always — by
-  * the full `sbt test` shipping gate. Reserved for the 10×-scale rung
-  * re-runs (ScaleProbeSpec's `big` evaluation): every invariant that
-  * only needs the 1× rungs stays untagged so the quick profile keeps
-  * probing it. */
+/** Tests excluded by the default `sbt test` profile (build.sbt:
+  * `-l graft.Slow`) and run by `sbt slowOnly` and `sbt full`. Reserved
+  * for the 10×-scale rung re-runs (ScaleProbeSpec's `big` evaluation):
+  * every invariant that only needs the 1× rungs stays untagged so the
+  * default profile keeps probing it. */
 object Slow extends Tag("graft.Slow")
