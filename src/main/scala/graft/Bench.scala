@@ -16,55 +16,43 @@ import graft.queries.Queries
   */
 object Bench {
 
-  /** The round-1–6 headline set, FROZEN: the cross-round anchor band
-    * (README "8.4–9.8 s min-of-5") is defined over exactly these 19
-    * plans. Round 11 widened the headline set to 31 so the post-round-6
-    * operator families (rank tests, gap fill, strict funnels, bitmaps,
-    * STL, weighted/interpolated quantiles, decay, geo radius, LIMIT BY,
-    * indexed BM25, keyed merge) get cross-round wall-clock tracking —
-    * the emitted `core19_*` subtotals keep the historical band
-    * comparison apples-to-apples while `value`/`min_value` cover the
-    * full current set. */
-  val core19: Set[String] = Set(
-    "q_cdc_enrich_e2e", "q_hourly_rollup", "q_minute_topk",
-    "q_topk_custom_agg", "q_enrich_join", "q6_filter_agg",
-    "q_session_window", "q_funnel", "q1_agg", "q3_topk", "q5_join",
-    "q_window_running", "q_dedup_exact", "q_corpus_clean",
-    "q_decontaminate", "q_para_dedup", "q_unigram_logprob",
-    "q_dedup_minhash", "q_ann_topk")
+  /** Every tracked query section, in emission order: name → queries.
+    * The first, `core19`, is the FROZEN round-1–6 headline subset: the
+    * cross-round anchor band (README "8.4–9.8 s min-of-5") is defined
+    * over exactly these 19 plans. It is timed inside the headline pass
+    * (round 11 widened the headline to 31 plans, so `value`/`min_value`
+    * cover the full current set), drives the contention guard and
+    * emits the `core19_*` subtotals. Every later section is an
+    * ADDITIVE tracking set for operator families added or restructured
+    * after the headline froze, timed after the headline attempts in its
+    * own `<name>_*` section so the frozen estimators keep their
+    * cross-round definitions:
+    *  - extended (r14): conversation/SFT, retrieval metrics, t-digest,
+    *    the range-hashed dictionary, the IVF refresh loop, packing;
+    *  - r15: the k-means/ANN family the map-only assignment
+    *    restructured, plus the batched hybrid metrics;
+    *  - r16: the exact RAG retrieval rung and the dense metric suite
+    *    (scan parallelism fixes). */
+  val sections: Seq[(String, Seq[String])] = Seq(
+    "core19" -> Seq(
+      "q_cdc_enrich_e2e", "q_hourly_rollup", "q_minute_topk",
+      "q_topk_custom_agg", "q_enrich_join", "q6_filter_agg",
+      "q_session_window", "q_funnel", "q1_agg", "q3_topk", "q5_join",
+      "q_window_running", "q_dedup_exact", "q_corpus_clean",
+      "q_decontaminate", "q_para_dedup", "q_unigram_logprob",
+      "q_dedup_minhash", "q_ann_topk"),
+    "extended" -> Seq(
+      "q_conv_clean", "q_conv_dedup_near", "q_conv_pack",
+      "q_retrieval_metrics", "q_quantile_tdigest", "q_dict_range",
+      "q_ivf_refresh"),
+    "r15" -> Seq(
+      "q_ann_ivf_topk", "q_ivf_pq_topk", "q_pq_codes", "q_semdedup",
+      "q_proto_prune", "q_rag_pipeline_ivf", "q_multimodal_pipeline",
+      "q_retrieval_metrics_rrf"),
+    "r16" -> Seq(
+      "q_rag_pipeline", "q_retrieval_metrics_dense"))
 
-  /** EXTENDED tracking set (round 14): representatives of the operator
-    * families added after the 31-query headline set froze (~r6) — the
-    * conversation/SFT modality, retrieval metrics, t-digest, the
-    * range-hashed dictionary, the IVF refresh loop, loss-mask packing.
-    * Reported in a SEPARATE `extended_*` section so the frozen
-    * `value`/`core19_*` estimators keep their cross-round
-    * comparability; these queries get wall-clock tracking from r14
-    * forward without rebasing any historical band. */
-  val extended: Seq[String] = Seq(
-    "q_conv_clean", "q_conv_dedup_near", "q_conv_pack",
-    "q_retrieval_metrics", "q_quantile_tdigest", "q_dict_range",
-    "q_ivf_refresh")
-
-  /** r15 tracking set: the k-means/ANN family the round-15 map-only
-    * assignment optimization restructured (plus the batched hybrid
-    * metrics). ADDITIVE, its own `r15_*` section — the frozen `value`/
-    * `core19_*`/`extended_*` estimators keep their cross-round
-    * definitions; these queries get wall-clock tracking from r15
-    * forward so a regression in the new plan shapes moves a recorded
-    * number. */
-  val r15Set: Seq[String] = Seq(
-    "q_ann_ivf_topk", "q_ivf_pq_topk", "q_pq_codes", "q_semdedup",
-    "q_proto_prune", "q_rag_pipeline_ivf", "q_multimodal_pipeline",
-    "q_retrieval_metrics_rrf")
-
-  /** r16 tracking set: the two r16-restructured paths not covered by
-    * any existing section — the exact RAG retrieval rung (scan
-    * parallelism fix) and the dense metric suite (scan parallelism on
-    * the vectorize pass). ADDITIVE, own `r16_*` section, same
-    * discipline as r15's. */
-  val r16Set: Seq[String] = Seq(
-    "q_rag_pipeline", "q_retrieval_metrics_dense")
+  private val core19: Set[String] = sections.head._2.toSet
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -145,9 +133,9 @@ object Bench {
     }
     val chosen = attempts(chosenIdx)._2
 
-    // extended + r15 sections: timed AFTER the headline attempts (so
-    // their wall-clock never perturbs the frozen estimators), skipped
-    // when explicit names were passed (local probing)
+    // tracking sections after core19: timed AFTER the headline attempts
+    // (so their wall-clock never perturbs the frozen estimators),
+    // skipped when explicit names were passed (local probing)
     def section(prefix: String, names: Seq[String]): String =
       if (args.nonEmpty) ""
       else {
@@ -159,8 +147,7 @@ object Bench {
         }.mkString("{", ",", "}")
         s""","${prefix}_value":${f(v)},"${prefix}_min_value":${f(mv)},"${prefix}_queries":$qs"""
       }
-    val extJson = section("extended", extended) + section("r15", r15Set) +
-      section("r16", r16Set)
+    val extJson = sections.tail.map { case (prefix, ns) => section(prefix, ns) }.mkString
 
     val full = attempts.head._2
     val qs = full.map { case (k, (_, med, _)) => s""""$k":${f(med)}""" }.mkString("{", ",", "}")
@@ -181,47 +168,7 @@ object Bench {
       val (cv, cmv) = sums(rs.filter(r => core19(r._1)))
       s"""{"attempt":${i + 1},"set":"${if (ns == names) "full" else "core19"}","value":${f(v)},"min_value":${f(mv)},"core19_value":${f(cv)},"core19_min_value":${f(cmv)},"contention_ratio":${f(contentionOf(rs.filter(r => core19(r._1))))}}"""
     }.mkString("[", ",", "]")
-    // Standing per-query adjudications (the r12 verdict asked for the
-    // q_snapshot_merge drift to be profiled and either fixed or pinned
-    // here): stage-profiled in isolation r13 — commit ~0.5 s + keyed
-    // merge ~0.9-1.1 s + read ~0.1 s. The merge rewrites ALL 8 files
-    // BY DESIGN: the fixture's change keys (every 97th/101st event_id)
-    // span the whole keyspace so the oracle exercises global effects;
-    // the narrow-span pruning path is the merge_rewrite rung's own
-    // in-rung <=3-files assertion. SnapshotStore untouched since r10
-    // (git log); anchor queries (q1_agg 0.94) read at r11 levels on
-    // the same host, so the 1.35->1.73 r11->r12 movement is
-    // session-to-session swing around a ~1.5 s single-iteration floor,
-    // not a code regression.
-    // q_funnel_strict adjudication (r15, the r14 verdict's watch item):
-    // Funnel.scala untouched since r12 and the sibling q_funnel is flat
-    // across rounds (0.44/0.44/0.48 s committed min r13/r14/r15-probe),
-    // so the strict mode's r13->r14 +0.26 s committed-min movement was
-    // stage-profiled instead of assumed: its plan is ~15 exchanges/
-    // aggregates (3 chained stage-joins + 2 breaker-join rounds + level
-    // joins) over only 100k events at sf0.1 - OVERHEAD-dominated, not
-    // data-dominated. Measured isolated min-of-9: 1.63 s at sf0.1 vs
-    // 1.09 s at sf0.01 (a 10x data step moves the min LESS than the
-    // JVM-context swing between an isolated run and the warm full-set
-    // run, which committed 1.06 s). A plan whose wall is scheduling +
-    // codegen for 15 tiny stages lands wherever JIT/GC places it;
-    // +0.26 s absolute is inside that band. Verdict: measurement
-    // variance on an overhead-dominated plan, not a regression - the
-    // q_snapshot_merge precedent. The cross-round tripwire stays the
-    // committed min (watch if it ever exceeds ~2x the 0.8-1.1 band).
-    // q_bitmap_overlap adjudication (r16, the r15 verdict's watch item
-    // #2 — committed-min 0.32 s r14 vs driver 0.66 s r15 on untouched
-    // Bitmaps.scala): isolated min-of-9 probes read 0.43 s at
-    // sf0.1/32c, 0.47 s at sf0.1/8c, 0.51 s at sf0.01/32c — a 10×
-    // data step moves the min less than nothing and 8 cores match 32,
-    // so nothing in the plan is data- or core-bound; the wall is
-    // scheduling + codegen for a handful of tiny word-level set-algebra
-    // stages over ≤10k rows, landing wherever JIT/GC places it.
-    // Verdict: session variance on an overhead-dominated plan, not a
-    // regression — the q_funnel_strict/q_snapshot_merge precedent.
-    // Cross-round tripwire stays the committed min (watch if it ever
-    // exceeds ~2× the 0.3-0.65 band).
-    val notes = """{"q_snapshot_merge":"full-8-file rewrite is the fixture's intent (keyspace-spanning change keys); floor ~1.5s, r11->r12 movement adjudicated as session variance - see Bench.scala comment","ann_rerank":"r14: all six ANN window re-rank sites (lsh/ivf/knn/hardneg/ivfpq/IvfIndex) migrated to bounded_top_k partial+final; 100x rungs re-measured ZERO-spill (ivfpq was 0.7-3.6 GB) with recall bit-identical - SCALE.md","q_funnel_strict":"r15 adjudication of the r14 +32% watch item: Funnel.scala untouched since r12, sibling q_funnel flat across rounds; the strict plan is ~15 tiny exchanges over 100k rows (overhead-dominated - isolated min-of-9 moved LESS on a 10x data step, 1.09s sf0.01 vs 1.63s sf0.1, than between JVM contexts). Verdict: session variance on an overhead-dominated plan, not a regression - see Bench.scala comment","q_bitmap_overlap":"r16 adjudication of the r15 0.32->0.66 watch item: Bitmaps.scala untouched since r11; isolated min-of-9 reads 0.43s sf0.1/32c, 0.47s 8c, 0.51s sf0.01 - a 10x data step moves the min less than the JVM-context swing and 8 cores match 32 (overhead-dominated, nothing data- or core-bound). Verdict: session variance, not a regression - see Bench.scala comment"}"""
+    val notes = """{"q_snapshot_merge":"full-8-file rewrite is the fixture's intent (keyspace-spanning change keys); floor ~1.5s, r11->r12 movement adjudicated as session variance","ann_rerank":"r14: all six ANN window re-rank sites (lsh/ivf/knn/hardneg/ivfpq/IvfIndex) migrated to bounded_top_k partial+final; 100x rungs re-measured ZERO-spill (ivfpq was 0.7-3.6 GB) with recall bit-identical - SCALE.md","q_funnel_strict":"r15 adjudication of the r14 +32% watch item: Funnel.scala untouched since r12, sibling q_funnel flat across rounds; the strict plan is ~15 tiny exchanges over 100k rows (overhead-dominated - isolated min-of-9 moved LESS on a 10x data step, 1.09s sf0.01 vs 1.63s sf0.1, than between JVM contexts). Verdict: session variance on an overhead-dominated plan, not a regression","q_bitmap_overlap":"r16 adjudication of the r15 0.32->0.66 watch item: Bitmaps.scala untouched since r11; isolated min-of-9 reads 0.43s sf0.1/32c, 0.47s 8c, 0.51s sf0.01 - a 10x data step moves the min less than the JVM-context swing and 8 cores match 32 (overhead-dominated, nothing data- or core-bound). Verdict: session variance, not a regression"}"""
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","min_value":${f(totalMin)},"core19_value":${f(coreTotal)},"core19_min_value":${f(coreMin)},"contention_ratio":${f(contention)},"attempts":$attemptsJson,"chosen_attempt":${chosenIdx + 1},"contention_target":$target,"notes":$notes,"estimators":{"value":"median-of-iters per query, summed over the full set (attempt 1)","min_value":"min-of-iters per query, summed (contention-robust; use for cross-round comparison)","core19_value":"the frozen round-1-6 set of 19 from the CHOSEN attempt; compare against the historical 8.4-9.8 s anchor band","contention_ratio":"median over core-19 queries of max/min spread in the chosen attempt; re-runs trigger while >= $target (max $maxAttempts attempts, see attempts[])"},"queries":$qs,"spread":$spread$extJson,"iters":$iters,"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -133,13 +133,9 @@ FROM events GROUP BY 1"""
     * regardless of batch boundaries or replay — exactly-once
     * cardinalities without exactly-once delivery. */
   def bitmapSink(key: Column, id: Column,
-      mvPath: String): (DataFrame, Long) => Unit = (batch, batchId) => {
-    val spark = batch.sparkSession
-    val tag = s"bm-b$batchId"
-    if (!graft.sinks.SnapshotStore.hasTag(spark, mvPath, tag))
-      graft.sinks.SnapshotStore.commitAppend(spark, mvPath,
-        build(batch, key, id), tag = Some(tag))
-  }
+      mvPath: String): (DataFrame, Long) => Unit = (batch, batchId) =>
+    graft.sinks.SnapshotStore.commitAppend(batch.sparkSession, mvPath,
+      build(batch, key, id), tag = Some(s"bm-b$batchId"))
 
   /** Merge-on-read: OR-combine every part per (key, w). None before
     * the first part lands. */

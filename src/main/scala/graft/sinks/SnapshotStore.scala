@@ -5,6 +5,8 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, max, min, not, when}
 
 /** Transactional snapshot commits on a plain filesystem — the atomicity
@@ -70,11 +72,11 @@ object SnapshotStore {
   private def dataDir(base: String) = s"$base/data"
 
   /** Per-base commit lock (see the class doc's concurrency contract):
-    * every commitAppend/commitReplace/commitReplacePartition holds it
-    * from manifest resolution through publish, so in-process writers
-    * serialize instead of racing the version number. Keyed by the raw
-    * base string — callers addressing one table must use one spelling,
-    * the same contract the checkpoint/tag paths already assume. */
+    * [[commit]] holds it from manifest resolution through publish, so
+    * in-process writers serialize instead of racing the version number.
+    * Keyed by the raw base string — callers addressing one table must
+    * use one spelling, the same contract the checkpoint/tag paths
+    * already assume. */
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def commitLock(base: String): Object =
@@ -130,23 +132,62 @@ object SnapshotStore {
     * manifest alone holds the whole window and old manifests never
     * need scanning. */
   def hasTag(spark: SparkSession, base: String, tag: String): Boolean =
-    live(spark, base).exists(_.hasTag(tag))
+    live(spark, base).hasTag(tag)
 
   /** Relative data-file paths of the live snapshot (empty if none). */
   def listFiles(spark: SparkSession, base: String): Seq[String] =
-    live(spark, base).map(_.files).getOrElse(Nil)
+    live(spark, base).files
 
-  /** The live manifest, resolved once: its version and its lines. A
-    * commit reads it once under the commit lock and derives the tag
-    * probe, the carried files and the carried tag and stats lines from
-    * it. */
+  /** One manifest, read once: its version and its lines. A commit
+    * resolves the live one once under the commit lock and derives the
+    * tag probe, the carried files, the file stats and the carried tag
+    * and stats lines from it. Version -1 stands for "no commit yet". */
   private final case class Live(version: Long, lines: Seq[String]) {
     def files: Seq[String] = lines.filterNot(_.startsWith("#"))
     def hasTag(tag: String): Boolean = lines.contains(s"#tag=$tag")
+
+    /** Recorded per-file stats: rel path → column → (min, max). */
+    def stats: Map[String, Map[String, (Double, Double)]] =
+      lines.filter(_.startsWith(StatsPrefix)).flatMap { line =>
+        line.stripPrefix(StatsPrefix).split("\t", 2) match {
+          case Array(rel, spec) =>
+            val cols = spec.split(";").iterator.filter(_.nonEmpty).flatMap { p =>
+              p.split("=", 2) match {
+                case Array(c, mm) => mm.split(",", 2) match {
+                  case Array(lo, hi) => Some(c -> (lo.toDouble, hi.toDouble))
+                  case _ => None
+                }
+                case _ => None
+              }
+            }.toMap
+            Some(rel -> cols)
+          case _ => None
+        }
+      }.toMap
+
+    /** Files whose recorded [min,max] for `column` intersects [lo, hi];
+      * files without stats for the column are conservatively kept. */
+    def prune(column: String, lo: Double, hi: Double): Seq[String] = {
+      val st = stats
+      files.filter { f =>
+        st.get(f).flatMap(_.get(column)) match {
+          case Some((mn, mx)) => mx >= lo && mn <= hi
+          case None => true
+        }
+      }
+    }
   }
 
-  private def live(spark: SparkSession, base: String): Option[Live] =
-    currentManifest(spark, base).map(m => Live(manifestVersion(m), manifestLines(spark, base, m)))
+  private def live(spark: SparkSession, base: String): Live =
+    currentManifest(spark, base)
+      .fold(Live(-1L, Nil))(m => Live(manifestVersion(m), manifestLines(spark, base, m)))
+
+  /** The data files `rels` as one DataFrame, partition columns recovered
+    * from the relative paths via basePath; None for no files. */
+  private def readFiles(spark: SparkSession, base: String, rels: Seq[String]): Option[DataFrame] =
+    if (rels.isEmpty) None
+    else Some(spark.read.option("basePath", dataDir(base))
+      .parquet(rels.map(f => s"${dataDir(base)}/$f"): _*))
 
   /** All committed manifest versions, ascending. */
   def versions(spark: SparkSession, base: String): Seq[Long] = {
@@ -172,10 +213,7 @@ object SnapshotStore {
     val from: Set[String] =
       if (vFrom < 0) Set.empty
       else manifestFiles(spark, base, f"m$vFrom%010d").toSet
-    val added = manifestFiles(spark, base, f"m$vTo%010d").filterNot(from)
-    if (added.isEmpty) None
-    else Some(spark.read.option("basePath", dataDir(base))
-      .parquet(added.map(f => s"${dataDir(base)}/$f"): _*))
+    readFiles(spark, base, manifestFiles(spark, base, f"m$vTo%010d").filterNot(from))
   }
 
   /** Time travel: the snapshot as of manifest version `v` (None if that
@@ -183,22 +221,14 @@ object SnapshotStore {
     * [[vacuum]] drops them, so any retained version reads with full
     * snapshot isolation — the batch analog of reprocessing from an old
     * offset. Throws FileNotFoundException for a vacuumed/unknown version. */
-  def readVersion(spark: SparkSession, base: String, v: Long): Option[DataFrame] = {
-    val files = manifestFiles(spark, base, f"m$v%010d")
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", dataDir(base))
-      .parquet(files.map(f => s"${dataDir(base)}/$f"): _*))
-  }
+  def readVersion(spark: SparkSession, base: String, v: Long): Option[DataFrame] =
+    readFiles(spark, base, manifestFiles(spark, base, f"m$v%010d"))
 
   /** The live snapshot as a DataFrame (partition columns recovered from
     * the relative paths via basePath), or None when no commit exists or
     * the live manifest is empty. */
-  def read(spark: SparkSession, base: String): Option[DataFrame] = {
-    val files = listFiles(spark, base)
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", dataDir(base))
-      .parquet(files.map(f => s"${dataDir(base)}/$f"): _*))
-  }
+  def read(spark: SparkSession, base: String): Option[DataFrame] =
+    readFiles(spark, base, listFiles(spark, base))
 
   // ---- commits ------------------------------------------------------------
 
@@ -215,13 +245,26 @@ object SnapshotStore {
     * rebalance BY the partition columns so each output directory gets
     * few large files instead of one per upstream task.
     *
-    * Gated on the Catalyst size estimate so SMALL commits (every
-    * fixture-scale commit — bench-neutral, verified r16) skip the
+    * Gated on the Catalyst size estimate so small commits skip the
     * extra exchange; the threshold is deliberately of the order of a
-    * few output files. Override with session conf
+    * few output files. An estimate of Spark's unknown size
+    * (`spark.sql.defaultSizeInBytes`, what plans over an RDD such as a
+    * foreachBatch micro-batch report) is not read as large when the
+    * plan's input is one RDD partition: one input partition cannot make
+    * a tiny-file storm (a shuffle after it is coalesced by AQE, as the
+    * rebalance would be). Override with session conf
     * `spark.graft.snapshot.rebalanceMinBytes` (Long.MaxValue disables). */
   val RebalanceMinBytesKey = "spark.graft.snapshot.rebalanceMinBytes"
   val RebalanceMinBytesDefault: Long = 256L << 20
+
+  /** True when `plan` reads one RDD partition and otherwise only
+    * driver-local rows: a foreachBatch micro-batch (joined with a local
+    * dimension) or a `createDataFrame(RDD, schema)` frame. */
+  private def oneRddPartition(plan: LogicalPlan): Boolean = {
+    val leaves = plan.collectLeaves()
+    leaves.forall(l => l.isInstanceOf[LogicalRDD] || l.isInstanceOf[LocalRelation]) &&
+      leaves.collect { case r: LogicalRDD => r.rdd.getNumPartitions }.sum == 1
+  }
 
   /** Write `df` to staging, move its parquet files under data/
     * (preserving partition subdirs), return their relative paths. The
@@ -232,9 +275,12 @@ object SnapshotStore {
     val stage = s"$base/_stage/${UUID.randomUUID()}"
     val minRebalance = spark.conf
       .get(RebalanceMinBytesKey, RebalanceMinBytesDefault.toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val plan = df.queryExecution.optimizedPlan
+    val est = plan.stats.sizeInBytes
+    val unknownOnePartition =
+      est >= BigInt(spark.sessionState.conf.defaultSizeInBytes) && oneRddPartition(plan)
     val toWrite =
-      if (est >= BigInt(minRebalance))
+      if (est >= BigInt(minRebalance) && !unknownOnePartition)
         df.hint("rebalance", partitionBy: _*)
       else df
     val w = toWrite.write.mode("overwrite")
@@ -265,10 +311,10 @@ object SnapshotStore {
     * fails on an existing destination — a lost race to the version
     * number aborts loudly rather than dropping a commit. Returns the
     * published version. */
-  private def commitManifest(spark: SparkSession, base: String, parent: Option[Live],
-      files: Seq[String], tag: Option[String] = None, newStats: Seq[String] = Nil): Long = {
+  private def commitManifest(spark: SparkSession, base: String, parent: Live,
+      files: Seq[String], tag: Option[String], newStats: Seq[String]): Long = {
     val f = fs(spark, base)
-    val next = parent.map(_.version + 1).getOrElse(0L)
+    val next = parent.version + 1
     val name = f"m$next%010d"
     f.mkdirs(manifestDir(base))
     val tmp = new Path(manifestDir(base), s".tmp-${UUID.randomUUID()}")
@@ -277,14 +323,13 @@ object SnapshotStore {
     // EVERY commit (append, replace, compaction) carries the newest
     // MaxTags tags forward, so the idempotence window survives
     // compaction and vacuum instead of dying with its own manifest
-    val currentLines = parent.map(_.lines).getOrElse(Nil)
-    val carried = currentLines.filter(_.startsWith("#tag="))
+    val carried = parent.lines.filter(_.startsWith("#tag="))
     val tags = (carried ++ tag.map(t => s"#tag=$t")).takeRight(MaxTags)
     // stats lines travel with their file: carried while the file stays
     // in the manifest, dropped the moment the file is (files going away
     // at compaction must not leave ghost stats behind)
     val live = files.toSet
-    val carriedStats = currentLines
+    val carriedStats = parent.lines
       .filter(_.startsWith(StatsPrefix))
       .filter(l => statsLineFile(l).exists(live))
     writeFile(f, tmp, (tags ++ carriedStats ++ newStats ++ files).mkString("\n"))
@@ -301,17 +346,52 @@ object SnapshotStore {
     next
   }
 
+  /** What one commit publishes, chosen from the live manifest: the
+    * files it keeps by reference, the frame it stages (if any) and the
+    * stats lines it revives for kept files. */
+  private final case class Plan(keep: Seq[String], df: Option[DataFrame],
+      revivedStats: Seq[String] = Nil)
+
+  /** A published commit: its version and the files it staged. */
+  private final case class Published(version: Long, staged: Seq[String])
+
+  /** The one commit path: every manifest publish goes through here.
+    * Under the per-base commit lock it resolves the live manifest once;
+    * a `tag` already in it makes the commit a no-op, so a replayed
+    * tagged batch lands once. Otherwise `plan` chooses, from that one
+    * [[Live]], what to keep and what to stage (None: nothing to
+    * commit). The frame is staged under `partitionBy`, its files get
+    * stats for `statsCols`, and the manifest is published as the next
+    * version. With `dropEmpty`, a frame that stages zero rows publishes
+    * nothing and its files are removed. Returns the published commit,
+    * or None when nothing was published. */
+  private def commit(spark: SparkSession, base: String, tag: Option[String] = None,
+      partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
+      dropEmpty: Boolean = false)(plan: Live => Option[Plan]): Option[Published] =
+    commitLock(base).synchronized {
+      val parent = live(spark, base)
+      if (tag.exists(parent.hasTag)) None
+      else plan(parent).flatMap { p =>
+        val staged = p.df.fold(Seq.empty[String])(stageWrite(spark, base, _, partitionBy))
+        if (dropEmpty && stagedRowCount(spark, base, staged) == 0L) {
+          val f = fs(spark, base)
+          staged.foreach(rel => f.delete(new Path(s"${dataDir(base)}/$rel"), false))
+          None
+        } else {
+          val stats = p.revivedStats ++ computeStats(spark, base, staged, statsCols)
+          Some(Published(commitManifest(spark, base, parent, p.keep ++ staged, tag, stats), staged))
+        }
+      }
+    }
+
   /** Replace the whole table with `df` (dim-snapshot swap, full
     * compaction). `statsCols` opts the commit into per-file min/max
     * recording for those (numeric) columns. Returns the committed
     * manifest version. */
   def commitReplace(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
-    commitLock(base).synchronized {
-      val staged = stageWrite(spark, base, df, partitionBy)
-      commitManifest(spark, base, live(spark, base), staged,
-        newStats = computeStats(spark, base, staged, statsCols))
-    }
+    commit(spark, base, partitionBy = partitionBy, statsCols = statsCols)(
+      _ => Some(Plan(Nil, Some(df)))).get.version
 
   /** Append `df` to the table. Atomic for readers too: the batch's
     * files appear all-at-once at manifest publish, never half-written.
@@ -321,18 +401,7 @@ object SnapshotStore {
   def commitAppend(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, tag: Option[String] = None,
       statsCols: Seq[String] = Nil): Unit =
-    // the whole tag-probe → read-current → stage → publish sequence is
-    // one critical section: splitting it would let an interleaved
-    // writer invalidate the read current version (lost update) or let
-    // a replayed tag double-commit past the idempotence probe
-    commitLock(base).synchronized {
-      val parent = live(spark, base)
-      if (!tag.exists(t => parent.exists(_.hasTag(t)))) {
-        val staged = stageWrite(spark, base, df, partitionBy)
-        commitManifest(spark, base, parent, parent.map(_.files).getOrElse(Nil) ++ staged, tag,
-          newStats = computeStats(spark, base, staged, statsCols))
-      }
-    }
+    commit(spark, base, tag, partitionBy, statsCols)(l => Some(Plan(l.files, Some(df))))
 
   /** Exact row count of staged files from their parquet FOOTERS —
     * driver-side metadata reads (one footer per new file, the same
@@ -362,34 +431,16 @@ object SnapshotStore {
   def commitAppendCounted(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, tag: Option[String] = None,
       statsCols: Seq[String] = Nil): Long =
-    commitLock(base).synchronized {
-      val parent = live(spark, base)
-      if (tag.exists(t => parent.exists(_.hasTag(t)))) 0L
-      else {
-        val staged = stageWrite(spark, base, df, partitionBy)
-        val n = stagedRowCount(spark, base, staged)
-        if (n == 0L) {
-          val f = fs(spark, base)
-          staged.foreach(rel => f.delete(new Path(s"${dataDir(base)}/$rel"), false))
-        } else {
-          commitManifest(spark, base, parent, parent.map(_.files).getOrElse(Nil) ++ staged, tag,
-            newStats = computeStats(spark, base, staged, statsCols))
-        }
-        n
-      }
-    }
+    commit(spark, base, tag, partitionBy, statsCols, dropEmpty = true)(
+      l => Some(Plan(l.files, Some(df)))).fold(0L)(p => stagedRowCount(spark, base, p.staged))
 
   /** [[commitReplace]] returning the rows committed, counted from the
     * staged footers (the replace ALWAYS commits — replacing a table
     * with an empty snapshot is a legitimate state). */
   def commitReplaceCounted(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
-    commitLock(base).synchronized {
-      val staged = stageWrite(spark, base, df, partitionBy)
-      commitManifest(spark, base, live(spark, base), staged,
-        newStats = computeStats(spark, base, staged, statsCols))
-      stagedRowCount(spark, base, staged)
-    }
+    commit(spark, base, partitionBy = partitionBy, statsCols = statsCols)(
+      _ => Some(Plan(Nil, Some(df)))).fold(0L)(p => stagedRowCount(spark, base, p.staged))
 
   /** Replace exactly one partition's files with `df` (which must be the
     * new content of that partition, carrying the partition column):
@@ -398,13 +449,8 @@ object SnapshotStore {
   def commitReplacePartition(spark: SparkSession, base: String, df: DataFrame,
       partitionCol: String, partitionValue: String,
       statsCols: Seq[String] = Nil): Unit =
-    commitLock(base).synchronized {
-      val parent = live(spark, base)
-      val kept = parent.map(_.files).getOrElse(Nil)
-        .filterNot(_.startsWith(s"$partitionCol=$partitionValue/"))
-      val staged = stageWrite(spark, base, df, Seq(partitionCol))
-      commitManifest(spark, base, parent, kept ++ staged,
-        newStats = computeStats(spark, base, staged, statsCols))
+    commit(spark, base, partitionBy = Seq(partitionCol), statsCols = statsCols) { l =>
+      Some(Plan(l.files.filterNot(_.startsWith(s"$partitionCol=$partitionValue/")), Some(df)))
     }
 
   // ---- per-file column statistics (data skipping) -------------------------
@@ -425,12 +471,11 @@ object SnapshotStore {
   private def computeStats(spark: SparkSession, base: String,
       newRels: Seq[String], statsCols: Seq[String]): Seq[String] = {
     if (statsCols.isEmpty || newRels.isEmpty) return Nil
-    val abs = newRels.map(r => s"${dataDir(base)}/$r")
-    val df = spark.read.option("basePath", dataDir(base)).parquet(abs: _*)
     val aggs = statsCols.flatMap(c => Seq(
       min(col(c)).cast("double").as(s"__min_$c"),
       max(col(c)).cast("double").as(s"__max_$c")))
-    val rows = df.groupBy(input_file_name().as("__f"))
+    val rows = readFiles(spark, base, newRels).get
+      .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect()
     rows.toSeq.flatMap { r =>
       newRels.find(rel => r.getString(0).endsWith(rel)).map { rel =>
@@ -451,51 +496,41 @@ object SnapshotStore {
     * rel path → column → (min, max). Files or columns without recorded
     * stats are simply absent. */
   def fileStats(spark: SparkSession, base: String): Map[String, Map[String, (Double, Double)]] =
-    currentManifest(spark, base).toSeq
-      .flatMap(m => manifestLines(spark, base, m))
-      .filter(_.startsWith(StatsPrefix))
-      .flatMap { line =>
-        line.stripPrefix(StatsPrefix).split("\t", 2) match {
-          case Array(rel, spec) =>
-            val cols = spec.split(";").iterator.filter(_.nonEmpty).flatMap { p =>
-              p.split("=", 2) match {
-                case Array(c, mm) => mm.split(",", 2) match {
-                  case Array(lo, hi) => Some(c -> (lo.toDouble, hi.toDouble))
-                  case _ => None
-                }
-                case _ => None
-              }
-            }.toMap
-            Some(rel -> cols)
-          case _ => None
-        }
-      }.toMap
+    live(spark, base).stats
 
   /** Live-snapshot files whose recorded [min,max] for `column`
     * intersects [lo, hi]; files without stats for the column are
     * conservatively kept. Pure manifest metadata — no data IO. */
   def pruneFiles(spark: SparkSession, base: String, column: String,
-      lo: Double, hi: Double): Seq[String] = {
-    val st = fileStats(spark, base)
-    listFiles(spark, base).filter { f =>
-      st.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-  }
+      lo: Double, hi: Double): Seq[String] =
+    live(spark, base).prune(column, lo, hi)
 
   /** Range read with file skipping: only files surviving [[pruneFiles]]
     * are opened (parquet row-group pushdown then prunes further inside
     * them), and the row-level filter is applied on top so the result is
     * EXACTLY the full-scan filter's. None when every file was skipped. */
   def readRange(spark: SparkSession, base: String, column: String,
-      lo: Double, hi: Double): Option[DataFrame] = {
-    val files = pruneFiles(spark, base, column, lo, hi)
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", dataDir(base))
-      .parquet(files.map(f => s"${dataDir(base)}/$f"): _*)
-      .filter(col(column) >= lo && col(column) <= hi))
+      lo: Double, hi: Double): Option[DataFrame] =
+    readFiles(spark, base, pruneFiles(spark, base, column, lo, hi))
+      .map(_.filter(col(column) >= lo && col(column) <= hi))
+
+  /** The shared body of the STATS-PRUNED PARTIAL REWRITES: `affected`
+    * picks, from the live manifest, the files that can hold a matching
+    * row; those files are read, rewritten by `f` and replaced, and every
+    * other file carries over into the new manifest BY REFERENCE,
+    * untouched. The rewrite re-records stats for `statsCols` on the
+    * replacement files. Returns the number of files rewritten (0 =
+    * metadata-only no-op: no new manifest is committed). Atomic:
+    * readers see the snapshot before or after, never a mix. */
+  private def rewrite(spark: SparkSession, base: String, statsCols: Seq[String])(
+      affected: Live => Seq[String])(f: DataFrame => DataFrame): Int = {
+    var rewritten = 0
+    commit(spark, base, statsCols = statsCols) { l =>
+      val hit = affected(l)
+      rewritten = hit.size
+      readFiles(spark, base, hit).map(scan => Plan(l.files.filterNot(hit.toSet), Some(f(scan))))
+    }
+    rewritten
   }
 
   /** Targeted delete (right-to-be-forgotten / retention purge) with a
@@ -517,24 +552,12 @@ object SnapshotStore {
   def deleteRange(spark: SparkSession, base: String, column: String,
       lo: Double, hi: Double, statsCols: Seq[String] = Nil,
       extra: Option[Column] = None): Int =
-    commitLock(base).synchronized {
-      val affected = pruneFiles(spark, base, column, lo, hi)
-      if (affected.isEmpty) 0
-      else {
-        val keep = listFiles(spark, base).filterNot(affected.toSet)
-        val dd = dataDir(base)
-        val deletePred = col(column) >= lo && col(column) <= hi &&
-          extra.getOrElse(lit(true))
-        // three-valued logic: a NULL predicate (null column value) must
-        // mean KEEP, not drop — filter(!p) alone would drop null rows
-        val survivors = spark.read.option("basePath", dd)
-          .parquet(affected.map(f => s"$dd/$f"): _*)
-          .filter(not(coalesce(deletePred, lit(false))))
-        val staged = stageWrite(spark, base, survivors, Nil)
-        commitManifest(spark, base, live(spark, base), keep ++ staged,
-          newStats = computeStats(spark, base, staged, statsCols))
-        affected.size
-      }
+    rewrite(spark, base, statsCols)(_.prune(column, lo, hi)) { scan =>
+      val deletePred = col(column) >= lo && col(column) <= hi &&
+        extra.getOrElse(lit(true))
+      // three-valued logic: a NULL predicate (null column value) must
+      // mean KEEP, not drop — filter(!p) alone would drop null rows
+      scan.filter(not(coalesce(deletePred, lit(false))))
     }
 
   /** ClickHouse table-TTL analog with rollup aging — `TTL ts +
@@ -567,27 +590,15 @@ object SnapshotStore {
   def ttlExpire(spark: SparkSession, base: String, column: String,
       cutoff: Double, rollup: DataFrame => DataFrame,
       statsCols: Seq[String] = Nil): Int =
-    commitLock(base).synchronized {
-      val affected = pruneFiles(spark, base, column,
-        Double.NegativeInfinity, cutoff)
-      if (affected.isEmpty) 0
-      else {
-        val keep = listFiles(spark, base).filterNot(affected.toSet)
-        val dd = dataDir(base)
-        val scan = spark.read.option("basePath", dd)
-          .parquet(affected.map(f => s"$dd/$f"): _*)
-        val expiredPred = coalesce(col(column) < cutoff, lit(false))
-        val survivors = scan.filter(not(expiredPred))
-        val rolled = rollup(scan.filter(expiredPred))
-        val want = scan.schema.map(f => (f.name, f.dataType))
-        val got = rolled.schema.map(f => (f.name, f.dataType))
-        require(got == want,
-          s"TTL rollup must preserve the table schema; expected $want, got $got")
-        val staged = stageWrite(spark, base, survivors.unionByName(rolled), Nil)
-        commitManifest(spark, base, live(spark, base), keep ++ staged,
-          newStats = computeStats(spark, base, staged, statsCols))
-        affected.size
-      }
+    rewrite(spark, base, statsCols)(_.prune(column, Double.NegativeInfinity, cutoff)) { scan =>
+      val expiredPred = coalesce(col(column) < cutoff, lit(false))
+      val survivors = scan.filter(not(expiredPred))
+      val rolled = rollup(scan.filter(expiredPred))
+      val want = scan.schema.map(f => (f.name, f.dataType))
+      val got = rolled.schema.map(f => (f.name, f.dataType))
+      require(got == want,
+        s"TTL rollup must preserve the table schema; expected $want, got $got")
+      survivors.unionByName(rolled)
     }
 
   /** `ALTER TABLE … UPDATE` mutation analog (completing the
@@ -608,35 +619,24 @@ object SnapshotStore {
     * pre- or post-update snapshot, never a mix. */
   def updateRange(spark: SparkSession, base: String, column: String,
       lo: Double, hi: Double, set: Map[String, Column],
-      statsCols: Seq[String] = Nil, extra: Option[Column] = None): Int =
-    commitLock(base).synchronized {
-      require(set.nonEmpty, "UPDATE needs at least one SET column")
-      val affected = pruneFiles(spark, base, column, lo, hi)
-      if (affected.isEmpty) 0
-      else {
-        val keep = listFiles(spark, base).filterNot(affected.toSet)
-        val dd = dataDir(base)
-        val pred = coalesce(col(column) >= lo && col(column) <= hi &&
-          extra.getOrElse(lit(true)), lit(false))
-        val src = spark.read.option("basePath", dd)
-          .parquet(affected.map(f => s"$dd/$f"): _*)
-        val types = src.schema.map(f => f.name -> f.dataType).toMap
-        val missing = set.keySet -- types.keySet
-        require(missing.isEmpty, s"SET columns not in table: $missing")
-        val rewritten = src.withColumn("__hit", pred)
-          .select(src.columns.toSeq.map { c =>
-            (set.get(c) match {
-              case Some(v) =>
-                when(col("__hit"), v.cast(types(c))).otherwise(col(c))
-              case None => col(c)
-            }).as(c)
-          }: _*)
-        val staged = stageWrite(spark, base, rewritten, Nil)
-        commitManifest(spark, base, live(spark, base), keep ++ staged,
-          newStats = computeStats(spark, base, staged, statsCols))
-        affected.size
-      }
+      statsCols: Seq[String] = Nil, extra: Option[Column] = None): Int = {
+    require(set.nonEmpty, "UPDATE needs at least one SET column")
+    rewrite(spark, base, statsCols)(_.prune(column, lo, hi)) { src =>
+      val pred = coalesce(col(column) >= lo && col(column) <= hi &&
+        extra.getOrElse(lit(true)), lit(false))
+      val types = src.schema.map(f => f.name -> f.dataType).toMap
+      val missing = set.keySet -- types.keySet
+      require(missing.isEmpty, s"SET columns not in table: $missing")
+      src.withColumn("__hit", pred)
+        .select(src.columns.toSeq.map { c =>
+          (set.get(c) match {
+            case Some(v) =>
+              when(col("__hit"), v.cast(types(c))).otherwise(col(c))
+            case None => col(c)
+          }).as(c)
+        }: _*)
     }
+  }
 
   /** Keyed MERGE (CDC apply: upsert + delete in one batch) with the
     * same stats-pruned PARTIAL REWRITE as [[deleteRange]] — the scale
@@ -658,15 +658,17 @@ object SnapshotStore {
     * never the batch — reach the driver. Files without recorded key
     * stats are conservatively rewritten. Returns files rewritten; 0 =
     * no change row touches any file AND the batch has no inserts
-    * (nothing to commit). */
+    * (nothing to commit). Unlike the range rewrites, a batch that
+    * touches no file still commits its inserts, so it plans through
+    * [[commit]] directly rather than [[rewrite]]. */
   def mergeKeyed(spark: SparkSession, base: String, changes: DataFrame,
       keyCol: String, isDelete: Column,
-      statsCols: Seq[String] = Nil): Int =
-    commitLock(base).synchronized {
-      import org.apache.spark.sql.functions.broadcast
-      val all = listFiles(spark, base)
-      val st = fileStats(spark, base)
-      val (ranged, statless) = all.partition(f => st.get(f).exists(_.contains(keyCol)))
+      statsCols: Seq[String] = Nil): Int = {
+    import org.apache.spark.sql.functions.broadcast
+    var rewritten = 0
+    commit(spark, base, statsCols = statsCols) { l =>
+      val st = l.stats
+      val (ranged, statless) = l.files.partition(f => st.get(f).exists(_.contains(keyCol)))
       val rangeRows = ranged.map { f =>
         val (lo, hi) = st(f)(keyCol); (f, lo, hi)
       }
@@ -680,30 +682,21 @@ object SnapshotStore {
             .select("__file").distinct().collect().map(_.getString(0)).toSeq
         }
       val affected = (statless ++ affectedRanged).distinct
-      val dd = dataDir(base)
+      rewritten = affected.size
       // table schema governs: extra change-side columns (CDC markers)
       // never reach storage
-      val tableCols: Seq[String] =
-        if (all.nonEmpty)
-          spark.read.option("basePath", dd).parquet(s"$dd/${all.head}").columns.toSeq
-        else changes.columns.toSeq
+      val tableCols = readFiles(spark, base, l.files.take(1))
+        .fold(changes.columns.toSeq)(_.columns.toSeq)
       val upserts = changes.filter(not(coalesce(isDelete, lit(false))))
         .select(tableCols.map(col): _*)
-      if (affected.isEmpty && upserts.isEmpty) 0
-      else {
-        val keep = all.filterNot(affected.toSet)
-        val survivors =
-          if (affected.isEmpty) upserts
-          else spark.read.option("basePath", dd)
-            .parquet(affected.map(f => s"$dd/$f"): _*)
-            .join(changes.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-            .unionByName(upserts)
-        val staged = stageWrite(spark, base, survivors, Nil)
-        commitManifest(spark, base, live(spark, base), keep ++ staged,
-          newStats = computeStats(spark, base, staged, statsCols))
-        affected.size
-      }
+      if (affected.isEmpty && upserts.isEmpty) None
+      else Some(Plan(l.files.filterNot(affected.toSet), Some(
+        readFiles(spark, base, affected).fold(upserts)(
+          _.join(changes.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+            .unionByName(upserts)))))
     }
+    rewritten
+  }
 
   /** RESTORE analog (rollback/roll-forward time travel as a COMMIT):
     * publish a new manifest that re-references the data files of
@@ -715,15 +708,14 @@ object SnapshotStore {
     * with every commit. Readers see the pre- or post-restore snapshot
     * atomically. Throws FileNotFoundException when `v` was vacuumed. */
   def restore(spark: SparkSession, base: String, v: Long): Unit =
-    commitLock(base).synchronized {
-      val name = f"m$v%010d"
-      val files = manifestFiles(spark, base, name)
-      val fileSet = files.toSet
-      val cur = listFiles(spark, base).toSet
-      val revived = manifestLines(spark, base, name)
+    commit(spark, base) { l =>
+      val old = Live(v, manifestLines(spark, base, f"m$v%010d"))
+      val fileSet = old.files.toSet
+      val cur = l.files.toSet
+      val revived = old.lines
         .filter(_.startsWith(StatsPrefix))
-        .filter(l => statsLineFile(l).exists(f => fileSet(f) && !cur(f)))
-      commitManifest(spark, base, live(spark, base), files, newStats = revived)
+        .filter(line => statsLineFile(line).exists(f => fileSet(f) && !cur(f)))
+      Some(Plan(old.files, None, revived))
     }
 
   // ---- retention ----------------------------------------------------------

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.TimeSeries
-import graft.sinks.{SnapshotStore, SummingStore}
+import graft.sinks.SummingStore
 
 /** Real-time dashboard serving for the gap-fill / moving-agg surface —
   * the streaming twin of the batch `WITH FILL … INTERPOLATE` +
@@ -43,13 +43,9 @@ object Dashboard {
     * an additive SummingStore part, idempotent by `batchId`. */
   def dailySumSink(key: Column, ts: Column, valueMicros: Column,
       mvPath: String): (DataFrame, Long) => Unit = (batch, batchId) => {
-    val spark = batch.sparkSession
-    val tag = s"dash-b$batchId"
-    if (!SnapshotStore.hasTag(spark, mvPath, tag)) {
-      val part = batch.groupBy(key.as("k"), to_date(ts).as("d"))
-        .agg(sum(valueMicros).as("v"))
-      SummingStore.appendDelta(part, mvPath, tag = Some(tag))
-    }
+    val part = batch.groupBy(key.as("k"), to_date(ts).as("d"))
+      .agg(sum(valueMicros).as("v"))
+    SummingStore.appendDelta(part, mvPath, tag = Some(s"dash-b$batchId"))
   }
 
   /** Merged per-(key, day) observation table from the MV parts —
@@ -80,14 +76,9 @@ object Dashboard {
     * merged state is bit-identical to a one-shot build over the whole
     * stream — streaming quantiles with ≤1.9k rows of MV state. */
   def quantileSketchSink(v: Column, mvPath: String,
-      m: Int = 5): (DataFrame, Long) => Unit = (batch, batchId) => {
-    val spark = batch.sparkSession
-    val tag = s"qsk-b$batchId"
-    if (!SnapshotStore.hasTag(spark, mvPath, tag)) {
-      val part = graft.ops.Sketches.quantileSketch(batch, v, m)
-      SummingStore.appendDelta(part, mvPath, tag = Some(tag))
-    }
-  }
+      m: Int = 5): (DataFrame, Long) => Unit = (batch, batchId) =>
+    SummingStore.appendDelta(graft.ops.Sketches.quantileSketch(batch, v, m), mvPath,
+      tag = Some(s"qsk-b$batchId"))
 
   /** Serving read: quantile estimates over the incrementally-
     * maintained sketch — same output contract as the batch
@@ -104,15 +95,10 @@ object Dashboard {
     * the whole stream regardless of batch boundaries. */
   def bucketSumSink(key: Column, ts: Column, valueMicros: Column,
       bucketUs: Long, mvPath: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val tag = s"seas-b$batchId"
-      if (!SnapshotStore.hasTag(spark, mvPath, tag)) {
-        val part = graft.ops.Seasonal.obs(batch, key, ts, valueMicros,
-          bucketUs)
-        SummingStore.appendDelta(part, mvPath, tag = Some(tag))
-      }
-    }
+    (batch, batchId) =>
+      SummingStore.appendDelta(
+        graft.ops.Seasonal.obs(batch, key, ts, valueMicros, bucketUs), mvPath,
+        tag = Some(s"seas-b$batchId"))
 
   /** Merged + zero-filled series from the seasonality MV. */
   private def servedSeries(spark: SparkSession,
@@ -154,14 +140,10 @@ object Dashboard {
     * live twin. Per batch the part is |groups active in the batch|
     * rows — the MV grows with group cardinality, never the stream. */
   def anovaPartialsSink(v: Column, group: Column,
-      mvPath: String): (DataFrame, Long) => Unit = (batch, batchId) => {
-    val spark = batch.sparkSession
-    val tag = s"anova-b$batchId"
-    if (!SnapshotStore.hasTag(spark, mvPath, tag))
-      SummingStore.appendDelta(
-        graft.ops.Stats.anovaPartials(batch, v, group), mvPath,
-        tag = Some(tag))
-  }
+      mvPath: String): (DataFrame, Long) => Unit = (batch, batchId) =>
+    SummingStore.appendDelta(
+      graft.ops.Stats.anovaPartials(batch, v, group), mvPath,
+      tag = Some(s"anova-b$batchId"))
 
   /** Serving read: the F readout over the merged per-group partials —
     * same scalar path ([[graft.ops.Stats.anovaFromPartials]]) and

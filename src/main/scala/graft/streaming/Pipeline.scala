@@ -417,7 +417,6 @@ object Pipeline {
       }
   }
 
-  /** K3: enriched → Kafka-outbox-shaped JSON value column. */
   /** Watermarked STREAM-STREAM interval join: click→purchase
     * attribution. Emits one row per (click, purchase) pair of the same
     * user with the purchase inside [click_ts, click_ts + maxDelay].
@@ -454,6 +453,7 @@ object Pipeline {
         col("p.event_id").as("purchase_id"), col("p.ts").as("purchase_ts"))
   }
 
+  /** K3: enriched → Kafka-outbox-shaped JSON value column. */
   def outbox(enriched: DataFrame): DataFrame = Enrich.toOutboxJson(enriched)
 
   /** K1: warehouse append sink as foreachBatch (JDBC/parquet target
