@@ -102,11 +102,13 @@ case class DoubleDot(left: Expression, right: Expression) extends BinaryExpressi
   * directly. Shuffle removed outright (optimization guide §2.4) and the
   * |corpus|×k intermediate never materializes.
   *
-  * Children: (v: array<double>, nrm: double, cvs: array<array<double>>
-  * LITERAL, cnrms: array<double> LITERAL, probes: int LITERAL) —
-  * centroids are driver state by construction (k×dim doubles, the one
-  * thing every k-means path already collects), embedded in the plan as
-  * foldable literals; cent_id = position in `cvs` (0-based).
+  * Children: (v: array<double>, nrm: double). The centroid matrix
+  * (k×dim doubles, the one thing every k-means path already collects)
+  * rides a BROADCAST variable, not plan literals: a literal matrix would
+  * re-serialize into every stage's task binary (~25 MB per task set at a
+  * production 4096×768), while a broadcast ships once per executor and
+  * the expression serializes as a small handle. cent_id = position in
+  * the matrix (0-based).
   *
   * Semantics are BIT-IDENTICAL to the join+aggregate form it replaces:
   *  - score_c = graft_dot(v, cv_c)/(nrm·cnrm_c) when nrm>0 AND
@@ -123,45 +125,32 @@ case class DoubleDot(left: Expression, right: Expression) extends BinaryExpressi
   *    guaranteed the same).
   */
 case class NearestCentroids(vChild: Expression, nrmChild: Expression,
-    cvsChild: Expression, cnrmsChild: Expression, probesChild: Expression)
+    bc: org.apache.spark.broadcast.Broadcast[(Array[Array[Double]], Array[Double])],
+    probes: Int)
   extends Expression {
 
-  override def children: Seq[Expression] =
-    Seq(vChild, nrmChild, cvsChild, cnrmsChild, probesChild)
+  override def children: Seq[Expression] = Seq(vChild, nrmChild)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val vOk = vChild.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
+    vChild.dataType match {
+      case ArrayType(DoubleType, _) if nrmChild.dataType == DoubleType =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        "graft_nearest_cents(v: array<double>, nrm: double, handle: LITERAL bigint, probes: LITERAL int)")
     }
-    if (vOk && nrmChild.dataType == DoubleType &&
-        cvsChild.foldable && cnrmsChild.foldable && probesChild.foldable)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_nearest_cents(v: array<double>, nrm: double, cvs: LITERAL " +
-        s"array<array<double>>, cnrms: LITERAL array<double>, probes: LITERAL int)")
   }
 
-  // centroid matrix decoded from the foldable children once per task
-  // (@transient: executors rebuild from the serialized literals)
-  @transient private lazy val cvs: Array[Array[Double]] = {
-    val arr = cvsChild.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(arr.numElements()) { i =>
-      arr.getArray(i).toDoubleArray()
-    }
-  }
-  @transient private lazy val cnrms: Array[Double] =
-    cnrmsChild.eval(null).asInstanceOf[ArrayData].toDoubleArray()
-  @transient private lazy val probes: Int =
-    probesChild.eval(null).asInstanceOf[Int]
+  // resolved from the broadcast once per executor (bc.value is the
+  // TorrentBroadcast fetch; subsequent reads are local)
+  @transient private lazy val cvs: Array[Array[Double]] = bc.value._1
+  @transient private lazy val cnrms: Array[Double] = bc.value._2
 
   /** Score all centroids, return top-`probes` ids by
-    * (score desc, cent_id asc) — [[NearestCentroids.pickTop]], shared
-    * with the broadcast-backed variant. Public: invoked from generated
-    * code. */
+    * (score desc, cent_id asc) — [[NearestCentroids.pickTop]]. Public:
+    * invoked from generated code. */
   def pick(vRaw: ArrayData, nrm: Double): ArrayData =
     NearestCentroids.pickTop(vRaw, nrm, cvs, cnrms, probes)
 
@@ -191,9 +180,7 @@ case class NearestCentroids(vChild: Expression, nrmChild: Expression,
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(vChild = newChildren(0), nrmChild = newChildren(1),
-      cvsChild = newChildren(2), cnrmsChild = newChildren(3),
-      probesChild = newChildren(4))
+    copy(vChild = newChildren(0), nrmChild = newChildren(1))
   override def prettyName: String = "graft_nearest_cents"
 }
 
@@ -220,12 +207,9 @@ object NearestCentroids {
     sum / (nrm * cnrm)
   }
 
-  /** The shared selection loop: score all centroids, return the top
+  /** The selection loop: score all centroids, return the top
     * min(probes, k) positions by (score desc, cent_id asc) — strict >
-    * in the scan keeps the LOWEST cent_id on ties. One implementation
-    * serves both the literal-backed and broadcast-backed expressions,
-    * so their bit-equality is by construction (and pinned by
-    * KMeansEquivalenceSpec). */
+    * in the scan keeps the LOWEST cent_id on ties. */
   def pickTop(vRaw: ArrayData, nrm: Double, cvs: Array[Array[Double]],
       cnrms: Array[Double], probes: Int): ArrayData = {
     val k = cvs.length
@@ -254,99 +238,27 @@ object NearestCentroids {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
 
-/** [[NearestCentroids]] with the centroid matrix carried as a BROADCAST
-  * variable instead of plan literals — the r15 verdict's
-  * scale-hardening item: a literal centroid matrix re-serializes into
-  * EVERY stage's task binary (harmless at the fixture's 8×16 doubles,
-  * ~25 MB per task binary at a production 4096×768), while a broadcast
-  * ships once per executor and the expression serializes as a tiny
-  * handle. Selected by [[graft.similarity.KMeans]] when the matrix
-  * exceeds `spark.graft.centroids.broadcastMinBytes` (default 1 MiB —
-  * fixture-scale fits stay on the literal path, so benched plans are
-  * unchanged). pick()/score() are [[NearestCentroids.pickTop]]'s
-  * verbatim, so the two variants are bit-equal by construction;
-  * KMeansEquivalenceSpec forces this path (threshold 0) and pins it
-  * against the literal form row-for-row. */
-case class NearestCentroidsBc(vChild: Expression, nrmChild: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[(Array[Array[Double]], Array[Double])],
-    probes: Int)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(vChild, nrmChild)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    vChild.dataType match {
-      case ArrayType(DoubleType, _) if nrmChild.dataType == DoubleType =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "graft_nearest_cents_bc(v: array<double>, nrm: double, handle: LITERAL bigint, probes: LITERAL int)")
-    }
-  }
-
-  // resolved from the broadcast once per executor (bc.value is the
-  // TorrentBroadcast fetch; subsequent reads are local)
-  @transient private lazy val cvs: Array[Array[Double]] = bc.value._1
-  @transient private lazy val cnrms: Array[Double] = bc.value._2
-
-  /** Invoked from generated code. */
-  def pick(vRaw: ArrayData, nrm: Double): ArrayData =
-    NearestCentroids.pickTop(vRaw, nrm, cvs, cnrms, probes)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = vChild.eval(input)
-    val nr = nrmChild.eval(input)
-    pick(if (v == null) null else v.asInstanceOf[ArrayData],
-      if (nr == null) Double.NaN else nr.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val self = ctx.addReferenceObj("nearestCentsBc", this, classOf[NearestCentroidsBc].getName)
-    val vEv = vChild.genCode(ctx)
-    val nEv = nrmChild.genCode(ctx)
-    val resultCode =
-      code"""
-        |${vEv.code}
-        |${nEv.code}
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        |  $self.pick(${vEv.isNull} ? null : ${vEv.value},
-        |    ${nEv.isNull} ? Double.NaN : ${nEv.value});
-      """.stripMargin
-    ev.copy(code = resultCode,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(vChild = newChildren(0), nrmChild = newChildren(1))
-  override def prettyName: String = "graft_nearest_cents_bc"
-}
-
-object NearestCentroidsBc {
   /** Driver-side handle registry: the function-registry builder runs
-    * at analysis time on the driver, so a LITERAL handle id in the
-    * call resolves to its broadcast here and the built expression
-    * carries the broadcast reference itself (re-analysis re-resolves
-    * the same handle). Entries are never removed — each one is a
-    * driver-side (k×dim doubles + broadcast block) held for the
-    * session; the path only activates above the size threshold, and a
-    * long-lived service refreshing centroids would unpersist through
-    * its own index lifecycle ([[graft.similarity.IvfIndex]] publishes
-    * versioned snapshots instead of holding sessions open). */
+    * at analysis time on the driver, so a LITERAL handle id in the call
+    * resolves to its broadcast here and the built expression carries the
+    * broadcast reference itself. Resolving TAKES the handle out, so
+    * afterwards only the analyzed plan holds the broadcast and Spark's
+    * ContextCleaner reclaims it once the plan is garbage; a second
+    * resolution of one handle fails the `require` instead of reading a
+    * stale matrix. */
   private val handles = new java.util.concurrent.ConcurrentHashMap[
     Long, org.apache.spark.broadcast.Broadcast[(Array[Array[Double]], Array[Double])]]()
   private val nextId = new java.util.concurrent.atomic.AtomicLong()
 
   private[graft] def lookup(id: Long) = {
-    val bc = handles.get(id)
-    require(bc != null, s"graft_nearest_cents_bc: unknown centroid handle $id")
+    val bc = handles.remove(id)
+    require(bc != null, s"graft_nearest_cents: unknown centroid handle $id")
     bc
   }
+
+  /** Handles broadcast but not yet resolved into a plan. */
+  private[graft] def pendingHandles: Int = handles.size
 
   /** Broadcast one centroid set and build the probe column over it. */
   def columnFor(spark: SparkSession, cvs: Array[Array[Double]],
@@ -357,15 +269,15 @@ object NearestCentroidsBc {
     val id = nextId.incrementAndGet()
     handles.put(id, bc)
     VectorExpressions.register(spark)
-    org.apache.spark.sql.functions.call_function("graft_nearest_cents_bc",
+    org.apache.spark.sql.functions.call_function("graft_nearest_cents",
       v, nrm, org.apache.spark.sql.functions.lit(id),
       org.apache.spark.sql.functions.lit(probes))
   }
 }
 
 object VectorExpressions {
-  /** Register `graft_dot(a, b)` and `graft_nearest_cents(v, nrm, cvs,
-    * cnrms, probes)` in the session (idempotent: a no-op if already
+  /** Register `graft_dot(a, b)` and `graft_nearest_cents(v, nrm,
+    * handle, probes)` in the session (idempotent: a no-op if already
     * present, so repeated calls don't spam replace-function
     * warnings). */
   def register(spark: SparkSession): Unit = {
@@ -382,21 +294,10 @@ object VectorExpressions {
       registry.createOrReplaceTempFunction(
         "graft_nearest_cents",
         exprs => {
-          require(exprs.length == 5,
-            "graft_nearest_cents(v, nrm, cvs, cnrms, probes)")
-          NearestCentroids(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))
-        },
-        "built-in")
-    }
-    val bcIdent = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nearest_cents_bc")
-    if (!registry.functionExists(bcIdent)) {
-      registry.createOrReplaceTempFunction(
-        "graft_nearest_cents_bc",
-        exprs => {
           require(exprs.length == 4 && exprs(2).foldable && exprs(3).foldable,
-            "graft_nearest_cents_bc(v, nrm, handle LITERAL, probes LITERAL)")
-          NearestCentroidsBc(exprs(0), exprs(1),
-            NearestCentroidsBc.lookup(exprs(2).eval(null).asInstanceOf[Long]),
+            "graft_nearest_cents(v, nrm, handle LITERAL, probes LITERAL)")
+          NearestCentroids(exprs(0), exprs(1),
+            NearestCentroids.lookup(exprs(2).eval(null).asInstanceOf[Long]),
             exprs(3).eval(null).asInstanceOf[Int])
         },
         "built-in")

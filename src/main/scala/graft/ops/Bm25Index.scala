@@ -19,7 +19,7 @@ import graft.sinks.SnapshotStore
   *  - `postings` — (term, doc_id, dl, tf): one row per distinct
   *    (term, doc) pair. Production-sized stores lay out in
   *    `term_bucket=pmod(md5Long(term), N)/` partition directories
-  *    (r16; see [[BucketsConfKey]]/[[PartitionMinBytesKey]]) so the
+  *    (r16; see [[TermBuckets]]/[[PartitionMinBytesKey]]) so the
   *    query-side term filter prunes DIRECTORIES before any data IO —
   *    a query scans ~|query-term buckets|/N of the postings bytes,
   *    never the corpus. Fixture-sized stores stay flat (measured: the
@@ -59,12 +59,10 @@ object Bm25Index {
     * partitioning compromise. Writes repartition by the bucket first
     * (guide §6 "coalesce on write"), so a commit adds at most N files.
     * The bucket count is a LAYOUT property of the store: readers and
-    * writers of one index must use one value (it is read from this
-    * session conf at both sites; stores here are per-invocation
-    * scratch, and a production deployment would pin it per index). */
-  val BucketsConfKey = "spark.graft.bm25.termBuckets"
-  private def termBuckets(spark: SparkSession): Int =
-    spark.conf.get(BucketsConfKey, "64").toInt
+    * writers of one index must use one value, or the query side would
+    * compute the wrong buckets and silently skip postings — hence a
+    * constant, not a session setting. */
+  val TermBuckets = 64
 
   /** The bucketed layout engages only when the FIRST postings batch's
     * Catalyst size estimate reaches this many bytes (measured r16,
@@ -82,10 +80,9 @@ object Bm25Index {
 
   /** Whether this store is (or should become) term-bucket partitioned:
     * an existing store keeps its layout; a new store buckets when the
-    * incoming batch is big enough and bucketing isn't disabled. */
+    * incoming batch is big enough. */
   private def bucketedLayout(spark: SparkSession, indexBase: String,
       firstBatch: DataFrame): Boolean = {
-    if (termBuckets(spark) <= 0) return false
     SnapshotStore.read(spark, postingsBase(indexBase)) match {
       case Some(existing) => existing.columns.contains("term_bucket")
       case None =>
@@ -149,7 +146,7 @@ object Bm25Index {
       else raw
         .withColumn("term_bucket",
           pmod(TextFunctions.md5Long(col("term")),
-            lit(termBuckets(spark).toLong)).cast("int"))
+            lit(TermBuckets.toLong)).cast("int"))
         .repartition(col("term_bucket"))
     val posts = Future(SnapshotStore.commitAppend(spark, postingsBase(indexBase),
       postRows,
@@ -192,8 +189,7 @@ object Bm25Index {
       if (!postings.columns.contains("term_bucket"))
         postings.filter(col("term").isInCollection(terms))
       else {
-        val nb = termBuckets(spark)
-        val wantedBuckets = terms.map(t => (md5LongLocal(t) % nb).toInt).distinct
+        val wantedBuckets = terms.map(t => (md5LongLocal(t) % TermBuckets).toInt).distinct
         postings
           .filter(col("term_bucket").isInCollection(wantedBuckets) &&
             col("term").isInCollection(terms))

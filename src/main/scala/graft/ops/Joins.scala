@@ -21,27 +21,11 @@ import org.apache.spark.sql.DataFrame
   * finding). Shuffled-hash stays the right choice only for tables
   * with a PROVEN bound (k-means centroids, top-k heads — which are
   * broadcast anyway).
-  *
-  * Escape hatch: set session conf `spark.graft.corpusJoin` to
-  * `shuffle_hash` on a cluster whose shuffle partitions are sized so
-  * build sides fit task memory — SHJ skips the sort and measured ~2×
-  * faster at the 10× probe size. The default is the strategy that
-  * cannot OOM.
   */
 object Joins {
 
-  val ConfKey = "spark.graft.corpusJoin"
-
-  /** Hint `df` as a corpus-derived join side: sort-merge unless the
-    * session conf overrides to shuffle_hash. */
-  def corpusSide(df: DataFrame): DataFrame = {
-    val strategy =
-      df.sparkSession.conf.get(ConfKey, "merge") match {
-        case "shuffle_hash" => "shuffle_hash"
-        case _              => "merge"
-      }
-    df.hint(strategy)
-  }
+  /** Hint `df` as a corpus-derived join side: sort-merge. */
+  def corpusSide(df: DataFrame): DataFrame = df.hint("merge")
 
   /** Input-layout-adaptive parallelism for compute-heavy map chains
     * (optimization guide §2.5, "input skew: one huge unsplittable file

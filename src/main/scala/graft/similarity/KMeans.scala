@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{TextFunctions, VectorExpressions, VectorFunctions}
+import graft.functions.{NearestCentroids, TextFunctions, VectorFunctions}
 
 /** Deterministic Lloyd's k-means over an `array<float>` embedding
   * column, supplying real trained centroids for the IVF ANN path
@@ -83,8 +83,8 @@ object KMeans {
   /** Nearest-centroid assignment by cosine (ties → lowest cent_id):
     * ONE codegen'd projection per row ([[graft.functions.NearestCentroids]]
     * — centroids are k×dim driver-side doubles by construction, so they
-    * embed in the plan as literals and every row scores all k centroids
-    * in a single fused loop, keeping its top `probes`). Shared by
+    * ship as one broadcast and every row scores all k centroids in a
+    * single fused loop, keeping its top `probes`). Shared by
     * training (probes=1) and the IVF query path (probes=nProbe).
     *
     * r15 optimization (guide §2.4 "remove shuffles outright"): the
@@ -132,19 +132,6 @@ object KMeans {
     math.sqrt(s)
   }
 
-  /** Centroid matrices at or above this many bytes ride a BROADCAST
-    * variable instead of plan literals
-    * ([[graft.functions.NearestCentroidsBc]] — r15 verdict item: a
-    * plan-literal matrix re-serializes into every stage's task binary,
-    * ~25 MB per task set at a production 4096×768, while a broadcast
-    * ships once per executor). Below it the literal form keeps the
-    * plan self-contained. Override with session conf
-    * `spark.graft.centroids.broadcastMinBytes` (0 forces the broadcast
-    * path — how KMeansEquivalenceSpec pins the two variants
-    * bit-equal). */
-  val BroadcastMinBytesKey = "spark.graft.centroids.broadcastMinBytes"
-  val BroadcastMinBytesDefault: Long = 1L << 20
-
   /** The shared map-only assignment: positions from the
     * graft_nearest_cents projection, mapped back to cent_ids (identity
     * for the 0..k−1 frames every caller builds; kept general). */
@@ -154,20 +141,9 @@ object KMeans {
     if (ids.isEmpty) // no centroids ⇒ no assignments (the old join form's shape)
       return e.select(col(idCol), col(vCol), col(nCol),
         lit(0).as("cent_id")).filter(lit(false))
-    VectorExpressions.register(e.sparkSession)
-    val minBcBytes = e.sparkSession.conf
-      .get(BroadcastMinBytesKey, BroadcastMinBytesDefault.toString).toLong
-    val matrixBytes = cvs.foldLeft(0L)((a, v) => a + v.length.toLong * 8) +
-      cnrms.length.toLong * 8
-    val nc =
-      if (matrixBytes >= minBcBytes)
-        graft.functions.NearestCentroidsBc.columnFor(e.sparkSession,
-          cvs, cnrms, math.min(probes, ids.length),
-          col(vCol).cast("array<double>"), col(nCol).cast("double"))
-      else call_function("graft_nearest_cents",
-        col(vCol).cast("array<double>"), col(nCol).cast("double"),
-        typedLit(cvs.map(_.toSeq).toSeq), typedLit(cnrms.toSeq),
-        lit(math.min(probes, ids.length)))
+    val nc = NearestCentroids.columnFor(e.sparkSession,
+      cvs, cnrms, math.min(probes, ids.length),
+      col(vCol).cast("array<double>"), col(nCol).cast("double"))
     val idLit = typedLit(ids.toSeq)
     if (probes == 1)
       e.select(col(idCol), col(vCol), col(nCol),

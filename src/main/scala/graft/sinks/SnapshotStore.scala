@@ -99,25 +99,15 @@ object SnapshotStore {
 
   // ---- manifest resolution ------------------------------------------------
 
-  /** Name of the live manifest (highest version), if any commit has
-    * happened. */
-  def currentManifest(spark: SparkSession, base: String): Option[String] = {
-    val f = fs(spark, base)
-    if (!f.exists(manifestDir(base))) None
-    else f.listStatus(manifestDir(base)).iterator
-      .map(_.getPath.getName).filter(_.startsWith("m"))
-      .maxByOption(manifestVersion)
-  }
+  private def manifestName(v: Long): String = f"m$v%010d"
 
-  private def manifestVersion(name: String): Long = name.stripPrefix("m").toLong
-
-  private def manifestLines(spark: SparkSession, base: String, name: String): Seq[String] = {
-    val content = readFile(fs(spark, base), new Path(manifestDir(base), name))
+  private def manifestLines(spark: SparkSession, base: String, v: Long): Seq[String] = {
+    val content = readFile(fs(spark, base), new Path(manifestDir(base), manifestName(v)))
     content.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  private def manifestFiles(spark: SparkSession, base: String, name: String): Seq[String] =
-    manifestLines(spark, base, name).filterNot(_.startsWith("#"))
+  private def manifestFiles(spark: SparkSession, base: String, v: Long): Seq[String] =
+    manifestLines(spark, base, v).filterNot(_.startsWith("#"))
 
   /** Newest-first cap on the tag lines carried from one manifest to the
     * next: the idempotence window covers the last MaxTags tagged
@@ -179,8 +169,8 @@ object SnapshotStore {
   }
 
   private def live(spark: SparkSession, base: String): Live =
-    currentManifest(spark, base)
-      .fold(Live(-1L, Nil))(m => Live(manifestVersion(m), manifestLines(spark, base, m)))
+    versions(spark, base).lastOption
+      .fold(Live(-1L, Nil))(v => Live(v, manifestLines(spark, base, v)))
 
   /** The data files `rels` as one DataFrame, partition columns recovered
     * from the relative paths via basePath; None for no files. */
@@ -195,7 +185,7 @@ object SnapshotStore {
     if (!f.exists(manifestDir(base))) Nil
     else f.listStatus(manifestDir(base)).iterator
       .map(_.getPath.getName).filter(_.startsWith("m"))
-      .map(manifestVersion).toSeq.sorted
+      .map(_.stripPrefix("m").toLong).toSeq.sorted
   }
 
   /** Incremental (CDC-style) read of the manifest log: rows in data
@@ -212,8 +202,8 @@ object SnapshotStore {
       vFrom: Long, vTo: Long): Option[DataFrame] = {
     val from: Set[String] =
       if (vFrom < 0) Set.empty
-      else manifestFiles(spark, base, f"m$vFrom%010d").toSet
-    readFiles(spark, base, manifestFiles(spark, base, f"m$vTo%010d").filterNot(from))
+      else manifestFiles(spark, base, vFrom).toSet
+    readFiles(spark, base, manifestFiles(spark, base, vTo).filterNot(from))
   }
 
   /** Time travel: the snapshot as of manifest version `v` (None if that
@@ -222,7 +212,7 @@ object SnapshotStore {
     * snapshot isolation — the batch analog of reprocessing from an old
     * offset. Throws FileNotFoundException for a vacuumed/unknown version. */
   def readVersion(spark: SparkSession, base: String, v: Long): Option[DataFrame] =
-    readFiles(spark, base, manifestFiles(spark, base, f"m$v%010d"))
+    readFiles(spark, base, manifestFiles(spark, base, v))
 
   /** The live snapshot as a DataFrame (partition columns recovered from
     * the relative paths via basePath), or None when no commit exists or
@@ -315,7 +305,7 @@ object SnapshotStore {
       files: Seq[String], tag: Option[String], newStats: Seq[String]): Long = {
     val f = fs(spark, base)
     val next = parent.version + 1
-    val name = f"m$next%010d"
+    val name = manifestName(next)
     f.mkdirs(manifestDir(base))
     val tmp = new Path(manifestDir(base), s".tmp-${UUID.randomUUID()}")
     // tags travel INSIDE the manifest ('#'-comment lines), so tag
@@ -352,8 +342,9 @@ object SnapshotStore {
   private final case class Plan(keep: Seq[String], df: Option[DataFrame],
       revivedStats: Seq[String] = Nil)
 
-  /** A published commit: its version and the files it staged. */
-  private final case class Published(version: Long, staged: Seq[String])
+  /** A published commit: its version and, when the commit counted
+    * them, the rows it staged. */
+  private final case class Published(version: Long, rows: Option[Long])
 
   /** The one commit path: every manifest publish goes through here.
     * Under the per-base commit lock it resolves the live manifest once;
@@ -362,24 +353,27 @@ object SnapshotStore {
     * [[Live]], what to keep and what to stage (None: nothing to
     * commit). The frame is staged under `partitionBy`, its files get
     * stats for `statsCols`, and the manifest is published as the next
-    * version. With `dropEmpty`, a frame that stages zero rows publishes
-    * nothing and its files are removed. Returns the published commit,
-    * or None when nothing was published. */
+    * version. With `count` the staged rows are counted from their
+    * footers, once; with `dropEmpty` (which counts too) a frame that
+    * stages zero rows publishes nothing and its files are removed.
+    * Returns the published commit, or None when nothing was published. */
   private def commit(spark: SparkSession, base: String, tag: Option[String] = None,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
-      dropEmpty: Boolean = false)(plan: Live => Option[Plan]): Option[Published] =
+      count: Boolean = false, dropEmpty: Boolean = false)(
+      plan: Live => Option[Plan]): Option[Published] =
     commitLock(base).synchronized {
       val parent = live(spark, base)
       if (tag.exists(parent.hasTag)) None
       else plan(parent).flatMap { p =>
         val staged = p.df.fold(Seq.empty[String])(stageWrite(spark, base, _, partitionBy))
-        if (dropEmpty && stagedRowCount(spark, base, staged) == 0L) {
+        val rows = if (count || dropEmpty) Some(stagedRowCount(spark, base, staged)) else None
+        if (dropEmpty && rows.contains(0L)) {
           val f = fs(spark, base)
           staged.foreach(rel => f.delete(new Path(s"${dataDir(base)}/$rel"), false))
           None
         } else {
           val stats = p.revivedStats ++ computeStats(spark, base, staged, statsCols)
-          Some(Published(commitManifest(spark, base, parent, p.keep ++ staged, tag, stats), staged))
+          Some(Published(commitManifest(spark, base, parent, p.keep ++ staged, tag, stats), rows))
         }
       }
     }
@@ -432,15 +426,15 @@ object SnapshotStore {
       partitionBy: Seq[String] = Nil, tag: Option[String] = None,
       statsCols: Seq[String] = Nil): Long =
     commit(spark, base, tag, partitionBy, statsCols, dropEmpty = true)(
-      l => Some(Plan(l.files, Some(df)))).fold(0L)(p => stagedRowCount(spark, base, p.staged))
+      l => Some(Plan(l.files, Some(df)))).flatMap(_.rows).getOrElse(0L)
 
   /** [[commitReplace]] returning the rows committed, counted from the
     * staged footers (the replace ALWAYS commits — replacing a table
     * with an empty snapshot is a legitimate state). */
   def commitReplaceCounted(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
-    commit(spark, base, partitionBy = partitionBy, statsCols = statsCols)(
-      _ => Some(Plan(Nil, Some(df)))).fold(0L)(p => stagedRowCount(spark, base, p.staged))
+    commit(spark, base, partitionBy = partitionBy, statsCols = statsCols, count = true)(
+      _ => Some(Plan(Nil, Some(df)))).flatMap(_.rows).getOrElse(0L)
 
   /** Replace exactly one partition's files with `df` (which must be the
     * new content of that partition, carrying the partition column):
@@ -709,7 +703,7 @@ object SnapshotStore {
     * atomically. Throws FileNotFoundException when `v` was vacuumed. */
   def restore(spark: SparkSession, base: String, v: Long): Unit =
     commit(spark, base) { l =>
-      val old = Live(v, manifestLines(spark, base, f"m$v%010d"))
+      val old = Live(v, manifestLines(spark, base, v))
       val fileSet = old.files.toSet
       val cur = l.files.toSet
       val revived = old.lines
@@ -724,11 +718,9 @@ object SnapshotStore {
     * data files no surviving manifest references. keepManifests >= 2
     * keeps the previous snapshot alive for in-flight readers. */
   def vacuum(spark: SparkSession, base: String, keepManifests: Int = 2): Unit = {
-    val f = fs(spark, base)
-    if (!f.exists(manifestDir(base))) return
-    val manifests = f.listStatus(manifestDir(base)).map(_.getPath.getName)
-      .filter(_.startsWith("m")).sortBy(manifestVersion)
+    val manifests = versions(spark, base)
     if (manifests.length <= keepManifests) return
+    val f = fs(spark, base)
     val (drop, keep) = manifests.splitAt(manifests.length - keepManifests)
     val referenced = keep.flatMap(manifestFiles(spark, base, _)).toSet
     val dataPath = new Path(dataDir(base))
@@ -742,7 +734,7 @@ object SnapshotStore {
           f.delete(p, false)
       }
     }
-    drop.foreach(m => f.delete(new Path(manifestDir(base), m), false))
+    drop.foreach(v => f.delete(new Path(manifestDir(base), manifestName(v)), false))
   }
 
   // ---- incremental consumption --------------------------------------------

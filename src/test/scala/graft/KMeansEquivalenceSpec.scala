@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
+import graft.functions.{NearestCentroids, VectorFunctions}
 import graft.similarity.{IvfIndex, KMeans}
 
 /** Equivalence pins for the r15 map-only assignment optimization
@@ -111,29 +111,29 @@ class KMeansEquivalenceSpec extends SparkSpec {
     }
   }
 
-  test("broadcast-backed assign == literal assign (r16 scale-hardening; threshold 0 forces it)") {
+  test("broadcast assign: map-only, handles freed at resolution") {
     val cents = KMeans.centroidFrame(spark,
       KMeans.fit(emb, col("vec_id"), col("embedding"), 16, 2))
+    // every fit iteration's broadcast handle was taken out when its
+    // assignment resolved: the plans alone hold the matrices
+    assert(NearestCentroids.pendingHandles === 0)
     val e = corpusWithZero
-    // default threshold (1 MiB): the 16×64-double matrix stays literal
-    val viaLit = KMeans.assign(e, cents, probes = 3).select("vec_id", "cent_id")
-    assert(viaLit.queryExecution.analyzed.toString.contains("graft_nearest_cents("))
-    spark.conf.set(KMeans.BroadcastMinBytesKey, "0")
-    try {
-      val viaBc = KMeans.assign(e, cents, probes = 3).select("vec_id", "cent_id")
-      val an = viaBc.queryExecution.analyzed.toString
-      assert(an.contains("graft_nearest_cents_bc"),
-        s"threshold 0 must select the broadcast variant:\n${an.take(800)}")
-      assert(viaBc.exceptAll(viaLit).isEmpty && viaLit.exceptAll(viaBc).isEmpty)
-      // the zero-norm sentinel row behaves identically under broadcast
-      val z = KMeans.assign(e, cents, probes = 1)
-      assert(z.filter(col("vec_id") === 999999L && col("cent_id") === 0).count() === 1L)
-      // still map-only: the broadcast variant must not reintroduce a
-      // shuffle or join into the assignment
-      val p = KMeans.assign(e, cents, probes = 1)
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange") && !p.contains("Join"))
-    } finally spark.conf.unset(KMeans.BroadcastMinBytesKey)
+    val z = KMeans.assign(e, cents, probes = 1)
+    assert(NearestCentroids.pendingHandles === 0,
+      "a built assign frame must not leave its handle registered")
+    val an = z.queryExecution.analyzed.toString
+    assert(an.contains("graft_nearest_cents"), an.take(800))
+    // the frame still executes after its handle left the registry:
+    // the same rows as the join+aggregate form, and the zero-norm
+    // sentinel row maps to cent_id 0
+    val now = z.select("vec_id", "cent_id")
+    val old = assignOld(e, cents, probes = 1).select("vec_id", "cent_id")
+    assert(now.exceptAll(old).isEmpty && old.exceptAll(now).isEmpty)
+    assert(z.filter(col("vec_id") === 999999L && col("cent_id") === 0).count() === 1L)
+    // still map-only: the broadcast must not bring a shuffle or join
+    // into the assignment
+    val p = z.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange") && !p.contains("Join"), p.take(1500))
   }
 
   test("fitLocal: k larger than the sample, and an empty sample") {

@@ -736,7 +736,7 @@ class PlanSpec extends SparkSpec {
   test("q_ivf_refresh: map-only assignment; cells join corpus-side") {
     val p = plan("q_ivf_refresh")
     // r15: centroid assignment is the graft_nearest_cents PROJECTION
-    // (centroids ride the plan as literals) — the old broadcast-
+    // (centroids ride a broadcast variable) — the old broadcast-
     // nested-loop join + per-id aggregate must never come back
     assert(p.contains("graft_nearest_cents"),
       s"assignment must be the map-only projection:\n${p.take(1500)}")
