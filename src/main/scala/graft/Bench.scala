@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Queries
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
@@ -12,7 +10,8 @@ import graft.queries.Queries
   * One warmup pass per plan absorbs JVM/codegen startup; each query is
   * then timed median-of-N (default 5) with the min/median/max spread
   * emitted so run-to-run JVM noise is visible instead of silently
-  * polluting the headline number.
+  * polluting the headline number. `failed` lists every query that threw
+  * (never scored), and the run then exits 1.
   */
 object Bench {
 
@@ -54,61 +53,72 @@ object Bench {
 
   private val core19: Set[String] = sections.head._2.toSet
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  type Timing = (String, (Double, Double, Double))
 
+  /** The timing loop: `run` builds and forces one query. A query that
+    * throws on any run is listed in `failed`; its failed runs are left
+    * out of its timings, and a query with no successful run times
+    * (-1, -1, -1), which [[sums]] skips. */
+  private[graft] final class Timer(iters: Int, run: String => Unit) {
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+
+    /** Seconds for one run of `name`, or -1 if it threw. */
     def force(name: String): Double = {
       val t0 = System.nanoTime()
-      try Queries.runners(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      try { run(name); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
     }
 
-    // optional args (local probing only — the driver passes none):
-    // explicit query names to time instead of the headline set
-    val names = if (args.nonEmpty) args.toSeq else Queries.headlines.map(_.name)
-    names.foreach(force) // warm codegen/JIT for every plan once
+    /** One timed pass over `ns`: per-query (min, median, max). */
+    def timed(ns: Seq[String]): Seq[Timing] =
+      ns.map { n =>
+        val t = Seq.fill(iters)(force(n)).filter(_ >= 0).sorted
+        if (t.isEmpty) n -> (-1.0, -1.0, -1.0)
+        else n -> (t.head, t(t.length / 2), t.last)
+      }
+  }
+
+  /** (sum of medians, sum of mins) over the queries that timed. */
+  def sums(rs: Seq[Timing]): (Double, Double) =
+    (rs.map(_._2._2).filter(_ >= 0).sum, rs.map(_._2._1).filter(_ >= 0).sum)
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = Session.builder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+
     // Median-of-5 timed runs per query: sub-second queries in a shared
     // JVM swing up to 5x between single shots (GC, JIT recompiles), so
     // a single sample can't distinguish a real 2x regression from
     // noise. The headline number is the median; min/max are emitted
     // alongside so a reader can see the spread a given run had.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
+    val timer = new Timer(iters, name => Queries.runners(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
+    import timer.{force, timed}
+
+    // optional args (local probing only — the driver passes none):
+    // explicit query names to time instead of the headline set
+    val names = if (args.nonEmpty) args.toSeq else Queries.headlines.map(_.name)
+    names.foreach(force) // warm codegen/JIT for every plan once
     def f(d: Double) = "%.4f".format(d)
 
-    /** One timed pass over `ns`: per-query (min, median, max). */
-    def timed(ns: Seq[String]): Seq[(String, (Double, Double, Double))] =
-      ns.map { n =>
-        val t = Seq.fill(iters)(force(n)).filter(_ >= 0).sorted
-        if (t.isEmpty) n -> (-1.0, -1.0, -1.0)
-        else n -> (t.head, t(t.length / 2), t.last)
-      }
     // Self-adjudicating run-quality flag: the median over queries of
     // each query's max/min spread. An identical plan re-run 5x in a
     // quiet JVM lands ~1.0-1.5x; host contention shows up as 3-10x
     // spreads on a FEW queries (the round-9 artifact's q1_agg hit 8.2x
     // while its plan was provably unchanged).
-    def contentionOf(rs: Seq[(String, (Double, Double, Double))]): Double = {
+    def contentionOf(rs: Seq[Timing]): Double = {
       val ratios = rs.map(_._2).collect {
         case (mn, _, mx) if mn > 0 => mx / mn }.sorted
       if (ratios.isEmpty) -1.0 else ratios(ratios.length / 2)
     }
-    def sums(rs: Seq[(String, (Double, Double, Double))]): (Double, Double) =
-      (rs.map(_._2._2).filter(_ >= 0).sum, rs.map(_._2._1).filter(_ >= 0).sum)
 
     // HOST-QUANTUM GUARD (the round-11 README paragraph turned into
     // data): attempt 1 times the full headline set; while its
@@ -125,7 +135,7 @@ object Bench {
         contentionOf(attempts.last._2.filter(r => core19(r._1))) >= target &&
         coreNames.nonEmpty)
       attempts = attempts :+ (coreNames, timed(coreNames))
-    def coreContention(a: (Seq[String], Seq[(String, (Double, Double, Double))])) =
+    def coreContention(a: (Seq[String], Seq[Timing])) =
       contentionOf(a._2.filter(r => core19(r._1)))
     val chosenIdx = attempts.indexWhere(coreContention(_) < target) match {
       case -1 => attempts.map(coreContention).zipWithIndex.minBy(_._1)._2
@@ -169,7 +179,9 @@ object Bench {
       s"""{"attempt":${i + 1},"set":"${if (ns == names) "full" else "core19"}","value":${f(v)},"min_value":${f(mv)},"core19_value":${f(cv)},"core19_min_value":${f(cmv)},"contention_ratio":${f(contentionOf(rs.filter(r => core19(r._1))))}}"""
     }.mkString("[", ",", "]")
     val notes = """{"q_snapshot_merge":"full-8-file rewrite is the fixture's intent (keyspace-spanning change keys); floor ~1.5s, r11->r12 movement adjudicated as session variance","ann_rerank":"r14: all six ANN window re-rank sites (lsh/ivf/knn/hardneg/ivfpq/IvfIndex) migrated to bounded_top_k partial+final; 100x rungs re-measured ZERO-spill (ivfpq was 0.7-3.6 GB) with recall bit-identical - SCALE.md","q_funnel_strict":"r15 adjudication of the r14 +32% watch item: Funnel.scala untouched since r12, sibling q_funnel flat across rounds; the strict plan is ~15 tiny exchanges over 100k rows (overhead-dominated - isolated min-of-9 moved LESS on a 10x data step, 1.09s sf0.01 vs 1.63s sf0.1, than between JVM contexts). Verdict: session variance on an overhead-dominated plan, not a regression","q_bitmap_overlap":"r16 adjudication of the r15 0.32->0.66 watch item: Bitmaps.scala untouched since r11; isolated min-of-9 reads 0.43s sf0.1/32c, 0.47s 8c, 0.51s sf0.01 - a 10x data step moves the min less than the JVM-context swing and 8 cores match 32 (overhead-dominated, nothing data- or core-bound). Verdict: session variance, not a regression"}"""
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","min_value":${f(totalMin)},"core19_value":${f(coreTotal)},"core19_min_value":${f(coreMin)},"contention_ratio":${f(contention)},"attempts":$attemptsJson,"chosen_attempt":${chosenIdx + 1},"contention_target":$target,"notes":$notes,"estimators":{"value":"median-of-iters per query, summed over the full set (attempt 1)","min_value":"min-of-iters per query, summed (contention-robust; use for cross-round comparison)","core19_value":"the frozen round-1-6 set of 19 from the CHOSEN attempt; compare against the historical 8.4-9.8 s anchor band","contention_ratio":"median over core-19 queries of max/min spread in the chosen attempt; re-runs trigger while >= $target (max $maxAttempts attempts, see attempts[])"},"queries":$qs,"spread":$spread$extJson,"iters":$iters,"sf":"$sfDir"}""")
+    val failedJson = timer.failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","min_value":${f(totalMin)},"core19_value":${f(coreTotal)},"core19_min_value":${f(coreMin)},"contention_ratio":${f(contention)},"attempts":$attemptsJson,"chosen_attempt":${chosenIdx + 1},"contention_target":$target,"notes":$notes,"estimators":{"value":"median-of-iters per query, summed over the full set (attempt 1)","min_value":"min-of-iters per query, summed (contention-robust; use for cross-round comparison)","core19_value":"the frozen round-1-6 set of 19 from the CHOSEN attempt; compare against the historical 8.4-9.8 s anchor band","contention_ratio":"median over core-19 queries of max/min spread in the chosen attempt; re-runs trigger while >= $target (max $maxAttempts attempts, see attempts[])"},"queries":$qs,"spread":$spread$extJson,"iters":$iters,"sf":"$sfDir","failed":$failedJson}""")
     spark.stop()
+    if (timer.failed.nonEmpty) sys.exit(1)
   }
 }

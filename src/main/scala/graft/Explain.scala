@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Queries
 
 /** Plan-inspection main: prints explain("formatted") for each headline
@@ -15,14 +13,7 @@ object Explain {
       if (args.length > 1 && args(1) == "ALL") Queries.all.map(_.name)
       else if (args.length > 1) args.drop(1).toSeq
       else Queries.headlines.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,95 +1,87 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.types.IntegerType
 
 import graft.cdc.{AvroDecodeEngagement, AvroEncodeEngagement}
-import graft.functions.{BoundedTopK, DoubleDot, MisraGries}
+import graft.functions.{BoundedTopK, DoubleDot, KmvSketch, MisraGries, MisraGriesWeighted, NearestCentroids, UniqUpTo}
 
-/** SparkSessionExtensions entry point: registers the engine's custom
-  * functions at session build time, the deployment path for clusters
-  * (`--conf spark.sql.extensions=graft.GraftExtensions`). Interactive
-  * sessions can equivalently call the per-object register(spark)
-  * helpers. */
+/** SparkSessionExtensions entry point: injects the engine's custom
+  * functions ([[GraftExtensions.functions]]) when a session is built.
+  * [[Session.builder]] sets it; a deployment that builds its own session
+  * passes `--conf spark.sql.extensions=graft.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("bounded_top_k"),
-      new ExpressionInfo(classOf[BoundedTopK].getName, "bounded_top_k"),
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftExtensions {
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** `name(args)`: the arity is the number of comma-separated `args`,
+    * checked before `build` runs. */
+  private def entry(name: String, args: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
       (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "bounded_top_k(score, key, k)")
-        val k = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        BoundedTopK(exprs.head, exprs(1), k).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(classOf[MisraGries].getName, "misra_gries"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "misra_gries(item, k)")
-        val k = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        MisraGries(exprs.head, k).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries_w"),
-      new ExpressionInfo(classOf[graft.functions.MisraGriesWeighted].getName, "misra_gries_w"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "misra_gries_w(item, weight, k)")
-        val k = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        graft.functions.MisraGriesWeighted(exprs.head, exprs(1), k).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DoubleDot].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_dot(a, b)")
-        DoubleDot(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_avro_encode"),
-      new ExpressionInfo(classOf[AvroEncodeEngagement].getName, "graft_avro_encode"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_avro_encode(struct)")
-        AvroEncodeEngagement(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_avro_decode"),
-      new ExpressionInfo(classOf[AvroDecodeEngagement].getName, "graft_avro_decode"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "graft_avro_decode(binary)")
-        AvroDecodeEngagement(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "graft_bloom_agg(xxhash64_col, est_items, num_bits)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "graft_might_contain(bloom, xxhash64_value)")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))
-      }))
+        require(exprs.length == args.split(",").length, s"$name($args)")
+        build(exprs)
+      })
+
+  private def intLiteral(e: Expression, arg: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$arg must be an int literal, got $other")
+  }
+
+  /** Every custom function the engine resolves by name, defined once. */
+  val functions: Seq[Entry] = Seq(
+    entry("bounded_top_k", "score, key, k", classOf[BoundedTopK])(e =>
+      BoundedTopK(e(0), e(1), intLiteral(e(2), "k")).toAggregateExpression()),
+    entry("misra_gries", "item, k", classOf[MisraGries])(e =>
+      MisraGries(e(0), intLiteral(e(1), "k")).toAggregateExpression()),
+    entry("misra_gries_w", "item, weight, k", classOf[MisraGriesWeighted])(e =>
+      MisraGriesWeighted(e(0), e(1), intLiteral(e(2), "k")).toAggregateExpression()),
+    entry("uniq_up_to", "value, n", classOf[UniqUpTo])(e =>
+      UniqUpTo(e(0), intLiteral(e(1), "n")).toAggregateExpression()),
+    entry("kmv_sketch", "hash, k", classOf[KmvSketch])(e =>
+      KmvSketch(e(0), intLiteral(e(1), "k")).toAggregateExpression()),
+    entry("graft_dot", "a, b", classOf[DoubleDot])(e => DoubleDot(e(0), e(1))),
+    entry("graft_nearest_cents", "v, nrm, handle LITERAL, probes LITERAL",
+        classOf[NearestCentroids]) { e =>
+      require(e(2).foldable && e(3).foldable,
+        "graft_nearest_cents: handle and probes must be literals")
+      NearestCentroids(e(0), e(1),
+        NearestCentroids.lookup(e(2).eval(null).asInstanceOf[Long]),
+        e(3).eval(null).asInstanceOf[Int])
+    },
+    entry("graft_avro_encode", "struct", classOf[AvroEncodeEngagement])(e =>
+      AvroEncodeEngagement(e(0))),
+    entry("graft_avro_decode", "binary", classOf[AvroDecodeEngagement])(e =>
+      AvroDecodeEngagement(e(0))),
+    // Spark's runtime-filter bloom expressions (the machinery behind
+    // InjectRuntimeFilter) as explicit semi-join pre-filters. The value
+    // must be xxhash64(key); a probe can give false positives, never
+    // false negatives, so callers keep an exact join for the positives.
+    entry("graft_bloom_agg", "xxhash64_col, est_items, num_bits",
+        classOf[BloomFilterAggregate])(e =>
+      new BloomFilterAggregate(e(0), e(1), e(2)).toAggregateExpression()),
+    entry("graft_might_contain", "bloom, xxhash64_value",
+        classOf[BloomFilterMightContain])(e =>
+      BloomFilterMightContain(e(0), e(1))))
+
+  /** Register every function `spark` lacks; a no-op on a session built
+    * with the extension, and idempotent otherwise. Engine code calls it
+    * before resolving a function by name, so sessions the engine did
+    * not build (a driver's own, a streaming batch's cloned session
+    * started before it) still resolve them. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 }

@@ -968,11 +968,7 @@ object ScaleProbe {
     val only: Option[Set[String]] =
       if (args.length > 4) Some(args(4).split(",").toSet) else None
     val cpus = math.min(32, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(s"### $label")
     println(ScaleMetrics.header)

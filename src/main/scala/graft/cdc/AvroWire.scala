@@ -8,7 +8,6 @@ import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -68,18 +67,6 @@ object AvroWire {
 
   /** Indices of the string-typed fields in both schemas. */
   private[cdc] val stringFields = Set(0, 1, 2, 3, 4, 6, 8, 9)
-
-  /** Register `graft_avro_encode` / `graft_avro_decode` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avro_encode",
-      exprs => { require(exprs.length == 1, "graft_avro_encode(struct)"); AvroEncodeEngagement(exprs.head) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_avro_decode",
-      exprs => { require(exprs.length == 1, "graft_avro_decode(binary)"); AvroDecodeEngagement(exprs.head) },
-      "built-in")
-  }
 }
 
 /** struct → Avro binary record (schema: [[AvroWire.schema]]; string

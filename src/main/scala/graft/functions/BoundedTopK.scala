@@ -4,9 +4,8 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -112,27 +111,4 @@ case class BoundedTopK(
   override def withNewInputAggBufferOffset(newOffset: Int): BoundedTopK =
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "bounded_top_k"
-}
-
-object BoundedTopK {
-  /** Register `bounded_top_k(score, key, k)` for SQL/expr use in this
-    * session (idempotent: a no-op if already present, so repeated calls
-    * don't spam replace-function warnings). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("bounded_top_k")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "bounded_top_k",
-        exprs => {
-          require(exprs.length == 3, "bounded_top_k(score, key, k)")
-          val k = exprs(2) match {
-            case Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-          }
-          BoundedTopK(exprs.head, exprs(1), k).toAggregateExpression()
-        },
-        "built-in")
-    }
-  }
 }

@@ -4,12 +4,11 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** KMV (k-minimum-values / bottom-k, the classic theta-sketch
   * construction) as a bounded-state aggregate: keep the k SMALLEST
@@ -100,21 +99,4 @@ case class KmvSketch(
   override def withNewInputAggBufferOffset(newOffset: Int): KmvSketch =
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "kmv_sketch"
-}
-
-object KmvSketch {
-  /** Register `kmv_sketch(hash, k)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch",
-      exprs => {
-        require(exprs.length == 2, "kmv_sketch(hash, k)")
-        val k = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"k must be an int literal, got $other")
-        }
-        KmvSketch(exprs.head, k).toAggregateExpression()
-      },
-      "built-in")
 }

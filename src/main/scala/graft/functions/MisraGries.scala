@@ -5,9 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
@@ -133,22 +132,6 @@ case class MisraGries(
   override def prettyName: String = "misra_gries"
 }
 
-object MisraGries {
-  /** Register `misra_gries(item, k)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries",
-      exprs => {
-        require(exprs.length == 2, "misra_gries(item, k)")
-        val k = exprs(1) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-        }
-        MisraGries(exprs.head, k).toAggregateExpression()
-      },
-      "built-in")
-}
-
 /** WEIGHTED Misra–Gries (ClickHouse `topKWeighted` analog): each input
   * contributes its BIGINT weight instead of 1. Every step — update and
   * merge alike — is the mergeable-summaries reduction: add the entry,
@@ -266,20 +249,4 @@ case class MisraGriesWeighted(
   override def withNewInputAggBufferOffset(newOffset: Int): MisraGriesWeighted =
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "misra_gries_w"
-}
-
-object MisraGriesWeighted {
-  /** Register `misra_gries_w(item, weight, k)` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries_w",
-      exprs => {
-        require(exprs.length == 3, "misra_gries_w(item, weight, k)")
-        val k = exprs(2) match {
-          case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-        }
-        MisraGriesWeighted(exprs.head, exprs(1), k).toAggregateExpression()
-      },
-      "built-in")
 }

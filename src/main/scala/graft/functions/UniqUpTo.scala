@@ -4,11 +4,10 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** ClickHouse `uniqUpTo(N)` as a real bounded-state aggregate: the
   * exact distinct count while it is ≤ N, and the saturation value N+1
@@ -90,21 +89,4 @@ case class UniqUpTo(
   override def withNewInputAggBufferOffset(newOffset: Int): UniqUpTo =
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "uniq_up_to"
-}
-
-object UniqUpTo {
-  /** Register `uniq_up_to(value, n)` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "uniq_up_to",
-      exprs => {
-        require(exprs.length == 2, "uniq_up_to(value, n)")
-        val n = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"n must be an int literal, got $other")
-        }
-        UniqUpTo(exprs.head, n).toAggregateExpression()
-      },
-      "built-in")
 }

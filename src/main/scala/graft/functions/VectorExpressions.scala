@@ -268,39 +268,9 @@ object NearestCentroids {
     val bc = spark.sparkContext.broadcast((cvs, cnrms))
     val id = nextId.incrementAndGet()
     handles.put(id, bc)
-    VectorExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     org.apache.spark.sql.functions.call_function("graft_nearest_cents",
       v, nrm, org.apache.spark.sql.functions.lit(id),
       org.apache.spark.sql.functions.lit(probes))
-  }
-}
-
-object VectorExpressions {
-  /** Register `graft_dot(a, b)` and `graft_nearest_cents(v, nrm,
-    * handle, probes)` in the session (idempotent: a no-op if already
-    * present, so repeated calls don't spam replace-function
-    * warnings). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        "graft_dot",
-        exprs => { require(exprs.length == 2, "graft_dot(a, b)"); DoubleDot(exprs.head, exprs(1)) },
-        "built-in")
-    }
-    val ncIdent = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nearest_cents")
-    if (!registry.functionExists(ncIdent)) {
-      registry.createOrReplaceTempFunction(
-        "graft_nearest_cents",
-        exprs => {
-          require(exprs.length == 4 && exprs(2).foldable && exprs(3).foldable,
-            "graft_nearest_cents(v, nrm, handle LITERAL, probes LITERAL)")
-          NearestCentroids(exprs(0), exprs(1),
-            NearestCentroids.lookup(exprs(2).eval(null).asInstanceOf[Long]),
-            exprs(3).eval(null).asInstanceOf[Int])
-        },
-        "built-in")
-    }
   }
 }

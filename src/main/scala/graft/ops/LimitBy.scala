@@ -52,8 +52,7 @@ object LimitBy {
       .find(sfx => !df.columns.exists(_.endsWith(sfx))).get
     val sC = s"_s$nonce"; val rkC = s"_rk$nonce"; val topC = s"_top$nonce"
     val kvC = s"_kv$nonce"
-    val spark = df.sparkSession
-    graft.functions.BoundedTopK.register(spark)
+    graft.GraftExtensions.install(df.sparkSession)
     val g = groupCols.map(col)
     val ranked = df
       .select(g :+ score.cast("double").as(sC) :+
@@ -89,8 +88,7 @@ object LimitBy {
       .find(sfx => !df.columns.exists(_.endsWith(sfx))).get
     val sC = s"_s$nonce"; val rkC = s"_rk$nonce"
     val topC = s"_top$nonce"; val bC = s"_b$nonce"
-    val spark = df.sparkSession
-    graft.functions.BoundedTopK.register(spark)
+    graft.GraftExtensions.install(df.sparkSession)
     val g = groupCols.map(col)
     val boundary = when(size(col(topC)) > 0,
       element_at(col(topC), size(col(topC))).getField("score"))

@@ -235,7 +235,7 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
       k: Int = 10): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && k > 0)
     val spark = docs.sparkSession
-    graft.functions.BoundedTopK.register(spark)
+    graft.GraftExtensions.install(spark)
     val allTerms = queries.flatMap(_._2).distinct
     val base = docs.select(id.as("doc_id"),
         TextFunctions.tokens(lower(text)).as("toks"))
@@ -364,7 +364,7 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && k > 0)
     import graft.functions.VectorFunctions
     val spark = docs.sparkSession
-    graft.functions.BoundedTopK.register(spark)
+    graft.GraftExtensions.install(spark)
     val allTerms = queries.flatMap(_._2).distinct
     val base = docs.select(id.as("doc_id"),
         TextFunctions.tokens(lower(text)).as("toks"))
@@ -501,7 +501,7 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
       queries: Seq[(Int, Seq[String])], dim: Int = 16, k: Int = 10,
       nCentroids: Int = 8, nProbe: Int = 2, kmeansIters: Int = 3): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && k > 0)
-    import graft.functions.{VectorExpressions, VectorFunctions}
+    import graft.functions.VectorFunctions
     import graft.similarity.{Ann, KMeans}
     val spark = docs.sparkSession
     val emb = docs.select(id.as("vec_id"),
@@ -524,7 +524,7 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
       .withColumn("qnrm", VectorFunctions.norm(col("qv")))
     val qAssigned = KMeans.assign(qdf, cents, probes = nProbe,
       idCol = "query_id", vCol = "qv", nCol = "qnrm")
-    VectorExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     // external queries are not corpus members — every probed-cell doc
     // is an eligible candidate (no self-match filter)
     val scored = qAssigned.join(corpus, Seq("cent_id"))
@@ -571,7 +571,7 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     * both oracles unchanged. */
   private def metricsCore(ranked: DataFrame, rels: DataFrame,
       k: Int): DataFrame = {
-    graft.functions.BoundedTopK.register(rels.sparkSession)
+    graft.GraftExtensions.install(rels.sparkSession)
     val d = discounts(k)
     def gainAt(rel: Column, rank: Column): Column =
       (call_function("shiftleft", lit(1L), rel.cast("int")) - 1L)

@@ -519,8 +519,8 @@ SELECT t0.doc_id, CAST(len(t0.toks) AS BIGINT) AS n_tok, CAST(len(t0.toks) - coa
     * [[Decontaminate]] posture, in embedding space. */
   def semanticDecontaminate(emb: DataFrame, id: Column, vec: Column,
       isEval: Column, threshold: Double): DataFrame = {
-    import graft.functions.{VectorExpressions, VectorFunctions}
-    VectorExpressions.register(emb.sparkSession)
+    import graft.functions.VectorFunctions
+    graft.GraftExtensions.install(emb.sparkSession)
     val e = emb.select(id.as("vec_id"), vec.cast("array<double>").as("v"),
       VectorFunctions.norm(vec).as("nrm"), isEval.as("__ev"))
     val eval = e.filter(col("__ev"))

@@ -347,8 +347,7 @@ SELECT CAST($m AS BIGINT) AS m, $m - filled AS zeros, num_filled + ($m - filled)
     * fact rescan). */
   def kmvSketchTable(df: DataFrame, group: Column, id: Column,
       k: Int): DataFrame = {
-    val spark = df.sparkSession
-    graft.functions.KmvSketch.register(spark)
+    graft.GraftExtensions.install(df.sparkSession)
     df.select(group.as("g"),
         graft.functions.TextFunctions.md5Long(
           concat(lit("kmv:"), id.cast("string"))).as("h"))
@@ -361,8 +360,7 @@ SELECT CAST($m AS BIGINT) AS m, $m - filled AS zeros, num_filled + ($m - filled)
     * exact by the k-smallest-of-a-union law (KmvSketch's tested merge
     * property), and the only input is |parts|·|groups|·k longs. */
   def kmvMergeSketches(parts: DataFrame, k: Int): DataFrame = {
-    val spark = parts.sparkSession
-    graft.functions.KmvSketch.register(spark)
+    graft.GraftExtensions.install(parts.sparkSession)
     parts.select(col("g"), explode(col("ks")).as("h"))
       .groupBy(col("g"))
       .agg(expr(s"kmv_sketch(h, $k)").as("ks"))

@@ -455,7 +455,7 @@ object Queries {
     // no per-group full sort): top-3 events by score per minute.
     GraftQuery("q_topk_custom_agg",
       (s, dir) => {
-        graft.functions.BoundedTopK.register(s)
+        graft.GraftExtensions.install(s)
         ev(s, dir)
           .select(date_format(col("ts"), "yyyyMMddHHmm").as("minute_bucket"),
             col("event_id"), score.as("score"))
@@ -1254,7 +1254,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
 
     GraftQuery("q_avro_roundtrip",
       (s, dir) => {
-        graft.cdc.AvroWire.register(s)
+        graft.GraftExtensions.install(s)
         val rec = struct(
           col("event_id").cast("string").as("event_id"),
           concat(lit("content-"), pmod(col("event_id"), lit(40))).as("content_id"),
@@ -1981,7 +1981,7 @@ SELECT orig_id AS doc_id, bucket, n_tok, start_tok, CAST(floor(start_tok / 512.0
     // of per-row insertions, so partition merge order cannot change it.
     GraftQuery("q_bloom_semi",
       (s, dir) => {
-        graft.functions.BloomFunctions.register(s)
+        graft.GraftExtensions.install(s)
         val users = ev(s, dir).select(col("user_id")).distinct()
         val bfBytes = users.agg(
           expr("graft_bloom_agg(xxhash64(user_id), CAST(100000 AS BIGINT), CAST(1048576 AS BIGINT))"))
@@ -2258,7 +2258,7 @@ SELECT doc_id, lang, ${Corpus.splitAssignSql("doc_id")} AS split, n_tok, start_t
     // plus those two deterministic booleans.
     GraftQuery("q_heavy_hitters",
       (s, dir) => {
-        graft.functions.MisraGries.register(s)
+        graft.GraftExtensions.install(s)
         val e = ev(s, dir)
         val tot = e.agg(count(lit(1)).as("n"))
         val exact = e.groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
@@ -3378,7 +3378,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // most W/(k+1).
     GraftQuery("q_heavy_hitters_weighted",
       (s, dir) => {
-        graft.functions.MisraGriesWeighted.register(s)
+        graft.GraftExtensions.install(s)
         val e = ev(s, dir)
           .withColumn("w", (lit(1L) + pmod(col("user_id"), lit(9L))).cast("long"))
         val tot = e.agg(sum(col("w")).as("wtot"))
@@ -3437,7 +3437,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // the same but shuffles every distinct pair).
     GraftQuery("q_uniq_upto_agg",
       (s, dir) => {
-        graft.functions.UniqUpTo.register(s)
+        graft.GraftExtensions.install(s)
         ev(s, dir).groupBy(col("event_type"))
           .agg(expr("uniq_up_to(user_id, 100)").as("uniq_upto_100"),
             expr("uniq_up_to(user_id, 1000)").as("uniq_upto_1000"))

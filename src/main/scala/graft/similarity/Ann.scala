@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
-import graft.functions.{TextFunctions, VectorExpressions, VectorFunctions}
+import graft.functions.{TextFunctions, VectorFunctions}
 import org.apache.spark.sql.functions.call_function
 
 /** Similarity search over an `array<float>` embedding column.
@@ -35,7 +35,7 @@ object Ann {
   /** Codegen'd native dot (graft.functions.DoubleDot) — registered per
     * session, bit-identical to VectorFunctions.dot. */
   private def nat(df: DataFrame)(a: Column, b: Column): Column = {
-    VectorExpressions.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     call_function("graft_dot", a, b)
   }
 
@@ -84,7 +84,7 @@ object Ann {
     *    columns of their stores). */
   private[graft] def heapTopK(scored: DataFrame, k: Int,
       scoreName: String = "cosine"): DataFrame = {
-    graft.functions.BoundedTopK.register(scored.sparkSession)
+    graft.GraftExtensions.install(scored.sparkSession)
     scored.groupBy(col("query_id"))
       .agg(expr(s"bounded_top_k(coalesce(`$scoreName`, ${NullScore}D), vec_id, $k)")
         .as("top"))

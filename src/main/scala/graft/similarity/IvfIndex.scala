@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextFunctions, VectorExpressions, VectorFunctions}
+import graft.functions.{TextFunctions, VectorFunctions}
 import graft.ops.Joins
 import graft.sinks.SnapshotStore
 
@@ -132,7 +132,7 @@ object IvfIndex {
   def topK(spark: SparkSession, cellBase: String, centBase: String,
       emb: DataFrame, id: Column, vec: Column, isQuery: Column, k: Int,
       nProbe: Int = 2): DataFrame = {
-    VectorExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     val (v, cents) = current(spark, centBase)
       .getOrElse(sys.error(s"no published centroids at $centBase"))
     val cells = SnapshotStore.read(spark, cellBase)

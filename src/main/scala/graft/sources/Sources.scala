@@ -46,7 +46,7 @@ object Sources {
     * produces (P4 drop of undecodable/idless records included). */
   def avroEngagement(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.cdc.AvroWire.register(raw.sparkSession)
+    graft.GraftExtensions.install(raw.sparkSession)
     raw.select(call_function("graft_avro_decode", col("value")).as("r"))
       .filter(col("r.event_id").isNotNull)
       .select(

@@ -30,7 +30,7 @@ object CorpusIngest {
     * idempotent under replays of the same `batchId`.
     *
     * The against-the-store dedup runs behind a BLOOM PRE-FILTER
-    * ([[graft.functions.BloomFunctions]]): a compact bloom over the
+    * (`graft_bloom_agg`/`graft_might_contain`): a compact bloom over the
     * store's fingerprints broadcasts to the batch, rows the bloom has
     * definitely never seen skip the anti-join entirely, and only the
     * (rare) possible-duplicate rows pay the exact join — false
@@ -82,9 +82,9 @@ object CorpusIngest {
     val fresh = SnapshotStore.read(spark, base) match {
       case Some(existing) =>
         // streaming foreachBatch hands DataFrames bound to a CLONED
-        // session with its own function registry — register on both
-        graft.functions.BloomFunctions.register(spark)
-        graft.functions.BloomFunctions.register(batch.sparkSession)
+        // session with its own function registry — install on both
+        graft.GraftExtensions.install(spark)
+        graft.GraftExtensions.install(batch.sparkSession)
         // the bloom binary is the broadcast side by definition (a few
         // hundred KB at the default sizing) — might_contain requires a
         // constant filter, so it rides into the plan as a literal

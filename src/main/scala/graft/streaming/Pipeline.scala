@@ -201,70 +201,6 @@ object Pipeline {
     }
   }
 
-  /** [[lastEventWithTTL]] on the transformWithState API (Spark 4's
-    * arbitrary-state operator, the successor of mapGroupsWithState):
-    * same event-time contract — newest event per (user, content) wins,
-    * state evicts `ttlMs` after the last event's time with a tombstone
-    * row once the watermark passes. Timers are LAZILY superseded: each
-    * update registers a fresh timer past the new event's TTL, and an
-    * expiring timer only tombstones if the watermark really passed the
-    * CURRENT state's deadline (an older timer firing under a newer
-    * event is a no-op) — the deleteTimer bookkeeping is unnecessary.
-    * Requires the RocksDB state store provider
-    * (spark.sql.streaming.stateStore.providerClass). */
-  class LastEventProcessor(ttlMs: Long) extends org.apache.spark.sql.streaming
-      .StatefulProcessor[LastEventKey,
-        (String, String, String, Long, java.sql.Timestamp), LastEventOut] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var st: ValueState[LastEventState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[LastEventState]("last",
-        org.apache.spark.sql.Encoders.product[LastEventState], TTLConfig.NONE)
-    override def handleInputRows(key: LastEventKey,
-        rows: Iterator[(String, String, String, Long, java.sql.Timestamp)],
-        tv: TimerValues): Iterator[LastEventOut] = {
-      val latest = rows.maxBy(_._4)
-      val next =
-        if (!st.exists() || st.get().eventTsMicros <= latest._4)
-          LastEventState(latest._3, latest._4, 0L)
-        else st.get()
-      st.update(next)
-      getHandle.registerTimer(math.max(next.eventTsMicros / 1000L + ttlMs,
-        tv.getCurrentWatermarkInMs() + 1L))
-      Iterator.single(LastEventOut(key.userId, key.contentId, next.json,
-        next.eventTsMicros, expired = false))
-    }
-    override def handleExpiredTimer(key: LastEventKey, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[LastEventOut] =
-      if (st.exists() &&
-          tv.getCurrentWatermarkInMs() >= st.get().eventTsMicros / 1000L + ttlMs) {
-        st.clear()
-        Iterator.single(LastEventOut(key.userId, key.contentId, null, 0L,
-          expired = true))
-      } else Iterator.empty
-  }
-
-  /** The transformWithState twin of [[lastEventWithTTL]] (event-time
-    * TTL only). StreamingSpec runs both against the same fixture and
-    * asserts identical outputs. */
-  def lastEventWithTTL2(enriched: DataFrame, ttlMs: Long,
-      watermarkDelay: String = WatermarkDelay): Dataset[LastEventOut] = {
-    val spark = enriched.sparkSession
-    import spark.implicits._
-    val projected = enriched
-      .select(col("user_id"), col("content_id"),
-        to_json(struct(enriched.columns.map(col): _*)).as("json"),
-        unix_micros(col("event_ts")).as("event_ts_micros"),
-        col("event_ts"))
-      .withWatermark("event_ts", watermarkDelay)
-    projected
-      .as[(String, String, String, Long, java.sql.Timestamp)]
-      .groupByKey { case (u, c, _, _, _) => LastEventKey(u, c) }
-      .transformWithState(new LastEventProcessor(ttlMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
-  }
-
   case class FunnelState(t1: Long, t2: Long, t3: Long)
   case class FunnelUpdate(userId: Long, level: Int)
 

@@ -40,7 +40,6 @@ class AnnMultimodalSpec extends SparkSpec {
   }
 
   test("native graft_dot is bit-identical to the HOF dot on real embeddings") {
-    graft.functions.VectorExpressions.register(spark)
     val both = emb.select(
       graft.functions.VectorFunctions.dot(col("embedding"), col("embedding")).as("hof"),
       call_function("graft_dot", col("embedding"), col("embedding")).as("native"))

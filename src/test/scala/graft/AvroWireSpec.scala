@@ -25,7 +25,6 @@ class AvroWireSpec extends SparkSpec {
   }
 
   test("encode → decode round-trips all fields including nulls") {
-    AvroWire.register(spark)
     val df = Seq(("42", "c-1", "u-9", "play", "2024-01-01T10:00:00.000000",
         java.lang.Long.valueOf(1500L), "web", java.lang.Double.valueOf(2.5),
         """{"k":1}""", null: String))
@@ -42,7 +41,6 @@ class AvroWireSpec extends SparkSpec {
   }
 
   test("long-branch event_id in the union decodes to its string form") {
-    AvroWire.register(spark)
     val bytes = rawEncode { r => r.put(0, java.lang.Long.valueOf(1234567L)) }
     val out = Seq(bytes).toDF("value")
       .select(call_function("graft_avro_decode", col("value")).as("r"))
@@ -51,7 +49,6 @@ class AvroWireSpec extends SparkSpec {
   }
 
   test("malformed bytes decode to a null struct (PERMISSIVE)") {
-    AvroWire.register(spark)
     // 0x01 = union index 1 (long) then EOF — a truncated record
     val out = Seq(Array[Byte](1), Array[Byte](99, 98, 97)).toDF("value")
       .select(call_function("graft_avro_decode", col("value")).as("r"))

@@ -24,8 +24,6 @@ class KMeansEquivalenceSpec extends SparkSpec {
     * cosine → max(struct)/bounded_top_k), kept verbatim as the
     * reference semantics. */
   private def assignOld(e: DataFrame, cents: DataFrame, probes: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.BoundedTopK.register(spark)
     val scored = e.join(broadcast(cents), expr("true"))
       .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
         when(col("nrm") > 0 && col("cnrm") > 0,

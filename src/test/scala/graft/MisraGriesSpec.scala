@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.MisraGries
-
 /** Misra–Gries heavy-hitters guarantee under adversarial cardinality
   * and arbitrary partitioning. */
 class MisraGriesSpec extends SparkSpec {
@@ -24,7 +22,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   private def sketch(parts: Int, k: Int): Map[String, Long] = {
-    MisraGries.register(spark)
     fixture(parts).agg(expr(s"misra_gries(item, $k)").as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.item"), col("e.est"))
@@ -44,7 +41,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("k larger than cardinality degenerates to exact counts") {
-    MisraGries.register(spark)
     val hh = Seq("a", "b", "a", "c", "a", "b").toDF("item")
       .repartition(3)
       .agg(expr("misra_gries(item, 10)").as("hh"))
@@ -57,7 +53,6 @@ class MisraGriesSpec extends SparkSpec {
   test("works as a streaming aggregate: trending items in complete mode") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
-    MisraGries.register(spark)
     val in = MemoryStream[String](spark)
     val q = in.toDF().toDF("item")
       .agg(expr("misra_gries(item, 4)").as("hh"))
@@ -79,7 +74,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("analysis-time type check rejects non-string items") {
-    MisraGries.register(spark)
     val e = intercept[Exception] {
       spark.range(5).agg(expr("misra_gries(id, 4)")).collect()
     }
@@ -102,7 +96,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("weighted: heavy-WEIGHT items survive any partitioning within W/(k+1)") {
-    graft.functions.MisraGriesWeighted.register(spark)
     val wTot = 4000.0 + 3000.0 + 1500.0
     val k = 16
     for (parts <- Seq(1, 7, 32)) {
@@ -120,7 +113,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("weighted: k above cardinality is exact; null/non-positive weights carry no mass") {
-    graft.functions.MisraGriesWeighted.register(spark)
     val hh = Seq(("a", 3L), ("b", 2L), ("a", 1L), ("c", 0L), ("b", -5L))
       .toDF("item", "w").repartition(2)
       .agg(expr("misra_gries_w(item, w, 10)").as("hh"))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -297,11 +299,64 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("extensions: GraftExtensions wires all custom functions into a session builder") {
-    // instantiating and applying must not throw; the functions are
-    // exercised via their register(spark) paths elsewhere
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
+  test("extensions: every GraftExtensions function resolves in the graft.Session session") {
+    assert(spark.conf.get("spark.sql.extensions") === classOf[GraftExtensions].getName)
+    val rec = "named_struct('event_id', '7', 'content_id', 'c', 'user_id', 'u', " +
+      "'event_type', 'play', 'event_ts', 't', 'duration_ms', 5L, 'device', 'web', " +
+      "'engagement_score', 1.5D, 'raw_payload', 'p', 'processed_ts', 't')"
+    val bloom = "graft_bloom_agg(xxhash64(id), CAST(100 AS BIGINT), CAST(4096 AS BIGINT))"
+    // one call per function; graft_nearest_cents takes a centroid handle
+    // that only NearestCentroids.columnFor hands out
+    val calls: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
+      "bounded_top_k" -> (() => spark.sql("SELECT bounded_top_k(CAST(id AS DOUBLE), id, 2) FROM range(5)")),
+      "misra_gries" -> (() => spark.sql("SELECT misra_gries(CAST(id % 3 AS STRING), 2) FROM range(9)")),
+      "misra_gries_w" -> (() => spark.sql("SELECT misra_gries_w(CAST(id % 3 AS STRING), id, 2) FROM range(9)")),
+      "uniq_up_to" -> (() => spark.sql("SELECT uniq_up_to(id, 3) FROM range(9)")),
+      "kmv_sketch" -> (() => spark.sql("SELECT kmv_sketch(id, 4) FROM range(9)")),
+      "graft_dot" -> (() => spark.sql("SELECT graft_dot(array(1D, 2D), array(3D, 4D))")),
+      "graft_nearest_cents" -> (() => spark.range(1).select(
+        graft.functions.NearestCentroids.columnFor(spark, Array(Array(1.0, 0.0), Array(0.0, 1.0)),
+          Array(1.0, 1.0), 1, typedLit(Array(0.0, 2.0)), lit(2.0)))),
+      "graft_avro_encode" -> (() => spark.sql(s"SELECT graft_avro_encode($rec)")),
+      "graft_avro_decode" -> (() => spark.sql(s"SELECT graft_avro_decode(graft_avro_encode($rec)).event_id")),
+      "graft_bloom_agg" -> (() => spark.sql(s"SELECT $bloom FROM range(9)")),
+      "graft_might_contain" -> (() => spark.sql(
+        s"SELECT graft_might_contain((SELECT $bloom FROM range(9)), xxhash64(3L))")))
+    assert(calls.keySet === GraftExtensions.functions.map(_._1.funcName).toSet)
+    calls.foreach { case (name, call) =>
+      val rows = call().collect()
+      assert(rows.length === 1 && !rows.head.isNullAt(0), name)
+    }
+    assert(calls("graft_dot")().head.getDouble(0) === 11.0)
+    assert(calls("graft_avro_decode")().head.getString(0) === "7")
+    assert(calls("graft_might_contain")().head.getBoolean(0))
+  }
+
+  test("extensions: install on a session without the functions is idempotent; their queries run") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, _, _) => registry.dropFunction(id) }
+    intercept[org.apache.spark.sql.AnalysisException](
+      s.sql("SELECT bounded_top_k(1D, 1L, 1)").collect())
+    GraftExtensions.install(s)
+    val listed = registry.listFunction().size
+    GraftExtensions.install(s)
+    assert(registry.listFunction().size === listed)
+    assert(GraftExtensions.functions.forall { case (id, _, _) => registry.functionExists(id) })
+    for (q <- Seq("q_topk_custom_agg", "q_heavy_hitters", "q_avro_roundtrip", "q_bloom_semi"))
+      assert(graft.queries.Queries.runners(q)(s, "/root/testdata/sf0.001").collect().nonEmpty, q)
+  }
+
+  test("sessions: graft.Session holds the only SparkSession builder under src/") {
+    val call = java.util.regex.Pattern.quote("SparkSession" + ".builder()").r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val hits = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Seq.fill(call.findAllIn(java.nio.file.Files.readString(p)).size)(p.toString)
+      }.toList
+    finally files.close()
+    assert(hits === List("src/main/scala/graft/Session.scala"))
   }
 
   test("property: mannWhitneyU matches a brute-force O(n^2) U on random samples") {

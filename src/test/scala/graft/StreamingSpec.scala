@@ -482,45 +482,6 @@ class StreamingSpec extends SparkSpec {
     } finally { q.stop() }
   }
 
-  test("TTL last-event via transformWithState matches the mapGroupsWithState twin") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[String](spark)
-    val enriched = graft.cdc.Envelope.unwrapEngagement(in.toDF())
-      .withColumn("user_id",
-        when(col("event_id") <= 3, lit("uA")).otherwise(col("user_id")))
-    val q = Pipeline.lastEventWithTTL2(enriched, ttlMs = 3600000L,
-      watermarkDelay = "0 seconds")
-      .writeStream.format("memory").queryName("ttl2_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(
-        engEvent(1, "c1", "play", "2024-01-01T10:00:00", 1000L),
-        engEvent(2, "c1", "pause", "2024-01-01T10:05:00", 2000L))
-      q.processAllAvailable()
-      val last = spark.sql(
-        "SELECT json FROM ttl2_out WHERE NOT expired AND userId = 'uA' ORDER BY eventTsMicros DESC LIMIT 1")
-        .head.getString(0)
-      assert(last.contains("\"event_id\":2")) // newest event wins within the key
-      // push the watermark past 10:05 + 1h, then once more so the
-      // registered timer fires against the advanced watermark
-      in.addData(engEvent(4, "c1", "click", "2024-01-01T12:00:00", null))
-      q.processAllAvailable()
-      in.addData(engEvent(5, "c1", "click", "2024-01-01T12:01:00", null))
-      q.processAllAvailable()
-      val expired = spark.sql("SELECT count(*) FROM ttl2_out WHERE expired AND userId = 'uA'")
-        .head.getLong(0)
-      assert(expired === 1L)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("streaming corpus ingest: gate + cross-batch dedup + exactly-once landing") {
     val base = tmp("ingest-store") + "/t"
     val goodText = "the quick brown fox jumps over the lazy dog and runs to " +

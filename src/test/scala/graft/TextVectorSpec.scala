@@ -118,7 +118,6 @@ class TextVectorSpec extends SparkSpec {
   }
 
   test("bloom functions: no false negatives, mostly-true rejection of unseen keys") {
-    graft.functions.BloomFunctions.register(spark)
     val seen = spark.range(0, 1000).toDF("k")
     seen.createOrReplaceTempView("bloom_seen")
     val bf = spark.sql(

@@ -276,7 +276,6 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("uniqUpTo is exact below the cap and saturates at N+1 under any partitioning") {
-    graft.functions.UniqUpTo.register(spark)
     val df = (0 until 2000).map(i => (i % 500).toLong).toDF("v")
     for (parts <- Seq(1, 7, 32)) {
       val r = df.repartition(parts)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.cdc.Envelope
-import graft.functions.BoundedTopK
 import graft.sinks.Warehouse
 import graft.sources.Workload
 
@@ -53,7 +52,6 @@ class WorkloadTopKSpec extends SparkSpec {
   }
 
   test("bounded_top_k matches the sort-based top-k formulation") {
-    BoundedTopK.register(spark)
     val df = Workload.batch(spark, 5000)
       .select(pmod(col("id"), lit(7)).as("g"), col("id").as("key"),
         (pmod(hash(col("id")), lit(1000)).cast("double") / 10).as("score"))
