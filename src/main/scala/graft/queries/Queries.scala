@@ -92,17 +92,18 @@ object Queries {
     s"floor((0.5 * least(1.0, $n/64.0) + 0.3 * (1.0 - least(1.0, $pu/$nt)) + 0.2 * least(1.0, 4.0*$st/$nt)) * 10000.0 + 0.5) / 10000.0 >= 0.5"
   }
 
-  /** Register a scratch directory for recursive deletion at JVM exit —
+  /** A fresh scratch directory, deleted recursively at JVM exit —
     * keeps side-effecting queries (q_snapshot_changes) from leaking
     * disk across repeated verify runs. */
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
+  private def scratchDir(prefix: String): String = {
+    import java.nio.file.{Files, Path}
+    val p = Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
       if (Files.exists(p))
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }))
+        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(f => Files.deleteIfExists(f))))
+    p.toString
+  }
 
   /** Fixed BM25 query-term bag (order matters: scores sum in this order). */
   private val bm25Terms = Seq("spark", "stream", "vector", "hash")
@@ -1049,8 +1050,7 @@ object Queries {
     // MemoryStream and asserts parity with this batch decomposition).
     GraftQuery("q_unigram_refresh",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_uvref")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_uvref")
         val store = s"$tmpP/vocab"
         val d = docs(s, dir)
         val early = d.filter(pmod(col("doc_id"), lit(5)) < 3)
@@ -1236,8 +1236,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // (deleted on JVM exit) like q_snapshot_changes — never headline.
     GraftQuery("q_file_roundtrip",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_filert")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_filert")
         val base = ev(s, dir).select(col("event_id"),
           date_format(col("ts"), tsFull).as("ts_str"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -1331,9 +1330,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // deleted on JVM exit so repeated verify runs don't leak disk.
     GraftQuery("q_snapshot_changes",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_snapchg")
-        deleteRecursivelyOnExit(tmpPath)
-        val tmp = tmpPath.toString
+        val tmp = scratchDir("graft_snapchg")
         val d = docs(s, dir).select(col("doc_id"), col("lang"), col("source"))
         graft.sinks.SnapshotStore.commitReplace(s, tmp, d.filter(col("doc_id") < 300))
         graft.sinks.SnapshotStore.commitAppend(s, tmp, d.filter(col("doc_id") >= 300))
@@ -1379,9 +1376,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // q_snapshot_changes — never headline/benched.
     GraftQuery("q_snapshot_zorder",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_zorder")
-        deleteRecursivelyOnExit(tmpPath)
-        val base = tmpPath.toString + "/store"
+        val base = scratchDir("graft_zorder") + "/store"
         val d = ev(s, dir).select(col("event_id"), col("user_id"), col("value"))
         graft.sinks.ZOrder.commitReplaceZOrdered(s, base, d,
           Seq("user_id", "value"), numFiles = 8)
@@ -1402,9 +1397,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // store per invocation — never headline/benched.
     GraftQuery("q_snapshot_delete",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_snapdel")
-        deleteRecursivelyOnExit(tmpPath)
-        val base = tmpPath.toString + "/store"
+        val base = scratchDir("graft_snapdel") + "/store"
         val d = ev(s, dir).select(col("event_id"), col("user_id"), col("value"))
           .repartitionByRange(8, col("user_id"))
         graft.sinks.SnapshotStore.commitReplace(s, base, d,
@@ -1422,9 +1415,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // stats-pruned partial rewrite; fresh rows stay raw.
     GraftQuery("q_snapshot_ttl",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_snapttl")
-        deleteRecursivelyOnExit(tmpPath)
-        val base = tmpPath.toString + "/store"
+        val base = scratchDir("graft_snapttl") + "/store"
         val d = ev(s, dir).select(
           datediff(col("ts"), lit("2024-01-01")).cast("long").as("day_no"),
           col("event_type"),
@@ -1452,9 +1443,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // Side-effecting scratch store per invocation — never headline.
     GraftQuery("q_snapshot_update",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_snapupd")
-        deleteRecursivelyOnExit(tmpPath)
-        val base = tmpPath.toString + "/store"
+        val base = scratchDir("graft_snapupd") + "/store"
         val d = ev(s, dir).select(col("event_id"), col("user_id"), col("value"))
           .repartitionByRange(8, col("user_id"))
         graft.sinks.SnapshotStore.commitReplace(s, base, d,
@@ -1483,9 +1472,7 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
     // churn at bench scale (6 temp stores per bench run) is trivial.
     GraftQuery("q_snapshot_merge",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_snapmerge")
-        deleteRecursivelyOnExit(tmpPath)
-        val base = tmpPath.toString + "/store"
+        val base = scratchDir("graft_snapmerge") + "/store"
         val d = ev(s, dir).select(col("event_id"), col("user_id"), col("value"))
           .repartitionByRange(8, col("event_id"))
         graft.sinks.SnapshotStore.commitReplace(s, base, d,
@@ -1952,13 +1939,12 @@ SELECT orig_id AS doc_id, bucket, n_tok, start_tok, CAST(floor(start_tok / 512.0
     // invocation, deleted on JVM exit) — never headline/benched.
     GraftQuery("q_snapshot_skip",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_snapskip")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_snapskip")
         val d = docs(s, dir).select(col("doc_id"), col("lang"), col("source"))
           .repartitionByRange(8, col("doc_id"))
-        graft.sinks.SnapshotStore.commitReplace(s, tmpPath.toString, d,
+        graft.sinks.SnapshotStore.commitReplace(s, tmpPath, d,
           statsCols = Seq("doc_id"))
-        graft.sinks.SnapshotStore.readRange(s, tmpPath.toString, "doc_id", 200, 350)
+        graft.sinks.SnapshotStore.readRange(s, tmpPath, "doc_id", 200, 350)
           .getOrElse(sys.error("all files pruned"))
           .select(col("doc_id"), col("lang"), col("source"))
       },
@@ -2008,8 +1994,7 @@ SELECT orig_id AS doc_id, bucket, n_tok, start_tok, CAST(floor(start_tok / 512.0
     // invocation, deleted on JVM exit) — never headline/benched.
     GraftQuery("q_summing_mv",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_summv")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_summv")
         val src = s"$tmpP/src"; val mv = s"$tmpP/mv"; val ck = s"$tmpP/ck"
         val d = docs(s, dir).select(col("doc_id"), col("lang"),
           TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
@@ -2038,8 +2023,7 @@ SELECT orig_id AS doc_id, bucket, n_tok, start_tok, CAST(floor(start_tok / 512.0
     // batching and compaction schedule cannot change a bit.
     GraftQuery("q_agg_mv",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_aggmv")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_aggmv")
         val mv = s"$tmpP/aggmv"
         val e = ev(s, dir).select(col("event_id"), col("event_type"),
           col("value"), col("user_id"))
@@ -2071,8 +2055,7 @@ FROM agg a JOIN summary s ON a.event_type = s.event_type""")),
     // oracle computes the same rollup from the raw events.
     GraftQuery("q_mv_routed_daily",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_mvr")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_mvr")
         val factPath = s"$tmpP/fact"
         ev(s, dir).select(col("ts"), col("event_type"),
             (floor(col("value") * 100 + lit(0.5)) / 100).as("engagement_score"))
@@ -2418,8 +2401,7 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // batch build. Side-effecting scratch stores; never headline.
     GraftQuery("q_ivf_refresh",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_ivfref")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_ivfref")
         val cents = s"$tmpP/cents"
         val cells = s"$tmpP/cells"
         val e = Tables.embeddings(s, dir)
@@ -2477,11 +2459,10 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // store (deleted on JVM exit), never headline.
     GraftQuery("q_dedup_minhash_inc",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_mhidx")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_mhidx")
         val d = docs(s, dir)
         (0 to 2).map { b =>
-          graft.dedup.MinHashIndex.processBatch(s, tmpPath.toString,
+          graft.dedup.MinHashIndex.processBatch(s, tmpPath,
             d.filter(pmod(col("doc_id"), lit(3)) === b),
             col("doc_id"), col("text"), tag = s"b$b")
         }.reduce(_ unionByName _)
@@ -2655,8 +2636,7 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // Side-effecting scratch stores: never headline.
     GraftQuery("q_pref_pipeline_stream",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_pps")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_pps")
         val (base, marg, mv) =
           (s"$tmpPath/prompts", s"$tmpPath/margins", s"$tmpPath/mv")
         val pairs = graft.ops.Preferences.fixture(docs(s, dir),
@@ -2678,8 +2658,7 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // batch replay assigning pairs to their arrival batch.
     GraftQuery("q_pref_monitor_stream",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_pms")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_pms")
         val (base, marg, mv) =
           (s"$tmpPath/prompts", s"$tmpPath/margins", s"$tmpPath/mv")
         val pairs = graft.ops.Preferences.fixture(docs(s, dir),
@@ -2731,8 +2710,7 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // scratch stores: never headline.
     GraftQuery("q_conv_pipeline_stream",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_cps")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_cps")
         val (base, turnsB, idx, pairs, mv) = (s"$tmpPath/convs",
           s"$tmpPath/turns", s"$tmpPath/idx", s"$tmpPath/pairs",
           s"$tmpPath/mv")
@@ -2760,8 +2738,7 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // batch (valid under the conv_id-monotone stream contract).
     GraftQuery("q_conv_monitor_stream",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_cms")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_cms")
         val (base, turnsB, idx, pairs, mv) = (s"$tmpPath/convs",
           s"$tmpPath/turns", s"$tmpPath/idx", s"$tmpPath/pairs",
           s"$tmpPath/mv")
@@ -2801,8 +2778,7 @@ ${graft.ops.Graph.triangleCountsOracleSql()}""")),
     // churn at bench scale is trivial.
     GraftQuery("q_bm25_indexed",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_bm25idx")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_bm25idx")
         val corpus = s"$tmpPath/corpus"
         val idx = s"$tmpPath/index"
         val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -3187,8 +3163,7 @@ FROM gf""")),
     // SQL — the incremental plan must reproduce it hash-exactly.
     GraftQuery("q_dashboard_series_inc",
       (s, dir) => {
-        val mv = java.nio.file.Files.createTempDirectory("graft_dash")
-          .toString + "/mv"
+        val mv = scratchDir("graft_dash") + "/mv"
         val sink = graft.streaming.Dashboard.dailySumSink(col("event_type"),
           col("ts"), round(col("value") * 1e6, 0).cast("long"), mv)
         val e = ev(s, dir)
@@ -3283,8 +3258,7 @@ FROM gf""")),
     // same oracle as the one-shot q_weighted_quantile.
     GraftQuery("q_weighted_quantile_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_wq")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_wq")
         val mv = s"$tmpP/wqmv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -3478,8 +3452,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // the one-shot q_exp_decay, merged-state exactness by construction.
     GraftQuery("q_exp_decay_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_expdec")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_expdec")
         val mv = s"$tmpP/expdecmv"
         val A = graft.sinks.AggregatingStore
         val h = 43200L * 1000000L
@@ -3533,8 +3506,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // associative+commutative.
     GraftQuery("q_m4_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_m4")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_m4")
         val mv = s"$tmpP/m4mv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -4056,8 +4028,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // scalar path (anovaFromPartials) as the batch operator.
     GraftQuery("q_anova_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_anova")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_anova")
         val mv = s"$tmpP/anovamv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -4095,8 +4066,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // q_corr_matrix, same readout path (corrMatrixFromPartials).
     GraftQuery("q_corr_matrix_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_corr")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_corr")
         val mv = s"$tmpP/corrmv"
         val colsSpec = Seq(
           "v" -> round(col("value") * 1e6, 0).cast("long"),
@@ -4123,8 +4093,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // are bit-identical to the one-shot q_kmv_distinct, same oracle.
     GraftQuery("q_kmv_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_kmv")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_kmv")
         val mv = s"$tmpP/kmvmv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -4226,8 +4195,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // conventions.
     GraftQuery("q_quantile_interp_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_wqi")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_wqi")
         val mv = s"$tmpP/wqimv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -4271,8 +4239,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // never the per-distinct-value table.
     GraftQuery("q_quantile_tdigest_inc",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_tdig")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_tdig")
         val mv = s"$tmpP/tdigmv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -4301,8 +4268,7 @@ SELECT event_id, content_key, strftime(ts, '$tsFullSql') AS ts_str, CASE WHEN vt
     // incremental maintenance against the full-data oracle.
     GraftQuery("q_quantile_tdigest_by",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_tdigby")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_tdigby")
         val mv = s"$tmpP/tdigbymv"
         val e = ev(s, dir)
         (0 until 3).foreach { i =>
@@ -4454,8 +4420,7 @@ FROM dim d LEFT JOIN ch ON d.id = ch.id LEFT JOIN dc ON d.id = dc.id""")),
     // filter over the raw events.
     GraftQuery("q_projection_routed",
       (s, dir) => {
-        val tmpP = java.nio.file.Files.createTempDirectory("graft_proj")
-        deleteRecursivelyOnExit(tmpP)
+        val tmpP = scratchDir("graft_proj")
         val factPath = s"$tmpP/fact"
         val projBase = s"$tmpP/proj"
         // dense independent-ish axes from event_id (user_id's domain is
@@ -4501,8 +4466,7 @@ FROM dim d LEFT JOIN ch ON d.id = ch.id LEFT JOIN dc ON d.id = dc.id""")),
     // never headline.
     GraftQuery("q_training_pipeline_stream",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_tps")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_tps")
         val (base, idx, pairs, mv) = (s"$tmpPath/corpus", s"$tmpPath/idx",
           s"$tmpPath/pairs", s"$tmpPath/mv")
         val d = docs(s, dir).select(col("doc_id"), col("text"))
@@ -4533,8 +4497,7 @@ SELECT doc_id, n_tok, start_tok, CAST(floor(start_tok / 512.0) AS BIGINT) AS fir
     // oracle body appended after the pipeline-replay CTEs).
     GraftQuery("q_training_monitor_quantiles",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_tpq")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_tpq")
         val (base, idx, pairs, mv, lenMv) = (s"$tmpPath/corpus",
           s"$tmpPath/idx", s"$tmpPath/pairs", s"$tmpPath/mv",
           s"$tmpPath/lenmv")
@@ -4561,8 +4524,7 @@ SELECT doc_id, n_tok, start_tok, CAST(floor(start_tok / 512.0) AS BIGINT) AS fir
     // replay assigning each doc/eviction to its arrival batch.
     GraftQuery("q_training_monitor_stream",
       (s, dir) => {
-        val tmpPath = java.nio.file.Files.createTempDirectory("graft_tpm")
-        deleteRecursivelyOnExit(tmpPath)
+        val tmpPath = scratchDir("graft_tpm")
         val (base, idx, pairs, mv) = (s"$tmpPath/corpus", s"$tmpPath/idx",
           s"$tmpPath/pairs", s"$tmpPath/mv")
         val d = docs(s, dir).select(col("doc_id"), col("text"))

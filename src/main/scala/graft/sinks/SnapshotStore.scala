@@ -3,11 +3,18 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, max, min, not, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+import org.apache.spark.sql.types._
 
 /** Transactional snapshot commits on a plain filesystem — the atomicity
   * the reference gets for free from ClickHouse part-swaps
@@ -53,14 +60,19 @@ import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, max,
   * the table.
   *
   * DATA SKIPPING: commits may record per-file min/max statistics for
-  * chosen numeric columns as `#stats=` manifest lines (the same idea as
-  * Delta's file stats / ClickHouse's sparse index). A range read then
-  * prunes whole files from the manifest ALONE — zero data IO for files
-  * whose [min,max] misses the query interval. Stats ride the manifest,
-  * so they carry forward with their files across appends/compactions
-  * and die with them at vacuum. Files without stats are always read
-  * (conservative), so skipping is purely an optimization, never a
-  * correctness risk.
+  * chosen columns as `#stats=` manifest lines (the same idea as Delta's
+  * file stats / ClickHouse's sparse index), folded on the driver from
+  * the row-group min/max in the staged files' parquet footers and
+  * mapped onto `double` as `cast("double")` maps byte, short, int,
+  * long, float, double and decimal values. Another type, a row group
+  * without usable min/max (a NaN, no stats) or an all-null column
+  * records no bound. A range read then prunes whole files from the
+  * manifest ALONE — zero data IO for files whose [min,max] misses the
+  * query interval. Stats ride the manifest, so they carry forward with
+  * their files across appends/compactions and die with them at vacuum.
+  * Files without stats (or with a NaN bound from an older manifest)
+  * are always read (conservative), so skipping is purely an
+  * optimization, never a correctness risk.
   */
 object SnapshotStore {
 
@@ -143,8 +155,8 @@ object SnapshotStore {
           case Array(rel, spec) =>
             val cols = spec.split(";").iterator.filter(_.nonEmpty).flatMap { p =>
               p.split("=", 2) match {
-                case Array(c, mm) => mm.split(",", 2) match {
-                  case Array(lo, hi) => Some(c -> (lo.toDouble, hi.toDouble))
+                case Array(c, mm) => mm.split(",", 2).map(_.toDouble) match {
+                  case Array(lo, hi) if !lo.isNaN && !hi.isNaN => Some(c -> (lo, hi))
                   case _ => None
                 }
                 case _ => None
@@ -172,11 +184,12 @@ object SnapshotStore {
     versions(spark, base).lastOption
       .fold(Live(-1L, Nil))(v => Live(v, manifestLines(spark, base, v)))
 
-  /** The data files `rels` as one DataFrame, partition columns recovered
-    * from the relative paths via basePath; None for no files. */
+  /** The data files `rels` as one DataFrame, the data schema taken from
+    * the first file's footer and partition columns recovered from the
+    * relative paths via basePath; None for no files. */
   private def readFiles(spark: SparkSession, base: String, rels: Seq[String]): Option[DataFrame] =
-    if (rels.isEmpty) None
-    else Some(spark.read.option("basePath", dataDir(base))
+    rels.headOption.map(rel => spark.read.schema(footerSchema(footer(spark, base, rel)))
+      .option("basePath", dataDir(base))
       .parquet(rels.map(f => s"${dataDir(base)}/$f"): _*))
 
   /** All committed manifest versions, ascending. */
@@ -342,46 +355,42 @@ object SnapshotStore {
   private final case class Plan(keep: Seq[String], df: Option[DataFrame],
       revivedStats: Seq[String] = Nil)
 
-  /** A published commit: its version and, when the commit counted
-    * them, the rows it staged. */
-  private final case class Published(version: Long, rows: Option[Long])
+  /** A published commit: its version and the rows it staged. */
+  private final case class Published(version: Long, rows: Long)
 
   /** The one commit path: every manifest publish goes through here.
     * Under the per-base commit lock it resolves the live manifest once;
     * a `tag` already in it makes the commit a no-op, so a replayed
     * tagged batch lands once. Otherwise `plan` chooses, from that one
     * [[Live]], what to keep and what to stage (None: nothing to
-    * commit). The frame is staged under `partitionBy`, its files get
-    * stats for `statsCols`, and the manifest is published as the next
-    * version. With `count` the staged rows are counted from their
-    * footers, once; with `dropEmpty` (which counts too) a frame that
-    * stages zero rows publishes nothing and its files are removed.
-    * Returns the published commit, or None when nothing was published. */
+    * commit). The frame is staged under `partitionBy`, each staged
+    * file's footer is read once for its rows and its stats for
+    * `statsCols` ([[footerFold]]), and the manifest is published as the
+    * next version. With `dropEmpty` a frame that stages zero rows
+    * publishes nothing and its files are removed. Returns the published
+    * commit, or None when nothing was published. */
   private def commit(spark: SparkSession, base: String, tag: Option[String] = None,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
-      count: Boolean = false, dropEmpty: Boolean = false)(
-      plan: Live => Option[Plan]): Option[Published] =
+      dropEmpty: Boolean = false)(plan: Live => Option[Plan]): Option[Published] =
     commitLock(base).synchronized {
       val parent = live(spark, base)
       if (tag.exists(parent.hasTag)) None
       else plan(parent).flatMap { p =>
         val staged = p.df.fold(Seq.empty[String])(stageWrite(spark, base, _, partitionBy))
-        val rows = if (count || dropEmpty) Some(stagedRowCount(spark, base, staged)) else None
-        if (dropEmpty && rows.contains(0L)) {
+        val (rows, stats) = footerFold(spark, base, staged, statsCols)
+        if (dropEmpty && rows == 0L) {
           val f = fs(spark, base)
           staged.foreach(rel => f.delete(new Path(s"${dataDir(base)}/$rel"), false))
           None
-        } else {
-          val stats = p.revivedStats ++ computeStats(spark, base, staged, statsCols)
-          Some(Published(commitManifest(spark, base, parent, p.keep ++ staged, tag, stats), rows))
-        }
+        } else Some(Published(commitManifest(spark, base, parent, p.keep ++ staged, tag,
+          p.revivedStats ++ stats), rows))
       }
     }
 
   /** Replace the whole table with `df` (dim-snapshot swap, full
     * compaction). `statsCols` opts the commit into per-file min/max
-    * recording for those (numeric) columns. Returns the committed
-    * manifest version. */
+    * recording for those columns. Returns the committed manifest
+    * version. */
   def commitReplace(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
     commit(spark, base, partitionBy = partitionBy, statsCols = statsCols)(
@@ -397,24 +406,6 @@ object SnapshotStore {
       statsCols: Seq[String] = Nil): Unit =
     commit(spark, base, tag, partitionBy, statsCols)(l => Some(Plan(l.files, Some(df))))
 
-  /** Exact row count of staged files from their parquet FOOTERS —
-    * driver-side metadata reads (one footer per new file, the same
-    * order of work as the manifest write), never a Spark job. This is
-    * what lets a caller that needs "rows committed" avoid the
-    * persist + count() + write double materialization of the data
-    * (r15, guide §5: the count used to force the frame once into a
-    * cache and once into parquet). */
-  private def stagedRowCount(spark: SparkSession, base: String,
-      rels: Seq[String]): Long = {
-    val hconf = conf(spark)
-    rels.map { rel =>
-      val p = new Path(s"${dataDir(base)}/$rel")
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
   /** [[commitAppend]] that also returns the number of rows landed,
     * counted from the staged files' footers (no extra job, no caching
     * of the input frame). A zero-row batch commits NOTHING (its empty
@@ -426,15 +417,15 @@ object SnapshotStore {
       partitionBy: Seq[String] = Nil, tag: Option[String] = None,
       statsCols: Seq[String] = Nil): Long =
     commit(spark, base, tag, partitionBy, statsCols, dropEmpty = true)(
-      l => Some(Plan(l.files, Some(df)))).flatMap(_.rows).getOrElse(0L)
+      l => Some(Plan(l.files, Some(df)))).fold(0L)(_.rows)
 
   /** [[commitReplace]] returning the rows committed, counted from the
     * staged footers (the replace ALWAYS commits — replacing a table
     * with an empty snapshot is a legitimate state). */
   def commitReplaceCounted(spark: SparkSession, base: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Long =
-    commit(spark, base, partitionBy = partitionBy, statsCols = statsCols, count = true)(
-      _ => Some(Plan(Nil, Some(df)))).flatMap(_.rows).getOrElse(0L)
+    commit(spark, base, partitionBy = partitionBy, statsCols = statsCols)(
+      _ => Some(Plan(Nil, Some(df)))).fold(0L)(_.rows)
 
   /** Replace exactly one partition's files with `df` (which must be the
     * new content of that partition, carrying the partition column):
@@ -454,35 +445,68 @@ object SnapshotStore {
   private def statsLineFile(line: String): Option[String] =
     line.stripPrefix(StatsPrefix).split("\t", 2).headOption
 
-  /** Min/max per column for the new files, as manifest `#stats=` lines.
-    * One aggregate over JUST the staged batch (grouped by physical
-    * file), collected as one row PER NEW FILE — manifest-scale
-    * metadata, the same order of driver-side state as the manifest
-    * write itself, never proportional to the table. Values are widened
-    * one ulp each way so the double encoding can never round a true
-    * boundary out of its own file (longs past 2^53). Null-only columns
-    * are omitted (the file is then always read for them). */
-  private def computeStats(spark: SparkSession, base: String,
-      newRels: Seq[String], statsCols: Seq[String]): Seq[String] = {
-    if (statsCols.isEmpty || newRels.isEmpty) return Nil
-    val aggs = statsCols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"__min_$c"),
-      max(col(c)).cast("double").as(s"__max_$c")))
-    val rows = readFiles(spark, base, newRels).get
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    rows.toSeq.flatMap { r =>
-      newRels.find(rel => r.getString(0).endsWith(rel)).map { rel =>
-        val parts = statsCols.flatMap { c =>
-          (Option(r.getAs[java.lang.Double](s"__min_$c")),
-            Option(r.getAs[java.lang.Double](s"__max_$c"))) match {
-            case (Some(lo), Some(hi)) =>
-              Some(s"$c=${Math.nextDown(lo.doubleValue)},${Math.nextUp(hi.doubleValue)}")
-            case _ => None
-          }
-        }
+  // ---- parquet footers ----------------------------------------------------
+
+  private def footer(spark: SparkSession, base: String, rel: String): ParquetMetadata = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(s"${dataDir(base)}/$rel"), conf(spark)))
+    try r.getFooter finally r.close()
+  }
+
+  /** The Spark schema of a data file: every one is written through
+    * Spark ([[stageWrite]]), which stores it in the footer. */
+  private def footerSchema(m: ParquetMetadata): StructType = DataType.fromJson(
+    m.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    .asInstanceOf[StructType]
+
+  /** Rows of the staged files and their `#stats=` lines for
+    * `statsCols`, from one footer read per file: manifest-scale
+    * driver-side metadata, never a Spark job. A column's bound is its
+    * row-group min/max ([[footerBounds]]) widened one ulp each way, so
+    * the double encoding can never round a true boundary out of its own
+    * file (longs past 2^53). Files with no rows get no line. */
+  private def footerFold(spark: SparkSession, base: String, rels: Seq[String],
+      statsCols: Seq[String]): (Long, Seq[String]) = {
+    val footers = rels.map(rel => rel -> footer(spark, base, rel))
+    def rows(m: ParquetMetadata) = m.getBlocks.asScala.map(_.getRowCount).sum
+    val lines = if (statsCols.isEmpty) Nil else footers.collect {
+      case (rel, m) if rows(m) > 0 =>
+        val schema = footerSchema(m)
+        val parts = statsCols.flatMap(c => footerBounds(m, schema, c).map { case (lo, hi) =>
+          s"$c=${Math.nextDown(lo)},${Math.nextUp(hi)}"
+        })
         s"$StatsPrefix$rel\t${parts.mkString(";")}"
-      }
+    }
+    (footers.map(f => rows(f._2)).sum, lines)
+  }
+
+  /** Column `c`'s [min, max] over the file's row groups, each value
+    * mapped as `cast("double")` maps it; None for an unmapped type, a
+    * row group with values but no usable min/max, or no non-null value. */
+  private def footerBounds(m: ParquetMetadata, schema: StructType,
+      c: String): Option[(Double, Double)] = {
+    val toDouble: Option[Any => Double] = schema.find(_.name == c).map(_.dataType).collect {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType =>
+        v => v.asInstanceOf[Number].doubleValue
+      case d: DecimalType => v => new java.math.BigDecimal(v match {
+        case b: Binary => new java.math.BigInteger(b.getBytes)
+        case n => java.math.BigInteger.valueOf(n.asInstanceOf[Number].longValue)
+      }, d.scale).doubleValue
+    }
+    val path = ColumnPath.get(c)
+    toDouble.flatMap { cast =>
+      // per row group: None = no usable min/max, Some(None) = all null
+      val groups = m.getBlocks.asScala.toSeq.map(_.getColumns.asScala.find(_.getPath == path)
+        .flatMap { ch =>
+          val s = ch.getStatistics
+          if (s != null && s.hasNonNullValue) {
+            val (lo, hi) = (cast(s.genericGetMin), cast(s.genericGetMax))
+            if (lo.isNaN || hi.isNaN) None else Some(Some((lo, hi)))
+          } else if (s != null && s.isNumNullsSet && s.getNumNulls == ch.getValueCount) Some(None)
+          else None
+        })
+      if (groups.contains(None)) None
+      else groups.flatten.flatten.reduceOption((x, y) => (x._1 min y._1, x._2 max y._2))
     }
   }
 
@@ -679,8 +703,10 @@ object SnapshotStore {
       rewritten = affected.size
       // table schema governs: extra change-side columns (CDC markers)
       // never reach storage
-      val tableCols = readFiles(spark, base, l.files.take(1))
-        .fold(changes.columns.toSeq)(_.columns.toSeq)
+      val tableCols = l.files.headOption.fold(changes.columns.toSeq) { rel =>
+        footerSchema(footer(spark, base, rel)).fieldNames.toSeq ++
+          rel.split("/").init.map(_.takeWhile(_ != '='))
+      }
       val upserts = changes.filter(not(coalesce(isDelete, lit(false))))
         .select(tableCols.map(col): _*)
       if (affected.isEmpty && upserts.isEmpty) None

@@ -143,29 +143,10 @@ class EnvelopeSpec extends SparkSpec {
   }
 
   test("dim apply runs at most two jobs: one collect, one write") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val path = dimPath()
     fold(path, contentUpsert("c1", "podcast", 300, 1), contentUpsert("c2", "video", 60, 1))
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("dim-apply", "dim apply")
-      try fold(path, contentUpsert("c3", "newsletter", 30, 2), contentDelete("c1", 2))
-      finally sc.clearJobGroup()
-      // the listener bus delivers in order: once the marker job is seen,
-      // every job applyBatch ran has been counted
-      sc.setJobGroup("marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(jobs.contains("marker"))
-    } finally sc.removeSparkListener(listener)
-    val applyJobs = jobs.toArray.count(_ == "dim-apply")
+    val applyJobs =
+      jobsIn(fold(path, contentUpsert("c3", "newsletter", 30, 2), contentDelete("c1", 2)))
     assert(applyJobs >= 1 && applyJobs <= 2, s"applyBatch ran $applyJobs jobs")
     assert(dimRows(path) === Map("c2" -> "video", "c3" -> "newsletter"))
   }

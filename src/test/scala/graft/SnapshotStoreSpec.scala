@@ -636,4 +636,84 @@ class SnapshotStoreSpec extends SparkSpec {
     }
     assert(snapshot() === got, "failed TTL must not tear the snapshot")
   }
+
+  test("a stats commit runs one job (the write); building read frames runs none") {
+    val base = tmp("ss-jobs")
+    val commitJobs = jobsIn(SnapshotStore.commitReplace(spark, base,
+      spark.range(0, 400, 1, 4).toDF("id"), statsCols = Seq("id")))
+    assert(commitJobs === 1, s"stats commit ran $commitJobs jobs")
+    SnapshotStore.commitAppend(spark, base, spark.range(400, 800, 1, 4).toDF("id"),
+      statsCols = Seq("id"))
+    assert(SnapshotStore.listFiles(spark, base).size === 8)
+    var frames = Seq.empty[org.apache.spark.sql.DataFrame]
+    val readJobs = jobsIn {
+      frames = Seq(SnapshotStore.read(spark, base), SnapshotStore.readVersion(spark, base, 0L),
+        SnapshotStore.readRange(spark, base, "id", 100, 500),
+        SnapshotStore.changesBetween(spark, base, 0L, 1L)).flatten
+    }
+    assert(readJobs === 0, s"building read frames ran $readJobs jobs")
+    assert(frames.map(_.count()) === Seq(800L, 400L, 401L, 400L))
+  }
+
+  test("footer bounds: each mapped type's [lo, hi] is the cast(double) min/max, widened") {
+    val base = tmp("ss-types")
+    val x = col("id") - 150
+    def nullEvery10(c: org.apache.spark.sql.Column) = when(col("id") % 10 =!= 0, c)
+    val mapped = Seq(
+      "b" -> (x % 128).cast("byte"), "s" -> (x * 100).cast("short"), "i" -> (x * 1000003).cast("int"),
+      "l" -> (lit(Long.MaxValue) - col("id") * 3), // above 2^53: rounds as a double
+      "f" -> (x / 7.0).cast("float"), "d" -> x / 3.0,
+      "dec9" -> (x / 7).cast("decimal(9,3)"), "dec18" -> (x * 123456789L / 7).cast("decimal(18,4)"),
+      "dec30" -> (x * 1e15 / 7).cast("decimal(30,5)"),
+      "sparse" -> when(col("id") >= 100, x)) // all null in the first file
+    val unmapped = Seq("nothing" -> lit(null).cast("long"), "str" -> x.cast("string"))
+    // three files of 100 ids each: range partitions write one file apiece
+    val df = spark.range(0, 300, 1, 3).select(col("id") +: (mapped ++ unmapped).map {
+      case (n, c) => nullEvery10(c).as(n) }: _*)
+    val statsCols = (mapped ++ unmapped).map(_._1)
+    SnapshotStore.commitReplace(spark, base, df, statsCols = statsCols)
+    val st = SnapshotStore.fileStats(spark, base)
+    assert(st.size === 3)
+    st.foreach { case (rel, cols) =>
+      val file = spark.read.parquet(s"$base/data/$rel")
+      assert(!cols.contains("nothing") && !cols.contains("str"), s"$rel: $cols")
+      mapped.map(_._1).foreach { c =>
+        val vs = file.select(col(c).cast("double")).collect().filterNot(_.isNullAt(0))
+          .map(_.getDouble(0))
+        if (vs.isEmpty) assert(!cols.contains(c), s"$rel: all-null $c has a bound")
+        else {
+          val (lo, hi) = cols(c)
+          assert(vs.forall(v => lo <= v && v <= hi), s"$rel $c: [$lo, $hi] misses a value")
+          assert((lo, hi) === ((Math.nextDown(vs.min), Math.nextUp(vs.max))), s"$rel $c")
+        }
+      }
+    }
+    assert(st.values.count(_.contains("sparse")) === 2)
+  }
+
+  test("a NaN in a stats column never hides its file from range reads and rewrites") {
+    val base = tmp("ss-nan")
+    val x = when(col("id") === 150, lit(Double.NaN)).otherwise(col("id").cast("double"))
+    // four files of 100 ids; the second holds the NaN and in-range values
+    SnapshotStore.commitReplace(spark, base,
+      spark.range(0, 400, 1, 4).select(col("id"), x.as("x")), statsCols = Seq("x"))
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("id").as[Long].collect().toSet
+    val inRange = col("x") >= 180 && col("x") <= 220
+    val expect = ids(SnapshotStore.read(spark, base).get.filter(inRange))
+    assert(expect === (180L to 220L).toSet)
+    assert(ids(SnapshotStore.readRange(spark, base, "x", 180, 220).get) === expect)
+    SnapshotStore.deleteRange(spark, base, "x", 180, 220, statsCols = Seq("x"))
+    assert(ids(SnapshotStore.read(spark, base).get) === (0L until 400L).toSet -- expect)
+    // a NaN bound already on disk (as older manifests may hold) is no bound
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val v = SnapshotStore.versions(spark, base).last
+    def manifest(v: Long) = new org.apache.hadoop.fs.Path(f"$base/_manifests/m$v%010d")
+    val in = fs.open(manifest(v))
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val out = fs.create(manifest(v + 1))
+    try out.write(text.replaceAll("x=[^;\n]*", "x=0.0,NaN").getBytes("UTF-8")) finally out.close()
+    assert(SnapshotStore.fileStats(spark, base).values.forall(_.isEmpty))
+    assert(SnapshotStore.pruneFiles(spark, base, "x", 300, 310).size ===
+      SnapshotStore.listFiles(spark, base).size)
+  }
 }
