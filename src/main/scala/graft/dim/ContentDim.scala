@@ -17,18 +17,20 @@ import graft.sinks.SnapshotStore
   * stream of upserts and delete tombstones.
   *
   * Design (SURVEY §7.4 #1): a snapshot table maintained per micro-batch
-  * via foreachBatch — the engagement stream then broadcast-left-joins
-  * the snapshot, giving the reference's as-of-processing-time join
-  * semantics (events never retro-enrich; deletes stop enrichment from
-  * the next batch on). The snapshot stays small (one row per live key),
-  * so the join side is always broadcastable regardless of fact volume.
+  * via foreachBatch — the engagement stream then left-looks-up each
+  * event's content in the snapshot, giving the reference's
+  * as-of-processing-time join semantics (events never retro-enrich;
+  * deletes stop enrichment from the next batch on). The snapshot stays
+  * small (one row per live key), so it always fits the driver
+  * regardless of fact volume.
   *
-  * Because [[graft.enrich.Enrich.enrich]] broadcasts the whole dim, its
-  * rows fit on the driver by contract. The streaming path uses that:
-  * [[applyBatch]] folds a change batch into the snapshot's rows on the
-  * driver, and [[snapshot]] serves rows cached per path and keyed by
-  * the live manifest version (manifests are immutable, so a version's
-  * rows never change).
+  * The streaming path uses that: [[applyBatch]] folds a change batch
+  * into the snapshot's rows on the driver, and [[snapshot]] serves rows
+  * cached per path and keyed by the live manifest version (manifests
+  * are immutable, so a version's rows never change). Because those
+  * rows are a local relation, [[graft.enrich.Enrich.enrich]] turns them
+  * into a broadcast hash table with no Spark job; [[latestState]] over a
+  * change log stays a plan and is broadcast-joined.
   */
 object ContentDim {
 
@@ -134,12 +136,10 @@ object ContentDim {
   }
 
   /** A version's rows as a one-partition local frame. The local
-    * relation converts the rows on the driver and carries their true
-    * size (so a commit skips SnapshotStore's size-gated rebalance,
-    * which an RDD frame's unknown size would trigger); the coalesce
-    * makes enrichment's broadcast one task, like the single-file
-    * parquet scan it stands in for (a bare local relation broadcasts
-    * through one task per core). */
+    * relation converts the rows on the driver, carries their true size
+    * and lets [[graft.enrich.Enrich.enrich]] read them without a job;
+    * the coalesce keeps a commit of the frame to one staged file (a bare
+    * local relation writes one file per task, up to one per core). */
   private def frame(spark: SparkSession, v: Version): DataFrame =
     spark.createDataFrame(v.rows.asJava, v.schema).coalesce(1)
 

@@ -1,14 +1,19 @@
 package graft.enrich
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions.Engagement
 
-/** The enrichment join (SURVEY.md J1) + derived columns (P5–P7): the
-  * reference's BroadcastContentEnricher re-expressed as a broadcast
-  * LEFT join against the dimension snapshot.
+/** The enrichment (SURVEY.md J1) + derived columns (P5–P7): the
+  * reference's BroadcastContentEnricher, a point lookup per event into
+  * the broadcast id → content map, re-expressed as a LEFT lookup
+  * against the dimension snapshot.
   *
   * Left-outer semantics match the reference exactly: an event whose
   * content_id is unknown (or deleted) passes through with null
@@ -16,9 +21,16 @@ import graft.functions.Engagement
   * but still gets its score (the score formula only needs event_type
   * and duration, reference :286–307).
   *
-  * Scale posture: the dim side is explicitly `broadcast()` — the fact
-  * stream never shuffles for this join, which is what makes the hot
-  * path a single stage end-to-end at any fact volume.
+  * Scale posture: the fact stream never shuffles. A dim whose rows are
+  * already on the driver (a local relation, as
+  * [[graft.dim.ContentDim.snapshot]] returns) becomes an
+  * id → (content_type, length_seconds) hash table shipped with
+  * `SparkContext.broadcast` and read by two lookups in one projection:
+  * no Spark job, no join and no hashed relation per batch. Any other
+  * dim (a plan, such as [[graft.dim.ContentDim.latestState]] over a
+  * change log, or a parquet table) is explicitly `broadcast()` into a
+  * left hash join. Either way the hot path is a single stage
+  * end-to-end at any fact volume.
   */
 object Enrich {
 
@@ -28,14 +40,61 @@ object Enrich {
   def enrich(events: DataFrame, dim: DataFrame): DataFrame = {
     val d = dim.select(col("id").as("__dim_id"),
       col("content_type"), col("length_seconds"))
-    events.join(broadcast(d), events("content_id") === col("__dim_id"), "left")
-      .drop("__dim_id")
+    val joined = driverRows(d) match {
+      case Some(rows) if events.schema("content_id").dataType == StringType =>
+        lookup(events, rows)
+      case _ =>
+        events.join(broadcast(d), events("content_id") === col("__dim_id"), "left")
+          .drop("__dim_id")
+    }
+    joined
       .withColumn("engagement_seconds",
         Engagement.engagementSeconds(col("duration_ms")))
       .withColumn("engagement_pct",
         Engagement.engagementPct(col("duration_ms"), col("length_seconds")))
       .withColumn("engagement_score",
         Engagement.engagementScore(col("event_type"), col("duration_ms")))
+  }
+
+  /** A local relation: rows already held on the driver, optionally under
+    * the non-shuffling `coalesce(1)` a snapshot frame carries. */
+  private object DriverHeld {
+    def unapply(plan: LogicalPlan): Option[LocalRelation] = plan match {
+      case l: LocalRelation if !l.isStreaming => Some(l)
+      case Repartition(1, false, l: LocalRelation) if !l.isStreaming => Some(l)
+      case _ => None
+    }
+  }
+
+  /** The (id, content_type, length_seconds) values of a driver-held dim
+    * of the content types (string, string, int), evaluated on the
+    * driver; None for any other dim. */
+  private def driverRows(d: DataFrame): Option[Seq[Seq[Any]]] = d.queryExecution.analyzed match {
+    case Project(list, DriverHeld(l))
+        if d.schema.map(_.dataType) == Seq(StringType, StringType, IntegerType) =>
+      val bound = BindReferences.bindReferences[Expression](list, AttributeSeq(l.output))
+      Some(l.data.map(r => bound.map(e => CatalystTypeConverters.convertToScala(e.eval(r), e.dataType))))
+    case _ => None
+  }
+
+  /** `events` plus content_type and length_seconds looked up by
+    * content_id in a hash table of `rows`: O(1) per event, null for an
+    * unknown or null id, as the left join gives. A duplicate id throws,
+    * because the join would have repeated that id's events. */
+  private def lookup(events: DataFrame, rows: Seq[Seq[Any]]): DataFrame = {
+    val table = new java.util.HashMap[String, (String, Integer)]()
+    rows.foreach { case Seq(id, contentType, length) =>
+      if (id != null) {
+        val prev = table.put(id.asInstanceOf[String],
+          (contentType.asInstanceOf[String], length.asInstanceOf[Integer]))
+        require(prev == null, s"dim has more than one row for id $id; a join would repeat its events")
+      }
+    }
+    val b = events.sparkSession.sparkContext.broadcast(table)
+    val contentType = udf((id: String) => Option(b.value.get(id)).map(_._1).orNull)
+    val lengthSeconds = udf((id: String) => Option(b.value.get(id)).map(_._2).orNull)
+    events.select(col("*"), contentType(col("content_id")).as("content_type"),
+      lengthSeconds(col("content_id")).as("length_seconds"))
   }
 
   /** K3: serialize enriched rows to the outbox JSON shape (null fields

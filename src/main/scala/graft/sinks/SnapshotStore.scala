@@ -167,14 +167,17 @@ object SnapshotStore {
         }
       }.toMap
 
-    /** Files whose recorded [min,max] for `column` intersects [lo, hi];
-      * files without stats for the column are conservatively kept. */
-    def prune(column: String, lo: Double, hi: Double): Seq[String] = {
+    /** Files whose recorded [min,max] intersects [lo, hi] for every
+      * bound (column, lo, hi); a file without stats for a bound's column
+      * is conservatively kept for it. */
+    def prune(bounds: (String, Double, Double)*): Seq[String] = {
       val st = stats
       files.filter { f =>
-        st.get(f).flatMap(_.get(column)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
+        bounds.forall { case (column, lo, hi) =>
+          st.get(f).flatMap(_.get(column)) match {
+            case Some((mn, mx)) => mx >= lo && mn <= hi
+            case None => true
+          }
         }
       }
     }
@@ -250,12 +253,13 @@ object SnapshotStore {
     *
     * Gated on the Catalyst size estimate so small commits skip the
     * extra exchange; the threshold is deliberately of the order of a
-    * few output files. An estimate of Spark's unknown size
-    * (`spark.sql.defaultSizeInBytes`, what plans over an RDD such as a
-    * foreachBatch micro-batch report) is not read as large when the
-    * plan's input is one RDD partition: one input partition cannot make
-    * a tiny-file storm (a shuffle after it is coalesced by AQE, as the
-    * rebalance would be). Override with session conf
+    * few output files. A plan whose input is one RDD partition (a
+    * foreachBatch micro-batch) never rebalances, whatever its estimate:
+    * one input partition cannot make a tiny-file storm (a shuffle after
+    * it is coalesced by AQE, as the rebalance would be), and its
+    * estimate is Spark's unknown size scaled by whatever projections sit
+    * above it, so no byte threshold reads it correctly. Override with
+    * session conf
     * `spark.graft.snapshot.rebalanceMinBytes` (Long.MaxValue disables). */
   val RebalanceMinBytesKey = "spark.graft.snapshot.rebalanceMinBytes"
   val RebalanceMinBytesDefault: Long = 256L << 20
@@ -279,11 +283,8 @@ object SnapshotStore {
     val minRebalance = spark.conf
       .get(RebalanceMinBytesKey, RebalanceMinBytesDefault.toString).toLong
     val plan = df.queryExecution.optimizedPlan
-    val est = plan.stats.sizeInBytes
-    val unknownOnePartition =
-      est >= BigInt(spark.sessionState.conf.defaultSizeInBytes) && oneRddPartition(plan)
     val toWrite =
-      if (est >= BigInt(minRebalance) && !unknownOnePartition)
+      if (plan.stats.sizeInBytes >= BigInt(minRebalance) && !oneRddPartition(plan))
         df.hint("rebalance", partitionBy: _*)
       else df
     val w = toWrite.write.mode("overwrite")
@@ -521,7 +522,7 @@ object SnapshotStore {
     * conservatively kept. Pure manifest metadata — no data IO. */
   def pruneFiles(spark: SparkSession, base: String, column: String,
       lo: Double, hi: Double): Seq[String] =
-    live(spark, base).prune(column, lo, hi)
+    live(spark, base).prune((column, lo, hi))
 
   /** Range read with file skipping: only files surviving [[pruneFiles]]
     * are opened (parquet row-group pushdown then prunes further inside
@@ -529,8 +530,15 @@ object SnapshotStore {
     * EXACTLY the full-scan filter's. None when every file was skipped. */
   def readRange(spark: SparkSession, base: String, column: String,
       lo: Double, hi: Double): Option[DataFrame] =
-    readFiles(spark, base, pruneFiles(spark, base, column, lo, hi))
-      .map(_.filter(col(column) >= lo && col(column) <= hi))
+    readBox(spark, base, Seq((column, lo, hi)))
+
+  /** [[readRange]] over several columns at once: one resolve of the live
+    * manifest, the files whose stats intersect EVERY bound, and the
+    * row-level conjunction on top. */
+  private[sinks] def readBox(spark: SparkSession, base: String,
+      bounds: Seq[(String, Double, Double)]): Option[DataFrame] =
+    readFiles(spark, base, live(spark, base).prune(bounds: _*))
+      .map(_.filter(bounds.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }.reduce(_ && _)))
 
   /** The shared body of the STATS-PRUNED PARTIAL REWRITES: `affected`
     * picks, from the live manifest, the files that can hold a matching
@@ -570,7 +578,7 @@ object SnapshotStore {
   def deleteRange(spark: SparkSession, base: String, column: String,
       lo: Double, hi: Double, statsCols: Seq[String] = Nil,
       extra: Option[Column] = None): Int =
-    rewrite(spark, base, statsCols)(_.prune(column, lo, hi)) { scan =>
+    rewrite(spark, base, statsCols)(_.prune((column, lo, hi))) { scan =>
       val deletePred = col(column) >= lo && col(column) <= hi &&
         extra.getOrElse(lit(true))
       // three-valued logic: a NULL predicate (null column value) must
@@ -608,7 +616,7 @@ object SnapshotStore {
   def ttlExpire(spark: SparkSession, base: String, column: String,
       cutoff: Double, rollup: DataFrame => DataFrame,
       statsCols: Seq[String] = Nil): Int =
-    rewrite(spark, base, statsCols)(_.prune(column, Double.NegativeInfinity, cutoff)) { scan =>
+    rewrite(spark, base, statsCols)(_.prune((column, Double.NegativeInfinity, cutoff))) { scan =>
       val expiredPred = coalesce(col(column) < cutoff, lit(false))
       val survivors = scan.filter(not(expiredPred))
       val rolled = rollup(scan.filter(expiredPred))
@@ -639,7 +647,7 @@ object SnapshotStore {
       lo: Double, hi: Double, set: Map[String, Column],
       statsCols: Seq[String] = Nil, extra: Option[Column] = None): Int = {
     require(set.nonEmpty, "UPDATE needs at least one SET column")
-    rewrite(spark, base, statsCols)(_.prune(column, lo, hi)) { src =>
+    rewrite(spark, base, statsCols)(_.prune((column, lo, hi))) { src =>
       val pred = coalesce(col(column) >= lo && col(column) <= hi &&
         extra.getOrElse(lit(true)), lit(false))
       val types = src.schema.map(f => f.name -> f.dataType).toMap

@@ -80,25 +80,13 @@ object ZOrder {
       partitionBy = Nil, statsCols = (zCols ++ extraStatsCols).distinct)
 
   /** Multi-dimensional box read: prune the file list on EVERY bounded
-    * column's recorded stats (metadata only), then apply the exact
-    * row-level conjunction — result is exactly the full-scan filter's.
-    * None when every file was skipped. */
+    * column's recorded stats (metadata only, one manifest resolve), then
+    * apply the exact row-level conjunction — result is exactly the
+    * full-scan filter's. None when every file was skipped. */
   def readBox(spark: SparkSession, base: String,
       bounds: Seq[(String, Double, Double)]): Option[DataFrame] = {
     require(bounds.nonEmpty, "at least one bound")
-    val files = bounds
-      .map { case (c, lo, hi) => SnapshotStore.pruneFiles(spark, base, c, lo, hi).toSet }
-      .reduce(_ intersect _)
-    if (files.isEmpty) None
-    else {
-      val dd = s"$base/data"
-      val pred = bounds
-        .map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-        .reduce(_ && _)
-      Some(spark.read.option("basePath", dd)
-        .parquet(files.toSeq.sorted.map(f => s"$dd/$f"): _*)
-        .filter(pred))
-    }
+    SnapshotStore.readBox(spark, base, bounds)
   }
 
   /** Fraction of the snapshot's files a box read opens — the measured

@@ -10,7 +10,7 @@ import graft.enrich.Enrich
 import graft.ops.Rollups
 
 /** Structured-Streaming wiring of the reference's job graph (SURVEY.md
-  * §3.1–§3.2): CDC sources → unwrap → dim-snapshot broadcast join →
+  * §3.1–§3.2): CDC sources → unwrap → dim-snapshot lookup →
   * derived columns → fan-out aggregations/sinks.
   *
   * Streaming semantics ported (SURVEY §2.8):
@@ -31,10 +31,10 @@ object Pipeline {
   /** Engagement hot path: raw Kafka-shaped stream (string `value`) →
     * unwrap → enrich against the dim snapshot at `dimPath`.
     *
-    * PINNED-SNAPSHOT semantics: the static side of this stream-static
-    * join is the rows of the dim version that was live when the stream
-    * started (held in memory, so each batch's broadcast re-runs over
-    * them without touching the snapshot files) — later upserts/deletes
+    * PINNED-SNAPSHOT semantics: the lookup table is built once, when
+    * the stream is defined, from the rows of the dim version that was
+    * live then (held on the driver, so no batch runs a broadcast job or
+    * touches the snapshot files) — later upserts/deletes
     * from dimMaintenanceQuery are NOT picked up. That is safe but
     * stale; for a MUTABLE dim use [[enrichedSink]], which re-resolves
     * the snapshot pointer inside every micro-batch. */
@@ -63,8 +63,9 @@ object Pipeline {
       }
   }
 
-  /** Engagement hot path against a MUTABLE dim: per micro-batch, re-read
-    * the snapshot and broadcast-left-join the batch — upserts/deletes
+  /** Engagement hot path against a MUTABLE dim: per micro-batch, resolve
+    * the live snapshot's cached rows and look up the batch's content in
+    * them (a driver-built table, no broadcast job) — upserts/deletes
     * applied by dimMaintenanceQuery take effect from the next batch,
     * matching the reference's broadcast-state granularity (§3.2 note:
     * per-batch replaces per-record; steady state agrees). */
@@ -74,7 +75,7 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // resolve the snapshot POINTER inside the batch: each batch
-        // joins the dim version live at batch start (atomic via
+        // looks up the dim version live at batch start (atomic via
         // SnapshotStore — never a half-replaced snapshot)
         val dim = ContentDim.snapshot(batch.sparkSession, dimPath)
         write(Enrich.enrich(Envelope.unwrapEngagement(batch), dim), id)

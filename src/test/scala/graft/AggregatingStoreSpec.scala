@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +12,7 @@ import graft.sinks.{AggregatingStore => A, SnapshotStore}
 class AggregatingStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = tmpDir(p)
 
   // 3 groups with ~200/400/600 distinct members (well inside the raw-HLL
   // estimator's valid range n ≳ 2.5·m at m=64 — the store deliberately

@@ -103,7 +103,7 @@ class DsirChunkSpec extends SparkSpec {
     import graft.sinks.SnapshotStore
     val model = Dsir.trainModel(dsirDocs, col("doc_id"), col("text"),
       col("lang") === "en")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dsiringest").toString
+    val tmp = tmpDir("graft_dsiringest")
     graft.streaming.CorpusIngest.ingestBatch(spark, tmp,
       dsirDocs.select("doc_id", "text"), batchId = 0L,
       minQuality = 0.0, dsirModel = Some(model), minLogWeight = 0.0)

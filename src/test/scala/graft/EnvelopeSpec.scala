@@ -90,7 +90,7 @@ class EnvelopeSpec extends SparkSpec {
   // ---- ContentDim.applyBatch: the driver-side fold ------------------------
 
   private def dimPath(): String =
-    java.nio.file.Files.createTempDirectory("dim").toString + "/snapshot"
+    tmpDir("dim") + "/snapshot"
   private def fold(path: String, msgs: String*): Unit =
     ContentDim.applyBatch(spark, path, Envelope.unwrapContent(msgs.toDF("value")))
   private def dimRows(path: String): Map[String, String] =
@@ -192,5 +192,69 @@ class EnvelopeSpec extends SparkSpec {
     assert(miss.isNullAt(miss.fieldIndex("content_type")))
     assert(miss.isNullAt(miss.fieldIndex("engagement_pct")))
     assert(miss.getAs[Double]("engagement_score") === 0.2) // click, no duration
+  }
+
+  // ---- enrichment against a driver-held dim: the hash lookup --------------
+
+  /** c1 a hit, c2 a dim row with null content_type/length_seconds, c3
+    * deleted; the events add an unknown id (c9) and a null content_id. */
+  private val lookupChanges = Seq(
+    contentUpsert("c1", "podcast", 300, 1),
+    """{"payload":{"after":{"id":"c2","slug":"s-c2","title":"T c2","content_type":null,"length_seconds":null,"publish_ts":"2024-01-01T00:00:00"},"op":"c","ts_ms":1}}""",
+    contentUpsert("c3", "video", 60, 1),
+    contentDelete("c3", 2))
+  private val lookupEvents = Seq("c1", "c2", "c3", "c9").zipWithIndex.map { case (c, i) =>
+    envelopedPlay.replace("\"id\":\"42\"", "\"id\":\"" + (50 + i) + "\"")
+      .replace("\"c1\"", "\"" + c + "\"")
+  } :+ flatClick.replace("\"content_id\":\"c9\",", "")
+
+  test("enrich against a driver-held dim equals the broadcast join against the same changes") {
+    val path = dimPath()
+    fold(path, lookupChanges: _*)
+    val events = Envelope.unwrapEngagement(lookupEvents.toDF("value"))
+    val held = Enrich.enrich(events, ContentDim.snapshot(spark, path))
+    val joined = Enrich.enrich(events,
+      ContentDim.latestState(Envelope.unwrapContent(lookupChanges.toDF("value"))))
+    assert(held.schema === joined.schema) // names, order, types and nullability
+    val rows = held.orderBy("event_id").collect().toSeq
+    assert(rows === joined.orderBy("event_id").collect().toSeq)
+    assert(rows.map(r => (r.getAs[String]("content_id"), r.getAs[String]("content_type"),
+      Option(r.getAs[Integer]("length_seconds")))) === Seq(
+      (null, null, None), ("c1", "podcast", Some(300)), ("c2", null, None),
+      ("c3", null, None), ("c9", null, None)))
+    assert(rows.forall(r => !r.isNullAt(r.fieldIndex("engagement_score"))))
+  }
+
+  test("enrich against a driver-held dim runs one job and plans no join or broadcast exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val path = dimPath()
+    fold(path, lookupChanges: _*)
+    // a one-partition RDD frame, as a foreachBatch micro-batch is
+    val events = Envelope.unwrapEngagement(
+      spark.sparkContext.parallelize(lookupEvents, 1).toDF("value"))
+    val enriched = Enrich.enrich(events, ContentDim.snapshot(spark, path))
+    var got = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsIn { got = enriched.collect() } === 1)
+    assert(got.length === lookupEvents.size)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val offending = helper.collect(enriched.queryExecution.executedPlan) {
+      case p: BroadcastExchangeLike => p
+      case p: BaseJoinExec => p
+    }
+    assert(offending.isEmpty, enriched.queryExecution.executedPlan.toString)
+  }
+
+  test("a driver-held dim with a duplicate id fails loudly, naming the id") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("content_type", StringType), StructField("length_seconds", IntegerType)))
+    val dim = spark.createDataFrame(java.util.List.of(
+      Row("c1", "podcast", 300), Row("c7", "video", 60), Row("c7", "newsletter", 10)), schema)
+    val events = Envelope.unwrapEngagement(Seq(envelopedPlay).toDF("value"))
+    val e = intercept[IllegalArgumentException](Enrich.enrich(events, dim))
+    assert(e.getMessage.contains("c7"), e.getMessage)
   }
 }

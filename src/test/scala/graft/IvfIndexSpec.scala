@@ -13,8 +13,7 @@ class IvfIndexSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def emb = Tables.embeddings(spark, dir)
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String): String = tmpDir(p)
 
   test("budgeted sample binds and is hash-deterministic") {
     val s1 = IvfIndex.sample(emb, col("vec_id"), col("embedding"), 200)

@@ -20,7 +20,7 @@ class MinHashIndexSpec extends SparkSpec {
       MinHash.signatures(docs, col("doc_id"), col("text"))).isEmpty)
     val batchPairs = pairSet(
       MinHash.verifiedPairs(docs, col("doc_id"), col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mhidx_spec").toString
+    val tmp = tmpDir("graft_mhidx_spec")
     val incremental = (0 to 2).map { b =>
       pairSet(MinHashIndex.processBatch(spark, tmp,
         docs.filter(pmod(col("doc_id"), lit(3)) === b),
@@ -33,7 +33,7 @@ class MinHashIndexSpec extends SparkSpec {
   }
 
   test("replaying a batch tag is a no-op on the index") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mhidx_replay").toString
+    val tmp = tmpDir("graft_mhidx_replay")
     val b0 = docs.filter(col("doc_id") < 100)
     MinHashIndex.processBatch(spark, tmp, b0, col("doc_id"), col("text"), "b0")
     def counts() = (
@@ -45,8 +45,8 @@ class MinHashIndexSpec extends SparkSpec {
   }
 
   test("maintain indexes corpus commits exactly once") {
-    val corpus = java.nio.file.Files.createTempDirectory("graft_mhidx_corpus").toString
-    val index = java.nio.file.Files.createTempDirectory("graft_mhidx_index").toString
+    val corpus = tmpDir("graft_mhidx_corpus")
+    val index = tmpDir("graft_mhidx_index")
     SnapshotStore.commitAppend(spark, corpus,
       docs.filter(col("doc_id") < 250), tag = Some("c0"))
     val first = MinHashIndex.maintain(spark, corpus, index)

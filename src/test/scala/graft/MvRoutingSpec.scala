@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.Rollups
@@ -14,7 +12,7 @@ import graft.sources.Workload
 class MvRoutingSpec extends SparkSpec {
 
   private lazy val (factPath, mvPath) = {
-    val base = Files.createTempDirectory("mv").toString
+    val base = tmpDir("mv")
     val fact = Workload.batch(spark, 20000)
       .select(col("event_ts"),
         element_at(array(lit("podcast"), lit("video"), lit("newsletter")),
@@ -254,7 +252,7 @@ class MvRoutingSpec extends SparkSpec {
     // plant nulls in the score; the MV with score_cnt must route avg and
     // stay exact; an MV LACKING score_cnt must refuse (cnt is count(*),
     // dividing by it would diverge on the nulls)
-    val base = Files.createTempDirectory("mvnull").toString
+    val base = tmpDir("mvnull")
     val fact = spark.read.parquet(factPath)
       .withColumn("engagement_score",
         when(pmod(hash(col("event_ts")), lit(5)) === 0, lit(null))

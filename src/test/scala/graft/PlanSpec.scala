@@ -62,7 +62,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partitioned corpus write prunes partitions on read (O5)") {
-    val base = java.nio.file.Files.createTempDirectory("prune").toString
+    val base = tmpDir("prune")
     Queries.runners("q_corpus_clean")(spark, dir)
       .write.partitionBy("lang_pred").parquet(s"$base/corpus")
     val read = spark.read.parquet(s"$base/corpus")
@@ -815,7 +815,7 @@ class PlanSpec extends SparkSpec {
     // pushed to the surviving files — plus score identity to the flat
     // layout's oracle-gated path
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25plan")
+    val tmp = tmpDir("graft_bm25plan")
     spark.conf.set(graft.ops.Bm25Index.PartitionMinBytesKey, "0")
     try {
       val d = Tables.load(spark, dir, "documents")
@@ -838,7 +838,6 @@ class PlanSpec extends SparkSpec {
       assert(q.exceptAll(flat).isEmpty && flat.exceptAll(q).isEmpty)
     } finally {
       spark.conf.unset(graft.ops.Bm25Index.PartitionMinBytesKey)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
   }
 }

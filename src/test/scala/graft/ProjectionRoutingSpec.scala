@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
 class ProjectionRoutingSpec extends SparkSpec {
 
   private lazy val stores = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_projspec")
-    tmp.toFile.deleteOnExit()
+    val tmp = tmpDir("graft_projspec")
     val factPath = s"$tmp/fact"
     val projBase = s"$tmp/proj"
     spark.range(0, 50000).select(col("id"),

@@ -40,7 +40,7 @@ class RetrievalCorpusSpec extends SparkSpec {
   }
 
   test("bm25 inverted index: incremental build, bit-identical to brute force") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25idx_spec")
+    val tmp = java.nio.file.Paths.get(tmpDir("graft_bm25idx_spec"))
     try {
       val docs = Tables.documents(spark, "/root/testdata/sf0.001")
         .select(col("doc_id"), col("text"))
@@ -70,7 +70,7 @@ class RetrievalCorpusSpec extends SparkSpec {
   }
 
   test("bm25 index top-k pads with zero-score docs when matches are scarce") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25pad_spec")
+    val tmp = java.nio.file.Paths.get(tmpDir("graft_bm25pad_spec"))
     try {
       val docs = Seq(
         (1L, "zzyzx appears only here"),

@@ -268,7 +268,7 @@ class SelectionSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("p_micros")).toMap
     assert(served === batch) // same artifact, same integer math
     // stream-landing gate: only predicted-positive texts land
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lringest").toString
+    val tmp = tmpDir("graft_lringest")
     graft.streaming.CorpusIngest.ingestBatch(spark, tmp,
       docs.select("doc_id", "text"), batchId = 0L, minQuality = 0.0,
       logregModel = Some(model))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
+    tmpDir(prefix) + "/t"
 
   test("append then read round-trips; appends are all-or-nothing to readers") {
     val base = tmp("ss-append")
@@ -180,40 +179,49 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("a one-partition frame of unknown size commits without a rebalance exchange") {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.{DataFrame, Row}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL,
       REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeLike}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val base = tmp("ss-rebal")
-    val schema = StructType(Seq(StructField("id", LongType), StructField("m", StringType)))
-    val rows = (0L until 100L).map(i => Row(i, s"m${i % 3}"))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("m", StringType),
+      StructField("note", StringType)))
+    val rows = (0L until 100L).map(i => Row(i, s"m${i % 3}", s"note $i"))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     // an RDD-backed plan reports Spark's unknown size, far above the gate
     assert(df.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(SnapshotStore.RebalanceMinBytesDefault))
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.toString.contains(s"$base/_stage")) writes.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    // a narrowing projection scales that estimate below the unknown size,
+    // yet it still reads far above the gate
+    val narrow = df.select("id", "m")
+    val narrowEst = narrow.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(narrowEst < BigInt(spark.sessionState.conf.defaultSizeInBytes) &&
+      narrowEst >= BigInt(SnapshotStore.RebalanceMinBytesDefault), narrowEst)
+    for ((name, frame) <- Seq[(String, DataFrame)]("ss-rebal" -> df, "ss-rebal-narrow" -> narrow)) {
+      val base = tmp(name)
+      val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (qe.analyzed.toString.contains(s"$base/_stage")) writes.add(qe)
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        SnapshotStore.commitAppend(spark, base, frame, partitionBy = Seq("m"))
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      } finally spark.listenerManager.unregister(listener)
+      assert(writes.size === 1, s"the staged write of $name was not observed")
+      val helper = new AdaptiveSparkPlanHelper {}
+      val rebalances = writes.asScala.toSeq.flatMap(qe => helper.collect(qe.executedPlan) {
+        case e: ShuffleExchangeLike if e.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE ||
+            e.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL => e
+      })
+      assert(rebalances.isEmpty, s"rebalance planned for a one-partition input ($name): $rebalances")
+      assert(SnapshotStore.read(spark, base).get.count() === 100)
     }
-    spark.listenerManager.register(listener)
-    try {
-      SnapshotStore.commitAppend(spark, base, df, partitionBy = Seq("m"))
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    assert(writes.size === 1, "the staged write was not observed")
-    val helper = new AdaptiveSparkPlanHelper {}
-    val rebalances = writes.asScala.toSeq.flatMap(qe => helper.collect(qe.executedPlan) {
-      case e: ShuffleExchangeLike if e.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE ||
-          e.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL => e
-    })
-    assert(rebalances.isEmpty, s"rebalance planned for a one-partition input: $rebalances")
-    assert(SnapshotStore.read(spark, base).get.count() === 100)
   }
 
   test("cleanOrphans removes crashed-write leftovers, table stays readable") {

@@ -8,6 +8,18 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlc = spark.sqlContext
 
+  /** A fresh directory under the system temp dir, deleted recursively
+    * when the test JVM exits, so suites leave no scratch stores behind. */
+  def tmpDir(prefix: String): String = {
+    import java.nio.file.{Files, Path}
+    val p = Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      if (Files.exists(p))
+        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(f => Files.deleteIfExists(f))))
+    p.toString
+  }
+
   /** Spark jobs `body` starts on this thread, counted through a
     * listener by job group (a marker job flushes the listener bus). */
   def jobsIn(body: => Unit): Int = {

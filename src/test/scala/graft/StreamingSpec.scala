@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -16,8 +14,7 @@ import graft.streaming.Pipeline
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tmpDir(prefix)
 
   private def contentUpsert(id: String, ctype: String, len: Int, seq: Long) =
     s"""{"payload":{"after":{"id":"$id","slug":"s-$id","title":"T $id","content_type":"$ctype","length_seconds":$len,"publish_ts":"2024-01-01T00:00:00"},"op":"u","ts_ms":$seq}}"""

@@ -38,7 +38,7 @@ class WorkloadTopKSpec extends SparkSpec {
   }
 
   test("warehouse sink: at-least-once appends dedup on read and after compaction") {
-    val path = java.nio.file.Files.createTempDirectory("wh").toString + "/t"
+    val path = tmpDir("wh") + "/t"
     val batch = Workload.batch(spark, 500)
       .select(col("id").as("event_id"), col("event_ts"), col("event_type"), col("duration_ms"))
     Warehouse.append(batch, path)

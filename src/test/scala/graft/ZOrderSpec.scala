@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{SnapshotStore, ZOrder}
@@ -11,7 +9,7 @@ import graft.sinks.{SnapshotStore, ZOrder}
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString + "/store"
+  private def tmp(p: String) = tmpDir(p) + "/store"
 
   // 100×100 uniform grid: x and y are independent, so a layout sorted
   // on x alone gives y ZERO locality — every file spans all of y.
@@ -27,6 +25,16 @@ class ZOrderSpec extends SparkSpec {
       .select("id").as[Long].collect().sorted
     assert(got.toSeq === want.toSeq)
     assert(got.length === 625)
+  }
+
+  test("building a box read frame over an 8-file z-ordered store runs no job") {
+    val base = tmp("zjobs")
+    ZOrder.commitReplaceZOrdered(spark, base, grid, Seq("x", "y"), numFiles = 8)
+    assert(SnapshotStore.listFiles(spark, base).size === 8)
+    var box: Option[org.apache.spark.sql.DataFrame] = None
+    val jobs = jobsIn { box = ZOrder.readBox(spark, base, Seq(("x", 0.0, 24.0), ("y", 0.0, 24.0))) }
+    assert(jobs === 0, s"building the box frame ran $jobs jobs")
+    assert(box.get.count() === 625)
   }
 
   test("both z dimensions prune files; a linear layout prunes only its sort key") {
