@@ -29,6 +29,7 @@ import org.apache.spark.sql.SparkSession
   *    alongside bytes.
   */
 final class ScaleMetrics extends SparkListener {
+  private[graft] val flush = new BusFlush
   private val shuffleRead = new LongAdder
   private val shuffleWrite = new LongAdder
   private val memSpill = new LongAdder
@@ -38,11 +39,12 @@ final class ScaleMetrics extends SparkListener {
   private val tasks = new LongAdder
   private val jobs = new LongAdder
 
-  override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (!flush.isMarker(e)) jobs.increment()
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
-    if (m != null) {
+    if (m != null && !flush.isMarker(e)) {
       shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
       shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
       memSpill.add(m.memoryBytesSpilled)
@@ -83,8 +85,8 @@ object ScaleMetrics {
 
   /** Run `f` with a fresh listener attached and return (result,
     * metrics). Listener events post asynchronously, so after the action
-    * the totals are polled until stable (≥300 ms unchanged, max 10 s)
-    * before the snapshot is taken. */
+    * the listener bus is flushed ([[BusFlush]]) before the snapshot is
+    * taken; the flush's marker job and task are not counted. */
   def measure[A](spark: SparkSession)(f: => A): (A, Measured) = {
     val l = new ScaleMetrics
     spark.sparkContext.addSparkListener(l)
@@ -92,16 +94,8 @@ object ScaleMetrics {
       val t0 = System.nanoTime()
       val r = f
       val wall = (System.nanoTime() - t0) / 1e9
-      var prev = l.snapshot
-      var stableSince = System.nanoTime()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (System.nanoTime() - stableSince < 300L * 1000 * 1000 &&
-          System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val cur = l.snapshot
-        if (cur != prev) { prev = cur; stableSince = System.nanoTime() }
-      }
-      (r, prev.copy(wallSec = wall))
+      l.flush(spark.sparkContext)
+      (r, l.snapshot.copy(wallSec = wall))
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -37,27 +37,8 @@ object Retrieval {
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
       k: Int = 10): DataFrame = {
     require(terms.nonEmpty && k > 0)
-    val base = docs.select(id.as("doc_id"),
-      TextFunctions.tokens(lower(text)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-
-    val dfAggs = terms.zipWithIndex.map { case (t, i) =>
-      sum(when(array_contains(col("toks"), t), 1L).otherwise(0L)).as(s"df_$i")
-    }
-    val allAggs = Seq(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl")) ++ dfAggs
-    val stats = base.agg(allAggs.head, allAggs.tail: _*)
-
-    val scored = base.crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
-    val termScores = terms.zipWithIndex.map { case (t, i) =>
-      val dfT = col(s"df_$i").cast("double")
-      val idf = log(lit(1.0) +
-        (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
-      val tf = size(filter(col("toks"), x => x === lit(t))).cast("double")
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
-    }
-    val score = termScores.reduce(_ + _)
+    val (scored, termScore) = bm25Scored(tokenized(docs, id, text), terms, k1, b)
+    val score = terms.map(termScore).reduce(_ + _)
     scored
       .select(col("doc_id"),
         (floor(score * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("score"))
@@ -222,10 +203,12 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     * Scale shape: ONE stats pass (N, sum_dl, per-term df — the
     * [[bm25TopK]] aggregate over the union of all queries' terms), one
     * scoring map emitting a (qid, score, rel) row per (doc, query),
-    * then bounded-heap top-k per query (`bounded_top_k` — no corpus
-    * sort, map slices reduce to ≤2k pairs) for BOTH the retrieved list
-    * and the ideal-gain list. Every metric folds over a ≤k array in
-    * rank order, so float addition order is pinned on both engines.
+    * then a single groupBy(qid) that reduces the bounded-heap top-k
+    * (`bounded_top_k` — no corpus sort, map slices reduce to ≤2k
+    * pairs) of BOTH the retrieved list and the ideal-gain list, plus
+    * n_rel. Two corpus scans, zero joins. Every metric folds over a ≤k
+    * array in rank order, so float addition order is pinned on both
+    * engines.
     *
     * Output, one row per query: (query_id, n_rel, recall_micros,
     * mrr_micros, dcg_micros, idcg_micros, ndcg_micros) — µ-scaled
@@ -237,84 +220,32 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     val spark = docs.sparkSession
     graft.GraftExtensions.install(spark)
     val allTerms = queries.flatMap(_._2).distinct
-    val base = docs.select(id.as("doc_id"),
-        TextFunctions.tokens(lower(text)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val dfAggs = allTerms.zipWithIndex.map { case (t, i) =>
-      sum(when(array_contains(col("toks"), t), 1L).otherwise(0L)).as(s"df_$i")
-    }
-    val allAggs = Seq(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl")) ++ dfAggs
-    val stats = base.agg(allAggs.head, allAggs.tail: _*)
-    val termIdx = allTerms.zipWithIndex.toMap
-    def termScore(t: String): Column = {
-      val dfT = col(s"df_${termIdx(t)}").cast("double")
-      val idf = log(lit(1.0) +
-        (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
-      val tf = size(filter(col("toks"), x => x === lit(t))).cast("double")
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
-    }
+    val (scored, termScore) =
+      bm25Scored(tokenized(docs, id, text), allTerms, k1, b)
     val perQuery = queries.map { case (qid, terms) =>
       val score = terms.map(termScore).reduce(_ + _)
-      val rel = terms.map(t =>
-        when(array_contains(col("toks"), t), 1L).otherwise(0L)).reduce(_ + _)
       struct(lit(qid).as("qid"),
         (floor(score * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("score"),
-        rel.as("rel"))
+        relOf(terms).as("rel"))
     }
-    val long = base.crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
+    val long = scored
       .select(col("doc_id"), explode(array(perQuery: _*)).as("q"))
       .select(col("doc_id"), col("q.qid").as("qid"),
         col("q.score").as("score"), col("q.rel").as("rel"))
-    // r15 (guide §2.3/§2.4): the old tail scanned `long` twice more
-    // (once for the bounded-heap head, once to re-attach rel through a
-    // broadcast join) plus a fourth full tokenize pass for the qrels —
-    // every decision here depends only on (qid, doc_id, score, rel),
-    // all present in ONE row of `long`, so the whole metric suite
-    // reduces in a single groupBy(qid) pass: rel rides INSIDE the
-    // retrieved heap's key (key = doc_id·m + rel; rel < m and doc_ids
-    // are unique per qid, so tie order on equal scores is doc_id asc,
-    // bit-identical to the old bounded_top_k(score, doc_id) — valid
-    // while doc_id < 2^63/m, vacuous against real ids), the ideal heap
-    // and n_rel reduce alongside, and the (rank, rel) array decodes
-    // from heap positions. Two corpus scans total (stats + this),
-    // zero joins; results byte-equal (oracle unchanged).
+    // rel rides INSIDE the retrieved heap's key (key = doc_id·m + rel;
+    // rel < m and doc_ids are unique per qid, so tie order on equal
+    // scores is doc_id asc — valid while doc_id < 2^63/m, vacuous
+    // against real ids), and the (rank, rel) list decodes from heap
+    // positions
     val m = queries.map(_._2.length).max + 1 // rel ∈ [0, m)
-    val d = discounts(k)
-    def gainAt(rel: Column, rank: Column): Column =
-      (call_function("shiftleft", lit(1L), rel.cast("int")) - 1L)
-        .cast("double") * element_at(typedLit(d), rank)
-    def foldSum(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x)
     val agg = long.groupBy(col("qid")).agg(
       expr(s"bounded_top_k(score, doc_id * ${m}L + rel, $k)").as("topenc"),
-      expr(s"bounded_top_k(CAST(rel AS DOUBLE), doc_id, $k)").as("ideal"),
-      sum(when(col("rel") > 0, 1L).otherwise(0L)).as("n_rel"))
+      idealHeap(k), nRel)
       .withColumn("rr", zip_with(col("topenc"),
         sequence(lit(1), greatest(size(col("topenc")), lit(1))),
         (t, i) => struct(i.cast("int").as("rank"),
           pmod(t.getField("key"), lit(m.toLong)).as("rel"))))
-    val dcgRaw = foldSum(transform(col("rr"),
-      r => gainAt(r.getField("rel"), r.getField("rank"))))
-    val idcgRaw = foldSum(zip_with(col("ideal"),
-      sequence(lit(1), greatest(size(col("ideal")), lit(1))),
-      (s, i) => gainAt(s.getField("score").cast("long"), i)))
-    val hits = size(filter(col("rr"), r => r.getField("rel") > 0)).cast("long")
-    val minRank = array_min(transform(
-      filter(col("rr"), r => r.getField("rel") > 0), r => r.getField("rank")))
-    agg.select(col("qid").as("query_id"), col("n_rel"),
-      when(col("n_rel") > 0,
-        floor(hits.cast("double") * lit(1e6) / col("n_rel").cast("double")
-          + lit(0.5)).cast("long")).otherwise(0L).as("recall_micros"),
-      when(minRank.isNotNull,
-        floor(lit(1e6) / minRank.cast("double") + lit(0.5)).cast("long"))
-        .otherwise(0L).as("mrr_micros"),
-      floor(dcgRaw * lit(1e6) + lit(0.5)).cast("long").as("dcg_micros"),
-      floor(idcgRaw * lit(1e6) + lit(0.5)).cast("long").as("idcg_micros"),
-      when(idcgRaw > 0,
-        floor(dcgRaw / idcgRaw * lit(1e6) + lit(0.5)).cast("long"))
-        .otherwise(0L).as("ndcg_micros"))
+    metricsTail(agg, k)
   }
 
   /** The same metric suite over the HYBRID ranking: each query's
@@ -323,41 +254,19 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     * the fused stack becomes directly comparable to the sparse-only
     * q_retrieval_metrics numbers.
     *
-    * r15 (guide §2.3/§2.4, the [[retrievalMetrics]] shared-stats
-    * precedent applied to the hybrid stack): the old form ran
-    * [[rrfFusion]] once PER QUERY — two corpus-scan arms each, ~3
-    * corpus tokenize/vectorize passes × |queries| plus per-query
-    * single-partition rank windows (measured 8.2 s at sf0.1 for 4
-    * queries). Both arms now batch across queries: ONE stats pass over
-    * the union of all terms (each query's score reads its own terms'
-    * df from the shared row — identical doubles), ONE corpus pass
-    * emitting per (doc, query) the floor-4 BM25 score and the µ-floored
-    * cosine. Scores, ranks, and fusion arithmetic are the per-query
-    * forms verbatim, so the output is byte-equal — the unchanged
-    * oracle replays the per-query chain and the gate enforces it.
-    *
-    * r16 (guide §2.3/§2.4, the r15 verdict's ask — "fold the stats and
-    * scoring passes; reduce the two heads in one groupBy like
-    * retrievalMetrics' dual heap"): the r15 form still computed `long`
-    * TWICE (one plan subtree per arm head), joined the heads
-    * (full-outer + a second bounded_top_k aggregation), and paid a
-    * FOURTH corpus tokenize for the qrels inside [[metricsCore]] — 4
-    * corpus scans, 2 joins. Every fusion decision depends only on
-    * (qid, doc_id, score, cos_micros, rel), all present in ONE row of
-    * `long`, so the suite now reduces in a single groupBy(qid): rel
-    * rides inside BOTH arm heaps' keys (key = doc_id·m + rel, rel < m
-    * ⇒ equal-score tie order is still doc_id asc — the
-    * [[retrievalMetrics]] encoding, valid while doc_id·m < 2^53 for
-    * the decode's double divide, vacuous against real ids), the ideal
-    * heap and n_rel reduce alongside, and the RRF fusion + final
-    * ranking run IN-ROW over the ≤2·kEach decoded head entries
-    * (array_union + array_position replay the full-outer join;
-    * array_sort on (−rrf, doc_id) is bounded_top_k's
-    * (score desc, key asc) total order; the metric folds are
-    * [[metricsCore]]'s verbatim). TWO corpus scans total (stats +
-    * long), zero joins, zero extra aggregations — plan: 20→~8
-    * Exchanges, document scans 4→2. Results byte-equal; oracle
-    * unchanged and the gate enforces it. */
+    * Both arms batch across queries: ONE stats pass over the union of
+    * all terms (each query's score reads its own terms' df from the
+    * shared row — identical doubles) and ONE corpus pass emitting per
+    * (doc, query) the floor-4 BM25 score, the µ-floored cosine and rel.
+    * Every fusion decision depends only on that row, so the suite
+    * reduces in a single groupBy(qid): rel rides inside BOTH arm
+    * heaps' keys (the [[retrievalMetrics]] encoding, valid while
+    * doc_id·m < 2^53 for the decode's double divide), the ideal heap
+    * and n_rel reduce alongside, and the RRF fusion + final ranking run
+    * IN-ROW over the ≤2·kEach decoded head entries. Two corpus scans,
+    * zero joins. Scores, ranks and fusion arithmetic are
+    * [[rrfFusion]]'s per-query forms, so the oracle replays the
+    * per-query chain. */
   def retrievalMetricsRrf(docs: DataFrame, id: Column, text: Column,
       queries: Seq[(Int, Seq[String])], dim: Int = 16, kEach: Int = 20,
       k: Int = 10, rrfK: Int = 60): DataFrame = {
@@ -366,62 +275,43 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     val spark = docs.sparkSession
     graft.GraftExtensions.install(spark)
     val allTerms = queries.flatMap(_._2).distinct
-    val base = docs.select(id.as("doc_id"),
-        TextFunctions.tokens(lower(text)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
+    val base = tokenized(docs, id, text)
       .withColumn("emb", VectorFunctions.hashingVectorizer(col("toks"), dim))
-    val dfAggs = allTerms.zipWithIndex.map { case (t, i) =>
-      sum(when(array_contains(col("toks"), t), 1L).otherwise(0L)).as(s"df_$i")
-    }
-    val allAggs = Seq(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl")) ++ dfAggs
-    val stats = base.agg(allAggs.head, allAggs.tail: _*)
-    val termIdx = allTerms.zipWithIndex.toMap
-    def termScore(t: String, k1: Double = 1.2, b: Double = 0.75): Column = {
-      val dfT = col(s"df_${termIdx(t)}").cast("double")
-      val idf = log(lit(1.0) +
-        (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
-      val tf = size(filter(col("toks"), x => x === lit(t))).cast("double")
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
-    }
+    val (scored, termScore) = bm25Scored(base, allTerms, 1.2, 0.75)
     val mRel = queries.map(_._2.length).max + 1 // rel ∈ [0, mRel)
     val perQuery = queries.map { case (qid, terms) =>
-      val score = terms.map(termScore(_)).reduce(_ + _)
+      val score = terms.map(termScore).reduce(_ + _)
       val qv = VectorFunctions.hashingVectorizer(
         typedLit(terms.map(_.toLowerCase)), dim)
-      val rel = terms.map(t =>
-        when(array_contains(col("toks"), t), 1L).otherwise(0L)).reduce(_ + _)
       struct(lit(qid).as("qid"),
         (floor(score * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("score"),
         floor(VectorFunctions.cosine(col("emb"), qv) * lit(1000000.0)
           + lit(0.5)).cast("long").as("cos_micros"),
-        rel.as("rel"))
+        relOf(terms).as("rel"))
     }
-    val long = base.crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
+    val long = scored
       .select(col("doc_id"), explode(array(perQuery: _*)).as("q"))
       .select(col("doc_id"), col("q.qid").as("qid"),
         col("q.score").as("score"), col("q.cos_micros").as("cos_micros"),
         col("q.rel").as("rel"))
     // ONE reduction: both arm heads (the heap's (score desc, key asc)
-    // == the old row_number windows' total order; a NULL cos_micros is
-    // skipped at heap insert exactly like the old isNotNull filter),
-    // the ideal heap, and n_rel
+    // is rrfFusion's row_number total order; a NULL cos_micros is
+    // skipped at heap insert exactly like its isNotNull filter), the
+    // ideal heap, and n_rel
     val mL = lit(mRel.toLong)
     val agg = long.groupBy(col("qid")).agg(
       expr(s"bounded_top_k(score, doc_id * ${mRel}L + rel, $kEach)").as("tops"),
       expr(s"bounded_top_k(CAST(cos_micros AS DOUBLE), doc_id * ${mRel}L + rel, $kEach)").as("topd"),
-      expr(s"bounded_top_k(CAST(rel AS DOUBLE), doc_id, $k)").as("ideal"),
-      sum(when(col("rel") > 0, 1L).otherwise(0L)).as("n_rel"))
+      idealHeap(k), nRel)
     def docOf(key: Column): Column = ((key - pmod(key, mL)) / mL).cast("long")
-    def relOf(key: Column): Column = pmod(key, mL)
-    def contrib(pos: Column): Column = // array_position: 0 == absent == the old NULL rank
+    def relOfKey(key: Column): Column = pmod(key, mL)
+    def contrib(pos: Column): Column = // array_position: 0 == absent == a NULL rank
       when(pos > 0, floor(lit(1000000.0) / (lit(rrfK) + pos)).cast("long"))
         .otherwise(0L)
     // in-row RRF fusion over the two ≤kEach decoded heads: array_union
-    // == the old full-outer join's doc set, positions == the old ranks,
+    // == rrfFusion's full-outer join doc set, positions == its ranks,
     // and the (−rrf, doc_id) struct sort == bounded_top_k's
-    // (score desc, key asc) — slice k is the old final head
+    // (score desc, key asc) — slice k is its final head
     val ranked = TextFunctions.bindOnce(
         transform(col("tops"), t => docOf(t.getField("key")))) { sDocs =>
       TextFunctions.bindOnce(
@@ -432,53 +322,25 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
               struct(
                 (-(contrib(pS) + contrib(pD))).as("neg_rrf"),
                 d.as("doc_id"),
-                when(pS > 0, relOf(element_at(col("tops"), pS.cast("int"))
+                when(pS > 0, relOfKey(element_at(col("tops"), pS.cast("int"))
                     .getField("key")))
-                  .otherwise(relOf(element_at(col("topd"), pD.cast("int"))
+                  .otherwise(relOfKey(element_at(col("topd"), pD.cast("int"))
                     .getField("key"))).as("rel"))
             }
           })), 1, k)
       }
     }
-    // the metric tail, [[metricsCore]]'s folds verbatim over the in-row
-    // (rank, rel) list (ranked bound to a column so the fused array
-    // evaluates once per row; the size(__ranked) > 0 filter below is
-    // metricsCore's "qid with no ranked rows" drop — vacuous here
-    // since every group inserts ≥1 non-null BM25 score, kept for
-    // semantic parity)
+    // ranked bound to a column so the fused array evaluates once per
+    // row; the size(__ranked) > 0 filter is metricsCore's "qid with no
+    // ranked rows" drop — vacuous here since every group inserts ≥1
+    // non-null BM25 score, kept for semantic parity
     val withRr = agg
       .withColumn("__ranked", ranked)
       .withColumn("rr", zip_with(col("__ranked"),
         sequence(lit(1), greatest(size(col("__ranked")), lit(1))),
         (t, i) => struct(i.cast("int").as("rank"),
           t.getField("rel").as("rel"))))
-    val d = discounts(k)
-    def gainAt(rel: Column, rank: Column): Column =
-      (call_function("shiftleft", lit(1L), rel.cast("int")) - 1L)
-        .cast("double") * element_at(typedLit(d), rank)
-    def foldSum(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x)
-    val dcgRaw = foldSum(transform(col("rr"),
-      r => gainAt(r.getField("rel"), r.getField("rank"))))
-    val idcgRaw = foldSum(zip_with(col("ideal"),
-      sequence(lit(1), greatest(size(col("ideal")), lit(1))),
-      (s, i) => gainAt(s.getField("score").cast("long"), i)))
-    val hits = size(filter(col("rr"), r => r.getField("rel") > 0)).cast("long")
-    val minRank = array_min(transform(
-      filter(col("rr"), r => r.getField("rel") > 0), r => r.getField("rank")))
-    withRr.filter(size(col("__ranked")) > 0)
-      .select(col("qid").as("query_id"), col("n_rel"),
-        when(col("n_rel") > 0,
-          floor(hits.cast("double") * lit(1e6) / col("n_rel").cast("double")
-            + lit(0.5)).cast("long")).otherwise(0L).as("recall_micros"),
-        when(minRank.isNotNull,
-          floor(lit(1e6) / minRank.cast("double") + lit(0.5)).cast("long"))
-          .otherwise(0L).as("mrr_micros"),
-        floor(dcgRaw * lit(1e6) + lit(0.5)).cast("long").as("dcg_micros"),
-        floor(idcgRaw * lit(1e6) + lit(0.5)).cast("long").as("idcg_micros"),
-        when(idcgRaw > 0,
-          floor(dcgRaw / idcgRaw * lit(1e6) + lit(0.5)).cast("long"))
-          .otherwise(0L).as("ndcg_micros"))
+    metricsTail(withRr.filter(size(col("__ranked")) > 0), k)
   }
 
   /** The same metric suite over the DENSE retrieval stack — the ANN
@@ -538,50 +400,89 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     metricsCore(ranked, relsOf(docs, id, text, queries), k)
   }
 
+  /** (doc_id, toks, dl): each document's lower-cased token array and
+    * its length — the input of every BM25 statistic. */
+  private def tokenized(docs: DataFrame, id: Column, text: Column): DataFrame =
+    docs.select(id.as("doc_id"), TextFunctions.tokens(lower(text)).as("toks"))
+      .withColumn("dl", size(col("toks")).cast("long"))
+
+  /** `base` (toks, dl, …) with the one-row corpus stats (n, sum_dl and
+    * df_i per term, ONE aggregate pass) broadcast onto every row and
+    * avgdl = exact-BIGINT sum_dl / n, plus the BM25 score column of
+    * each of `terms` over that frame. */
+  private def bm25Scored(base: DataFrame, terms: Seq[String], k1: Double,
+      b: Double): (DataFrame, Map[String, Column]) = {
+    val dfAggs = terms.zipWithIndex.map { case (t, i) =>
+      sum(when(array_contains(col("toks"), t), 1L).otherwise(0L)).as(s"df_$i")
+    }
+    val allAggs = Seq(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl")) ++ dfAggs
+    val stats = base.agg(allAggs.head, allAggs.tail: _*)
+    val scored = base.crossJoin(broadcast(stats))
+      .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
+    val termScore = terms.zipWithIndex.map { case (t, i) =>
+      val dfT = col(s"df_$i").cast("double")
+      val idf = log(lit(1.0) +
+        (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
+      val tf = size(filter(col("toks"), x => x === lit(t))).cast("double")
+      t -> (idf * (tf * lit(k1 + 1.0)) /
+        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))))
+    }.toMap
+    (scored, termScore)
+  }
+
+  /** The rule-derived qrel of a row with `toks`: how many of `terms`
+    * the document contains. */
+  private def relOf(terms: Seq[String]): Column =
+    terms.map(t => when(array_contains(col("toks"), t), 1L).otherwise(0L))
+      .reduce(_ + _)
+
+  /** The ideal-gain heap: the top-k rels by (rel desc, doc_id asc); its
+    * eval() array IS the ideal ordering. */
+  private def idealHeap(k: Int): Column =
+    expr(s"bounded_top_k(CAST(rel AS DOUBLE), doc_id, $k)").as("ideal")
+
+  private def nRel: Column =
+    sum(when(col("rel") > 0, 1L).otherwise(0L)).as("n_rel")
+
   /** (qid, doc_id, rel) under the rule-derived qrels. */
   private def relsOf(docs: DataFrame, id: Column, text: Column,
       queries: Seq[(Int, Seq[String])]): DataFrame =
     docs.select(id.as("doc_id"),
         TextFunctions.tokens(lower(text)).as("toks"))
       .select(col("doc_id"), explode(array(queries.map { case (qid, terms) =>
-        struct(lit(qid).as("qid"), terms.map(t =>
-          when(array_contains(col("toks"), t), 1L).otherwise(0L))
-          .reduce(_ + _).as("rel"))
+        struct(lit(qid).as("qid"), relOf(terms).as("rel"))
       }: _*)).as("q"))
       .select(col("q.qid").as("qid"), col("doc_id"), col("q.rel").as("rel"))
 
-  /** Shared metric tail: `ranked` (qid, doc_id, rank — the ranking
-    * under evaluation, ≤k rows per query, unique (qid, doc_id)) +
-    * `rels` (qid, doc_id, rel — the full qrels) → one metric row per
-    * query. Folds run over rank-ordered ≤k arrays (pinned float
-    * addition order); the ideal list is a bounded-heap top-k of rel
-    * (its eval() array IS the ideal ordering).
-    *
-    * r15 (guide §2.3/§2.4): previously the callers inner-joined rels
-    * to the broadcast head and this tail aggregated rels TWICE (the
-    * retrieved side and the ideal side) then joined the two per-qid
-    * aggregates — two full qrels scans (each a corpus re-tokenize)
-    * plus an extra shuffle join. The head now LEFT-broadcast-joins
-    * onto one qrels scan and everything reduces in a single
-    * groupBy(qid): the retrieved (rank, rel) list collects from the
-    * non-null-rank rows (collect_list skips the nulls), the ideal
-    * heap and n_rel reduce alongside. Byte-equal output (the head's
-    * (qid, doc_id) are unique, so the left join duplicates nothing
-    * and the collected pairs are exactly the old inner join's rows);
-    * both oracles unchanged. */
+  /** Metric tail of a ranking given as rows: `ranked` (qid, doc_id,
+    * rank — ≤k rows per query, unique (qid, doc_id)) left-broadcast-
+    * joins onto ONE qrels scan `rels` (qid, doc_id, rel) and everything
+    * reduces in a single groupBy(qid): the retrieved (rank, rel) list
+    * collects from the non-null-rank rows (collect_list skips the
+    * nulls), the ideal heap and n_rel reduce alongside. */
   private def metricsCore(ranked: DataFrame, rels: DataFrame,
       k: Int): DataFrame = {
     graft.GraftExtensions.install(rels.sparkSession)
-    val d = discounts(k)
-    def gainAt(rel: Column, rank: Column): Column =
-      (call_function("shiftleft", lit(1L), rel.cast("int")) - 1L)
-        .cast("double") * element_at(typedLit(d), rank)
     val agg = rels.join(broadcast(ranked), Seq("qid", "doc_id"), "left")
       .groupBy(col("qid")).agg(
         array_sort(collect_list(when(col("rank").isNotNull,
           struct(col("rank"), col("rel"))))).as("rr"),
-        expr(s"bounded_top_k(CAST(rel AS DOUBLE), doc_id, $k)").as("ideal"),
-        sum(when(col("rel") > 0, 1L).otherwise(0L)).as("n_rel"))
+        idealHeap(k), nRel)
+    // a qid with no ranked rows is absent from the oracles' ret CTE
+    // (an inner join) — drop it here too
+    metricsTail(agg.filter(size(col("rr")) > 0), k)
+  }
+
+  /** The one metric tail: `agg` (qid, rr, ideal, n_rel) — `rr` the
+    * retrieved (rank, rel) list in rank order, `ideal` the
+    * [[idealHeap]] — to the µ-floored metric row per query. Every fold
+    * runs over a rank-ordered ≤k array, so float addition order is
+    * pinned; gains use the literal [[discounts]]. */
+  private def metricsTail(agg: DataFrame, k: Int): DataFrame = {
+    val d = discounts(k)
+    def gainAt(rel: Column, rank: Column): Column =
+      (call_function("shiftleft", lit(1L), rel.cast("int")) - 1L)
+        .cast("double") * element_at(typedLit(d), rank)
     def foldSum(arr: Column): Column =
       aggregate(arr, lit(0.0), (acc, x) => acc + x)
     val dcgRaw = foldSum(transform(col("rr"),
@@ -592,21 +493,18 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     val hits = size(filter(col("rr"), r => r.getField("rel") > 0)).cast("long")
     val minRank = array_min(transform(
       filter(col("rr"), r => r.getField("rel") > 0), r => r.getField("rank")))
-    // a qid with no ranked rows was absent from the old inner-join
-    // output (and is absent from the oracles' ret CTE) — keep it so
-    agg.filter(size(col("rr")) > 0)
-      .select(col("qid").as("query_id"), col("n_rel"),
-        when(col("n_rel") > 0,
-          floor(hits.cast("double") * lit(1e6) / col("n_rel").cast("double")
-            + lit(0.5)).cast("long")).otherwise(0L).as("recall_micros"),
-        when(minRank.isNotNull,
-          floor(lit(1e6) / minRank.cast("double") + lit(0.5)).cast("long"))
-          .otherwise(0L).as("mrr_micros"),
-        floor(dcgRaw * lit(1e6) + lit(0.5)).cast("long").as("dcg_micros"),
-        floor(idcgRaw * lit(1e6) + lit(0.5)).cast("long").as("idcg_micros"),
-        when(idcgRaw > 0,
-          floor(dcgRaw / idcgRaw * lit(1e6) + lit(0.5)).cast("long"))
-          .otherwise(0L).as("ndcg_micros"))
+    agg.select(col("qid").as("query_id"), col("n_rel"),
+      when(col("n_rel") > 0,
+        floor(hits.cast("double") * lit(1e6) / col("n_rel").cast("double")
+          + lit(0.5)).cast("long")).otherwise(0L).as("recall_micros"),
+      when(minRank.isNotNull,
+        floor(lit(1e6) / minRank.cast("double") + lit(0.5)).cast("long"))
+        .otherwise(0L).as("mrr_micros"),
+      floor(dcgRaw * lit(1e6) + lit(0.5)).cast("long").as("dcg_micros"),
+      floor(idcgRaw * lit(1e6) + lit(0.5)).cast("long").as("idcg_micros"),
+      when(idcgRaw > 0,
+        floor(dcgRaw / idcgRaw * lit(1e6) + lit(0.5)).cast("long"))
+        .otherwise(0L).as("ndcg_micros"))
   }
 
   /** DuckDB replica of [[retrievalMetrics]] over table `documents` —

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -32,29 +31,9 @@ import graft.sinks.SnapshotStore
   *                 (conversations in / surviving clean / exact-new /
   *                 evicted, landed turns) in a SummingStore MV.
   *
-  * Delivery contract: at-least-once foreachBatch × idempotent tagged
-  * commits (`conv-$batchId` / `cturns-$batchId` / `cevict-$batchId` /
-  * `cmv-$batchId`) = exactly-once landing under replays — the
-  * identical discipline to CorpusIngest, re-tested for this flow in
-  * StreamingSpec.
-  *
-  * CRASH-ATOMIC across the multi-store landing: the four commits are
-  * sequential, so a crash can strand the batch between them. Landed
-  * registry rows are therefore STAMPED with `batch_id`, and a replay
-  * that finds the registry tag already committed RECOVERS `fresh` by
-  * reading the registry's own batch slice back instead of recomputing
-  * it — the recompute would anti-join against a registry that already
-  * contains this batch's fingerprints, collapse `fresh` to ∅, and
-  * commit an EMPTY turns/evictions/monitor landing under their tags,
-  * silently losing the batch's payload forever. With read-back
-  * recovery every downstream relation is rebuilt from the exact rows
-  * attempt 1 landed, the already-present tags no-op, and the missing
-  * ones land the identical frames — exactly-once for every store no
-  * matter where the prior attempt died (the index side is
-  * [[graft.dedup.MinHashIndex.processBatch]]'s replay-exact
-  * contract). StreamingSpec's failure-injection matrix kills the
-  * batch after EACH commit and asserts the replayed state is
-  * bit-equal to a never-crashed run.
+  * Delivery: tagged commits (`conv-$batchId` / `cturns-$batchId` /
+  * `cevict-$batchId` / `cmv-$batchId`), exactly-once and crash-atomic
+  * under replays by [[IngestRegistry]]'s read-back recovery.
   *
   * Batch parity: under conv_id-monotone arrival (whole conversations
   * per batch — the stream contract) the streamed build is bit-equal
@@ -71,18 +50,8 @@ import graft.sinks.SnapshotStore
   */
 object ConvIngest {
 
-  /** Test-only fault injection: name of the commit AFTER which the
-    * batch "crashes" (StreamingSpec's failure-injection matrix). Never
-    * set outside tests. Sites: "index", "registry", "turns",
-    * "evictions". */
-  private[graft] var crashAfter: Option[String] = None
-  private[graft] def failpoint(site: String): Unit =
-    if (crashAfter.contains(site))
-      throw new RuntimeException(s"injected crash after $site commit")
-
   /** Land one micro-batch of (conv_id, payload) conversations.
-    * Crash-atomic under replays — see the class doc's read-back
-    * recovery contract. */
+    * Crash-atomic under replays — see [[IngestRegistry]]. */
   def pipelineBatch(spark: SparkSession, base: String, turnsBase: String,
       indexBase: String, pairsBase: String, mvBase: String,
       batch: DataFrame, batchId: Long): Unit = {
@@ -94,37 +63,16 @@ object ConvIngest {
     val nIn = turns.select(col("conv_id")).distinct().count()
     // gate verdicts applied: drop_conv conversations vanish here (zero
     // turns survive), so "survives clean" IS the stream's gate count.
-    // persist(DISK_ONLY), not localCheckpoint: lineage stays intact,
-    // so a lost executor recomputes its blocks (store reads pin their
-    // file lists at read() time — the later appends add files the
-    // bound plans never see) instead of stranding the batch on
-    // non-replicated local blocks
+    // DISK_ONLY for the reason IngestRegistry.freshOrLanded gives
     val cleaned = Conversations.clean(turns)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val regTag = s"conv-$batchId"
     val ctext = Conversations.convText(cleaned)
       .withColumn("fp", TextFunctions.fingerprint(col("text")))
-    val fresh = (if (SnapshotStore.hasTag(spark, base, regTag)) {
-      // READ-BACK RECOVERY: a prior attempt already committed this
-      // batch's registry rows, so the anti-join recompute would see
-      // its own fingerprints and collapse to ∅ — rebuild `fresh` from
-      // the registry's batch_id slice instead (bit-equal to what
-      // attempt 1 landed)
-      SnapshotStore.read(spark, base).get.filter(col("batch_id") === batchId)
-    } else {
-      // in-batch exact collapse (min conv_id per fingerprint; the
-      // window is batch-sized) + anti-join against the landed registry
-      // — digests only, the transcript text never rides the join key
-      val w = Window.partitionBy(col("fp")).orderBy(col("conv_id"))
-      val inBatch = ctext.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      (SnapshotStore.read(spark, base) match {
-        case Some(existing) => inBatch.join(
-          existing.select(col("fp").as("__efp")),
-          col("fp") === col("__efp"), "left_anti")
-        case None => inBatch
-      }).withColumn("batch_id", lit(batchId))
-    }).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // exact collapse: min conv_id per fingerprint, then not landed yet
+    val fresh = IngestRegistry.freshOrLanded(spark, base, regTag, batchId)(
+      IngestRegistry.notLanded(spark, base,
+        IngestRegistry.firstPerKey(ctext, "fp", "conv_id"), "fp"))
     try {
       // near-dup vs the persisted band index (incremental: only this
       // batch's band buckets are touched); doc_b is the evicted side.
@@ -132,19 +80,16 @@ object ConvIngest {
       // materialized frame
       val pairs = graft.dedup.MinHashIndex.processBatch(spark, indexBase,
         fresh, col("conv_id"), col("text"), tag = s"cpipe-$batchId")
-      failpoint("index")
+      IngestRegistry.failpoint("index")
       SnapshotStore.commitAppend(spark, base, fresh, tag = Some(regTag))
-      failpoint("registry")
+      IngestRegistry.failpoint("registry")
       val freshTurns = cleaned.join(
         fresh.select(col("conv_id")), Seq("conv_id"), "left_semi")
       SnapshotStore.commitAppend(spark, turnsBase, freshTurns,
         tag = Some(s"cturns-$batchId"))
-      failpoint("turns")
-      SnapshotStore.commitAppend(spark, pairsBase,
-        pairs.select(col("doc_b").as("evicted"), col("doc_a").as("kept_twin"),
-          col("jaccard")),
-        tag = Some(s"cevict-$batchId"))
-      failpoint("evictions")
+      IngestRegistry.failpoint("turns")
+      IngestRegistry.landEvictions(spark, pairsBase, pairs, s"cevict-$batchId")
+      IngestRegistry.failpoint("evictions")
       val delta = spark.range(1).select(lit(batchId).as("batch_id"),
         lit(nIn).as("n_in"),
         lit(ctext.count()).as("n_cleaned"),
@@ -163,14 +108,6 @@ object ConvIngest {
     * conversation minus the evicted ones — the training-ready
     * transcript relation ([[Conversations.render]]'s input). */
   def servedTurns(spark: SparkSession, turnsBase: String,
-      pairsBase: String): DataFrame = {
-    val turns = SnapshotStore.read(spark, turnsBase)
-      .getOrElse(sys.error(s"empty conversation store at $turnsBase"))
-    SnapshotStore.read(spark, pairsBase) match {
-      case Some(ev) => turns.join(
-        ev.select(col("evicted").as("conv_id")).distinct(),
-        Seq("conv_id"), "left_anti")
-      case None => turns
-    }
-  }
+      pairsBase: String): DataFrame =
+    IngestRegistry.served(spark, turnsBase, pairsBase, "conv_id", "conversation")
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -64,7 +63,6 @@ object CorpusIngest {
       minLogWeight: Double = 0.0,
       logregModel: Option[Map[Long, Long]] = None,
       minPMicros: Long = 500000L): DataFrame = {
-    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
     // optional trained gates, both served IN-ROW (literal-map lookup —
     // no join, no state): a Dsir.trainModel target-domain importance
     // cut and/or a Logistic.fit quality-classifier cut — the
@@ -74,12 +72,11 @@ object CorpusIngest {
       graft.ops.Dsir.scoreColumn(col("text"), m) >= minLogWeight))
     val gated = logregModel.fold(dsirGated)(m => dsirGated.filter(
       graft.ops.Logistic.scoreColumn(col("text"), m) >= minPMicros))
-    val inBatch = gated
+    val passed = gated
       .filter(TextFunctions.qualityScore(col("text")) >= minQuality)
       .withColumn("fp", TextFunctions.fingerprint(col("text")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val fresh = SnapshotStore.read(spark, base) match {
+    val inBatch = IngestRegistry.firstPerKey(passed, "fp", "doc_id")
+    SnapshotStore.read(spark, base) match {
       case Some(existing) =>
         // streaming foreachBatch hands DataFrames bound to a CLONED
         // session with its own function registry — install on both
@@ -96,14 +93,12 @@ object CorpusIngest {
           val probed = inBatch.withColumn("__maybe",
             call_function("graft_might_contain", lit(bfBytes), xxhash64(col("fp"))))
           val definiteNew = probed.filter(!col("__maybe")).drop("__maybe")
-          val confirmedNew = probed.filter(col("__maybe")).drop("__maybe")
-            .join(existing.select(col("fp").as("__efp")),
-              col("fp") === col("__efp"), "left_anti")
+          val confirmedNew = IngestRegistry.antiJoinLanded(
+            probed.filter(col("__maybe")).drop("__maybe"), existing, "fp")
           definiteNew.unionByName(confirmedNew)
         }
       case None => inBatch
     }
-    fresh
   }
 
   /** The COMPOSED streaming training-data pipeline — one micro-batch of
@@ -136,17 +131,10 @@ object CorpusIngest {
     * 16-char digests, the index probe touches only this batch's band
     * buckets, and the monitor delta is one aggregate of the batch.
     *
-    * CRASH-ATOMIC across the multi-store landing (the ConvIngest
-    * contract, same mechanism): landed seen-store rows are STAMPED
-    * with `batch_id`, and a replay that finds the `ingest-$batchId`
-    * tag already committed RECOVERS `fresh` from the store's batch
-    * slice instead of recomputing it — the recompute would anti-join
-    * against a store that already holds this batch's fingerprints,
-    * collapse `fresh` to ∅, and land empty evictions/monitor rows
-    * under their tags, silently losing them forever. With read-back
-    * recovery every downstream relation rebuilds from the exact rows
-    * attempt 1 landed; already-present tags no-op; missing ones land
-    * the identical frames. */
+    * CRASH-ATOMIC across the multi-store landing: the seen store is
+    * the [[IngestRegistry]] (tag `ingest-$batchId`), so a replay
+    * rebuilds every downstream relation from the rows attempt 1
+    * landed. */
   def pipelineBatch(spark: SparkSession, base: String, indexBase: String,
       pairsBase: String, mvBase: String, batch: DataFrame, batchId: Long,
       minQuality: Double = 0.2,
@@ -156,15 +144,8 @@ object CorpusIngest {
     val gated = batch.filter(
       TextFunctions.gopherSignals(col("text")).getField("passes"))
     val regTag = s"ingest-$batchId"
-    // persist(DISK_ONLY), not localCheckpoint: lineage survives a lost
-    // executor (store reads pin their file lists at read() time, so
-    // the later appends never leak into a recompute)
-    val fresh = (if (SnapshotStore.hasTag(spark, base, regTag))
-        // READ-BACK RECOVERY — see the scaladoc's crash contract
-        SnapshotStore.read(spark, base).get.filter(col("batch_id") === batchId)
-      else freshRows(spark, base, gated, minQuality)
-        .withColumn("batch_id", lit(batchId))
-      ).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val fresh = IngestRegistry.freshOrLanded(spark, base, regTag, batchId)(
+      freshRows(spark, base, gated, minQuality))
     try {
       // optional distribution monitor: the landed docs' token-length
       // t-digest GRID histogram is additive (graft.ops.TDigest state),
@@ -180,14 +161,11 @@ object CorpusIngest {
       // replay-exact (MinHashIndex contract) + eagerly materialized
       val pairs = graft.dedup.MinHashIndex.processBatch(spark, indexBase,
         fresh, col("doc_id"), col("text"), tag = s"pipe-$batchId")
-      ConvIngest.failpoint("index")
+      IngestRegistry.failpoint("index")
       SnapshotStore.commitAppend(spark, base, fresh, tag = Some(regTag))
-      ConvIngest.failpoint("registry")
-      SnapshotStore.commitAppend(spark, pairsBase,
-        pairs.select(col("doc_b").as("evicted"), col("doc_a").as("kept_twin"),
-          col("jaccard")),
-        tag = Some(s"evict-$batchId"))
-      ConvIngest.failpoint("evictions")
+      IngestRegistry.failpoint("registry")
+      IngestRegistry.landEvictions(spark, pairsBase, pairs, s"evict-$batchId")
+      IngestRegistry.failpoint("evictions")
       val stats = fresh.agg(count(lit(1)).as("n_fresh"),
           coalesce(sum(TextFunctions.tokenCount(col("text")).cast("long")),
             lit(0L)).as("tok_fresh")).head
@@ -205,14 +183,6 @@ object CorpusIngest {
     * landed minus the eviction records — (doc_id, text, …) of the
     * training-ready documents. */
   def servedCorpus(spark: SparkSession, base: String,
-      pairsBase: String): DataFrame = {
-    val seen = SnapshotStore.read(spark, base)
-      .getOrElse(sys.error(s"empty corpus store at $base"))
-    SnapshotStore.read(spark, pairsBase) match {
-      case Some(ev) => seen.join(
-        ev.select(col("evicted").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      case None => seen
-    }
-  }
+      pairsBase: String): DataFrame =
+    IngestRegistry.served(spark, base, pairsBase, "doc_id", "corpus")
 }

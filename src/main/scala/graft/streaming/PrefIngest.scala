@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -33,16 +32,9 @@ import graft.sinks.SnapshotStore
   *                   among landed kept / PII-flagged kept) in a
   *                   SummingStore MV.
   *
-  * Delivery contract: at-least-once foreachBatch × idempotent tagged
-  * commits (`pref-$batchId` / `pmargin-$batchId` / `pmv-$batchId`) =
-  * exactly-once landing; CRASH-ATOMIC across the multi-store landing
-  * from day one (the round-15 ConvIngest contract): registry rows are
-  * stamped with `batch_id`, and a replay that finds the registry tag
-  * already committed RECOVERS `fresh` by reading the registry's batch
-  * slice back — the recompute would anti-join against its own
-  * prompts, collapse to ∅, and land an empty ledger + monitor row
-  * under their tags forever. StreamingSpec's failure-injection matrix
-  * kills the batch after each commit and asserts bit-equal recovery.
+  * Delivery: tagged commits (`pref-$batchId` / `pmargin-$batchId` /
+  * `pmv-$batchId`), exactly-once and crash-atomic under replays by
+  * [[IngestRegistry]]'s read-back recovery.
   *
   * Batch parity: under pair_id-monotone arrival the streamed build is
   * bit-equal to one batch pass (canonical = min pair_id = first
@@ -61,38 +53,26 @@ import graft.sinks.SnapshotStore
 object PrefIngest {
 
   /** Land one micro-batch of (pair_id, prompt, chosen, rejected)
-    * rows. Crash-atomic under replays — see the class doc. */
+    * rows. Crash-atomic under replays — see [[IngestRegistry]]. */
   def pipelineBatch(spark: SparkSession, base: String, marginBase: String,
       mvBase: String, batch: DataFrame, batchId: Long): Unit = {
     val nIn = batch.count()
     val annotated = Preferences.withGate(batch)
       .withColumn("k", md5(TextFunctions.normText(col("prompt"))))
     val regTag = s"pref-$batchId"
-    val fresh = (if (SnapshotStore.hasTag(spark, base, regTag)) {
-      // READ-BACK RECOVERY — the ConvIngest contract
-      SnapshotStore.read(spark, base).get.filter(col("batch_id") === batchId)
-    } else {
-      // in-batch collapse (min pair_id per normalized-prompt digest;
-      // batch-sized window) + anti-join against the landed registry
-      val w = Window.partitionBy(col("k")).orderBy(col("pair_id"))
-      val inBatch = annotated.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      (SnapshotStore.read(spark, base) match {
-        case Some(existing) => inBatch.join(
-          existing.select(col("k").as("__ek")),
-          col("k") === col("__ek"), "left_anti")
-        case None => inBatch
-      }).withColumn("batch_id", lit(batchId))
-    }).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // min pair_id per normalized-prompt digest, then not landed yet
+    val fresh = IngestRegistry.freshOrLanded(spark, base, regTag, batchId)(
+      IngestRegistry.notLanded(spark, base,
+        IngestRegistry.firstPerKey(annotated, "k", "pair_id"), "k"))
     try {
       SnapshotStore.commitAppend(spark, base, fresh, tag = Some(regTag))
-      ConvIngest.failpoint("registry")
+      IngestRegistry.failpoint("registry")
       // margins re-gates internally, so the ledger holds KEPT fresh
       // pairs only; recomputed from the recovered slice on replay
       val ledger = Preferences.margins(fresh)
       SnapshotStore.commitAppend(spark, marginBase, ledger,
         tag = Some(s"pmargin-$batchId"))
-      ConvIngest.failpoint("margins")
+      IngestRegistry.failpoint("margins")
       val delta = spark.range(1).select(lit(batchId).as("batch_id"),
         lit(nIn).as("n_in"),
         lit(annotated.filter(col("verdict") === "keep").count()).as("n_keep"),

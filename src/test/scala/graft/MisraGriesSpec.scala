@@ -73,6 +73,22 @@ class MisraGriesSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("weighted at w = 1 equals unweighted on the same rows and partitioning") {
+    // one Aggregate computes both, so both see the same rows in the same
+    // order and merge the same partials in the same order; at w = 1 the
+    // weighted update's (k+1)-th-largest cut is the unweighted
+    // decrement-by-one, so the sketches must be identical
+    val k = 16
+    for (parts <- Seq(1, 7, 32)) {
+      val r = fixture(parts).agg(
+          expr(s"misra_gries(item, $k)").as("mg"),
+          expr(s"misra_gries_w(item, 1L, $k)").as("mgw")).head
+      val mg = r.getSeq[org.apache.spark.sql.Row](0)
+      assert(mg.nonEmpty && mg.size <= k, s"parts=$parts: $mg")
+      assert(mg == r.getSeq[org.apache.spark.sql.Row](1), s"parts=$parts")
+    }
+  }
+
   test("analysis-time type check rejects non-string items") {
     val e = intercept[Exception] {
       spark.range(5).agg(expr("misra_gries(id, 4)")).collect()

@@ -21,24 +21,23 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Spark jobs `body` starts on this thread, counted through a
-    * listener by job group (a marker job flushes the listener bus). */
+    * listener by job group (a [[BusFlush]] marker job flushes the
+    * listener bus). */
   def jobsIn(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flush = new BusFlush
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+        if (!flush.isMarker(e))
+          jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup("counted", "counted")
       try body finally sc.clearJobGroup()
-      sc.setJobGroup("marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!jobs.contains("marker") && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(jobs.contains("marker"))
+      flush(sc)
     } finally sc.removeSparkListener(listener)
     jobs.toArray.count(_ == "counted")
   }

@@ -763,14 +763,14 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.CorpusIngest.pipelineBatch(spark, base, idx, pairs, mv,
         Seq((0L, "%%% !!!"), (1L, textA), (2L, textA)).toDF("doc_id", "text"),
         batchId = 0L)
-      graft.streaming.ConvIngest.crashAfter = Some(site)
+      graft.streaming.IngestRegistry.crashAfter = Some(site)
       try {
         val e = intercept[RuntimeException] {
           graft.streaming.CorpusIngest.pipelineBatch(spark, base, idx, pairs,
             mv, b1.toDF("doc_id", "text"), batchId = 1L)
         }
         assert(e.getMessage.contains("injected crash"), e.getMessage)
-      } finally graft.streaming.ConvIngest.crashAfter = None
+      } finally graft.streaming.IngestRegistry.crashAfter = None
       // the restart: foreachBatch re-delivers the SAME batch id + data
       graft.streaming.CorpusIngest.pipelineBatch(spark, base, idx, pairs, mv,
         b1.toDF("doc_id", "text"), batchId = 1L)
@@ -823,14 +823,14 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.ConvIngest.pipelineBatch(spark, base, turnsB, idx,
         pairs, mv, Seq((1L, pA), (2L, pAExact), (3L, pBad))
           .toDF("conv_id", "payload"), batchId = 0L)
-      graft.streaming.ConvIngest.crashAfter = Some(site)
+      graft.streaming.IngestRegistry.crashAfter = Some(site)
       try {
         val e = intercept[RuntimeException] {
           graft.streaming.ConvIngest.pipelineBatch(spark, base, turnsB, idx,
             pairs, mv, b1.toDF("conv_id", "payload"), batchId = 1L)
         }
         assert(e.getMessage.contains("injected crash"), e.getMessage)
-      } finally graft.streaming.ConvIngest.crashAfter = None
+      } finally graft.streaming.IngestRegistry.crashAfter = None
       graft.streaming.ConvIngest.pipelineBatch(spark, base, turnsB, idx,
         pairs, mv, b1.toDF("conv_id", "payload"), batchId = 1L)
       val servedConvs = graft.streaming.ConvIngest
@@ -923,7 +923,7 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.PrefIngest.pipelineBatch(spark, s"$root/prompts",
         s"$root/margins", s"$root/mv",
         b0.toDF("pair_id", "prompt", "chosen", "rejected"), batchId = 0L)
-      graft.streaming.ConvIngest.crashAfter = Some(site)
+      graft.streaming.IngestRegistry.crashAfter = Some(site)
       try {
         val e = intercept[RuntimeException] {
           graft.streaming.PrefIngest.pipelineBatch(spark, s"$root/prompts",
@@ -931,7 +931,7 @@ class StreamingSpec extends SparkSpec {
             b1.toDF("pair_id", "prompt", "chosen", "rejected"), batchId = 1L)
         }
         assert(e.getMessage.contains("injected crash"), e.getMessage)
-      } finally graft.streaming.ConvIngest.crashAfter = None
+      } finally graft.streaming.IngestRegistry.crashAfter = None
       graft.streaming.PrefIngest.pipelineBatch(spark, s"$root/prompts",
         s"$root/margins", s"$root/mv",
         b1.toDF("pair_id", "prompt", "chosen", "rejected"), batchId = 1L)
