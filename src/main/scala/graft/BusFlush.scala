@@ -1,52 +1,31 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.SparkListenerJobStart
 
-/** One flush of the Spark listener bus by a marker job. The bus
-  * delivers events in the order they were posted, so once a listener
-  * has seen the start of a job submitted after an action returned, it
-  * has seen every event that action's jobs posted: no polling, and no
-  * late event slips past a quiet window.
-  *
-  * The listener calls [[isMarker]] from `onJobStart` and `onTaskEnd`
-  * and leaves out what it answers true for (the marker's own job and
-  * task); the thread that ran the action then calls [[apply]], which
-  * returns once the marker's start has been delivered. One instance
-  * per flush: the marker carries a token of its own, so flushes on
-  * other threads never release this one. */
-private[graft] final class BusFlush {
+/** Flush of the Spark listener bus by a marker job. The bus delivers
+  * events in the order they were posted, so a listener that sees the
+  * start of a job submitted after an action returned has already seen
+  * every event of that action's jobs. The listener takes its reading
+  * on that start, which leaves out the marker's own job and task, and
+  * completes the future [[apply]] waits on. `token` tells one flush's
+  * marker from another's. */
+private[graft] object BusFlush {
   private val Key = "graft.busFlush"
-  private val token = java.util.UUID.randomUUID().toString
-  private val started = new CountDownLatch(1)
-  private val markerStages = ConcurrentHashMap.newKeySet[Int]()
 
-  /** True for this flush's marker job; its delivery releases [[apply]]. */
-  def isMarker(e: SparkListenerJobStart): Boolean = {
-    val hit = e.properties != null &&
-      token == e.properties.getProperty(Key)
-    if (hit) {
-      e.stageIds.foreach(markerStages.add)
-      started.countDown()
-    }
-    hit
-  }
+  def isMarker(e: SparkListenerJobStart, token: String): Boolean =
+    e.properties != null && token == e.properties.getProperty(Key)
 
-  /** True for a task of this flush's marker job. */
-  def isMarker(e: SparkListenerTaskEnd): Boolean =
-    markerStages.contains(e.stageId)
-
-  /** Run the one-task marker job from this thread and block until the
-    * listener has seen its start (at most 30 s, then throw). */
-  def apply(sc: SparkContext): Unit = {
+  /** Run the one-task marker job tagged `token` from this thread and
+    * return the listener's reading (waiting at most 30 s for it). */
+  def apply[A](sc: SparkContext, token: String, reading: Future[A]): A = {
     val prev = sc.getLocalProperty(Key)
     sc.setLocalProperty(Key, token)
     try sc.parallelize(Seq(1), 1).count()
     finally sc.setLocalProperty(Key, prev)
-    if (!started.await(30, TimeUnit.SECONDS))
-      throw new IllegalStateException(
-        "listener bus did not deliver the flush marker job within 30 s")
+    Await.result(reading, 30.seconds)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
+import scala.concurrent.Promise
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -29,7 +31,8 @@ import org.apache.spark.sql.SparkSession
   *    alongside bytes.
   */
 final class ScaleMetrics extends SparkListener {
-  private[graft] val flush = new BusFlush
+  private val token = java.util.UUID.randomUUID().toString
+  private val flushed = Promise[ScaleMetrics.Measured]()
   private val shuffleRead = new LongAdder
   private val shuffleWrite = new LongAdder
   private val memSpill = new LongAdder
@@ -40,11 +43,12 @@ final class ScaleMetrics extends SparkListener {
   private val jobs = new LongAdder
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
-    if (!flush.isMarker(e)) jobs.increment()
+    if (BusFlush.isMarker(e, token)) flushed.trySuccess(snapshot)
+    else jobs.increment()
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
-    if (m != null && !flush.isMarker(e)) {
+    if (m != null) {
       shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
       shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
       memSpill.add(m.memoryBytesSpilled)
@@ -85,8 +89,8 @@ object ScaleMetrics {
 
   /** Run `f` with a fresh listener attached and return (result,
     * metrics). Listener events post asynchronously, so after the action
-    * the listener bus is flushed ([[BusFlush]]) before the snapshot is
-    * taken; the flush's marker job and task are not counted. */
+    * the totals are read once the listener bus is flushed
+    * ([[BusFlush]]); the flush's marker job and task are not counted. */
   def measure[A](spark: SparkSession)(f: => A): (A, Measured) = {
     val l = new ScaleMetrics
     spark.sparkContext.addSparkListener(l)
@@ -94,8 +98,8 @@ object ScaleMetrics {
       val t0 = System.nanoTime()
       val r = f
       val wall = (System.nanoTime() - t0) / 1e9
-      l.flush(spark.sparkContext)
-      (r, l.snapshot.copy(wallSec = wall))
+      val m = BusFlush(spark.sparkContext, l.token, l.flushed.future)
+      (r, m.copy(wallSec = wall))
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-positives), the (est desc, item asc) output and the byte
   * encoding of a partial. Each aggregate adds only its input type
   * check and `update`. */
-trait MisraGriesBuffer
+sealed trait MisraGriesBuffer
     extends TypedImperativeAggregate[mutable.LinkedHashMap[String, Long]] {
 
   def k: Int

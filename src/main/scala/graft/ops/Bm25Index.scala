@@ -40,8 +40,9 @@ import graft.sinks.SnapshotStore
   * per-term tf slots are aggregated into fixed positions and summed in
   * the same left-to-right term order (adding an exact 0.0 for absent
   * terms, which is the identity the brute force also produces), avgdl
-  * is the same exact-BIGINT Σdl/N, and the same floor-4 rounding
-  * applies. q_bm25_indexed therefore shares q_bm25_topk's oracle.
+  * is the same exact-BIGINT Σdl/N, each term scores through the same
+  * [[Retrieval.bm25Term]], and the same floor-4 rounding applies.
+  * q_bm25_indexed therefore shares q_bm25_topk's oracle.
   */
 object Bm25Index {
 
@@ -102,22 +103,17 @@ object Bm25Index {
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  /** Tokenize exactly as [[Retrieval.bm25TopK]] does. */
-  private def tokenized(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("doc_id"), TextFunctions.tokens(lower(text)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-
   /** Postings rows for a doc batch: (term, doc_id, dl, tf). One
     * explode + one (term, doc) hash-agg — map-side combinable. */
   def postingsOf(docs: DataFrame, id: Column, text: Column): DataFrame =
-    tokenized(docs, id, text)
+    Retrieval.tokenized(docs, id, text)
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy("term", "doc_id", "dl")
       .agg(count(lit(1)).as("tf"))
 
   /** Doc-length rows for a doc batch: (doc_id, dl). */
   def doclensOf(docs: DataFrame, id: Column, text: Column): DataFrame =
-    tokenized(docs, id, text).select("doc_id", "dl")
+    Retrieval.tokenized(docs, id, text).select("doc_id", "dl")
 
   private def postingsBase(indexBase: String) = s"$indexBase/postings"
   private def doclensBase(indexBase: String) = s"$indexBase/doclens"
@@ -215,12 +211,8 @@ object Bm25Index {
     val scored = perDoc.crossJoin(broadcast(stats))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
     val termScores = terms.indices.map { i =>
-      val dfT = col(s"df_$i").cast("double")
-      val idf = log(lit(1.0) +
-        (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
-      val tf = coalesce(col(s"tf_$i"), lit(0L)).cast("double")
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+      Retrieval.bm25Term(col(s"df_$i").cast("double"),
+        coalesce(col(s"tf_$i"), lit(0L)).cast("double"), k1, b)
     }
     val score = termScores.reduce(_ + _)
     val matchedScores = scored.select(col("doc_id"),

@@ -401,8 +401,9 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
   }
 
   /** (doc_id, toks, dl): each document's lower-cased token array and
-    * its length — the input of every BM25 statistic. */
-  private def tokenized(docs: DataFrame, id: Column, text: Column): DataFrame =
+    * its length — the input of every BM25 statistic, here and in
+    * [[Bm25Index]]. */
+  private[ops] def tokenized(docs: DataFrame, id: Column, text: Column): DataFrame =
     docs.select(id.as("doc_id"), TextFunctions.tokens(lower(text)).as("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
 
@@ -420,14 +421,22 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
     val scored = base.crossJoin(broadcast(stats))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n"))
     val termScore = terms.zipWithIndex.map { case (t, i) =>
-      val dfT = col(s"df_$i").cast("double")
-      val idf = log(lit(1.0) +
-        (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
-      val tf = size(filter(col("toks"), x => x === lit(t))).cast("double")
-      t -> (idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl"))))
+      t -> bm25Term(col(s"df_$i").cast("double"),
+        size(filter(col("toks"), x => x === lit(t))).cast("double"), k1, b)
     }.toMap
     (scored, termScore)
+  }
+
+  /** The BM25 score of one term on a row holding n, dl and avgdl:
+    * `dfT` is the term's document frequency and `tf` its count in the
+    * row, both DOUBLE. [[Bm25Index]] scores with this same expression,
+    * which is what keeps its scores bit-identical to [[bm25TopK]]. */
+  private[ops] def bm25Term(dfT: Column, tf: Column, k1: Double,
+      b: Double): Column = {
+    val idf = log(lit(1.0) +
+      (col("n").cast("double") - dfT + lit(0.5)) / (dfT + lit(0.5)))
+    idf * (tf * lit(k1 + 1.0)) /
+      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
   }
 
   /** The rule-derived qrel of a row with `toks`: how many of `terms`
@@ -447,8 +456,7 @@ SELECT doc_id, rank_sparse, rank_dense, rrf_micros, CAST(row_number() OVER (ORDE
   /** (qid, doc_id, rel) under the rule-derived qrels. */
   private def relsOf(docs: DataFrame, id: Column, text: Column,
       queries: Seq[(Int, Seq[String])]): DataFrame =
-    docs.select(id.as("doc_id"),
-        TextFunctions.tokens(lower(text)).as("toks"))
+    tokenized(docs, id, text)
       .select(col("doc_id"), explode(array(queries.map { case (qid, terms) =>
         struct(lit(qid).as("qid"), relOf(terms).as("rel"))
       }: _*)).as("q"))

@@ -36,14 +36,14 @@ import graft.sinks.SnapshotStore
   * ingest's batch after EACH commit ([[failpoint]]) and assert the
   * replayed state is bit-equal to a never-crashed run.
   */
-object IngestRegistry {
+private[graft] object IngestRegistry {
 
   /** Test-only fault injection: name of the commit AFTER which the
     * batch "crashes" (StreamingSpec's failure-injection matrices).
     * Never set outside tests. Sites: "index", "registry", "turns",
     * "evictions", "margins". */
-  private[graft] var crashAfter: Option[String] = None
-  private[graft] def failpoint(site: String): Unit =
+  var crashAfter: Option[String] = None
+  def failpoint(site: String): Unit =
     if (crashAfter.contains(site))
       throw new RuntimeException(s"injected crash after $site commit")
 

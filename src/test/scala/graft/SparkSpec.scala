@@ -25,21 +25,23 @@ trait SparkSpec extends AnyFunSuite {
     * listener bus). */
   def jobsIn(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val flush = new BusFlush
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val token = java.util.UUID.randomUUID().toString
+    val flushed = scala.concurrent.Promise[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!flush.isMarker(e))
-          jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+        if (BusFlush.isMarker(e, token)) flushed.trySuccess(counted.get)
+        else if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == "counted")
+          counted.incrementAndGet()
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup("counted", "counted")
       try body finally sc.clearJobGroup()
-      flush(sc)
+      BusFlush(sc, token, flushed.future)
     } finally sc.removeSparkListener(listener)
-    jobs.toArray.count(_ == "counted")
   }
 }
 

@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
-"""Print repeated code windows under a source tree, grouped by file.
+"""Print repeated code windows under src/main/scala, grouped by file.
 
-A window is N consecutive normalized lines (default 6). Normalizing
+A window is 6 consecutive normalized lines. Normalizing
 strips indentation, collapses inner whitespace and drops blank lines,
 comment lines and lines made only of brackets, so a pasted block that
 was re-indented or re-commented still matches its original. A window
 position counts when its normalized text occurs at two or more
-positions in the tree. Overlapping counted positions merge into runs.
+positions under src/main/scala. Overlapping counted positions merge into runs.
 
 Usage:
-    python3 tools/clones.py [--root src/main/scala] [--window 6] [PATH_FILTER ...]
+    python3 tools/clones.py [PATH_FILTER ...]    # from the repo root
 
 With PATH_FILTER arguments only files whose path contains one of them
 are printed (the windows are still matched across the whole tree).
@@ -17,12 +17,13 @@ Each file prints its counted-window total, then one line per run:
 its line span, the number of windows in it, and where the first
 window of the run occurs elsewhere. The last line is the tree total.
 """
-import argparse
 import collections
 import os
 import re
 import sys
 
+ROOT = "src/main/scala"
+WINDOW = 6
 BRACKETS_ONLY = re.compile(r"^[\s{}()\[\],;]*$")
 
 
@@ -46,9 +47,9 @@ def normalized_lines(path):
     return out
 
 
-def scan(root, window):
+def scan():
     files = []
-    for d, _, names in os.walk(root):
+    for d, _, names in os.walk(ROOT):
         for n in sorted(names):
             if n.endswith((".scala", ".java")):
                 files.append(os.path.join(d, n))
@@ -58,9 +59,9 @@ def scan(root, window):
     for path in files:
         lines = normalized_lines(path)
         wins = []
-        for i in range(len(lines) - window + 1):
-            key = "\n".join(t for _, t in lines[i:i + window])
-            start, end = lines[i][0], lines[i + window - 1][0]
+        for i in range(len(lines) - WINDOW + 1):
+            key = "\n".join(t for _, t in lines[i:i + WINDOW])
+            start, end = lines[i][0], lines[i + WINDOW - 1][0]
             wins.append((key, start, end))
             where[key].append((path, start))
         per_file[path] = wins
@@ -81,27 +82,22 @@ def runs_of(wins, where):
     return runs
 
 
-def main(argv):
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--root", default="src/main/scala")
-    ap.add_argument("--window", type=int, default=6)
-    ap.add_argument("filters", nargs="*")
-    a = ap.parse_args(argv)
-    files, where, per_file = scan(a.root, a.window)
+def main(filters):
+    files, where, per_file = scan()
     total = 0
     for path in files:
         runs = runs_of(per_file[path], where)
         n = sum(r[2] for r in runs)
         total += n
-        if not runs or (a.filters and not any(f in path for f in a.filters)):
+        if not runs or (filters and not any(f in path for f in filters)):
             continue
-        rel = os.path.relpath(path, a.root)
+        rel = os.path.relpath(path, ROOT)
         print(f"{rel}: {n} windows in {len(runs)} runs")
         for start, end, count, key in runs:
-            others = [f"{os.path.relpath(p, a.root)}:{ln}" for p, ln in where[key]
+            others = [f"{os.path.relpath(p, ROOT)}:{ln}" for p, ln in where[key]
                       if not (p == path and ln == start)]
             print(f"  L{start}-{end} ({count} windows) also at {', '.join(others)}")
-    print(f"total: {total} repeated {a.window}-line windows under {a.root}")
+    print(f"total: {total} repeated {WINDOW}-line windows under {ROOT}")
     return 0
 
 
