@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 
@@ -71,24 +72,6 @@ object Bpe {
     else trainDistributed(repr, nMerges)
   }
 
-  /** Spark's `orderBy(pair.asc)` compares UTF8String — unsigned UTF-8
-    * bytes — and DuckDB's ORDER BY likewise; Java's String.compareTo
-    * compares UTF-16 code units, which diverges for supplementary
-    * characters. The local tie-break must be byte-identical to the
-    * engines', so compare UTF-8 bytes explicitly. */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
   /** Driver-side merge loop over the collected vocab. Incremental
     * bookkeeping: `pairCounts` holds every adjacent symbol pair's
     * weighted occurrence count (occurrence-counted, exactly like the
@@ -133,7 +116,10 @@ object Bpe {
       var bestPair: String = null
       var bestCnt = Long.MinValue
       pairCounts.foreach { case (p, c) =>
-        if (c > bestCnt || (c == bestCnt && utf8Less(p, bestPair))) {
+        // ties break as Spark's and DuckDB's ORDER BY do: by unsigned
+        // UTF-8 bytes (Java's compareTo orders UTF-16 units)
+        if (c > bestCnt || (c == bestCnt &&
+            UTF8String.fromString(p).compareTo(UTF8String.fromString(bestPair)) < 0)) {
           bestPair = p; bestCnt = c
         }
       }

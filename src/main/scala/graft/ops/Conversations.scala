@@ -282,9 +282,10 @@ object Conversations {
     * splits mid-transcript (the standard GPT-style packing trade —
     * no padding, bounded fragmentation).
     *
-    * Scale: the global token prefix sum is the two-phase bucketed
-    * cumulative (in-bucket window per conv_id bucket + a
-    * ≤|buckets|-row carry — never a global one-task window); the span
+    * Scale: the global token prefix sum is a [[Prefix.running]] sum
+    * over conv_id buckets (never a global one-task window; its one
+    * shared exchange keeps the upstream fixture parse, clean and
+    * render chain to one corpus pass); the span
     * explode emits at most ⌈n_tok/seqLen⌉+1 rows per turn, so span
     * volume is linear in corpus tokens; divisions of the corpus-scale
     * prefix sum route through [[TDigest.exactDiv]]'s DECIMAL path
@@ -309,45 +310,13 @@ object Conversations {
     require(seqLen >= 1, "seqLen must be positive")
     val d = rendered.select(col("conv_id"), col("turn_idx"),
       col("is_loss"), col("n_tok"))
-    // r16 (guide §2.4 "two operations keyed the same way can share one
-    // exchange"): the in-bucket window and the carry aggregate both
-    // consume this relation — without a shared exchange each rebuilds
-    // the WHOLE upstream chain (fixture JSON encode → parse → clean
-    // windows → render tokenization), i.e. one full extra corpus pass.
-    // An explicit b-keyed repartition on the narrow 4-column projection
-    // satisfies the window's distribution (no second exchange) and
-    // lets the aggregate reduce above the SAME shuffle (AQE reuses the
-    // stage) — one corpus pass, one exchange, rows identical (probed
-    // byte-equal; the oracle enforces it per query).
-    // (the isNotNull matches the inner join's inferred filter so both
-    // consumers' exchange subtrees stay canonically identical — AQE
-    // reuse needs that; a null conv_id is out of the dense-id contract
-    // and never survives the join either way)
-    val bucketed = d.withColumn("b",
-      TDigest.exactDiv(col("conv_id"), lit(bucketWidth)))
-      .where(col("b").isNotNull)
-      .repartition(col("b"))
-    val inB = org.apache.spark.sql.expressions.Window.partitionBy(col("b"))
-      .orderBy(col("conv_id"), col("turn_idx"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val inBucket = bucketed
-      .withColumn("cw_in", coalesce(sum(col("n_tok")).over(inB), lit(0L)))
-    // carry from the window's own output (max(prefix + n_tok) per
-    // bucket ≡ the bucket sum for non-negative token counts): both
-    // join inputs are then projections of ONE subtree, so column
-    // pruning can't desynchronize the shared exchange (see
-    // Packing.packSequences)
-    val perB = inBucket.groupBy(col("b"))
-      .agg(max(col("cw_in") + col("n_tok")).as("net"))
-    val carryW = org.apache.spark.sql.expressions.Window.orderBy(col("b"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val carry = perB.select(col("b"),
-      coalesce(sum(col("net")).over(carryW), lit(0L)).as("cin"))
-    val st = col("cw_in") + col("cin")
+      .withColumn("b", TDigest.exactDiv(col("conv_id"), lit(bucketWidth)))
+    val st = col("st")
     val en = st + col("n_tok") - 1
-    inBucket.join(Joins.corpusSide(carry), "b")
+    Prefix.running(d, Nil, "b", Seq(col("conv_id"), col("turn_idx")),
+        Seq("st" -> col("n_tok")), Prefix.Sum, Prefix.ExclusiveRows)
       .select(col("conv_id"), col("turn_idx"), col("is_loss"),
-        st.as("st"), en.as("en"),
+        st, en.as("en"),
         explode(sequence(TDigest.exactDiv(st, lit(seqLen)),
           TDigest.exactDiv(en, lit(seqLen)))).as("seq_id"))
       .select(col("seq_id"), col("conv_id"), col("turn_idx"), col("is_loss"),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -75,44 +74,20 @@ object Corpus {
     * document: its absolute token offset in the stream and the
     * first/last sequence index it lands in.
     *
-    * Scale design — the global prefix-sum is TWO-PHASE, not one giant
-    * window: documents bucket by `floor(id / bucketSize)`; per-bucket
-    * token sums (a few thousand rows at any corpus size with a sane
-    * bucketSize) take the only single-partition window; each document
-    * then gets bucket_offset + within-bucket running sum from a window
-    * partitioned by bucket. The 100 TB failure mode this avoids is
-    * `Window.orderBy(id)` with no partitioning — a single reducer
-    * holding the entire corpus. */
+    * Scale design — the global prefix-sum is a [[Prefix.running]] sum
+    * over `floor(id / bucketSize)` buckets, not one giant window: the
+    * 100 TB failure mode this avoids is `Window.orderBy(id)` with no
+    * partitioning — a single reducer holding the entire corpus. The
+    * bucket-offsets table has |max id| / bucketSize rows, so it is
+    * corpus-derived and joins back sort-merge, never broadcast. */
   def concatChunk(docs: DataFrame, id: Column, nTokens: Column,
       seqLen: Int, bucketSize: Long = 1000L): DataFrame = {
     require(seqLen > 0 && bucketSize > 0)
-    // r16 (guide §2.4): share ONE bucket-keyed exchange between the
-    // in-bucket window and the offsets aggregate — otherwise each
-    // consumer re-derives n_tok over the whole corpus. The in-bucket
-    // prefix runs FIRST (identical values — its window is independent
-    // of the join), the per-bucket total derives from the window's own
-    // output (max(prefix + n_tok) ≡ the bucket sum for the
-    // non-negative token counts this ledger carries), and the
-    // isNotNull matches the join's inferred filter — together both
-    // join inputs are projections of ONE subtree over one exchange,
-    // which AQE materializes once (PlanSpec pins the reuse on the pack
-    // twin; null ids are out of the dense-id contract and never
-    // survive the join either way).
-    val inW = Window.partitionBy(col("__bkt")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = docs.select(id.as("doc_id"), nTokens.cast(LongType).as("n_tok"),
-        floor(id / lit(bucketSize)).cast(LongType).as("__bkt"))
-      .where(col("__bkt").isNotNull)
-      .repartition(col("__bkt"))
-      .withColumn("__cw_in", coalesce(sum(col("n_tok")).over(inW), lit(0L)))
-    val bktW = Window.orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = cum.groupBy(col("__bkt"))
-      .agg(max(col("__cw_in") + col("n_tok")).as("__bkt_tok"))
-      .withColumn("__bkt_off", coalesce(sum(col("__bkt_tok")).over(bktW), lit(0L)))
-      .drop("__bkt_tok")
-    cum.join(broadcast(offsets), Seq("__bkt"))
-      .withColumn("start_tok", col("__bkt_off") + col("__cw_in"))
+    // null ids are out of the dense-id contract and dropped
+    val d = docs.select(id.as("doc_id"), nTokens.cast(LongType).as("n_tok"),
+      floor(id / lit(bucketSize)).cast(LongType).as("__bkt"))
+    Prefix.running(d, Nil, "__bkt", Seq(col("doc_id")), Seq("start_tok" -> col("n_tok")),
+        Prefix.Sum, Prefix.ExclusiveRows)
       .select(col("doc_id"), col("n_tok"), col("start_tok"),
         floor(col("start_tok") / lit(seqLen)).cast(LongType).as("first_seq"),
         floor((col("start_tok") + greatest(col("n_tok"), lit(1L)) - 1) / lit(seqLen))

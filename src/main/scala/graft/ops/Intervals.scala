@@ -105,17 +105,10 @@ object Intervals {
     * contiguous [start, prev-max-end)) — and one hash agg sums the
     * contributions.
     *
-    * HOT-KEY posture (fifteenth-finding bucket form): the running max
-    * of ends is segment-associative — bucket the intervals by
-    * `bucket(start)` (monotone in start, so bucket order refines the
-    * sweep order), run the previous-ends window per (key, bucket), and
-    * carry each bucket's max end through a per-key window over the
-    * per-bucket AGGREGATE rows. The carry joins back to the interval
-    * rows on (key, bucket) — sort-merge pinned, reusing the (k, b)
-    * partitioning the phase-1 window already established — and each
-    * row's true previous max is max(in-bucket prev max, carry-in). Raw
-    * intervals shuffle once; no WindowExec group exceeds one key's
-    * per-bucket rows.
+    * HOT-KEY posture: the running max of previous ends is a
+    * [[Prefix.running]] max over `bucket(start)` (monotone in start,
+    * so bucket order refines the sweep order): no WindowExec group
+    * exceeds one key's per-bucket rows.
     *
     * @param bucket monotone time bucketing of the START (default:
     *   calendar day); size it so one key's intervals per bucket stay
@@ -124,28 +117,13 @@ object Intervals {
   def intervalLengthSum(df: DataFrame, key: Column, start: Column,
                         endCol: Column,
                         bucket: Column => Column = to_date(_)): DataFrame = {
-    val wIn = Window.partitionBy(col("k"), col("b")).orderBy(col("s"), col("e"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // one shared pre-window definition: the carry branch derives from
-    // it (not from the windowed frame), so the per-bucket sort runs
-    // once and the carry's hash agg reuses the same exchange stage
     val base = df.select(key.as("k"), bucket(start).as("b"),
       unix_micros(start).as("s"), unix_micros(endCol).as("e"))
-    val rows = base.withColumn("p_in", max(col("e")).over(wIn))
-    val wB = Window.partitionBy(col("k")).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = base.groupBy(col("k"), col("b")).agg(max(col("e")).as("bmax"))
-      .withColumn("cin", max(col("bmax")).over(wB))
-      .select(col("k"), col("b"), col("cin"))
-    // greatest() evaluates before any subtraction, so the MinValue
-    // sentinel never enters arithmetic — it only loses the comparison
-    val sentinel = lit(Long.MinValue)
-    rows.join(Joins.corpusSide(carry), Seq("k", "b"))
+    // greatest() skips the null "no previous interval"
+    Prefix.running(base, Seq("k"), "b", Seq(col("s"), col("e")),
+        Seq("prev_e" -> col("e")), Prefix.Max, Prefix.ExclusiveRows)
       .select(col("k"),
-        greatest(lit(0L),
-          col("e") - greatest(col("s"),
-            coalesce(col("p_in"), sentinel), coalesce(col("cin"), sentinel)))
-          .as("add"))
+        greatest(lit(0L), col("e") - greatest(col("s"), col("prev_e"))).as("add"))
       .groupBy(col("k"))
       .agg(sum(col("add")).as("covered_us"), count(lit(1)).as("n_intervals"))
   }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -24,10 +23,10 @@ import graft.functions.TextFunctions
   * sum — bit-identical across partitionings and engines, so the whole
   * ledger hash-gates against the oracle.
   *
-  * Scale: the prefix sum is the two-phase bucketed cumulative (the
-  * weightedQuantiles discipline): an in-bucket window per id-bucket
-  * plus a ≤|buckets|-row carry — never a global one-task window over
-  * the corpus. Everything after is per-row arithmetic.
+  * Scale: the prefix sum is a [[Prefix.running]] sum over id buckets
+  * (in-bucket windows plus a ≤|buckets|-row carry), never a global
+  * one-task window over the corpus. Everything after is per-row
+  * arithmetic.
   *
   * Output: (doc_id, n_tok, seq_first, off_first, seq_last, n_seqs)
   * with seq = tokenPos / seqLen, off = tokenPos % seqLen.
@@ -47,35 +46,14 @@ object Packing {
     require(seqLen >= 1, "seqLen must be positive")
     val d = docs.select(id.cast("long").as("doc_id"),
       TextFunctions.tokenCount(text).cast("long").as("n_tok"))
-    // r16 (guide §2.4): share ONE b-keyed exchange between the
-    // in-bucket window and the carry aggregate — otherwise each
-    // consumer re-tokenizes the corpus (see
-    // Conversations.packWithLossMask for the full rationale). The
-    // explicit isNotNull matches the filter the inner join infers
-    // (without it the optimizer pushes that filter below only ONE
-    // branch's exchange, breaking the canonical equality AQE stage
-    // reuse needs; a null id is out of the dense-id contract and never
-    // survives the join either way), and the carry derives from the
-    // WINDOW'S OWN OUTPUT — max(prefix + n_tok) per bucket ≡ the
-    // bucket's token sum for the non-negative token counts this ledger
-    // carries — so both join inputs are projections of one subtree and
-    // column pruning cannot de-duplicate-proof the exchange.
-    val bucketed = d.withColumn("b", floorDiv(col("doc_id"), lit(bucketWidth)))
-      .where(col("b").isNotNull)
-      .repartition(col("b"))
-    val inB = Window.partitionBy(col("b")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val inBucket = bucketed
-      .withColumn("cw_in", coalesce(sum(col("n_tok")).over(inB), lit(0L)))
-    val perB = inBucket.groupBy(col("b"))
-      .agg(max(col("cw_in") + col("n_tok")).as("net"))
-    val carryW = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB
-      .select(col("b"), coalesce(sum(col("net")).over(carryW), lit(0L)).as("cin"))
-    val st = col("cw_in") + col("cin")
+    // the one shared exchange keeps the corpus tokenization to one pass
+    // (PlanSpec pins the reuse); a null id is out of the dense-id
+    // contract and dropped
+    val st = col("st")
     val en = st + col("n_tok") - 1
-    inBucket.join(Joins.corpusSide(carry), "b")
+    Prefix.running(d.withColumn("b", floorDiv(col("doc_id"), lit(bucketWidth))),
+        Nil, "b", Seq(col("doc_id")), Seq("st" -> col("n_tok")),
+        Prefix.Sum, Prefix.ExclusiveRows)
       .select(col("doc_id"), col("n_tok"),
         floorDiv(st, lit(seqLen)).as("seq_first"),
         pmod(st, lit(seqLen)).as("off_first"),

@@ -361,26 +361,19 @@ SELECT doc_id, q_micros, n_tok, start_tok, (start_tok < $budgetTokens) AS kept F
     * lands in — the "shuffle the corpus, write N ordered shards" step
     * that precedes sequence packing in a training-data build.
     *
-    * Scale: the global order NEVER takes a corpus-wide window — hash
-    * buckets give per-bucket ranks (window partitioned by bucket) and
-    * the bucket offsets come from a bucket-count table (nBuckets rows,
-    * broadcast back). Same two-phase shape as [[Corpus.concatChunk]];
-    * at 100 TB the bucket count rises with the cluster, not the data. */
+    * Scale: the global order NEVER takes a corpus-wide window — the
+    * position is a [[Prefix.running]] count over hash buckets, the same
+    * two-phase shape as [[Corpus.concatChunk]]; at 100 TB the bucket
+    * count rises with the cluster, not the data. */
   def shuffleOrder(docs: DataFrame, id: Column, seed: String = "s0",
       nBuckets: Int = 4096, docsPerShard: Long = 100L): DataFrame = {
     require(nBuckets > 0 && docsPerShard > 0)
     val h = TextFunctions.md5Long(concat(lit(s"sh:$seed:"), id.cast("string")))
     val t = docs.select(id.as("doc_id"), h.as("__hkey"),
       pmod(h, lit(nBuckets.toLong)).as("__bkt"))
-    val bktW = Window.orderBy(col("__bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = t.groupBy(col("__bkt")).agg(count(lit(1)).as("__n"))
-      .withColumn("__off", coalesce(sum(col("__n")).over(bktW), lit(0L)))
-      .drop("__n")
-    val inW = Window.partitionBy(col("__bkt")).orderBy(col("__hkey"), col("doc_id"))
-    t.join(broadcast(offsets), Seq("__bkt"))
-      .withColumn("pos", col("__off") + row_number().over(inW) - 1)
-      .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
+    Prefix.running(t, Nil, "__bkt", Seq(col("__hkey"), col("doc_id")),
+        Seq("pos" -> lit(1L)), Prefix.Sum, Prefix.ExclusiveRows)
+      .select(col("doc_id"), col("pos"),
         floor(col("pos") / lit(docsPerShard)).cast(LongType).as("shard"))
   }
 

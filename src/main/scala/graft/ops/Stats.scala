@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -206,9 +205,8 @@ FROM m"""
 
   /** Shared phase for the rank tests: the distinct-value table
     * (v, c_a, c_t) with BUCKETED cumulative totals — cw_t (both arms)
-    * and cw_a (arm A) inclusive of the current value. Identical shape
-    * to weightedQuantilesFromWeights: per-bucket running sums + a
-    * |buckets|-row carry window, one corpus shuffle, no global window. */
+    * and cw_a (arm A) inclusive of the current value: a
+    * [[Prefix.running]] sum over value buckets, no global window. */
   private def cumCounts(df: DataFrame, isA: Column, v: Column,
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
@@ -216,24 +214,10 @@ FROM m"""
       .groupBy(col("v"))
       .agg(sum(when(col("ga"), 1L).otherwise(0L)).as("c_a"),
         count(lit(1)).as("c_t"))
-    val bucketed = byV.select(floorDiv(col("v"), lit(bucketWidth)).as("b"),
-      col("v"), col("c_a"), col("c_t"))
-    val inB = Window.partitionBy(col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = bucketed
-      .withColumn("cwa_in", sum(col("c_a")).over(inB))
-      .withColumn("cwt_in", sum(col("c_t")).over(inB))
-    val perB = bucketed.groupBy(col("b"))
-      .agg(sum(col("c_a")).as("net_a"), sum(col("c_t")).as("net_t"))
-    val carryW = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB.select(col("b"),
-      coalesce(sum(col("net_a")).over(carryW), lit(0L)).as("cin_a"),
-      coalesce(sum(col("net_t")).over(carryW), lit(0L)).as("cin_t"))
-    inBucket.join(Joins.corpusSide(carry), "b")
-      .select(col("v"), col("c_a"), col("c_t"),
-        (col("cwa_in") + col("cin_a")).as("cw_a"),
-        (col("cwt_in") + col("cin_t")).as("cw_t"))
+    Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
+        Nil, "b", Seq(col("v")), Seq("cw_a" -> col("c_a"), "cw_t" -> col("c_t")),
+        Prefix.Sum, Prefix.InclusiveRows)
+      .select(col("v"), col("c_a"), col("c_t"), col("cw_a"), col("cw_t"))
   }
 
   /** ClickHouse `mannWhitneyUTest(v, arm)` analog: exact U statistics
@@ -812,9 +796,8 @@ FROM m"""
     * RATIONAL arithmetic (den·v < den·q1 − num·IQR), so no float ever
     * enters the classification.
     *
-    * Plan: the per-(key, value-bucket) two-phase cumulative (windows
-    * partition by (k, b); the carry partitions by k over BUCKET
-    * aggregates — the fifteenth-finding form), a category-bounded
+    * Plan: the per-key cumulative count is a [[Prefix.running]] sum
+    * over (key, value-bucket) windows, then a category-bounded
     * quartile table broadcast back, one summary hash agg.
     *
     * Output: (k, q1, q3 BIGINT, n_low, n_high BIGINT). */
@@ -825,18 +808,8 @@ FROM m"""
     require(bucketWidth > 0, "bucketWidth must be positive")
     val byV = df.select(key.as("k"), v.as("v"))
       .groupBy(col("k"), col("v")).agg(count(lit(1)).as("c"))
-    val bucketed = byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth)))
-    val inB = Window.partitionBy(col("k"), col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = bucketed.withColumn("cw_in", sum(col("c")).over(inB))
-    val perB = bucketed.groupBy(col("k"), col("b")).agg(sum(col("c")).as("net"))
-    val carryW = Window.partitionBy(col("k")).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB.select(col("k"), col("b"),
-      coalesce(sum(col("net")).over(carryW), lit(0L)).as("cin"))
-    val cum = inBucket.join(Joins.corpusSide(carry), Seq("k", "b"))
-      .select(col("k"), col("v"), col("c"),
-        (col("cw_in") + col("cin")).as("cw"))
+    val cum = Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
+      Seq("k"), "b", Seq(col("v")), Seq("cw" -> col("c")), Prefix.Sum, Prefix.InclusiveRows)
     val tot = byV.groupBy(col("k")).agg(sum(col("c")).as("tw"))
     val quants = cum.join(broadcast(tot), "k")
       .groupBy(col("k"))

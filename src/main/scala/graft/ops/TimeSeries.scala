@@ -273,21 +273,51 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
     * (u, matched BOOLEAN). */
   def sequenceMatchUsers(events: DataFrame, user: Column, ts: Column,
                          conds: Seq[Column]): DataFrame = {
-    require(conds.nonEmpty, "sequenceMatch needs at least one condition")
-    val e = events.select(Seq(user.as("u"), ts.as("ts")) ++
-      conds.zipWithIndex.map { case (p, i) => p.as(s"is_c${i + 1}") }: _*)
-    val universe = e.filter(conds.indices.map(i => col(s"is_c${i + 1}"))
-      .reduce(_ || _)).select(col("u")).distinct()
+    val (e, universe) = conditioned(events, user, ts.as("ts"), conds)
     var cur = e.filter(col("is_c1")).groupBy(col("u")).agg(min(col("ts")).as("t1"))
     for (k <- 2 to conds.size)
       // the survivor set is user-cardinality — corpus-derived, pinned
       cur = e.filter(col(s"is_c$k")).join(Joins.corpusSide(cur), "u")
         .filter(col("ts") > col(s"t${k - 1}"))
         .groupBy(col("u")).agg(min(col("ts")).as(s"t$k"))
-    universe.join(
-      Joins.corpusSide(cur.select(col("u"), lit(true).as("matched"))),
+    flagMatched(universe, cur.select(col("u")))
+  }
+
+  /** The sequenceMatch prologue: (u, ts, is_c1 … is_cn) rows, and the
+    * universe of users holding any condition event. */
+  private def conditioned(events: DataFrame, user: Column, ts: Column,
+      conds: Seq[Column]): (DataFrame, DataFrame) = {
+    require(conds.nonEmpty, "sequenceMatch needs at least one condition")
+    val e = events.select(Seq(user.as("u"), ts) ++
+      conds.zipWithIndex.map { case (p, i) => p.as(s"is_c${i + 1}") }: _*)
+    (e, e.filter(conds.indices.map(i => col(s"is_c${i + 1}")).reduce(_ || _))
+      .select(col("u")).distinct())
+  }
+
+  /** (u, matched) over the universe: true iff u is among `matched`'s
+    * (distinct) users. The matched set is user-cardinality — pinned. */
+  private def flagMatched(universe: DataFrame, matched: DataFrame): DataFrame =
+    universe.join(Joins.corpusSide(matched.withColumn("matched", lit(true))),
       Seq("u"), "left")
       .select(col("u"), coalesce(col("matched"), lit(false)).as("matched"))
+
+  /** One step of the viable-set DP. `rows` are this step's (u, tu,
+    * role) events, role 2 marking the condₖ ones. Each role-2 row gets
+    * `pm`, the latest `viable` time strictly before it, and `la`, the
+    * latest `rows` time strictly before it (null when none; the gap
+    * step reads only `pm`): one
+    * [[Prefix]] running max per (user, time bucket), so no per-user
+    * raw-event window survives a hot user. RANGE … 1 PRECEDING keeps
+    * the strict tu < t bound through ties. */
+  private def stepMaxima(viable: DataFrame, rows: DataFrame,
+      bucketUs: Long): DataFrame = {
+    val all = viable.select(col("u"), col("tu"), lit(0).as("role")).unionByName(rows)
+    Prefix.running(all.withColumn("b", floorDiv(col("tu"), lit(bucketUs))),
+        Seq("u"), "b", Seq(col("tu")),
+        Seq("pm" -> when(col("role") === 0, col("tu")),
+          "la" -> when(col("role") =!= 0, col("tu"))),
+        Prefix.Max, Prefix.ExclusiveRange)
+      .filter(col("role") === 2)
   }
 
   /** ClickHouse `sequenceMatch('(?1)(?t<gap)(?2)(?t<gap)(?3)…')`
@@ -299,57 +329,23 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
     * complete form is a per-step viable-SET dynamic program: S₁ = all
     * cond₁ events; Sₖ = condₖ events t with some Sₖ₋₁ event in
     * (t − gap, t) — equivalently max{Sₖ₋₁ ts < t} > t − gap, a
-    * running strict-max. A user matches iff Sₙ is non-empty. The
-    * running max is segment-associative, so each step runs the
-    * two-phase bucketed form: a RANGE window per (user, time bucket)
-    * (RANGE … 1 PRECEDING enforces the strict tu < t bound through
-    * ties) plus a per-user prefix-max carry over BUCKET aggregates —
-    * no per-user raw-event window survives a hot user (the
-    * fifteenth-finding treatment).
+    * running strict-max. A user matches iff Sₙ is non-empty. Each step
+    * runs it per (user, time bucket) (see `stepMaxima`).
     *
     * Output: one row per user holding any condition event —
     * (u, matched BOOLEAN). */
   def sequenceMatchGapUsers(events: DataFrame, user: Column, ts: Column,
       conds: Seq[Column], gapUs: Long,
       bucketUs: Long = 3600000000L): DataFrame = {
-    require(conds.nonEmpty, "sequenceMatch needs at least one condition")
     require(gapUs > 0 && bucketUs > 0, "gap and bucket must be positive")
-    val e = events.select(Seq(user.as("u"),
-      unix_micros(ts).as("tu")) ++
-      conds.zipWithIndex.map { case (p, i) => p.as(s"is_c${i + 1}") }: _*)
-    val universe = e.filter(conds.indices.map(i => col(s"is_c${i + 1}"))
-      .reduce(_ || _)).select(col("u")).distinct()
+    val (e, universe) = conditioned(events, user, unix_micros(ts).as("tu"), conds)
     var viable = e.filter(col("is_c1")).select(col("u"), col("tu"))
-    for (k <- 2 to conds.size) {
-      val cur = e.filter(col(s"is_c$k")).select(col("u"), col("tu"))
-      val combined = viable.select(col("u"), col("tu"), lit(false).as("is_cur"))
-        .unionByName(cur.select(col("u"), col("tu"), lit(true).as("is_cur")))
-        .withColumn("b", ((col("tu") - pmod(col("tu"), lit(bucketUs))) /
-          lit(bucketUs)).cast("long"))
-      val inB = Window.partitionBy(col("u"), col("b")).orderBy(col("tu"))
-        .rangeBetween(Window.unboundedPreceding, -1)
-      val withIn = combined.withColumn("pm_in",
-        max(when(!col("is_cur"), col("tu"))).over(inB))
-      // one row per ACTIVE bucket (cur or prev) so a cur-only bucket
-      // still receives the carry from earlier prev buckets; max()
-      // skips the null bmax of prev-free buckets
-      val perB = combined.groupBy(col("u"), col("b"))
-        .agg(max(when(!col("is_cur"), col("tu"))).as("bmax"))
-      val carryW = Window.partitionBy(col("u")).orderBy(col("b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val carry = perB.select(col("u"), col("b"),
-        max(col("bmax")).over(carryW).as("pm_carry"))
-      val joined = withIn.join(Joins.corpusSide(carry), Seq("u", "b"), "left")
-      viable = joined.filter(col("is_cur"))
-        .withColumn("pm", greatest(col("pm_in"), col("pm_carry")))
+    for (k <- 2 to conds.size)
+      viable = stepMaxima(viable,
+        e.filter(col(s"is_c$k")).select(col("u"), col("tu"), lit(2).as("role")), bucketUs)
         .filter(col("pm").isNotNull && col("pm") > col("tu") - lit(gapUs))
         .select(col("u"), col("tu"))
-    }
-    universe.join(
-      Joins.corpusSide(viable.select(col("u")).distinct()
-        .withColumn("matched", lit(true))),
-      Seq("u"), "left")
-      .select(col("u"), coalesce(col("matched"), lit(false)).as("matched"))
+    flagMatched(universe, viable.select(col("u")).distinct())
   }
 
   /** ClickHouse `windowFunnel(... 'strict_order')` / strict-order
@@ -363,9 +359,8 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
     * incomplete here too), with the break test reduced to a value
     * identity: for a condₖ event at t, let P = max viable Sₖ₋₁ time
     * < t and L = max ANY-event time < t (L ≥ P always). The step is
-    * interposer-free iff P = L. L is per-event static, computed ONCE
-    * with the two-phase bucketed running max; each step then only
-    * recomputes P over its shrinking viable set. Ties: events sharing
+    * interposer-free iff P = L; each step computes both in one running
+    * max over its viable set and all events. Ties: events sharing
     * a timestamp are mutually unordered, so neither breaks the other
     * (time-granularity contract).
     *
@@ -374,56 +369,15 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
   def sequenceMatchStrictOrderUsers(events: DataFrame, user: Column,
       ts: Column, conds: Seq[Column],
       bucketUs: Long = 3600000000L): DataFrame = {
-    require(conds.nonEmpty, "sequenceMatch needs at least one condition")
     require(bucketUs > 0, "bucket must be positive")
-    val e = events.select(Seq(user.as("u"),
-      unix_micros(ts).as("tu")) ++
-      conds.zipWithIndex.map { case (p, i) => p.as(s"is_c${i + 1}") }: _*)
-    val universe = e.filter(conds.indices.map(i => col(s"is_c${i + 1}"))
-      .reduce(_ || _)).select(col("u")).distinct()
-    def bucketed(df: DataFrame): DataFrame =
-      df.withColumn("b", ((col("tu") - pmod(col("tu"), lit(bucketUs))) /
-        lit(bucketUs)).cast("long"))
-    // L: latest any-event time strictly before each row, two-phase
-    val eb = bucketed(e)
-    val inBAll = Window.partitionBy(col("u"), col("b")).orderBy(col("tu"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val carryWAll = Window.partitionBy(col("u")).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val perBAll = eb.groupBy(col("u"), col("b")).agg(max(col("tu")).as("bmax"))
-    val carryAll = perBAll.select(col("u"), col("b"),
-      max(col("bmax")).over(carryWAll).as("la_carry"))
-    val base = eb.withColumn("la_in", max(col("tu")).over(inBAll))
-      .join(Joins.corpusSide(carryAll), Seq("u", "b"), "left")
-      .withColumn("la", greatest(col("la_in"), col("la_carry")))
-    var viable = base.filter(col("is_c1")).select(col("u"), col("tu"))
-    for (k <- 2 to conds.size) {
-      val cur = base.filter(col(s"is_c$k")).select(col("u"), col("tu"), col("la"))
-      val combined = bucketed(
-        viable.select(col("u"), col("tu"), lit(null).cast("long").as("la"),
-            lit(false).as("is_cur"))
-          .unionByName(cur.withColumn("is_cur", lit(true))))
-      val inB = Window.partitionBy(col("u"), col("b")).orderBy(col("tu"))
-        .rangeBetween(Window.unboundedPreceding, -1)
-      val withIn = combined.withColumn("pm_in",
-        max(when(!col("is_cur"), col("tu"))).over(inB))
-      val perB = combined.groupBy(col("u"), col("b"))
-        .agg(max(when(!col("is_cur"), col("tu"))).as("bmax"))
-      val carryW = Window.partitionBy(col("u")).orderBy(col("b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val carry = perB.select(col("u"), col("b"),
-        max(col("bmax")).over(carryW).as("pm_carry"))
-      viable = withIn.join(Joins.corpusSide(carry), Seq("u", "b"), "left")
-        .filter(col("is_cur"))
-        .withColumn("pm", greatest(col("pm_in"), col("pm_carry")))
+    val (e, universe) = conditioned(events, user, unix_micros(ts).as("tu"), conds)
+    var viable = e.filter(col("is_c1")).select(col("u"), col("tu"))
+    for (k <- 2 to conds.size)
+      viable = stepMaxima(viable, e.select(col("u"), col("tu"),
+          when(col(s"is_c$k"), 2).otherwise(1).as("role")), bucketUs)
         .filter(col("pm").isNotNull && col("pm") === col("la"))
         .select(col("u"), col("tu"))
-    }
-    universe.join(
-      Joins.corpusSide(viable.select(col("u")).distinct()
-        .withColumn("matched", lit(true))),
-      Seq("u"), "left")
-      .select(col("u"), coalesce(col("matched"), lit(false)).as("matched"))
+    flagMatched(universe, viable.select(col("u")).distinct())
   }
 
   /** DuckDB replica of a 3-condition [[sequenceMatchStrictOrderUsers]]
@@ -649,18 +603,13 @@ SELECT u, CAST(sum(CASE WHEN isb AND pisb = FALSE THEN 1 ELSE 0 END) AS BIGINT) 
     * a `Window.orderBy(v)` with no partitionBy would be a one-task sort
     * of the corpus — the shape SCALE.md's fourteenth/fifteenth findings
     * eliminated everywhere else):
-    *  1. one hash agg per distinct value (map-side combinable), then
-    *     the cumulative weight runs INSIDE each value bucket
-    *     `floorDiv(v, bucketWidth)` — bucket-partitioned sort,
-    *     parallel, groups sized by the bucket-width dial;
-    *  2. per-bucket net weights carry through a |non-empty buckets|-row
-    *     window (the [[Intervals.maxIntersections]] carry form), and
-    *     the global cumulative weight is in-bucket cum + carry-in,
-    *     joined back on the bucket key (sort-merge pinned: the carry
-    *     table is corpus-derived — one row per non-empty bucket).
+    *  1. one hash agg per distinct value (map-side combinable);
+    *  2. the cumulative weight is a [[Prefix.running]] sum over value
+    *     buckets `floorDiv(v, bucketWidth)`: bucket-partitioned windows
+    *     plus a |non-empty buckets|-row carry joined back.
     * Then the q-literal table broadcasts and a min-per-q agg finishes.
-    * The raw data is touched exactly once; the only single-partition
-    * window runs on the bucket-cardinality table.
+    * The only single-partition window runs on the bucket-cardinality
+    * table.
     *
     * @param bucketWidth width of a value bucket — the GROUP-memory dial
     *   (WindowExec buffers each bucket's distinct values; size it so
@@ -681,35 +630,27 @@ SELECT u, CAST(sum(CASE WHEN isb AND pisb = FALSE THEN 1 ELSE 0 END) AS BIGINT) 
                                    bucketWidth: Long = 1L << 20): DataFrame = {
     require(qs.nonEmpty && qs.forall { case (n, d) => d > 0 && n >= 0 && n <= d },
       "quantiles must be rationals in [0,1]")
-    require(bucketWidth > 0, "bucketWidth must be positive")
     val spark = byV.sparkSession
     import spark.implicits._
-    // one shared definition of the bucketed distinct-value table: the
-    // window branch, the carry branch and the total all hang off it,
-    // so the three identical scan+aggregate exchange stages dedupe at
-    // runtime (AQE stage reuse) — and, critically, the carry/total
-    // branches never touch the window, so the bucket sort runs ONCE
-    // (the first cut derived the carry from the windowed frame and
-    // paid a second full sort of the distinct-value table)
-    val bucketed = byV
-      .select(floorDiv(col("v"), lit(bucketWidth)).as("b"), col("v"), col("w"))
-    val inB = Window.partitionBy(col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = bucketed.withColumn("cw_in", sum(col("w")).over(inB))
-    val perB = bucketed.groupBy(col("b")).agg(sum(col("w")).as("net"))
-    val carryW = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB
-      .select(col("b"), coalesce(sum(col("net")).over(carryW), lit(0L)).as("cin"))
-    val cum = inBucket.join(Joins.corpusSide(carry), "b")
-      .select(col("v"), (col("cw_in") + col("cin")).as("cw"))
-    // W = Σ net over the |buckets|-row table — never a fourth corpus agg
-    val tot = perB.agg(sum(col("net")).as("tw"))
+    val (cum, tot) = cumulativeWeights(byV, Nil, bucketWidth)
     val qdf = qs.toDF("q_num", "q_den")
     cum.crossJoin(broadcast(tot)).crossJoin(broadcast(qdf))
       .filter(col("cw") * col("q_den") >= col("q_num") * col("tw"))
       .groupBy(col("q_num"), col("q_den"))
       .agg(min(col("v")).as("value"))
+  }
+
+  /** The cumulative weight `cw` of each (keys…, v, w) distinct-value
+    * row, inclusive of v, per key — a [[Prefix]] running sum over
+    * value buckets `floorDiv(v, bucketWidth)` — and the per-key total
+    * weight `tw`. */
+  private def cumulativeWeights(byV: DataFrame, keys: Seq[String],
+      bucketWidth: Long): (DataFrame, DataFrame) = {
+    require(bucketWidth > 0, "bucketWidth must be positive")
+    val cum = Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
+      keys, "b", Seq(col("v")), Seq("cw" -> col("w")), Prefix.Sum, Prefix.InclusiveRows)
+    (cum.select((keys :+ "v" :+ "cw").map(col): _*),
+      byV.groupBy(keys.map(col): _*).agg(sum(col("w")).as("tw")))
   }
 
   /** DuckDB replica of [[weightedQuantiles]] over events with
@@ -768,24 +709,18 @@ SELECT q_num, q_den, min(v) AS value FROM cum, tot, q WHERE cw * q_den >= q_num 
     * SummingStore parts as q_weighted_quantile_inc serve this read). */
   def interpolatedQuantilesFromWeights(byV: DataFrame,
       qs: Seq[(Int, Int)], exclusive: Boolean = false,
-      bucketWidth: Long = 1L << 20): DataFrame = {
+      bucketWidth: Long = 1L << 20): DataFrame =
+    interpolated(byV, Nil, qs, exclusive, bucketWidth)
+
+  /** The interpolated family per key over a (keys…, v, w) weight
+    * table: output (keys…, q_num, q_den, value). */
+  private def interpolated(byV: DataFrame, keys: Seq[String],
+      qs: Seq[(Int, Int)], exclusive: Boolean, bucketWidth: Long): DataFrame = {
     require(qs.nonEmpty && qs.forall { case (n, d) => d > 0 && n >= 0 && n <= d },
       "quantiles must be rationals in [0,1]")
     val spark = byV.sparkSession
     import spark.implicits._
-    val bucketed = byV
-      .select(floorDiv(col("v"), lit(bucketWidth)).as("b"), col("v"), col("w"))
-    val inB = Window.partitionBy(col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = bucketed.withColumn("cw_in", sum(col("w")).over(inB))
-    val perB = bucketed.groupBy(col("b")).agg(sum(col("w")).as("net"))
-    val carryW = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB
-      .select(col("b"), coalesce(sum(col("net")).over(carryW), lit(0L)).as("cin"))
-    val cum = inBucket.join(Joins.corpusSide(carry), "b")
-      .select(col("v"), (col("cw_in") + col("cin")).as("cw"))
-    val tot = perB.agg(sum(col("net")).as("tw"))
+    val (cum, tot) = cumulativeWeights(byV, keys, bucketWidth)
     val qdf = qs.flatMap { case (n, d) => Seq((n, d, 0), (n, d, 1)) }
       .toDF("q_num", "q_den", "o")
     val n = col("tw")
@@ -793,75 +728,39 @@ SELECT q_num, q_den, min(v) AS value FROM cum, tot, q WHERE cw * q_den >= q_num 
       if (exclusive) (n + lit(1L)) * col("q_num") - col("q_den")
       else (n - lit(1L)) * col("q_num")
     val hn = greatest(lit(0L), least(hraw, (n - lit(1L)) * col("q_den")))
-    val probed = cum.crossJoin(broadcast(tot)).crossJoin(broadcast(qdf))
+    val withTot =
+      if (keys.isEmpty) cum.crossJoin(broadcast(tot)) else cum.join(broadcast(tot), keys)
+    val group = keys.map(col) ++ Seq(col("q_num"), col("q_den"))
+    withTot.crossJoin(broadcast(qdf))
       .withColumn("hn", hn)
       .withColumn("hf", floorDiv(col("hn"), col("q_den")))
       .withColumn("rem", pmod(col("hn"), col("q_den")))
       .filter(col("cw") >= col("hf") + lit(1L) + col("o"))
-      .groupBy(col("q_num"), col("q_den"))
+      .groupBy(group: _*)
       .agg(min(when(col("o") === 0, col("v"))).as("v_lo"),
         min(when(col("o") === 1, col("v"))).as("v_hi"),
         max(col("rem")).as("rem"))
-    probed.select(col("q_num"), col("q_den"),
-      (floor((col("v_lo").cast("double") +
-        col("rem").cast("double") / col("q_den").cast("double") *
-          (coalesce(col("v_hi"), col("v_lo")).cast("double") -
-            col("v_lo").cast("double"))) * lit(1e6) + lit(0.5)) / lit(1e6))
-        .as("value"))
-  }
-
-  /** GROUPED [[interpolatedQuantiles]] — `quantileExactInclusive(v)
-    * ... GROUP BY key`, the per-segment dashboard form. Same exact
-    * rational ranks and interpolation, with the cumulative running per
-    * (key, value-bucket) — the [[graft.ops.Stats.tukeyOutliers]]
-    * keyed two-phase discipline, so a hot key's windows stay at
-    * bucket granularity. The per-key totals and the quantile spec
-    * broadcast (|keys| and |qs|·2 rows — the same bounded-side
-    * posture as tukey's fence join). */
-  def interpolatedQuantilesBy(df: DataFrame, key: Column, value: Column,
-      qs: Seq[(Int, Int)], exclusive: Boolean = false,
-      bucketWidth: Long = 1L << 20): DataFrame = {
-    require(qs.nonEmpty && qs.forall { case (n, d) => d > 0 && n >= 0 && n <= d },
-      "quantiles must be rationals in [0,1]")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val byV = df.select(key.as("k"), value.as("v"))
-      .groupBy(col("k"), col("v")).agg(count(lit(1)).as("w"))
-    val bucketed = byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth)))
-    val inB = Window.partitionBy(col("k"), col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = bucketed.withColumn("cw_in", sum(col("w")).over(inB))
-    val perB = bucketed.groupBy(col("k"), col("b")).agg(sum(col("w")).as("net"))
-    val carryW = Window.partitionBy(col("k")).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB.select(col("k"), col("b"),
-      coalesce(sum(col("net")).over(carryW), lit(0L)).as("cin"))
-    val cum = inBucket.join(Joins.corpusSide(carry), Seq("k", "b"))
-      .select(col("k"), col("v"), (col("cw_in") + col("cin")).as("cw"))
-    val tot = perB.groupBy(col("k")).agg(sum(col("net")).as("tw"))
-    val qdf = qs.flatMap { case (n, d) => Seq((n, d, 0), (n, d, 1)) }
-      .toDF("q_num", "q_den", "o")
-    val n = col("tw")
-    val hraw =
-      if (exclusive) (n + lit(1L)) * col("q_num") - col("q_den")
-      else (n - lit(1L)) * col("q_num")
-    val hn = greatest(lit(0L), least(hraw, (n - lit(1L)) * col("q_den")))
-    cum.join(broadcast(tot), "k").crossJoin(broadcast(qdf))
-      .withColumn("hn", hn)
-      .withColumn("hf", floorDiv(col("hn"), col("q_den")))
-      .withColumn("rem", pmod(col("hn"), col("q_den")))
-      .filter(col("cw") >= col("hf") + lit(1L) + col("o"))
-      .groupBy(col("k"), col("q_num"), col("q_den"))
-      .agg(min(when(col("o") === 0, col("v"))).as("v_lo"),
-        min(when(col("o") === 1, col("v"))).as("v_hi"),
-        max(col("rem")).as("rem"))
-      .select(col("k"), col("q_num"), col("q_den"),
+      .select(group :+
         (floor((col("v_lo").cast("double") +
           col("rem").cast("double") / col("q_den").cast("double") *
             (coalesce(col("v_hi"), col("v_lo")).cast("double") -
               col("v_lo").cast("double"))) * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("value"))
+          .as("value"): _*)
   }
+
+  /** GROUPED [[interpolatedQuantiles]] — `quantileExactInclusive(v)
+    * ... GROUP BY key`, the per-segment dashboard form. Same exact
+    * rational ranks and interpolation, with the cumulative a keyed
+    * [[Prefix.running]] sum, so a hot key's windows stay at bucket
+    * granularity. The per-key totals and the quantile spec
+    * broadcast (|keys| and |qs|·2 rows — the same bounded-side
+    * posture as tukey's fence join). */
+  def interpolatedQuantilesBy(df: DataFrame, key: Column, value: Column,
+      qs: Seq[(Int, Int)], exclusive: Boolean = false,
+      bucketWidth: Long = 1L << 20): DataFrame =
+    interpolated(df.select(key.as("k"), value.as("v"))
+      .groupBy(col("k"), col("v")).agg(count(lit(1)).as("w")),
+      Seq("k"), qs, exclusive, bucketWidth)
 
   /** DuckDB replica of [[interpolatedQuantilesBy]] over events by
     * event_type on the µ-value. */

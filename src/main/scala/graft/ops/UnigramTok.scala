@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 
@@ -76,21 +77,6 @@ object UnigramTok {
 
   // ------------------------------------------------------------ local tier
 
-  /** Bpe.utf8Less twin (Spark/DuckDB ORDER BY compare unsigned UTF-8
-    * bytes; Java String.compareTo compares UTF-16 units). */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
   /** The shared DP; returns the segmentation (order irrelevant to the
     * counting callers). Coverage: single chars are never pruned, so a
     * candidate exists at every position. */
@@ -151,7 +137,9 @@ object UnigramTok {
     def topMulti(m: collection.Map[String, Long], n: Int): Array[(String, Long)] =
       m.iterator.filter(_._1.length >= 2).toArray
         .sortWith { case ((pa, ca), (pb, cb)) =>
-          if (ca != cb) ca > cb else utf8Less(pa, pb)
+          // ties by unsigned UTF-8 bytes, the engines' ORDER BY
+          if (ca != cb) ca > cb
+          else UTF8String.fromString(pa).compareTo(UTF8String.fromString(pb)) < 0
         }.take(math.max(0, n))
     var vocab: collection.Map[String, Long] =
       (chars.map(c => c -> cnt(c)) ++ topMulti(cnt, seedSize)).toMap

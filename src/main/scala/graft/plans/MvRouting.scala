@@ -88,24 +88,9 @@ case class MvRouting(spark: SparkSession, factPath: String, rollupPath: String,
   private def isFactScan(plan: LogicalPlan): Boolean = plan match {
     case p: org.apache.spark.sql.catalyst.plans.logical.Project => isFactScan(p.child)
     case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias => isFactScan(s.child)
-    case LogicalRelation(fsRel: HadoopFsRelation, _, _, _, _) => pathMatches(fsRel)
+    case LogicalRelation(fsRel: HadoopFsRelation, _, _, _, _) =>
+      MvRouting.pathMatches(spark, factPath, fsRel)
     case _ => false
-  }
-
-  /** Exact/child path equality against factPath (String.contains would
-    * also match /data/fact_archive or /data/fact-copy). factPath is
-    * qualified against its filesystem first, so a RELATIVE factPath
-    * still matches the relation's absolute root paths instead of
-    * silently never routing. */
-  private def pathMatches(fsRel: HadoopFsRelation): Boolean = {
-    val raw = new org.apache.hadoop.fs.Path(factPath)
-    val target = raw
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(raw).toUri.getPath
-    fsRel.location.rootPaths.exists { p =>
-      val rp = p.toUri.getPath
-      rp == target || rp.startsWith(target + "/")
-    }
   }
 
   private def rollupPlan(): LogicalPlan =
@@ -235,6 +220,26 @@ case class MvRouting(spark: SparkSession, factPath: String, rollupPath: String,
         logInfo(s"MvRouting: rewriting $mvGranularity-grained aggregate onto $rollupPath")
         Aggregate(mappedG.map(_.get), mappedA.map(_.get), mv, hint)
       } else agg
+  }
+}
+
+object MvRouting {
+
+  /** Exact/child path equality against factPath (String.contains would
+    * also match /data/fact_archive or /data/fact-copy). factPath is
+    * qualified against its filesystem first, so a RELATIVE factPath
+    * still matches the relation's absolute root paths instead of
+    * silently never routing. [[ProjectionRouting]] uses it too. */
+  private[plans] def pathMatches(spark: SparkSession, factPath: String,
+      fsRel: HadoopFsRelation): Boolean = {
+    val raw = new org.apache.hadoop.fs.Path(factPath)
+    val target = raw
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(raw).toUri.getPath
+    fsRel.location.rootPaths.exists { p =>
+      val rp = p.toUri.getPath
+      rp == target || rp.startsWith(target + "/")
+    }
   }
 }
 

@@ -53,21 +53,9 @@ case class ProjectionRouting(spark: SparkSession, factPath: String,
     case p: Project if p.projectList.forall(_.isInstanceOf[AttributeReference]) =>
       isFactScan(p.child)
     case s: SubqueryAlias => isFactScan(s.child)
-    case LogicalRelation(fsRel: HadoopFsRelation, _, _, _, _) => pathMatches(fsRel)
+    case LogicalRelation(fsRel: HadoopFsRelation, _, _, _, _) =>
+      MvRouting.pathMatches(spark, factPath, fsRel)
     case _ => false
-  }
-
-  /** The [[MvRouting]] path test: exact/child equality, factPath
-    * qualified first so relative paths still match. */
-  private def pathMatches(fsRel: HadoopFsRelation): Boolean = {
-    val raw = new org.apache.hadoop.fs.Path(factPath)
-    val target = raw
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(raw).toUri.getPath
-    fsRel.location.rootPaths.exists { p =>
-      val rp = p.toUri.getPath
-      rp == target || rp.startsWith(target + "/")
-    }
   }
 
   /** Literal → Double bound, rounded OUTWARD in the caller's direction

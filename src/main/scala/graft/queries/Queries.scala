@@ -1287,8 +1287,8 @@ SELECT p.event_id, interval_id, ts_us, start_us, end_us FROM p JOIN iv ON ts_us 
 
     // Concat-and-chunk sequence packing (pretraining layout): absolute
     // token offsets + sequence spans per document via a TWO-PHASE
-    // distributed prefix sum (per-bucket offsets broadcast, never a
-    // global single-partition window over the corpus).
+    // distributed prefix sum (per-bucket offsets joined back sort-merge,
+    // never a global single-partition window over the corpus).
     GraftQuery("q_seq_pack",
       (s, dir) => Corpus.concatChunk(docs(s, dir), col("doc_id"),
         TextFunctions.tokenCount(col("text")), seqLen = 512, bucketSize = 100),

@@ -434,12 +434,12 @@ object Ann {
     * per-cluster window: a cluster holds ~corpus/k rows, so a
     * WindowExec group there grows with the corpus (the exact hazard
     * the round-14 heap migration killed in the top-k paths — but this
-    * operator ranks EVERY row, so the fix is the two-phase bucketed
-    * cumulative instead: an in-(cluster × cos-bucket) window whose
+    * operator ranks EVERY row, so the rank is a [[graft.ops.Prefix]]
+    * running count instead: in-(cluster × cos-bucket) windows whose
     * groups are bounded by the 10k-µ bucket population, plus a
-    * ≤201-row-per-cluster bucket carry; rank = carry + in-bucket
-    * rank, bit-identical to the global window by bucket
-    * monotonicity). NULL cosines ride the usual below-range sentinel,
+    * ≤201-row-per-cluster bucket carry, bit-identical to the global
+    * window by bucket monotonicity; buckets run in descending cosine
+    * order, so the bucket is negated). NULL cosines ride the usual below-range sentinel,
     * preserving the desc_nulls_last order exactly.
     *
     * BOUND CAVEAT (data-dependent, not unconditional): the in-bucket
@@ -477,48 +477,23 @@ object Ann {
             * lit(1000000.0) + lit(0.5)).cast("long")).as("cos_micros"))
     // sort key with the NULLS-LAST sentinel (cos_micros ∈ [−1e6, 1e6],
     // so −2e6 sits strictly below every real value), bucketed at 10k µ
-    // — floor division via the nonnegative pmod, exact for negatives.
-    // r16 (guide §2.4): the in-bucket rank window, the per-bucket
-    // carry aggregate, and the per-cluster count all consume this
-    // relation — without a shared exchange each rebuilds the scored
-    // subtree (corpus scan + assignment + centroid-cosine) from
-    // scratch, three passes for one. The explicit
-    // (cent_id, __cb)-keyed repartition satisfies the window's
-    // distribution and both aggregates reduce above the same shuffle
-    // (nC over the keyed rows — identical count).
+    // — floor division via the nonnegative pmod, exact for negatives —
+    // and negated so buckets ascend along the (cos desc) rank order.
+    // The shared exchange keeps the scored subtree (corpus scan +
+    // assignment + centroid cosine) to one pass.
     val bw = 10000L
     val keyed = scored
       .withColumn("__sk", coalesce(col("cos_micros"), lit(-2000000L)))
       .withColumn("__cb",
-        ((col("__sk") - pmod(col("__sk"), lit(bw))) / lit(bw)).cast("long"))
-      // isNotNull matches the broadcast joins' inferred filter so every
-      // consumer's exchange subtree stays canonically identical (AQE
-      // reuse); a null cent_id never matches the inner joins either way
-      .where(col("cent_id").isNotNull)
-      .repartition(col("cent_id"), col("__cb"))
-    val inB = Window.partitionBy(col("cent_id"), col("__cb"))
-      .orderBy(col("__sk").desc, col("vec_id").asc)
-    // the per-bucket and per-cluster counts derive from the WINDOW'S
-    // OWN OUTPUT (max(row_number) per group ≡ the group count), so all
-    // three consumers are projections of one subtree over the one
-    // exchange and column pruning can't desynchronize the reuse (the
-    // Packing.packSequences pattern)
-    val ranked = keyed.withColumn("__r_in", row_number().over(inB))
-    val perB = ranked.groupBy(col("cent_id"), col("__cb"))
-      .agg(max(col("__r_in")).as("__nb"))
-    val carryW = Window.partitionBy(col("cent_id")).orderBy(col("__cb").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = perB
-      .withColumn("__before", coalesce(sum(col("__nb")).over(carryW), lit(0L)))
-      .select(col("cent_id"), col("__cb"), col("__before"))
+        -((col("__sk") - pmod(col("__sk"), lit(bw))) / lit(bw)).cast("long"))
+    val ranked = graft.ops.Prefix.running(keyed, Seq("cent_id"), "__cb",
+      Seq(col("__sk").desc, col("vec_id").asc), Seq("rk" -> lit(1L)),
+      graft.ops.Prefix.Sum, graft.ops.Prefix.InclusiveRows)
     val nC = ranked.groupBy(col("cent_id")).agg(count(lit(1)).as("__n_c"))
-    ranked
-      .join(broadcast(carry), Seq("cent_id", "__cb"))
-      .join(broadcast(nC), Seq("cent_id"))
+    ranked.join(broadcast(nC), Seq("cent_id"))
       .select(col("vec_id"), col("cent_id"), col("cos_micros"),
-        (col("__before") + col("__r_in")).cast("int").as("rk"),
-        (col("__before") + col("__r_in") >
-          floor((lit(1.0) - lit(keepFraction)) * col("__n_c"))).as("keep"))
+        col("rk").cast("int").as("rk"),
+        (col("rk") > floor((lit(1.0) - lit(keepFraction)) * col("__n_c"))).as("keep"))
   }
 
   // ---- DuckDB oracles ----------------------------------------------------

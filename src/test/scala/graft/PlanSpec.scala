@@ -104,6 +104,19 @@ class PlanSpec extends SparkSpec {
       p.linesIterator.exists(l => l.contains("Window") && l.contains("__bkt")), p.take(2000))
   }
 
+  test("q_seq_pack: the bucket-offsets join is sort-merge, never a broadcast") {
+    // the offsets table has |max doc_id| / bucketSize rows, so it is
+    // corpus-derived: the Joins.corpusSide policy forbids broadcasting
+    // it (the pack twins pin the same table to sort-merge). Checked on
+    // the final adaptive plan, after runtime re-planning.
+    val df = Queries.runners("q_seq_pack")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin"), p.take(2500))
+    assert(!p.contains("BroadcastHashJoin"),
+      s"the offsets join must not broadcast:\n${p.take(2500)}")
+  }
+
   test("q_split_assign: pure per-row map, no exchange") {
     val df = Queries.runners("q_split_assign")(spark, dir)
     val p = df.queryExecution.executedPlan.toString()

@@ -528,4 +528,67 @@ class PropertySpec extends SparkSpec {
         s"trial=$trial")
     }
   }
+
+  test("property: Prefix.running equals the single global window under varied partitioning") {
+    import graft.ops.Prefix
+    import org.apache.spark.sql.expressions.Window
+    val rng = new scala.util.Random(4242)
+    // unique id, 4 keys, an order value with ties (some negative, so the
+    // floor-division buckets cross zero), a non-negative value, and the
+    // same value with about a quarter nulls
+    val rows = (0 until 160).map { id =>
+      (id.toLong, rng.nextInt(4), rng.nextInt(200).toLong - 100L,
+        rng.nextInt(1000).toLong,
+        if (rng.nextInt(4) == 0) None else Some(rng.nextInt(1000).toLong))
+    }
+    val df = rows.toDF("id", "k", "o", "v", "vn")
+    val frames = Seq(Prefix.InclusiveRows, Prefix.ExclusiveRows, Prefix.ExclusiveRange)
+    def orderOf(f: Prefix.Frame) =
+      if (f == Prefix.ExclusiveRange) Seq(col("o")) else Seq(col("o"), col("id"))
+    // each row its own bucket (each distinct order value under RANGE),
+    // 16-wide buckets, and all rows in one bucket
+    def bucketOf(f: Prefix.Frame, width: String) = width match {
+      case "each" if f == Prefix.ExclusiveRange => col("o")
+      case "each" => col("o") * 1000L + col("id")
+      case "mid" => floor(col("o") / 16.0).cast("long")
+      case "one" => lit(0L)
+    }
+    def spec(agg: Prefix.Agg, f: Prefix.Frame, keys: Seq[String]): Map[Long, Seq[Any]] = {
+      val w0 = Window.partitionBy(keys.map(col): _*).orderBy(orderOf(f): _*)
+      val w = f match {
+        case Prefix.InclusiveRows => w0.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        case Prefix.ExclusiveRows => w0.rowsBetween(Window.unboundedPreceding, -1)
+        case Prefix.ExclusiveRange => w0.rangeBetween(Window.unboundedPreceding, -1)
+      }
+      val run: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+        if (agg == Prefix.Sum) c => coalesce(sum(c).over(w), lit(0L))
+        else c => max(c).over(w)
+      df.select(col("id"), run(col("v")), run(col("vn"))).collect()
+        .map(r => r.getLong(0) -> Seq(r.get(1), r.get(2))).toMap
+    }
+    val confs = for (parts <- Seq(1, 7, 32); aqe <- Seq(true, false)) yield (parts, aqe)
+    val shapes = for (keyed <- Seq(true, false); width <- Seq("each", "mid", "one"))
+      yield (keyed, width)
+    val specs = (for (agg <- Seq(Prefix.Sum, Prefix.Max); f <- frames;
+        keys <- Seq(Seq("k"), Nil)) yield (agg, f, keys) -> spec(agg, f, keys)).toMap
+    val confKeys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val before = confKeys.map(k => k -> spark.conf.get(k))
+    try {
+      // every conf runs every (agg, frame); across the confs each
+      // (agg, frame) meets every (keyed, bucket width) shape once
+      for (((parts, aqe), i) <- confs.zipWithIndex; agg <- Seq(Prefix.Sum, Prefix.Max);
+          f <- frames) {
+        confKeys.zip(Seq(parts.toString, aqe.toString)).foreach { case (k, v) =>
+          spark.conf.set(k, v) }
+        val (keyed, width) = shapes(i)
+        val keys = if (keyed) Seq("k") else Nil
+        val got = Prefix.running(df.withColumn("b", bucketOf(f, width)), keys, "b",
+            orderOf(f), Seq("rv" -> col("v"), "rvn" -> col("vn")), agg, f)
+          .select("id", "rv", "rvn").collect()
+          .map(r => r.getLong(0) -> Seq(r.get(1), r.get(2))).toMap
+        assert(got === specs((agg, f, keys)),
+          s"$agg $f keyed=$keyed width=$width partitions=$parts aqe=$aqe")
+      }
+    } finally before.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }
