@@ -23,26 +23,28 @@ import org.apache.spark.sql.functions._
   * that the DuckDB oracles use as the spec.
   *
   * The choices below are made once, here:
-  *  - '''One shared exchange.''' Rows are hash-repartitioned on
-  *    (keys, bucket) explicitly. That satisfies the in-bucket window's
-  *    distribution, and the bucket totals are read from the WINDOW'S
-  *    OWN OUTPUT, so both join inputs are projections of one subtree
-  *    over one exchange, which AQE materializes once. Read from the
-  *    pre-window rows instead, column pruning would narrow one branch
-  *    and break the canonical equality that stage reuse needs; each
-  *    consumer would then rebuild the whole upstream chain (a corpus
+  *  - '''One shared exchange, one sort.''' Rows are hash-repartitioned
+  *    on (keys, bucket) explicitly. The in-bucket window reads that
+  *    exchange, and the bucket totals are a hash aggregate over the
+  *    same PRE-WINDOW rows, so the in-bucket sort and window run once.
+  *    Spark reuses an exchange only between canonically equal
+  *    subtrees, and column pruning narrows each consumer to the
+  *    columns it reads: the totals to (keys, bucket, values), the
+  *    window side to what the caller reads downstream. Two different
+  *    exchanges would each rebuild the whole upstream chain (a corpus
   *    tokenization; a conversation parse, clean and render; a k-means
-  *    assignment). PlanSpec pins the reuse on q_pack_sequences. The
-  *    price is that the in-bucket sort and window run once per
-  *    consumer (twice), over the shuffled rows only. The reuse holds
-  *    while both consumers read the same columns: a column that the
-  *    caller's later steps drop from one branch only (a per-consumer
-  *    filter flag) splits the exchange again, so fold such flags into
-  *    a value column first.
-  *  - '''Bucket totals.''' A whole-bucket frame of the same window
-  *    (one WindowExec) gives each row its bucket's total, exact for
-  *    any values and any frame; a max of the running value would miss
-  *    negative values and the ties of a RANGE frame.
+  *    assignment). So both consumers read every column of `df`: each
+  *    row carries `h = hash(all of df's columns)`, each bucket's total
+  *    carries `max(h)`, and the join back also requires `h <= max(h)`,
+  *    which holds by construction. The two exchanges are then equal
+  *    whatever the caller keeps, and AQE materializes one. PlanSpec
+  *    pins the reuse (q_pack_sequences, q_conv_pack, q_proto_prune)
+  *    and the single in-bucket window (q_weighted_quantile). The cost
+  *    is one hash per row, so keep `df` to the columns the caller
+  *    needs; `df` holds no map column (`hash` rejects maps).
+  *  - '''Bucket totals.''' `agg(value)` per (keys, bucket): exact for
+  *    any values and any frame (a max of the running value would miss
+  *    negative values and the ties of a RANGE frame).
   *  - '''Nulls.''' Rows with a null key or bucket are dropped; the
   *    explicit filter also matches the filter the inner join infers, so
   *    the optimizer cannot push it below only one branch's exchange.
@@ -50,11 +52,15 @@ import org.apache.spark.sql.functions._
   *    with nothing before it is 0 (`coalesce(…, 0)`); a [[Max]] with
   *    nothing before it is null ("none").
   *  - '''Carry join.''' Always [[Joins.corpusSide]] (sort-merge). The
-  *    carry table has one row per non-empty (key, bucket), so it is
-  *    corpus-derived and must never broadcast; the big side is already
-  *    partitioned on (keys, bucket), so the join shuffles the carry
-  *    only. Every non-empty bucket has a carry row, so a bucket whose
-  *    own values are all null still receives the carry.
+  *    carry table has one row per non-empty (key, bucket), corpus-
+  *    derived in general, so it never broadcasts; the big side is
+  *    already partitioned and sorted on (keys, bucket), so the join
+  *    shuffles and sorts the carry only. Carries with a fixed bound
+  *    (4096 hash buckets in `Selection.shuffleOrder`, ≈ 201 cosine
+  *    buckets per cluster in `Ann.protoPrune`) sort-merge too: one
+  *    policy, at the cost of one carry-sized shuffle. Every non-empty
+  *    bucket has a carry row, so a bucket whose own values are all
+  *    null still receives the carry.
   *
   * The bucket must be non-decreasing along `order` within a key (for
   * [[ExclusiveRange]], a function of the one order column, so ties
@@ -70,9 +76,12 @@ import org.apache.spark.sql.functions._
   * @param order  the within-key order; rows frames need a total order
   *               for a deterministic result
   * @param values output name → value expression; each output column
-  *               holds the running aggregate of its value
+  *               holds the running aggregate of its value, and
+  *               `<name>_total` holds the aggregate over the row's
+  *               whole key (read from the carry table, so a per-key
+  *               total costs no pass over the rows)
   * @return `df`'s columns (rows with a null key or bucket dropped) plus
-  *         one running column per value */
+  *         the running and total columns of each value */
 object Prefix {
 
   sealed abstract class Agg(private[Prefix] val over: Column => Column,
@@ -101,22 +110,24 @@ object Prefix {
     val parts = (keys :+ bucket).map(col)
     def in(n: String) = col(s"__pfx_in_$n")
     def tot(n: String) = col(s"__pfx_tot_$n")
-    def carry(n: String) = col(s"__pfx_carry_$n")
-    val inBucket = Window.partitionBy(parts: _*).orderBy(order: _*)
-    val wholeBucket = inBucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val withIn = df.where(parts.map(_.isNotNull).reduce(_ && _))
+    val h = hash(df.columns.map(col): _*)
+    val rows = df.where(parts.map(_.isNotNull).reduce(_ && _))
       .repartition(parts: _*)
-      .select(col("*") +: values.flatMap { case (n, v) => Seq(
-        agg.over(v).over(frame.of(inBucket)).as(s"__pfx_in_$n"),
-        agg.over(v).over(wholeBucket).as(s"__pfx_tot_$n")) }: _*)
-    val totals = values.map { case (n, _) => max(tot(n)).as(s"__pfx_tot_$n") }
-    val before = Window.partitionBy(keys.map(col): _*).orderBy(col(bucket))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = withIn.groupBy(parts: _*).agg(totals.head, totals.tail: _*)
-      .select(parts ++ values.map { case (n, _) =>
-        agg.over(tot(n)).over(before).as(s"__pfx_carry_$n") }: _*)
-    withIn.join(Joins.corpusSide(carries), keys :+ bucket)
-      .select(df.columns.map(col) ++ values.map { case (n, _) =>
-        agg.combine(in(n), carry(n)).as(n) }: _*)
+    val inBucket = Window.partitionBy(parts: _*).orderBy(order: _*)
+    val withIn = rows.select(col("*") +: h.as("__pfx_h") +: values.map { case (n, v) =>
+      agg.over(v).over(frame.of(inBucket)).as(s"__pfx_in_$n") }: _*)
+    val totals = rows.groupBy(parts: _*).agg(max(h).as("__pfx_max_h"),
+      values.map { case (n, v) => agg.over(v).as(s"__pfx_tot_$n") }: _*)
+    val byKey = Window.partitionBy(keys.map(col): _*).orderBy(col(bucket))
+    val before = byKey.rowsBetween(Window.unboundedPreceding, -1)
+    val whole = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val carries = totals.select((keys :+ bucket).map(k => col(k).as(s"__pfx_at_$k")) ++
+      Seq(col("__pfx_max_h")) ++ values.flatMap { case (n, _) => Seq(
+        agg.over(tot(n)).over(before).as(s"__pfx_carry_$n"),
+        agg.over(tot(n)).over(whole).as(s"${n}_total")) }: _*)
+    val on = (keys :+ bucket).map(k => col(k) === col(s"__pfx_at_$k")).reduce(_ && _)
+    withIn.join(Joins.corpusSide(carries), on && col("__pfx_h") <= col("__pfx_max_h"))
+      .select(df.columns.map(col) ++ values.flatMap { case (n, _) => Seq(
+        agg.combine(in(n), col(s"__pfx_carry_$n")).as(n), col(s"${n}_total")) }: _*)
   }
 }

@@ -206,7 +206,8 @@ FROM m"""
   /** Shared phase for the rank tests: the distinct-value table
     * (v, c_a, c_t) with BUCKETED cumulative totals — cw_t (both arms)
     * and cw_a (arm A) inclusive of the current value: a
-    * [[Prefix.running]] sum over value buckets, no global window. */
+    * [[Prefix.running]] sum over value buckets, no global window —
+    * and the arm sizes n_a and n_t (both arms) on every row. */
   private def cumCounts(df: DataFrame, isA: Column, v: Column,
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
@@ -217,7 +218,8 @@ FROM m"""
     Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
         Nil, "b", Seq(col("v")), Seq("cw_a" -> col("c_a"), "cw_t" -> col("c_t")),
         Prefix.Sum, Prefix.InclusiveRows)
-      .select(col("v"), col("c_a"), col("c_t"), col("cw_a"), col("cw_t"))
+      .select(col("v"), col("c_a"), col("c_t"), col("cw_a"), col("cw_t"),
+        col("cw_a_total").as("n_a"), col("cw_t_total").as("n_t"))
   }
 
   /** ClickHouse `mannWhitneyUTest(v, arm)` analog: exact U statistics
@@ -303,14 +305,12 @@ FROM m"""
   def ksTest(df: DataFrame, isA: Column, v: Column,
       bucketWidth: Long = 1L << 20): DataFrame = {
     val cum = cumCounts(df, isA, v, bucketWidth)
-    val tot = cum.agg(sum(col("c_a")).as("n_a"),
-      sum(col("c_t") - col("c_a")).as("n_b"))
     // DECIMAL(38,0) products: cw·n reaches n_a·n_b, which passes
     // Long.MaxValue near 3e9 rows per arm and would wrap silently in
     // LongType (the DuckDB twin auto-promotes to HUGEINT)
     val dn = abs(d(col("cw_a")) * d(col("n_b")) -
       d(col("cw_t") - col("cw_a")) * d(col("n_a")))
-    val mx = cum.crossJoin(broadcast(tot))
+    val mx = cum.withColumn("n_b", col("n_t") - col("n_a"))
       .select(col("n_a"), col("n_b"), dn.as("dn"), col("v"))
       .groupBy(col("n_a"), col("n_b"))
       .agg(max(struct(col("dn"), (lit(0L) - col("v")).as("negv"))).as("mx"))
@@ -773,15 +773,13 @@ FROM m"""
     * bins, so bin counts are ~n/N ± the largest tie group, which is the
     * standard equi-depth convention.
     *
-    * Plan: the bucketed two-phase cumulative (no global window) + a
-    * one-row total broadcast + an N-row hash agg. */
+    * Plan: the bucketed two-phase cumulative (no global window; the
+    * total n rides on its carry join) + an N-row hash agg. */
   def equiDepthHistogram(df: DataFrame, v: Column, nBins: Int,
       bucketWidth: Long = 1L << 20): DataFrame = {
     require(nBins > 0, "nBins must be positive")
-    val cum = cumCounts(df, lit(false), v, bucketWidth)
-    val tot = cum.agg(sum(col("c_t")).as("n"))
-    val binned = cum.crossJoin(broadcast(tot))
-      .select(col("v"), col("c_t"), col("n"),
+    val binned = cumCounts(df, lit(false), v, bucketWidth)
+      .select(col("v"), col("c_t"), col("n_t").as("n"),
         least(lit(nBins - 1L),
           expr(s"(cw_t - c_t) * $nBins div n")).as("bin"))
     binned.groupBy(col("bin"))
@@ -808,13 +806,11 @@ FROM m"""
     require(bucketWidth > 0, "bucketWidth must be positive")
     val byV = df.select(key.as("k"), v.as("v"))
       .groupBy(col("k"), col("v")).agg(count(lit(1)).as("c"))
-    val cum = Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
-      Seq("k"), "b", Seq(col("v")), Seq("cw" -> col("c")), Prefix.Sum, Prefix.InclusiveRows)
-    val tot = byV.groupBy(col("k")).agg(sum(col("c")).as("tw"))
-    val quants = cum.join(broadcast(tot), "k")
+    val quants = Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
+        Seq("k"), "b", Seq(col("v")), Seq("cw" -> col("c")), Prefix.Sum, Prefix.InclusiveRows)
       .groupBy(col("k"))
-      .agg(min(when(col("cw") * 4 >= col("tw"), col("v"))).as("q1"),
-        min(when(col("cw") * 4 >= lit(3L) * col("tw"), col("v"))).as("q3"))
+      .agg(min(when(col("cw") * 4 >= col("cw_total"), col("v"))).as("q1"),
+        min(when(col("cw") * 4 >= lit(3L) * col("cw_total"), col("v"))).as("q3"))
     val iqr = col("q3") - col("q1")
     val lowCond = lit(fenceDen.toLong) * col("v") <
       lit(fenceDen.toLong) * col("q1") - lit(fenceNum.toLong) * iqr

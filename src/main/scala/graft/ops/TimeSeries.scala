@@ -301,23 +301,21 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
       Seq("u"), "left")
       .select(col("u"), coalesce(col("matched"), lit(false)).as("matched"))
 
-  /** One step of the viable-set DP. `rows` are this step's (u, tu,
-    * role) events, role 2 marking the condₖ ones. Each role-2 row gets
-    * `pm`, the latest `viable` time strictly before it, and `la`, the
-    * latest `rows` time strictly before it (null when none; the gap
-    * step reads only `pm`): one
-    * [[Prefix]] running max per (user, time bucket), so no per-user
-    * raw-event window survives a hot user. RANGE … 1 PRECEDING keeps
-    * the strict tu < t bound through ties. */
+  /** One step of the viable-set DP: each of `rows`' (u, tu, …)
+    * events gets `pm`, the latest `viable` time strictly before it
+    * (null when none) — one [[Prefix]] running max per (user, time
+    * bucket), so no per-user raw-event window survives a hot user.
+    * RANGE … 1 PRECEDING keeps the strict tu < t bound through ties.
+    * Only `viable` and `rows` are windowed; `rows`' extra columns ride
+    * along. */
   private def stepMaxima(viable: DataFrame, rows: DataFrame,
       bucketUs: Long): DataFrame = {
-    val all = viable.select(col("u"), col("tu"), lit(0).as("role")).unionByName(rows)
+    val all = viable.select(col("u"), col("tu"), lit(false).as("is_cur"))
+      .unionByName(rows.withColumn("is_cur", lit(true)), allowMissingColumns = true)
     Prefix.running(all.withColumn("b", floorDiv(col("tu"), lit(bucketUs))),
-        Seq("u"), "b", Seq(col("tu")),
-        Seq("pm" -> when(col("role") === 0, col("tu")),
-          "la" -> when(col("role") =!= 0, col("tu"))),
+        Seq("u"), "b", Seq(col("tu")), Seq("pm" -> when(!col("is_cur"), col("tu"))),
         Prefix.Max, Prefix.ExclusiveRange)
-      .filter(col("role") === 2)
+      .filter(col("is_cur"))
   }
 
   /** ClickHouse `sequenceMatch('(?1)(?t<gap)(?2)(?t<gap)(?3)…')`
@@ -342,7 +340,7 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
     var viable = e.filter(col("is_c1")).select(col("u"), col("tu"))
     for (k <- 2 to conds.size)
       viable = stepMaxima(viable,
-        e.filter(col(s"is_c$k")).select(col("u"), col("tu"), lit(2).as("role")), bucketUs)
+        e.filter(col(s"is_c$k")).select(col("u"), col("tu")), bucketUs)
         .filter(col("pm").isNotNull && col("pm") > col("tu") - lit(gapUs))
         .select(col("u"), col("tu"))
     flagMatched(universe, viable.select(col("u")).distinct())
@@ -359,8 +357,10 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
     * incomplete here too), with the break test reduced to a value
     * identity: for a condₖ event at t, let P = max viable Sₖ₋₁ time
     * < t and L = max ANY-event time < t (L ≥ P always). The step is
-    * interposer-free iff P = L; each step computes both in one running
-    * max over its viable set and all events. Ties: events sharing
+    * interposer-free iff P = L. L is per-event static, so it is one
+    * [[Prefix]] running max over all events, computed once; each step
+    * then windows only its viable set and its condₖ events for P
+    * (see `stepMaxima`). Ties: events sharing
     * a timestamp are mutually unordered, so neither breaks the other
     * (time-granularity contract).
     *
@@ -371,10 +371,12 @@ SELECT k, x, v IS NOT NULL AS observed, $rules FROM w"""
       bucketUs: Long = 3600000000L): DataFrame = {
     require(bucketUs > 0, "bucket must be positive")
     val (e, universe) = conditioned(events, user, unix_micros(ts).as("tu"), conds)
+    val withLa = Prefix.running(e.withColumn("b", floorDiv(col("tu"), lit(bucketUs))),
+      Seq("u"), "b", Seq(col("tu")), Seq("la" -> col("tu")), Prefix.Max, Prefix.ExclusiveRange)
     var viable = e.filter(col("is_c1")).select(col("u"), col("tu"))
     for (k <- 2 to conds.size)
-      viable = stepMaxima(viable, e.select(col("u"), col("tu"),
-          when(col(s"is_c$k"), 2).otherwise(1).as("role")), bucketUs)
+      viable = stepMaxima(viable,
+          withLa.filter(col(s"is_c$k")).select(col("u"), col("tu"), col("la")), bucketUs)
         .filter(col("pm").isNotNull && col("pm") === col("la"))
         .select(col("u"), col("tu"))
     flagMatched(universe, viable.select(col("u")).distinct())
@@ -632,25 +634,24 @@ SELECT u, CAST(sum(CASE WHEN isb AND pisb = FALSE THEN 1 ELSE 0 END) AS BIGINT) 
       "quantiles must be rationals in [0,1]")
     val spark = byV.sparkSession
     import spark.implicits._
-    val (cum, tot) = cumulativeWeights(byV, Nil, bucketWidth)
     val qdf = qs.toDF("q_num", "q_den")
-    cum.crossJoin(broadcast(tot)).crossJoin(broadcast(qdf))
+    cumulativeWeights(byV, Nil, bucketWidth).crossJoin(broadcast(qdf))
       .filter(col("cw") * col("q_den") >= col("q_num") * col("tw"))
       .groupBy(col("q_num"), col("q_den"))
       .agg(min(col("v")).as("value"))
   }
 
-  /** The cumulative weight `cw` of each (keys…, v, w) distinct-value
-    * row, inclusive of v, per key — a [[Prefix]] running sum over
-    * value buckets `floorDiv(v, bucketWidth)` — and the per-key total
-    * weight `tw`. */
+  /** (keys…, v, cw, tw) over a (keys…, v, w) distinct-value table:
+    * the cumulative weight `cw` inclusive of v, per key — a [[Prefix]]
+    * running sum over value buckets `floorDiv(v, bucketWidth)` — and
+    * the key's total weight `tw`, read from the |buckets|-row carry
+    * table, never another pass over the distinct values. */
   private def cumulativeWeights(byV: DataFrame, keys: Seq[String],
-      bucketWidth: Long): (DataFrame, DataFrame) = {
+      bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
-    val cum = Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
-      keys, "b", Seq(col("v")), Seq("cw" -> col("w")), Prefix.Sum, Prefix.InclusiveRows)
-    (cum.select((keys :+ "v" :+ "cw").map(col): _*),
-      byV.groupBy(keys.map(col): _*).agg(sum(col("w")).as("tw")))
+    Prefix.running(byV.withColumn("b", floorDiv(col("v"), lit(bucketWidth))),
+        keys, "b", Seq(col("v")), Seq("cw" -> col("w")), Prefix.Sum, Prefix.InclusiveRows)
+      .select((keys :+ "v" :+ "cw").map(col) :+ col("cw_total").as("tw"): _*)
   }
 
   /** DuckDB replica of [[weightedQuantiles]] over events with
@@ -720,7 +721,6 @@ SELECT q_num, q_den, min(v) AS value FROM cum, tot, q WHERE cw * q_den >= q_num 
       "quantiles must be rationals in [0,1]")
     val spark = byV.sparkSession
     import spark.implicits._
-    val (cum, tot) = cumulativeWeights(byV, keys, bucketWidth)
     val qdf = qs.flatMap { case (n, d) => Seq((n, d, 0), (n, d, 1)) }
       .toDF("q_num", "q_den", "o")
     val n = col("tw")
@@ -728,10 +728,8 @@ SELECT q_num, q_den, min(v) AS value FROM cum, tot, q WHERE cw * q_den >= q_num 
       if (exclusive) (n + lit(1L)) * col("q_num") - col("q_den")
       else (n - lit(1L)) * col("q_num")
     val hn = greatest(lit(0L), least(hraw, (n - lit(1L)) * col("q_den")))
-    val withTot =
-      if (keys.isEmpty) cum.crossJoin(broadcast(tot)) else cum.join(broadcast(tot), keys)
     val group = keys.map(col) ++ Seq(col("q_num"), col("q_den"))
-    withTot.crossJoin(broadcast(qdf))
+    cumulativeWeights(byV, keys, bucketWidth).crossJoin(broadcast(qdf))
       .withColumn("hn", hn)
       .withColumn("hf", floorDiv(col("hn"), col("q_den")))
       .withColumn("rem", pmod(col("hn"), col("q_den")))
@@ -752,9 +750,8 @@ SELECT q_num, q_den, min(v) AS value FROM cum, tot, q WHERE cw * q_den >= q_num 
     * ... GROUP BY key`, the per-segment dashboard form. Same exact
     * rational ranks and interpolation, with the cumulative a keyed
     * [[Prefix.running]] sum, so a hot key's windows stay at bucket
-    * granularity. The per-key totals and the quantile spec
-    * broadcast (|keys| and |qs|·2 rows — the same bounded-side
-    * posture as tukey's fence join). */
+    * granularity. The per-key totals ride on the carry join and the
+    * quantile spec broadcasts (|qs|·2 rows). */
   def interpolatedQuantilesBy(df: DataFrame, key: Column, value: Column,
       qs: Seq[(Int, Int)], exclusive: Boolean = false,
       bucketWidth: Long = 1L << 20): DataFrame =

@@ -479,21 +479,20 @@ object Ann {
     // so −2e6 sits strictly below every real value), bucketed at 10k µ
     // — floor division via the nonnegative pmod, exact for negatives —
     // and negated so buckets ascend along the (cos desc) rank order.
-    // The shared exchange keeps the scored subtree (corpus scan +
-    // assignment + centroid cosine) to one pass.
+    // Prefix's shared exchange keeps the scored subtree (corpus scan +
+    // assignment + centroid cosine) to one pass, and its per-key
+    // total `rk_total` is the cluster size.
     val bw = 10000L
     val keyed = scored
       .withColumn("__sk", coalesce(col("cos_micros"), lit(-2000000L)))
       .withColumn("__cb",
         -((col("__sk") - pmod(col("__sk"), lit(bw))) / lit(bw)).cast("long"))
-    val ranked = graft.ops.Prefix.running(keyed, Seq("cent_id"), "__cb",
-      Seq(col("__sk").desc, col("vec_id").asc), Seq("rk" -> lit(1L)),
-      graft.ops.Prefix.Sum, graft.ops.Prefix.InclusiveRows)
-    val nC = ranked.groupBy(col("cent_id")).agg(count(lit(1)).as("__n_c"))
-    ranked.join(broadcast(nC), Seq("cent_id"))
+    graft.ops.Prefix.running(keyed, Seq("cent_id"), "__cb",
+        Seq(col("__sk").desc, col("vec_id").asc), Seq("rk" -> lit(1L)),
+        graft.ops.Prefix.Sum, graft.ops.Prefix.InclusiveRows)
       .select(col("vec_id"), col("cent_id"), col("cos_micros"),
         col("rk").cast("int").as("rk"),
-        (col("rk") > floor((lit(1.0) - lit(keepFraction)) * col("__n_c"))).as("keep"))
+        (col("rk") > floor((lit(1.0) - lit(keepFraction)) * col("rk_total"))).as("keep"))
   }
 
   // ---- DuckDB oracles ----------------------------------------------------

@@ -820,6 +820,28 @@ class PlanSpec extends SparkSpec {
       s"expected the corpus-tokenize exchange to be reused:\n${p.take(2500)}")
   }
 
+  test("Prefix.running: no window runs twice") {
+    // the bucket totals read the pre-window rows of the one shared
+    // exchange, so the in-bucket window runs once; a split exchange (a
+    // passenger column pruned from one consumer only) would run the
+    // upstream chain twice, and its windows (the conversation
+    // render's, here) would appear twice
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    for (name <- Seq("q_weighted_quantile", "q_pack_sequences", "q_conv_pack", "q_proto_prune")) {
+      val df = Queries.runners(name)(spark, dir)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      // a reused query stage is visited once per reference: count nodes
+      val seen = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[WindowExec, java.lang.Boolean]())
+      val wins = helper.collect(p) { case w: WindowExec => w }.filter(seen.add)
+      val names = wins.map(_.windowExpression.map(_.name).sorted.mkString(","))
+      assert(names.distinct.size === names.size, s"$name runs a window twice:\n$p")
+    }
+  }
+
   test("bm25 index: a production-sized store's term filter prunes postings DIRECTORIES (r16 guide §6)") {
     // force the bucketed layout (the size gate keeps fixture stores
     // flat — measured r16: partition-dir staging costs more than

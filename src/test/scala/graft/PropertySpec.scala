@@ -530,6 +530,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: Prefix.running equals the single global window under varied partitioning") {
+    // the running columns match the framed window, and each value's
+    // `_total` column matches the same aggregate over the whole key
     import graft.ops.Prefix
     import org.apache.spark.sql.expressions.Window
     val rng = new scala.util.Random(4242)
@@ -560,11 +562,14 @@ class PropertySpec extends SparkSpec {
         case Prefix.ExclusiveRows => w0.rowsBetween(Window.unboundedPreceding, -1)
         case Prefix.ExclusiveRange => w0.rangeBetween(Window.unboundedPreceding, -1)
       }
+      val whole = Window.partitionBy(keys.map(col): _*)
       val run: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         if (agg == Prefix.Sum) c => coalesce(sum(c).over(w), lit(0L))
         else c => max(c).over(w)
-      df.select(col("id"), run(col("v")), run(col("vn"))).collect()
-        .map(r => r.getLong(0) -> Seq(r.get(1), r.get(2))).toMap
+      val tot: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+        if (agg == Prefix.Sum) c => sum(c).over(whole) else c => max(c).over(whole)
+      df.select(col("id"), run(col("v")), run(col("vn")), tot(col("v")), tot(col("vn")))
+        .collect().map(r => r.getLong(0) -> Seq(r.get(1), r.get(2), r.get(3), r.get(4))).toMap
     }
     val confs = for (parts <- Seq(1, 7, 32); aqe <- Seq(true, false)) yield (parts, aqe)
     val shapes = for (keyed <- Seq(true, false); width <- Seq("each", "mid", "one"))
@@ -584,8 +589,8 @@ class PropertySpec extends SparkSpec {
         val keys = if (keyed) Seq("k") else Nil
         val got = Prefix.running(df.withColumn("b", bucketOf(f, width)), keys, "b",
             orderOf(f), Seq("rv" -> col("v"), "rvn" -> col("vn")), agg, f)
-          .select("id", "rv", "rvn").collect()
-          .map(r => r.getLong(0) -> Seq(r.get(1), r.get(2))).toMap
+          .select("id", "rv", "rvn", "rv_total", "rvn_total").collect()
+          .map(r => r.getLong(0) -> Seq(r.get(1), r.get(2), r.get(3), r.get(4))).toMap
         assert(got === specs((agg, f, keys)),
           s"$agg $f keyed=$keyed width=$width partitions=$parts aqe=$aqe")
       }
