@@ -819,10 +819,12 @@ object ScaleProbe {
       // upstream (one tiny file per task without the fix — the
       // 100 TB landing's tiny-file storm) must land a file count that
       // tracks BYTES/advisory-size, not upstream task count, once the
-      // stageWrite estimate crosses the rebalance threshold (forced
-      // low here so probe sizes exercise the path; production keeps
-      // the 256 MB default). Both halves asserted in-rung: bounded
-      // count, and non-trivial mean file size when enough bytes land.
+      // stageWrite estimate crosses the rebalance threshold (four
+      // advisory sizes: a 2 MB advisory size here puts it at 8 MB so
+      // probe sizes exercise the path; production keeps Spark's 64 MB
+      // default, a 256 MB threshold). Both halves asserted in-rung:
+      // bounded count, and non-trivial mean file size when enough
+      // bytes land.
       "append_rebalance" -> (() => {
         val tmp = java.nio.file.Files.createTempDirectory("graft_rebal")
         val base = tmp.toString + "/store"
@@ -830,14 +832,9 @@ object ScaleProbe {
         val t = spark.range(0, eventsN, 1, inParts)
           .select(col("id").as("k"),
             concat(lit("payload-"), col("id")).as("v"))
-        val prevMin = spark.conf.getOption(
-          graft.sinks.SnapshotStore.RebalanceMinBytesKey)
-        val prevAdv = spark.conf.getOption(
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        spark.conf.set(graft.sinks.SnapshotStore.RebalanceMinBytesKey, "1")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        def restore(key: String, v: Option[String]): Unit =
-          v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        val prevAdv = spark.conf.getOption(advisoryKey)
+        spark.conf.set(advisoryKey, "2m")
         try {
           graft.sinks.SnapshotStore.commitAppend(spark, base, t)
           val files = graft.sinks.SnapshotStore.listFiles(spark, base)
@@ -855,10 +852,7 @@ object ScaleProbe {
           val n = force(graft.sinks.SnapshotStore.read(spark, base).get)
           org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
           n
-        } finally {
-          restore(graft.sinks.SnapshotStore.RebalanceMinBytesKey, prevMin)
-          restore("spark.sql.adaptive.advisoryPartitionSizeInBytes", prevAdv)
-        }
+        } finally prevAdv.fold(spark.conf.unset(advisoryKey))(spark.conf.set(advisoryKey, _))
       }),
       // the composed ensemble gate (Gopher rules + heuristic quality +
       // trained classifier riding in-row as a literal map): after the

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.cdc.Envelope
 import graft.sinks.SnapshotStore
 
 /** Mutable-dimension maintenance (SURVEY.md §2.4 J1 / §3.2): the
@@ -27,23 +28,15 @@ import graft.sinks.SnapshotStore
   * The streaming path uses that: [[applyBatch]] folds a change batch
   * into the snapshot's rows on the driver, and [[snapshot]] serves rows
   * cached per path and keyed by the live manifest version (manifests
-  * are immutable, so a version's rows never change). Because those
-  * rows are a local relation, [[graft.enrich.Enrich.enrich]] turns them
-  * into a broadcast hash table with no Spark job; [[latestState]] over a
-  * change log stays a plan and is broadcast-joined.
+  * are immutable, so a version's rows never change). Those rows are a
+  * local relation, so [[graft.enrich.Enrich.enrich]] collects them into
+  * its hash table with no Spark job; a [[latestState]] plan over a
+  * change log is collected the same way, running its jobs once.
   */
 object ContentDim {
 
   /** The change-record columns a snapshot row does not carry. */
   private val ChangeCols = Set("is_delete", "change_seq")
-
-  private val DimSchema = StructType(Seq(
-    StructField("id", StringType),
-    StructField("slug", StringType),
-    StructField("title", StringType),
-    StructField("content_type", StringType),
-    StructField("length_seconds", IntegerType),
-    StructField("publish_ts", StringType)))
 
   /** latestState's total order over a change batch: newest change_seq
     * first, a delete winning ties (a delete in the same source ts beats
@@ -104,7 +97,7 @@ object ContentDim {
       else {
         val read = SnapshotStore.readVersion(spark, path, v)
           .map(df => Version(v, df.schema, df.collect().toSeq))
-          .getOrElse(Version(v, DimSchema, Nil))
+          .getOrElse(Version(v, Envelope.contentRecordSchema, Nil))
         cache.put(path, read)
         read
       }
@@ -135,13 +128,11 @@ object ContentDim {
         asc.iterator.map(i => compareAsc(a.get(i), b.get(i)))).find(_ != 0).getOrElse(0)
   }
 
-  /** A version's rows as a one-partition local frame. The local
-    * relation converts the rows on the driver, carries their true size
-    * and lets [[graft.enrich.Enrich.enrich]] read them without a job;
-    * the coalesce keeps a commit of the frame to one staged file (a bare
-    * local relation writes one file per task, up to one per core). */
+  /** A version's rows as a local frame: the local relation converts the
+    * rows on the driver, carries their true size and lets
+    * [[graft.enrich.Enrich.enrich]] collect them without a job. */
   private def frame(spark: SparkSession, v: Version): DataFrame =
-    spark.createDataFrame(v.rows.asJava, v.schema).coalesce(1)
+    spark.createDataFrame(v.rows.asJava, v.schema)
 
   /** Streaming maintenance: apply each micro-batch of content changes
     * to the snapshot table at `path`, committed transactionally through
@@ -179,13 +170,16 @@ object ContentDim {
         else rows(c.get(id)) = Row.fromSeq(fromChange.map(c.get).toSeq)
       }
       val next = base.copy(rows = rows.values.toSeq)
-      cache.put(path, next.copy(version = SnapshotStore.commitReplace(spark, path, frame(spark, next))))
+      // coalesce(1): one staged file (a bare local relation writes one
+      // file per task, up to one per core)
+      cache.put(path, next.copy(version =
+        SnapshotStore.commitReplace(spark, path, frame(spark, next).coalesce(1))))
       SnapshotStore.vacuum(spark, path, keepManifests = 4)
     }
   }
 
-  /** The live snapshot as a one-partition frame over the live
-    * version's cached rows, or None before the first commit. */
+  /** The live snapshot as a local frame over the live version's cached
+    * rows, or None before the first commit. */
   def read(spark: SparkSession, path: String): Option[DataFrame] =
     live(spark, path).map(frame(spark, _))
 
@@ -194,5 +188,5 @@ object ContentDim {
     read(spark, path).getOrElse(emptyDim(spark))
 
   /** Schema-correct empty dimension (pre-first-change state). */
-  def emptyDim(spark: SparkSession): DataFrame = frame(spark, Version(-1L, DimSchema, Nil))
+  def emptyDim(spark: SparkSession): DataFrame = frame(spark, Version(-1L, Envelope.contentRecordSchema, Nil))
 }

@@ -1,19 +1,14 @@
 package graft.enrich
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions.Engagement
 
 /** The enrichment (SURVEY.md J1) + derived columns (P5–P7): the
   * reference's BroadcastContentEnricher, a point lookup per event into
-  * the broadcast id → content map, re-expressed as a LEFT lookup
-  * against the dimension snapshot.
+  * the broadcast id → content map.
   *
   * Left-outer semantics match the reference exactly: an event whose
   * content_id is unknown (or deleted) passes through with null
@@ -21,33 +16,48 @@ import graft.functions.Engagement
   * but still gets its score (the score formula only needs event_type
   * and duration, reference :286–307).
   *
-  * Scale posture: the fact stream never shuffles. A dim whose rows are
-  * already on the driver (a local relation, as
-  * [[graft.dim.ContentDim.snapshot]] returns) becomes an
-  * id → (content_type, length_seconds) hash table shipped with
-  * `SparkContext.broadcast` and read by two lookups in one projection:
-  * no Spark job, no join and no hashed relation per batch. Any other
-  * dim (a plan, such as [[graft.dim.ContentDim.latestState]] over a
-  * change log, or a parquet table) is explicitly `broadcast()` into a
-  * left hash join. Either way the hot path is a single stage
-  * end-to-end at any fact volume.
+  * One path for every dim, batch or streaming: the dim's
+  * (id, content_type, length_seconds) rows are collected on the driver
+  * into an id → (content_type, length_seconds) hash table, shipped with
+  * `SparkContext.broadcast` and read by two lookups in one projection.
+  * The content dim is one row per live key, so it always fits the
+  * driver. A dim that is already a local relation (what
+  * [[graft.dim.ContentDim.snapshot]] returns, with or without
+  * projections on top) collects without a Spark job; a plan, such as
+  * [[graft.dim.ContentDim.latestState]] over a change log, runs its
+  * jobs once, here. The fact stream never shuffles and no join is
+  * planned: the hot path is a single stage at any fact volume.
   */
 object Enrich {
 
-  /** events: unwrapEngagement output; dim: columns (id, content_type,
-    * length_seconds, …). Output adds content_type, length_seconds,
-    * engagement_seconds, engagement_pct, engagement_score. */
+  /** events: unwrapEngagement output (string content_id); dim: columns
+    * (id: string, content_type: string, length_seconds: int, …).
+    * Output adds content_type and length_seconds, looked up by
+    * content_id in a hash table of the dim's collected rows (O(1) per
+    * event, null for an unknown or null id, as a left join gives), then
+    * engagement_seconds, engagement_pct and engagement_score. Other
+    * column types throw IllegalArgumentException, and so does a dim
+    * with more than one row for an id, because a join would have
+    * repeated that id's events. */
   def enrich(events: DataFrame, dim: DataFrame): DataFrame = {
-    val d = dim.select(col("id").as("__dim_id"),
-      col("content_type"), col("length_seconds"))
-    val joined = driverRows(d) match {
-      case Some(rows) if events.schema("content_id").dataType == StringType =>
-        lookup(events, rows)
-      case _ =>
-        events.join(broadcast(d), events("content_id") === col("__dim_id"), "left")
-          .drop("__dim_id")
+    val idType = events.schema("content_id").dataType.simpleString
+    require(idType == "string", s"events.content_id must be a string; got $idType")
+    val d = dim.select(col("id"), col("content_type"), col("length_seconds"))
+    val dimTypes = d.schema.map(_.dataType.simpleString)
+    require(dimTypes == Seq("string", "string", "int"), "dim (id, content_type, length_seconds) " +
+      s"must be (string, string, int); got (${dimTypes.mkString(", ")})")
+    val table = new java.util.HashMap[String, (String, Integer)]()
+    d.collect().foreach { r =>
+      if (!r.isNullAt(0)) {
+        val prev = table.put(r.getString(0), (r.getString(1), r.getAs[Integer](2)))
+        require(prev == null, s"dim has more than one row for id ${r.getString(0)}; a join would repeat its events")
+      }
     }
-    joined
+    val b = events.sparkSession.sparkContext.broadcast(table)
+    val contentType = udf((id: String) => Option(b.value.get(id)).map(_._1).orNull)
+    val lengthSeconds = udf((id: String) => Option(b.value.get(id)).map(_._2).orNull)
+    events.select(col("*"), contentType(col("content_id")).as("content_type"),
+        lengthSeconds(col("content_id")).as("length_seconds"))
       .withColumn("engagement_seconds",
         Engagement.engagementSeconds(col("duration_ms")))
       .withColumn("engagement_pct",
@@ -56,54 +66,13 @@ object Enrich {
         Engagement.engagementScore(col("event_type"), col("duration_ms")))
   }
 
-  /** A local relation: rows already held on the driver, optionally under
-    * the non-shuffling `coalesce(1)` a snapshot frame carries. */
-  private object DriverHeld {
-    def unapply(plan: LogicalPlan): Option[LocalRelation] = plan match {
-      case l: LocalRelation if !l.isStreaming => Some(l)
-      case Repartition(1, false, l: LocalRelation) if !l.isStreaming => Some(l)
-      case _ => None
-    }
-  }
-
-  /** The (id, content_type, length_seconds) values of a driver-held dim
-    * of the content types (string, string, int), evaluated on the
-    * driver; None for any other dim. */
-  private def driverRows(d: DataFrame): Option[Seq[Seq[Any]]] = d.queryExecution.analyzed match {
-    case Project(list, DriverHeld(l))
-        if d.schema.map(_.dataType) == Seq(StringType, StringType, IntegerType) =>
-      val bound = BindReferences.bindReferences[Expression](list, AttributeSeq(l.output))
-      Some(l.data.map(r => bound.map(e => CatalystTypeConverters.convertToScala(e.eval(r), e.dataType))))
-    case _ => None
-  }
-
-  /** `events` plus content_type and length_seconds looked up by
-    * content_id in a hash table of `rows`: O(1) per event, null for an
-    * unknown or null id, as the left join gives. A duplicate id throws,
-    * because the join would have repeated that id's events. */
-  private def lookup(events: DataFrame, rows: Seq[Seq[Any]]): DataFrame = {
-    val table = new java.util.HashMap[String, (String, Integer)]()
-    rows.foreach { case Seq(id, contentType, length) =>
-      if (id != null) {
-        val prev = table.put(id.asInstanceOf[String],
-          (contentType.asInstanceOf[String], length.asInstanceOf[Integer]))
-        require(prev == null, s"dim has more than one row for id $id; a join would repeat its events")
-      }
-    }
-    val b = events.sparkSession.sparkContext.broadcast(table)
-    val contentType = udf((id: String) => Option(b.value.get(id)).map(_._1).orNull)
-    val lengthSeconds = udf((id: String) => Option(b.value.get(id)).map(_._2).orNull)
-    events.select(col("*"), contentType(col("content_id")).as("content_type"),
-      lengthSeconds(col("content_id")).as("length_seconds"))
-  }
-
   /** K3: serialize enriched rows to the outbox JSON shape (null fields
     * omitted, like the reference's Jackson NON_NULL mapper :366–381). */
   def toOutboxJson(enriched: DataFrame): DataFrame =
     enriched.select(to_json(struct(enriched.columns.map(col): _*)).as("value"))
 
   /** AS-OF (event-time temporal) join — the event-time complement to
-    * [[enrich]]'s as-of-processing-time snapshot join: each left row
+    * [[enrich]]'s as-of-processing-time snapshot lookup: each left row
     * picks the latest right version with version ts <= the left ts,
     * per key (SCD-2-style point-in-time enrichment).
     *

@@ -14,6 +14,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Transactional snapshot commits on a plain filesystem — the atomicity
@@ -238,8 +239,8 @@ object SnapshotStore {
 
   // ---- commits ------------------------------------------------------------
 
-  /** Commits whose input's ESTIMATED size reaches this many bytes get
-    * an AQE size-targeted REBALANCE before the write (r16, guide §6
+  /** Commits whose input's ESTIMATED size reaches [[rebalanceMinBytes]]
+    * get an AQE size-targeted REBALANCE before the write (r16, guide §6
     * "small files hurt twice … coalesce on write / REBALANCE hint"):
     * a staged write otherwise inherits the upstream partitioning, so a
     * 100 TB landing arriving from a many-thousand-task shuffle tail
@@ -252,21 +253,21 @@ object SnapshotStore {
     * few large files instead of one per upstream task.
     *
     * Gated on the Catalyst size estimate so small commits skip the
-    * extra exchange; the threshold is deliberately of the order of a
-    * few output files. A plan whose input is one RDD partition (a
-    * foreachBatch micro-batch) never rebalances, whatever its estimate:
-    * one input partition cannot make a tiny-file storm (a shuffle after
-    * it is coalesced by AQE, as the rebalance would be), and its
-    * estimate is Spark's unknown size scaled by whatever projections sit
-    * above it, so no byte threshold reads it correctly. Override with
-    * session conf
-    * `spark.graft.snapshot.rebalanceMinBytes` (Long.MaxValue disables). */
-  val RebalanceMinBytesKey = "spark.graft.snapshot.rebalanceMinBytes"
-  val RebalanceMinBytesDefault: Long = 256L << 20
+    * extra exchange; the threshold is four advisory-sized output files
+    * (256 MB at Spark's 64 MB default), so it follows the one conf that
+    * sizes the rebalance's own output. A plan whose input is one RDD
+    * partition (a foreachBatch micro-batch) never rebalances, whatever
+    * its estimate: one input partition cannot make a tiny-file storm (a
+    * shuffle after it is coalesced by AQE, as the rebalance would be),
+    * and its estimate is Spark's unknown size scaled by whatever
+    * projections sit above it, so no byte threshold reads it
+    * correctly. */
+  def rebalanceMinBytes(spark: SparkSession): Long =
+    4L * spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
   /** True when `plan` reads one RDD partition and otherwise only
-    * driver-local rows: a foreachBatch micro-batch (joined with a local
-    * dimension) or a `createDataFrame(RDD, schema)` frame. */
+    * driver-local rows: a foreachBatch micro-batch (enriched from a
+    * driver-held hash table) or a `createDataFrame(RDD, schema)` frame. */
   private def oneRddPartition(plan: LogicalPlan): Boolean = {
     val leaves = plan.collectLeaves()
     leaves.forall(l => l.isInstanceOf[LogicalRDD] || l.isInstanceOf[LocalRelation]) &&
@@ -280,11 +281,9 @@ object SnapshotStore {
       partitionBy: Seq[String]): Seq[String] = {
     val f = fs(spark, base)
     val stage = s"$base/_stage/${UUID.randomUUID()}"
-    val minRebalance = spark.conf
-      .get(RebalanceMinBytesKey, RebalanceMinBytesDefault.toString).toLong
     val plan = df.queryExecution.optimizedPlan
     val toWrite =
-      if (plan.stats.sizeInBytes >= BigInt(minRebalance) && !oneRddPartition(plan))
+      if (plan.stats.sizeInBytes >= BigInt(rebalanceMinBytes(spark)) && !oneRddPartition(plan))
         df.hint("rebalance", partitionBy: _*)
       else df
     val w = toWrite.write.mode("overwrite")

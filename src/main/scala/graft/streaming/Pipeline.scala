@@ -31,10 +31,10 @@ object Pipeline {
   /** Engagement hot path: raw Kafka-shaped stream (string `value`) →
     * unwrap → enrich against the dim snapshot at `dimPath`.
     *
-    * PINNED-SNAPSHOT semantics: the lookup table is built once, when
-    * the stream is defined, from the rows of the dim version that was
-    * live then (held on the driver, so no batch runs a broadcast job or
-    * touches the snapshot files) — later upserts/deletes
+    * PINNED-SNAPSHOT semantics: [[graft.enrich.Enrich.enrich]]'s hash
+    * table is built once, when the stream is defined, from the cached
+    * rows of the dim version that was live then (so no batch runs a job
+    * for the dim or touches the snapshot files) — later upserts/deletes
     * from dimMaintenanceQuery are NOT picked up. That is safe but
     * stale; for a MUTABLE dim use [[enrichedSink]], which re-resolves
     * the snapshot pointer inside every micro-batch. */
@@ -64,11 +64,12 @@ object Pipeline {
   }
 
   /** Engagement hot path against a MUTABLE dim: per micro-batch, resolve
-    * the live snapshot's cached rows and look up the batch's content in
-    * them (a driver-built table, no broadcast job) — upserts/deletes
-    * applied by dimMaintenanceQuery take effect from the next batch,
-    * matching the reference's broadcast-state granularity (§3.2 note:
-    * per-batch replaces per-record; steady state agrees). */
+    * the live snapshot's cached rows and enrich the batch from them with
+    * [[graft.enrich.Enrich.enrich]] (a hash table built on the driver
+    * without a job, the same lookup the batch query runs) —
+    * upserts/deletes applied by dimMaintenanceQuery take effect from the
+    * next batch, matching the reference's broadcast-state granularity
+    * (§3.2 note: per-batch replaces per-record; steady state agrees). */
   def enrichedSink(raw: DataFrame, dimPath: String, checkpoint: String)(
       write: (DataFrame, Long) => Unit) =
     raw.writeStream
@@ -202,71 +203,36 @@ object Pipeline {
     }
   }
 
-  case class FunnelState(t1: Long, t2: Long, t3: Long)
+  case class FunnelState(t1: Long, t2: Long, t3: Long, broken: Boolean)
   case class FunnelUpdate(userId: Long, level: Int)
 
   /** Incremental streaming funnel: the real-time counterpart of the
-    * batch windowFunnel (graft.ops.Funnel) — per-user level tracked in
-    * mapGroupsWithState and re-emitted on every update. Semantics match
-    * the batch chain for in-order arrival: t1 = first step-1 event;
-    * t_k = first step-k event after t_{k-1} and within `windowMicros`
-    * of t1. Cross-batch LATE steps cannot retro-fill an earlier slot
-    * (state only moves forward) — the same accept-late-divergence class
-    * as ST4, documented rather than hidden. State is 3 longs per user;
-    * rows within a batch process in (ts, step) order so batch contents
-    * never depend on shuffle arrival order.
+    * batch windowFunnel (graft.ops.Funnel), with its `strictOrder` /
+    * `strictDedup` flags — per-user level tracked in mapGroupsWithState
+    * and re-emitted on every update. Semantics match the batch chain
+    * for in-order arrival: t1 = first step-1 event; t_k = first step-k
+    * event after t_{k-1} and within `windowMicros` of t1. Rows fold in
+    * timestamp groups, in ts order, so batch contents never depend on
+    * shuffle arrival order; at most one step advances per group, since
+    * step k needs ts > t_{k-1}. Cross-batch LATE steps cannot retro-fill
+    * an earlier slot (state only moves forward) — the same
+    * accept-late-divergence class as ST4, documented rather than
+    * hidden. State: three longs + a flag per user.
     *
-    * Input columns: user_id (long), event_ts (timestamp), step (int,
-    * 1-based). */
-  def streamingFunnel(steps: DataFrame, windowMicros: Long): Dataset[FunnelUpdate] = {
-    val spark = steps.sparkSession
-    import spark.implicits._
-    val Unset = Long.MinValue
-    steps.select(col("user_id").cast("long"),
-        unix_micros(col("event_ts")).as("ts_us"), col("step").cast("int"))
-      .as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[FunnelState, FunnelUpdate](GroupStateTimeout.NoTimeout) {
-        case (user, rows, state) =>
-          var st = state.getOption.getOrElse(FunnelState(Unset, Unset, Unset))
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ts, step) =>
-            if (step == 1 && st.t1 == Unset)
-              st = st.copy(t1 = ts)
-            else if (step == 2 && st.t2 == Unset && st.t1 != Unset &&
-              ts > st.t1 && ts <= st.t1 + windowMicros)
-              st = st.copy(t2 = ts)
-            else if (step == 3 && st.t3 == Unset && st.t2 != Unset &&
-              ts > st.t2 && ts <= st.t1 + windowMicros)
-              st = st.copy(t3 = ts)
-          }
-          state.update(st)
-          val level = Seq(st.t1, st.t2, st.t3).takeWhile(_ != Unset).size
-          FunnelUpdate(user, level)
-      }
-  }
-
-  case class StrictFunnelState(t1: Long, t2: Long, t3: Long, broken: Boolean)
-
-  /** Incremental STRICT-MODE streaming funnel: the real-time
-    * counterpart of batch `windowFunnel(strictOrder/strictDedup)`.
-    * Input rows carry `step` ∈ 0..3 where 0 = an event matching no
-    * condition (strict modes need the FULL event stream — breakers
-    * include non-step events).
+    * Strict modes break the chain for good: `strictOrder` on any event
+    * other than the next step, `strictDedup` on a repeat of an already
+    * matched step (strictOrder wins if both are set, as in the batch
+    * form). They need the FULL event stream, with step 0 marking an
+    * event that matches no condition. Within one timestamp the advance
+    * applies BEFORE breaker evaluation, and an advance at ts suppresses
+    * same-ts breakers — the batch rule that a candidate tied with its
+    * breaker survives (equal timestamps carry no order). With both
+    * flags off nothing breaks.
     *
-    * Tie-exactness with the batch form: within one timestamp, the
-    * advancing match applies BEFORE breaker evaluation, and an advance
-    * at ts suppresses same-ts breakers — reproducing the batch rule
-    * that a candidate tied with its breaker survives (equal
-    * timestamps carry no order). A breaker at a strictly earlier ts
-    * than any candidate breaks permanently. Cross-batch late events
-    * fold at arrival order (the ST4 accept-late-divergence class, as
-    * with [[streamingFunnel]]). State: three longs + a flag per user.
-    *
-    * `dedup` = false → strict_order (any non-next-step event breaks);
-    * true → strict_dedup (only repeats of already-matched conditions
-    * break). */
-  def streamingFunnelStrict(events: DataFrame, windowMicros: Long,
-      dedup: Boolean = false): Dataset[FunnelUpdate] = {
+    * Input columns: user_id (long), event_ts (timestamp), step (int:
+    * 1-based, 0 = no step). */
+  def streamingFunnel(events: DataFrame, windowMicros: Long,
+      strictOrder: Boolean = false, strictDedup: Boolean = false): Dataset[FunnelUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
     val Unset = Long.MinValue
@@ -274,42 +240,36 @@ object Pipeline {
         unix_micros(col("event_ts")).as("ts_us"), col("step").cast("int"))
       .as[(Long, Long, Int)]
       .groupByKey(_._1)
-      .mapGroupsWithState[StrictFunnelState, FunnelUpdate](
-        GroupStateTimeout.NoTimeout) {
+      .mapGroupsWithState[FunnelState, FunnelUpdate](GroupStateTimeout.NoTimeout) {
         case (user, rows, state) =>
-          var st = state.getOption.getOrElse(
-            StrictFunnelState(Unset, Unset, Unset, broken = false))
+          var st = state.getOption.getOrElse(FunnelState(Unset, Unset, Unset, broken = false))
           def level = Seq(st.t1, st.t2, st.t3).takeWhile(_ != Unset).size
           def tPrev = level match {
             case 1 => st.t1; case 2 => st.t2; case _ => Unset
           }
-          // ts-groups in order; inside a group candidates precede
-          // breakers by construction (advance first, then break)
-          rows.toSeq.sortBy(r => (r._2, r._3))
-            .groupBy(_._2).toSeq.sortBy(_._1).foreach { case (ts, evs) =>
-              if (!st.broken && level < 3) {
-                val expected = level + 1
-                val advanced =
-                  if (level == 0)
-                    evs.exists(_._3 == 1) && { st = st.copy(t1 = ts); true }
-                  else
-                    evs.exists(_._3 == expected) && ts > tPrev &&
-                      ts <= st.t1 + windowMicros && {
-                        st = if (expected == 2) st.copy(t2 = ts)
-                             else st.copy(t3 = ts)
-                        true
-                      }
-                // breaker evaluation with the PRE-advance stage; an
-                // advance at this ts suppresses same-ts breakers (tie)
-                if (!advanced && level > 0 && level < 3 && ts > tPrev) {
-                  val breaks = evs.exists { case (_, _, s) =>
-                    if (dedup) s >= 1 && s <= level && s != expected
-                    else s != expected
-                  }
-                  if (breaks) st = st.copy(broken = true)
-                }
-              }
+          def breaks(step: Int, expected: Int): Boolean =
+            if (strictOrder) step != expected
+            else strictDedup && step >= 1 && step < expected
+          rows.toSeq.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (ts, evs) =>
+            if (!st.broken && level < 3) {
+              val expected = level + 1
+              val advanced =
+                if (level == 0)
+                  evs.exists(_._3 == 1) && { st = st.copy(t1 = ts); true }
+                else
+                  evs.exists(_._3 == expected) && ts > tPrev &&
+                    ts <= st.t1 + windowMicros && {
+                      st = if (expected == 2) st.copy(t2 = ts)
+                           else st.copy(t3 = ts)
+                      true
+                    }
+              // breaker evaluation with the PRE-advance stage; an
+              // advance at this ts suppresses same-ts breakers (tie)
+              if (!advanced && level > 0 && ts > tPrev &&
+                  evs.exists(e => breaks(e._3, expected)))
+                st = st.copy(broken = true)
             }
+          }
           state.update(st)
           FunnelUpdate(user, level)
       }
@@ -389,9 +349,6 @@ object Pipeline {
         col("c.ts").as("click_ts"),
         col("p.event_id").as("purchase_id"), col("p.ts").as("purchase_ts"))
   }
-
-  /** K3: enriched → Kafka-outbox-shaped JSON value column. */
-  def outbox(enriched: DataFrame): DataFrame = Enrich.toOutboxJson(enriched)
 
   /** K1: warehouse append sink as foreachBatch (JDBC/parquet target
     * injected by the caller; micro-batch = natural insert batching). */

@@ -194,7 +194,7 @@ class EnvelopeSpec extends SparkSpec {
     assert(miss.getAs[Double]("engagement_score") === 0.2) // click, no duration
   }
 
-  // ---- enrichment against a driver-held dim: the hash lookup --------------
+  // ---- enrichment: the driver-held hash lookup -----------------------------
 
   /** c1 a hit, c2 a dim row with null content_type/length_seconds, c3
     * deleted; the events add an unknown id (c9) and a null content_id. */
@@ -208,16 +208,18 @@ class EnvelopeSpec extends SparkSpec {
       .replace("\"c1\"", "\"" + c + "\"")
   } :+ flatClick.replace("\"content_id\":\"c9\",", "")
 
-  test("enrich against a driver-held dim equals the broadcast join against the same changes") {
+  private def lookupPlanDim =
+    ContentDim.latestState(Envelope.unwrapContent(lookupChanges.toDF("value")))
+
+  test("enrich against a snapshot equals enrich against the latestState of its changes") {
     val path = dimPath()
     fold(path, lookupChanges: _*)
     val events = Envelope.unwrapEngagement(lookupEvents.toDF("value"))
     val held = Enrich.enrich(events, ContentDim.snapshot(spark, path))
-    val joined = Enrich.enrich(events,
-      ContentDim.latestState(Envelope.unwrapContent(lookupChanges.toDF("value"))))
-    assert(held.schema === joined.schema) // names, order, types and nullability
+    val planned = Enrich.enrich(events, lookupPlanDim)
+    assert(held.schema === planned.schema) // names, order, types and nullability
     val rows = held.orderBy("event_id").collect().toSeq
-    assert(rows === joined.orderBy("event_id").collect().toSeq)
+    assert(rows === planned.orderBy("event_id").collect().toSeq)
     assert(rows.map(r => (r.getAs[String]("content_id"), r.getAs[String]("content_type"),
       Option(r.getAs[Integer]("length_seconds")))) === Seq(
       (null, null, None), ("c1", "podcast", Some(300)), ("c2", null, None),
@@ -226,35 +228,64 @@ class EnvelopeSpec extends SparkSpec {
   }
 
   test("enrich against a driver-held dim runs one job and plans no join or broadcast exchange") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.{col, upper}
     val path = dimPath()
     fold(path, lookupChanges: _*)
     // a one-partition RDD frame, as a foreachBatch micro-batch is
     val events = Envelope.unwrapEngagement(
       spark.sparkContext.parallelize(lookupEvents, 1).toDF("value"))
-    val enriched = Enrich.enrich(events, ContentDim.snapshot(spark, path))
-    var got = Array.empty[org.apache.spark.sql.Row]
-    assert(jobsIn { got = enriched.collect() } === 1)
-    assert(got.length === lookupEvents.size)
-    val helper = new AdaptiveSparkPlanHelper {}
-    val offending = helper.collect(enriched.queryExecution.executedPlan) {
-      case p: BroadcastExchangeLike => p
-      case p: BaseJoinExec => p
+    // (dim, the jobs building the enrichment runs: none for local rows,
+    // with or without a projection on top; a plan runs its own)
+    val dims = Seq[(String, () => DataFrame, Option[Int])](
+      ("snapshot", () => ContentDim.snapshot(spark, path), Some(0)),
+      ("projected snapshot", () => ContentDim.snapshot(spark, path)
+        .withColumn("content_type", upper(col("content_type"))), Some(0)),
+      ("latestState plan", () => lookupPlanDim, None))
+    for ((name, dim, buildJobs) <- dims) {
+      var enriched: DataFrame = null
+      val built = jobsIn { enriched = Enrich.enrich(events, dim()) }
+      buildJobs.foreach(n => assert(built === n, s"building enrich over the $name"))
+      var got = Array.empty[org.apache.spark.sql.Row]
+      assert(jobsIn { got = enriched.collect() } === 1, name)
+      assert(got.length === lookupEvents.size, name)
+      val helper = new AdaptiveSparkPlanHelper {}
+      val offending = helper.collect(enriched.queryExecution.executedPlan) {
+        case p: BroadcastExchangeLike => p
+        case p: BaseJoinExec => p
+      }
+      assert(offending.isEmpty, s"$name: ${enriched.queryExecution.executedPlan}")
     }
-    assert(offending.isEmpty, enriched.queryExecution.executedPlan.toString)
   }
 
   test("a driver-held dim with a duplicate id fails loudly, naming the id") {
+    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("content_type", StringType), StructField("length_seconds", IntegerType)))
-    val dim = spark.createDataFrame(java.util.List.of(
-      Row("c1", "podcast", 300), Row("c7", "video", 60), Row("c7", "newsletter", 10)), schema)
+    val rows = Seq(Row("c1", "podcast", 300), Row("c7", "video", 60), Row("c7", "newsletter", 10))
     val events = Envelope.unwrapEngagement(Seq(envelopedPlay).toDF("value"))
-    val e = intercept[IllegalArgumentException](Enrich.enrich(events, dim))
-    assert(e.getMessage.contains("c7"), e.getMessage)
+    // local rows, and a plan over two RDD partitions
+    for (dim <- Seq(spark.createDataFrame(rows.asJava, schema),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))) {
+      val e = intercept[IllegalArgumentException](Enrich.enrich(events, dim))
+      assert(e.getMessage.contains("c7"), e.getMessage)
+    }
+  }
+
+  test("a mistyped dim or content_id fails loudly, naming the column") {
+    import org.apache.spark.sql.functions.col
+    val events = Envelope.unwrapEngagement(Seq(envelopedPlay).toDF("value"))
+    val dim = Seq(("c1", "podcast", 300)).toDF("id", "content_type", "length_seconds")
+    val longSeconds = dim.withColumn("length_seconds", col("length_seconds").cast("long"))
+    val e1 = intercept[IllegalArgumentException](Enrich.enrich(events, longSeconds))
+    assert(e1.getMessage.contains("length_seconds") && e1.getMessage.contains("bigint"), e1.getMessage)
+    val longIds = events.withColumn("content_id", col("event_id"))
+    val e2 = intercept[IllegalArgumentException](Enrich.enrich(longIds, dim))
+    assert(e2.getMessage.contains("content_id"), e2.getMessage)
   }
 }

@@ -192,13 +192,13 @@ class SnapshotStoreSpec extends SparkSpec {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     // an RDD-backed plan reports Spark's unknown size, far above the gate
     assert(df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(SnapshotStore.RebalanceMinBytesDefault))
+      BigInt(SnapshotStore.rebalanceMinBytes(spark)))
     // a narrowing projection scales that estimate below the unknown size,
     // yet it still reads far above the gate
     val narrow = df.select("id", "m")
     val narrowEst = narrow.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(narrowEst < BigInt(spark.sessionState.conf.defaultSizeInBytes) &&
-      narrowEst >= BigInt(SnapshotStore.RebalanceMinBytesDefault), narrowEst)
+      narrowEst >= BigInt(SnapshotStore.rebalanceMinBytes(spark)), narrowEst)
     for ((name, frame) <- Seq[(String, DataFrame)]("ss-rebal" -> df, "ss-rebal-narrow" -> narrow)) {
       val base = tmp(name)
       val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()

@@ -252,7 +252,7 @@ class StreamingSpec extends SparkSpec {
 
   test("outbox serializes enriched rows to JSON values, omitting nulls") {
     val in = MemoryStream[String](spark)
-    val q = Pipeline.outbox(graft.cdc.Envelope.unwrapEngagement(in.toDF()))
+    val q = graft.enrich.Enrich.toOutboxJson(graft.cdc.Envelope.unwrapEngagement(in.toDF()))
       .writeStream.format("memory").queryName("outbox_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -1247,11 +1247,11 @@ class StreamingSpec extends SparkSpec {
     for (dedup <- Seq(false, true)) {
       val in = MemoryStream[(Long, Long, Int)](spark)
       val name = s"strictfunnel_$dedup"
-      val q = graft.streaming.Pipeline.streamingFunnelStrict(
+      val q = graft.streaming.Pipeline.streamingFunnel(
           in.toDF().toDF("user_id", "ts_us", "step")
             .select(col("user_id"),
               timestamp_micros(col("ts_us")).as("event_ts"), col("step")),
-          winUs, dedup)
+          winUs, strictOrder = !dedup, strictDedup = dedup)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Update).start()
       try {
